@@ -4,10 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory + testdata table loaders.
   *
-  * Scale posture (local[32] here, 1000-executor cluster in production):
+  * Scale posture (local[`cpus`] here, a cluster in production):
   *  - AQE on: runtime re-plan handles skew joins and shuffle coalescing.
-  *  - shuffle.partitions=32 matches local cores; on a real cluster this is
-  *    2-3× total cores (or left to AQE's coalescing with a high initial).
+  *  - shuffle.partitions=32 is a fixed batch width, whatever `cpus` is
+  *    (the default master is local[8]); AQE coalesces batch shuffles
+  *    below it. Stateful streaming operators are never coalesced, so the
+  *    Graft facade starts its queries at min(32, defaultParallelism)
+  *    state partitions. On a real cluster the batch width is 2-3× total
+  *    cores (or left to AQE's coalescing with a high initial).
   *  - All testdata reads are parquet with pushdown/pruning left to Catalyst:
   *    operators must keep filters/projections declarative so they reach the
   *    scan (checked via .explain in BenchSpec/Inspect).

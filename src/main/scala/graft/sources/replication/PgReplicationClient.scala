@@ -153,6 +153,30 @@ final class PgReplicationClient(ep: PgReplicationClient.Endpoint) extends AutoCl
 
   private[sources] def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
 
+  // Unix-socket stream pair straight over the channel. On JDK 17 the
+  // `Channels.newInputStream`/`newOutputStream` adapters both lock the
+  // channel's blockingLock for each call, so a write (an ack, Terminate)
+  // waits until the reader thread's blocked read returns — on a quiet
+  // stream that is the walsender's next keepalive, up to half of
+  // wal_sender_timeout away. SocketChannel itself allows one reader and
+  // one writer at once.
+  private final class ChannelIn(c: SocketChannel) extends java.io.InputStream {
+    override def read(): Int = {
+      val one = new Array[Byte](1)
+      if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
+    }
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      if (len == 0) 0 else c.read(ByteBuffer.wrap(b, off, len))
+  }
+
+  private final class ChannelOut(c: SocketChannel) extends java.io.OutputStream {
+    override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      val buf = ByteBuffer.wrap(b, off, len)
+      while (buf.hasRemaining) c.write(buf)
+    }
+  }
+
   private[sources] def errorFields(body: Array[Byte]): Map[Char, String] = {
     // ErrorResponse: (fieldCode byte, cstring)* terminated by a 0 byte
     val fields = scala.collection.mutable.Map[Char, String]()
@@ -244,8 +268,8 @@ final class PgReplicationClient(ep: PgReplicationClient.Endpoint) extends AutoCl
           "TLS does not apply to unix-socket connections")
         val c = SocketChannel.open(StandardProtocolFamily.UNIX)
         c.connect(UnixDomainSocketAddress.of(s"$dir/.s.PGSQL.${ep.port}"))
-        in = java.nio.channels.Channels.newInputStream(c)
-        out = java.nio.channels.Channels.newOutputStream(c)
+        in = new ChannelIn(c)
+        out = new ChannelOut(c)
         transport = c
       case None =>
         var sock = new java.net.Socket()
@@ -551,13 +575,18 @@ final class PgReplicationClient(ep: PgReplicationClient.Endpoint) extends AutoCl
     this
   }
 
+  // a full inbox holds the reader back only while the stream is open: a
+  // reader parked in put() would outlive close() by its join timeout
+  private def enqueue(m: Either[Throwable, Message]): Unit =
+    while (!closed && !inbox.offer(m, 100L, TimeUnit.MILLISECONDS)) ()
+
   private def readLoop(): Unit =
     try {
       var running = true
       while (running) {
         readMessage() match {
           case None =>
-            inbox.put(Right(StreamEnded)); running = false
+            enqueue(Right(StreamEnded)); running = false
           case Some((tpe, b)) => tpe.toChar match {
             case 'd' =>
               val buf = ByteBuffer.wrap(b)
@@ -565,21 +594,21 @@ final class PgReplicationClient(ep: PgReplicationClient.Endpoint) extends AutoCl
                 case 'w' =>
                   val start = buf.getLong; val end = buf.getLong; val clock = buf.getLong
                   val frame = new Array[Byte](buf.remaining()); buf.get(frame)
-                  inbox.put(Right(XLogData(start, end, clock, frame)))
+                  enqueue(Right(XLogData(start, end, clock, frame)))
                 case 'k' =>
                   val end = buf.getLong; val clock = buf.getLong
                   val reply = buf.get() != 0
                   // answer immediately so the wal_sender never times us out,
                   // then surface the keepalive to the caller
                   if (reply && !closed) sendStandbyStatus(lastAckedLsn)
-                  inbox.put(Right(Keepalive(end, clock, reply)))
+                  enqueue(Right(Keepalive(end, clock, reply)))
                 case other =>
                   log.warn(s"ignoring CopyData subtype '$other'")
               }
             case 'c' | 'C' | 'Z' => // CopyDone / CommandComplete / Ready
-              inbox.put(Right(StreamEnded)); running = false
+              enqueue(Right(StreamEnded)); running = false
             case 'E' =>
-              inbox.put(Left(new java.io.IOException(errorText(b)))); running = false
+              enqueue(Left(new java.io.IOException(errorText(b)))); running = false
             case 'N' => ()
             case other =>
               log.warn(s"ignoring message '$other' in copy stream")
@@ -588,12 +617,15 @@ final class PgReplicationClient(ep: PgReplicationClient.Endpoint) extends AutoCl
       }
     } catch {
       case _: Throwable if closed => inbox.offer(Right(StreamEnded)); ()
-      case e: Throwable           => inbox.offer(Left(e)); ()
+      case e: Throwable           => enqueue(Left(e))
     }
 
-  /** Next stream message, or None after `timeoutMs` of silence. */
+  /** Next stream message, or None after `timeoutMs` of silence. A closed
+    * client reports [[StreamEnded]] at once.
+    */
   def poll(timeoutMs: Long): Option[Message] =
-    Option(inbox.poll(timeoutMs, TimeUnit.MILLISECONDS)).map {
+    if (closed) Some(StreamEnded)
+    else Option(inbox.poll(timeoutMs, TimeUnit.MILLISECONDS)).map {
       case Right(m) => m
       case Left(e)  => throw e
     }

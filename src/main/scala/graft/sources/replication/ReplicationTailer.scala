@@ -22,6 +22,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    segment must be independently decodable (the source decodes
   *    segments in parallel) — the same invariant a reconnecting session
   *    gets from the server, maintained here per segment
+  *  - bound the time a committed transaction waits in memory: the pump
+  *    ([[runUntilIdle]]) writes the completed-transaction prefix once
+  *    the oldest completed transaction has waited `idleMs` since its
+  *    Commit, when the stream goes quiet for `idleMs`, and at
+  *    `framesPerSegment` frames — whichever comes first. A steady
+  *    stream that is never quiet therefore still reaches disk, and
+  *    the Spark side, within `idleMs`
   *  - rotate only at transaction boundaries (after Commit), so a segment
   *    never strands a headless transaction tail — cross-segment
   *    transactions still assemble (cdc05/cdc14 semantics), this just
@@ -78,6 +85,10 @@ final class ReplicationTailer(
   // not acked past it, so a reconnect re-delivers it in full.
   private var committedLen = 0
   private var committedEndLsn = 0L
+  // when the oldest completed transaction in the buffer committed
+  // (System.nanoTime; meaningful while committedLen > 0): the flush
+  // deadline in runUntilIdle counts from here
+  private var committedSinceNs = 0L
   // one past the last LIVE segment (retention-aware: counting the list
   // would collide with surviving segments after any expiry)
   private var segmentIdx = WalSegments.nextSegmentIndex(walDir, hadoopConf)
@@ -151,6 +162,7 @@ final class ReplicationTailer(
                 // mark the buffer prefix [0, committedLen) as flushable:
                 // everything up to and including this Commit belongs to
                 // completed transactions
+                if (committedLen == 0) committedSinceNs = System.nanoTime()
                 committedLen = pending.length
                 if (frame.length >= 10)
                   commitFloor = math.max(commitFloor,
@@ -231,19 +243,37 @@ final class ReplicationTailer(
   @volatile private[graft] var lastAckComputed: Long = 0L
 
   /** Pump the stream until `idleMs` passes with no traffic, or the stream
-    * ends; flushes the completed-transaction tail (an in-flight
-    * transaction's prefix stays buffered — never on disk headless, so the
-    * commit-granular replay floor cannot double-write it after a
-    * reconnect re-sends the transaction whole). Returns whether the
-    * stream is still live (false after StreamEnded) — [[Replicator]]
-    * loops on it.
+    * ends, then flush the completed-transaction tail. `idleMs` is also
+    * the flush DEADLINE while traffic flows: once the oldest completed
+    * transaction in the buffer has waited `idleMs` since its Commit
+    * arrived, the completed prefix is written (and acked) without
+    * waiting for a quiet stream, so a committed transaction is on disk
+    * within `idleMs` (plus one segment write) however busy the stream
+    * is. `framesPerSegment` still rotates earlier under a burst. An
+    * in-flight transaction's prefix stays buffered — never on disk
+    * headless, so the commit-granular replay floor cannot double-write
+    * it after a reconnect re-sends the transaction whole. Returns
+    * whether the stream is still live (false after StreamEnded) —
+    * [[Replicator]] loops on it.
     */
   def runUntilIdle(idleMs: Long = 2000L): Boolean = {
+    val idleNs = idleMs * 1000000L
     var live = true
     var pumping = true
-    while (pumping) client.poll(idleMs) match {
-      case Some(m) => if (!accept(m)) { live = false; pumping = false }
-      case None    => pumping = false // idle window elapsed
+    var lastMessageNs = System.nanoTime()
+    while (pumping) {
+      val now = System.nanoTime()
+      val quietLeftNs = idleNs - (now - lastMessageNs)
+      val flushLeftNs =
+        if (committedLen > 0) idleNs - (now - committedSinceNs) else Long.MaxValue
+      if (quietLeftNs <= 0) pumping = false // idle window elapsed
+      else if (flushLeftNs <= 0) flush()    // deadline reached mid-traffic
+      else client.poll(math.max(1L, math.min(quietLeftNs, flushLeftNs) / 1000000L)) match {
+        case Some(m) =>
+          lastMessageNs = System.nanoTime()
+          if (!accept(m)) { live = false; pumping = false }
+        case None => ()
+      }
     }
     flush()
     live
@@ -342,15 +372,21 @@ object ReplicationTailer {
 }
 
 /** Background pump with SUPERVISION (S7, the live lane): drains the
-  * stream on a daemon thread; when the connection dies — server restart,
-  * network cut, `pg_terminate_backend` on the walsender — it reconnects
-  * through `reconnect` with exponential backoff, up to `maxRestarts`
-  * consecutive failures (any successful pump window resets the budget,
-  * the [[graft.streaming.Supervisor]] discipline). A DURABLE slot resumes
-  * from `confirmed_flush_lsn`, so a kill window loses nothing; a
-  * TEMPORARY slot is re-created and resumes from the present — the S3
-  * contract. [[close]] stops the pump and closes the live connection
-  * (dropping a temporary slot server-side).
+  * stream on a daemon thread through [[ReplicationTailer.runUntilIdle]],
+  * so `idleMs` is the longest a committed transaction waits before its
+  * segment is on disk (a quiet stream flushes after `idleMs` of
+  * silence, a busy one on that deadline). When the connection dies —
+  * server restart, network cut, `pg_terminate_backend` on the
+  * walsender — it reconnects through `reconnect` with exponential
+  * backoff, up to `maxRestarts` consecutive failures (any successful
+  * pump window resets the budget, the [[graft.streaming.Supervisor]]
+  * discipline). A DURABLE slot resumes from `confirmed_flush_lsn`, so a
+  * kill window loses nothing; a TEMPORARY slot is re-created and resumes
+  * from the present — the S3 contract. [[close]] stops the pump and
+  * closes the live connection
+  * (dropping a temporary slot server-side); it returns within about the
+  * pump thread's join bound (10 s) even under live traffic — the
+  * Terminate message and the acks never wait on the reader thread.
   */
 final class Replicator(
     initial: (PgReplicationClient, ReplicationTailer),

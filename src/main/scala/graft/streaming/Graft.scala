@@ -172,31 +172,6 @@ object Graft {
         metaTypesCol).as("col_types")))
   }
 
-  /** LIVE ingestion: connect to the config's database as a replication
-    * client (public wire protocol — no JDBC involved), fail fast if the
-    * publication is absent (S2, against the real catalog), create the
-    * slot through the replication grammar (temporary unless
-    * `durableSlot` — S3/S4 on the actual server, not a file stand-in),
-    * and pump the pgoutput stream into `walDir` as GWAL segments on a
-    * daemon thread. Pair with [[start]] on the same `walDir`:
-    *
-    * {{{
-    * val repl  = Graft.replicate(config, walDir)          // DB → segments
-    * val query = Graft.start(spark, config, walDir, engine) // segments → handlers
-    * }}}
-    *
-    * The returned [[graft.sources.replication.Replicator]] owns the
-    * connection: it SUPERVISES the stream (S7 — a dead walsender
-    * reconnects with backoff, resuming a durable slot from
-    * `confirmed_flush_lsn`), and `close()` stops the pump and — for
-    * temporary slots — drops the slot server-side. Flushed-segment LSNs
-    * are acked upstream, so the slot's retention window tracks what is
-    * durably on disk — unless the config carries an `ackPath`, in which
-    * case the tailer caps its acks at the CONSUMER's committed progress
-    * (the CDC source writes that very file): the server then retains WAL
-    * until Spark commits, and even a lost segment directory can be
-    * re-streamed from the slot.
-    */
   /** Config → replication endpoint: the one place the reference's
     * connection-config surface (hostname/port/database/credentials plus
     * the `ssl`/`ssl_opts` keys it passes to Postgrex) maps onto the wire
@@ -260,6 +235,38 @@ object Graft {
   private def enc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")
 
+  /** LIVE ingestion: connect to the config's database as a replication
+    * client (public wire protocol — no JDBC involved), fail fast if the
+    * publication is absent (S2, against the real catalog), create the
+    * slot through the replication grammar (temporary unless
+    * `durableSlot` — S3/S4 on the actual server, not a file stand-in),
+    * and pump the pgoutput stream into `walDir` as GWAL segments on a
+    * daemon thread. Pair with [[start]] on the same `walDir`:
+    *
+    * {{{
+    * val repl  = Graft.replicate(config, walDir)          // DB → segments
+    * val query = Graft.start(spark, config, walDir, engine) // segments → handlers
+    * }}}
+    *
+    * The returned [[graft.sources.replication.Replicator]] owns the
+    * connection: it SUPERVISES the stream (S7 — a dead walsender
+    * reconnects with backoff, resuming a durable slot from
+    * `confirmed_flush_lsn`), and `close()` stops the pump and — for
+    * temporary slots — drops the slot server-side. Flushed-segment LSNs
+    * are acked upstream, so the slot's retention window tracks what is
+    * durably on disk — unless the config carries an `ackPath`, in which
+    * case the tailer caps its acks at the CONSUMER's committed progress
+    * (the CDC source writes that very file): the server then retains WAL
+    * until Spark commits, and even a lost segment directory can be
+    * re-streamed from the slot.
+    *
+    * `idleMs` bounds delivery time: it is the longest a committed
+    * transaction waits in the tailer before its segment is on disk. The
+    * tailer flushes when the stream has been quiet for `idleMs`, and,
+    * under steady traffic that is never quiet, once the oldest buffered
+    * committed transaction is `idleMs` old; `framesPerSegment` rotates
+    * earlier under a burst.
+    */
   def replicate(config: GraftConfig, walDir: String,
       unixSocketDir: Option[String] = None,
       framesPerSegment: Int = 4096,
@@ -786,6 +793,11 @@ object Graft {
     * `walDir`, and run the handler engine over it, all from the config.
     * Returns the supervised replicator and the streaming query; stop the
     * query first, then `close()` the replicator.
+    *
+    * Delivery time is bounded in both halves: the tailer puts a
+    * committed transaction on disk within `idleMs` (see [[replicate]]),
+    * and [[start]] caps the query's state width at one wave of task
+    * slots, so each micro-batch pays one round of state-store commits.
     */
   def startLive(spark: SparkSession, config: GraftConfig, walDir: String,
       engine: Engine, trigger: Trigger = Trigger.ProcessingTime(0L),
@@ -798,12 +810,15 @@ object Graft {
   }
 
   /** Start the full engine: events → registered handlers, supervised per
-    * the slot-durability semantics of `config`.
+    * the slot-durability semantics of `config`. The query runs at
+    * `min(spark.sql.shuffle.partitions, defaultParallelism)` state
+    * partitions (see [[withQueryConf]]); a checkpointed query keeps the
+    * width it was created with.
     */
   def start(spark: SparkSession, config: GraftConfig, walDir: String,
       engine: Engine, trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
     config.effectiveLedger.foreach(engine.withDeliveryLedger)
-    withStateStoreProvider(spark, config) {
+    withQueryConf(spark, config) {
       engine.start(events(spark, config, walDir),
         checkpoint = config.effectiveCheckpoint,
         trigger = trigger,
@@ -845,7 +860,7 @@ object Graft {
       else () => config.ackPath.flatMap(
         graft.sources.replication.ReplicationTailer.committedFrames(_)
           .map(_ - 1L))
-    withStateStoreProvider(spark, config) {
+    withQueryConf(spark, config) {
       var w = rows.writeStream
         .foreachBatch(Materializer.sink(stateDir, spec, compactEvery, floorProvider))
         .queryName(s"graft-materialize-${config.appName}")
@@ -861,31 +876,43 @@ object Graft {
   def materializeSpec(buckets: Int = 64): Materializer.Spec =
     Materializer.Spec(keyCols = Seq("table_name", "record_key"), buckets = buckets)
 
-  /** Streaming state-store provider is a SESSION conf bound per query at
-    * `.start()` — scope it to this start call by snapshotting and
-    * restoring the previous value, so a config that asks for e.g. RocksDB
-    * does not silently change the provider of every LATER query started
-    * on the same shared SparkSession (queries already running are
-    * unaffected either way; Spark pins the conf at their start).
+  /** Query-scoped confs for the facade's streaming starts. Both are
+    * SESSION confs that Spark pins per query at `.start()` (the
+    * StreamingQueryManager clones the session synchronously), so each is
+    * set for this start call only and restored after — an unset key is
+    * unset again — and later queries on the same shared SparkSession see
+    * the session unchanged:
+    *  - the config's state-store provider (e.g. RocksDB), when it names
+    *    one;
+    *  - the state WIDTH: `spark.sql.shuffle.partitions` capped at
+    *    `sparkContext.defaultParallelism`, one wave of task slots. The
+    *    assembler's state is the open transactions only (KB-scale), and
+    *    Spark never coalesces a stateful operator's partitions, so every
+    *    partition past the slot count only adds another wave of
+    *    per-store commits to each micro-batch — a fixed cost that sets
+    *    live latency (QueryPack.withStreamShuffle measured the same
+    *    effect). A query resumed from a checkpoint keeps the width its
+    *    checkpoint recorded; Spark restores that over the session value.
     */
-  private def withStateStoreProvider[A](spark: SparkSession, config: GraftConfig)
-      (body: => A): A =
-    config.stateStoreProvider match {
-      case None => body
-      case Some(p) =>
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        // conf.getOption surfaces the DEFAULT for unset keys — ask the
-        // session conf whether the key was explicitly set, so restore
-        // doesn't freeze a default into an explicit value
-        val wasSet = spark.sessionState.conf.contains(key)
-        val prev = if (wasSet) Some(spark.conf.get(key)) else None
-        spark.conf.set(key, p)
-        try body
-        finally prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => spark.conf.unset(key)
-        }
+  private def withQueryConf[A](spark: SparkSession, config: GraftConfig)
+      (body: => A): A = {
+    val width = "spark.sql.shuffle.partitions"
+    val scoped = Seq(width -> math.min(spark.conf.get(width).toInt,
+      spark.sparkContext.defaultParallelism).toString) ++
+      config.stateStoreProvider.map("spark.sql.streaming.stateStore.providerClass" -> _)
+    // conf.getOption surfaces the DEFAULT for unset keys — ask the
+    // session conf whether the key was explicitly set, so restore
+    // doesn't freeze a default into an explicit value
+    val prev = scoped.map { case (k, _) =>
+      k -> (if (spark.sessionState.conf.contains(k)) Some(spark.conf.get(k)) else None)
     }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 
   /** The JDBC lane's one-call equivalent of [[start]]: the config's
     * connection fields (the reference's config surface) become the polling
@@ -901,7 +928,7 @@ object Graft {
       s"config '${config.appName}': set hostname+database (postgres url) " +
         "or pass url via extraOptions")
     config.effectiveLedger.foreach(engine.withDeliveryLedger)
-    withStateStoreProvider(spark, config) {
+    withQueryConf(spark, config) {
       engine.start(
         eventsFromJdbc(spark, opts),
         checkpoint = config.effectiveCheckpoint,

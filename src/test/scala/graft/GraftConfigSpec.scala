@@ -162,7 +162,7 @@ class GraftConfigSpec extends AnyFunSuite {
     val q = graft.streaming.Graft.screenAndFold(stream, s"$tmp/index",
       s"$tmp/pairs", checkpoint = Some(s"$tmp/ck"),
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    assert(q.awaitTermination(120000), "facade stream timed out")
+    GraftSession.awaitFinished(q, 120000)
     val pairs = spark.read.parquet(s"$tmp/pairs")
       .filter(col("corpus_id") === col("batch_id") - 1000L)
     assert(pairs.count() == 20L, "every copy must screen against its original")
@@ -196,7 +196,7 @@ class GraftConfigSpec extends AnyFunSuite {
     val q = graft.streaming.Graft.searchAndAppend(stream, s"$tmp/index",
       s"$tmp/matches", embProvider = base, nprobe = 2, k = 1, rerank = 1024,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    assert(q.awaitTermination(120000), "facade stream timed out")
+    GraftSession.awaitFinished(q, 120000)
     val matches = spark.read.parquet(s"$tmp/matches")
       .filter(col("vec_id") === col("query_id") - 100000L)
     assert(matches.count() == copies.count(),

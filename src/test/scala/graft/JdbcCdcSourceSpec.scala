@@ -56,7 +56,7 @@ class JdbcCdcSourceSpec extends AnyFunSuite {
       .outputMode("append").trigger(Trigger.AvailableNow())
     checkpoint.foreach(c => w = w.option("checkpointLocation", c))
     val q = w.start()
-    q.awaitTermination(120000)
+    GraftSession.awaitFinished(q, 120000)
     q
   }
 
@@ -110,7 +110,7 @@ class JdbcCdcSourceSpec extends AnyFunSuite {
         .foreachBatch { (b: DataFrame, _: Long) =>
           got ++= b.select("lsn").collect().map(_.getLong(0)); ()
         }.start()
-      q.awaitTermination(120000)
+      GraftSession.awaitFinished(q, 120000)
     }
     StubJdbc.reset((1 to 3).map(i => row(i * 10L, "insert", "user", id = i, v = i)))
     run()
@@ -211,7 +211,7 @@ class JdbcCdcSourceSpec extends AnyFunSuite {
         .foreachBatch { (b: DataFrame, _: Long) =>
           got ++= b.select("lsn").collect().map(_.getLong(0)); ()
         }.start()
-      q.awaitTermination(120000)
+      GraftSession.awaitFinished(q, 120000)
     }
     run() // empty table: watermark parks at -1
     assert(got.isEmpty)
@@ -243,7 +243,7 @@ class JdbcCdcSourceSpec extends AnyFunSuite {
     val q = graft.streaming.Graft.startJdbc(spark, config, "graft_changes", engine,
       trigger = Trigger.AvailableNow(),
       extraOptions = Map("url" -> StubJdbc.Url, "driver" -> classOf[StubJdbcDriver].getName))
-    q.awaitTermination(120000)
+    GraftSession.awaitFinished(q, 120000)
     assert(seen.sorted.toSeq == Seq(("insert", "user"), ("update", "user")),
       s"unsubscribed tables leaked through the JDBC lane: $seen")
 
@@ -257,7 +257,7 @@ class JdbcCdcSourceSpec extends AnyFunSuite {
     val q2 = graft.streaming.Graft.startJdbc(spark, bare, "graft_changes", engine2,
       trigger = Trigger.AvailableNow(),
       extraOptions = Map("url" -> StubJdbc.Url, "driver" -> classOf[StubJdbcDriver].getName))
-    q2.awaitTermination(120000)
+    GraftSession.awaitFinished(q2, 120000)
     assert(seen2.get() == 3)
     val ex = intercept[IllegalArgumentException] {
       graft.streaming.Graft.startJdbc(spark, bare, "graft_changes", engine2)
@@ -304,7 +304,7 @@ class JdbcCdcSourceSpec extends AnyFunSuite {
       trigger = Trigger.AvailableNow(),
       extraOptions = Map("url" -> StubJdbc.Url,
         "driver" -> classOf[StubJdbcDriver].getName))
-    q.awaitTermination(120000)
+    GraftSession.awaitFinished(q, 120000)
     assert(seen.sorted.toSeq ==
       Seq(("insert", "user_account"), ("update", "user_account")),
       s"recipe config failed to deliver events: $seen")
@@ -324,7 +324,7 @@ class JdbcCdcSourceSpec extends AnyFunSuite {
             seen.updateWith(r.getLong(0))(c => Some(c.getOrElse(0) + 1)))
           ()
         }.start()
-      q.awaitTermination(120000)
+      GraftSession.awaitFinished(q, 120000)
     }
     run() // healthy first run delivers the backlog
     assert(seen.keySet == Set(10L, 20L, 30L, 40L))

@@ -165,7 +165,7 @@ class LiveJdbcSpec extends AnyFunSuite {
             }
             ()
           }.start()
-        q.awaitTermination(60000)
+        GraftSession.awaitFinished(q, 60000)
       }
 
       run()
@@ -248,7 +248,7 @@ class LiveJdbcSpec extends AnyFunSuite {
       val q = Graft.startJdbc(spark, config, "graft_changes", engine,
         trigger = Trigger.AvailableNow(),
         extraOptions = Map("url" -> url, "driver" -> classOf[GraftPgDriver].getName))
-      q.awaitTermination(60000)
+      GraftSession.awaitFinished(q, 60000)
       assert(seen.toSeq == Seq(("insert", "user_account")),
         s"subscription filter over live traffic failed: $seen")
     }

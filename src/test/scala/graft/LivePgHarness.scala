@@ -54,7 +54,41 @@ object LivePgHarness {
       shOk(s"""$bin/psql -X -v ON_ERROR_STOP=1 -h $sock -p $port -d postgres -At -c "$q"""")
     }
 
+    /** One long-lived psql connection fed line by line: steady traffic
+      * without a process spawn per statement (each line autocommits).
+      */
+    def psqlSession(): PsqlSession = new PsqlSession(
+      s"$bin/psql -X -q -v ON_ERROR_STOP=1 -h $sock -p $port -d postgres")
+
     def stop(): Unit = { sh(s"$bin/pg_ctl -D $data -m immediate stop"); () }
+  }
+
+  final class PsqlSession(cmd: String) {
+    private val log = Files.createTempFile("graft-psql", ".log")
+    private val proc = {
+      val argv = if (isRoot) Seq("su", "postgres", "-c", cmd) else Seq("bash", "-c", cmd)
+      val pb = new ProcessBuilder(argv: _*)
+      pb.directory(new java.io.File("/tmp"))
+      pb.redirectErrorStream(true)
+      pb.redirectOutput(log.toFile)
+      pb.start()
+    }
+    private val in = new java.io.PrintWriter(proc.getOutputStream, true)
+
+    def send(sql: String): Unit = in.println(sql)
+
+    /** End the session (idempotent); the psql output on failure, None
+      * when every statement ran.
+      */
+    def close(): Option[String] = outcome
+
+    private lazy val outcome: Option[String] = {
+      in.close()
+      val code = proc.waitFor()
+      val out = Files.readString(log)
+      Files.deleteIfExists(log)
+      if (code == 0) None else Some(s"psql exit $code: $out")
+    }
   }
 
   /** initdb + start a logical-replication-ready cluster under a fresh

@@ -106,7 +106,7 @@ class LivePgSpec extends AnyFunSuite {
       val events = ChangeStream.eventsFromAssembled(TxnAssembler.assemble(raw).toDF())
       val q = events.writeStream.format("memory").queryName("t_livepg")
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      GraftSession.awaitFinished(q, 120000)
       val rows = spark.table("t_livepg").orderBy("lsn", "seq").collect()
 
       // inserts: both tables, typed source.columns from the REAL attribute

@@ -26,6 +26,34 @@ class LiveReplicationSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** A row into `table` every `everyMs` over one psql connection, from a
+    * background thread, until [[stop]]; ids count up from 1.
+    */
+  private final class Ticker(cluster: LivePgHarness.Cluster, table: String, everyMs: Long) {
+    private val session = cluster.psqlSession()
+    @volatile private var running = true
+    val startedMs: Long = System.currentTimeMillis()
+    private val thread = new Thread(() => {
+      var id = 0L
+      while (running) {
+        id += 1
+        session.send(s"INSERT INTO $table VALUES ($id);")
+        Thread.sleep(everyMs)
+      }
+    }, "live-spec-ticker")
+    thread.setDaemon(true)
+    thread.start()
+
+    /** Stop sending; psql's error output, None when every insert committed. */
+    def stop(): Option[String] = { running = false; thread.join(); session.close() }
+  }
+
+  private def tickTable(cluster: LivePgHarness.Cluster, table: String): Unit =
+    cluster.psql(s"""
+      CREATE TABLE $table (id bigint PRIMARY KEY);
+      ALTER TABLE $table REPLICA IDENTITY FULL;
+      CREATE PUBLICATION ${table}_pub FOR TABLE $table""")
+
   test("START_REPLICATION stream → tailer segments → events; acks advance confirmed_flush_lsn") {
     assume(LivePgHarness.available, "no usable PostgreSQL installation — skipping")
     val cluster = LivePgHarness.provision()
@@ -89,7 +117,7 @@ class LiveReplicationSpec extends AnyFunSuite {
       val events = ChangeStream.eventsFromAssembled(TxnAssembler.assemble(raw).toDF())
       val q = events.writeStream.format("memory").queryName("t_liverepl")
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      GraftSession.awaitFinished(q, 120000)
       val rows = spark.table("t_liverepl").orderBy("lsn", "seq").collect()
       val byOp = rows.groupBy(_.getAs[String]("type"))
       assert(byOp.getOrElse("insert", Array.empty).length == 2)
@@ -196,7 +224,7 @@ class LiveReplicationSpec extends AnyFunSuite {
       val events = ChangeStream.eventsFromAssembled(TxnAssembler.assemble(raw).toDF())
       val q = events.writeStream.format("memory").queryName("t_durable")
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      GraftSession.awaitFinished(q, 120000)
       val rows = spark.table("t_durable").orderBy("lsn", "seq").collect()
       val ids = rows.filter(_.getAs[String]("type") == "insert")
         .map(_.getAs[Map[String, String]]("new_record")("id")).sorted.toSeq
@@ -253,7 +281,7 @@ class LiveReplicationSpec extends AnyFunSuite {
         val got = new java.util.concurrent.atomic.AtomicInteger(0)
         val engine = new Engine().onEvent("acct") { df => got.addAndGet(df.count().toInt); () }
         val q = engine.start(events, trigger = Trigger.AvailableNow(), queryName = "t_face")
-        q.awaitTermination(120000)
+        GraftSession.awaitFinished(q, 120000)
         assert(got.get() >= 3, s"expected the 2 inserts + update, got ${got.get()}")
       } finally repl.close()
       // closing the connection drops the TEMPORARY slot server-side
@@ -484,7 +512,7 @@ class LiveReplicationSpec extends AnyFunSuite {
         val events = ChangeStream.eventsFromAssembled(TxnAssembler.assemble(raw).toDF())
         val q = events.writeStream.format("memory").queryName("t_chaos")
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
+        GraftSession.awaitFinished(q, 120000)
         val ids = spark.table("t_chaos")
           .filter(org.apache.spark.sql.functions.col("type") === "insert")
           .collect().map(_.getAs[Map[String, String]]("new_record")("id")).sorted.toSeq
@@ -537,7 +565,7 @@ class LiveReplicationSpec extends AnyFunSuite {
       val events = ChangeStream.eventsFromAssembled(TxnAssembler.assemble(raw).toDF())
       val q = events.writeStream.format("memory").queryName("t_boot")
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      GraftSession.awaitFinished(q, 120000)
       val rows = spark.table("t_boot").collect()
       val inserts = rows.filter(_.getAs[String]("type") == "insert")
         .map(_.getAs[Map[String, String]]("new_record")("id")).sorted.toSeq
@@ -645,6 +673,96 @@ class LiveReplicationSpec extends AnyFunSuite {
         assert(replica == want,
           s"live lake replica diverged from the table: $replica")
       } finally { q.stop(); repl.close() }
+    } finally cluster.stop()
+  }
+
+  test("flush deadline: a never-quiet stream reaches disk within idleMs while traffic flows") {
+    assume(LivePgHarness.available, "no usable PostgreSQL installation — skipping")
+    import graft.streaming.{Graft, GraftConfig}
+    val cluster = LivePgHarness.provision()
+    try {
+      tickTable(cluster, "tick")
+      val walDir = s"${cluster.base}/wal-tick"
+      val idleMs = 2000L
+      val config = GraftConfig("tick_demo", database = Some("postgres"),
+        username = Some("postgres"), publication = Some("tick_pub"))
+      // frame rotation out of reach: only the deadline can flush mid-traffic
+      val repl = Graft.replicate(config, walDir, unixSocketDir = Some(cluster.sock),
+        framesPerSegment = 1000000, idleMs = idleMs)
+      try {
+        // a commit every ~50 ms for 6 s: the stream is never quiet for idleMs
+        val ticker = new Ticker(cluster, "tick", everyMs = 50L)
+        val trafficEnds = ticker.startedMs + 6000L
+        def firstCommitOnDisk: Boolean =
+          WalSegments.listSegments(walDir).headOption.exists { p =>
+            val it = WalSegments.readFrames(p)
+            try it.exists(_.headOption.contains('C'.toByte)) finally it.close()
+          }
+        val onDiskMs = try {
+          while (!firstCommitOnDisk && System.currentTimeMillis() < trafficEnds)
+            Thread.sleep(20)
+          val at = System.currentTimeMillis()
+          while (System.currentTimeMillis() < trafficEnds) Thread.sleep(50)
+          at
+        } finally ticker.stop().foreach(err => fail(err))
+        assert(firstCommitOnDisk && onDiskMs < trafficEnds,
+          "nothing reached disk while traffic flowed: the tailer waited for a quiet stream")
+        assert(onDiskMs - ticker.startedMs <= idleMs + 2000,
+          s"first commit reached disk ${onDiskMs - ticker.startedMs} ms after it was sent")
+      } finally repl.close()
+    } finally cluster.stop()
+  }
+
+  test("Replicator.close() returns within 15 s, under live traffic and on a quiet stream") {
+    assume(LivePgHarness.available, "no usable PostgreSQL installation — skipping")
+    import graft.streaming.{Graft, GraftConfig}
+    val cluster = LivePgHarness.provision()
+    try {
+      def replicator(table: String) = {
+        tickTable(cluster, table)
+        Graft.replicate(GraftConfig(s"${table}_demo", database = Some("postgres"),
+          username = Some("postgres"), publication = Some(s"${table}_pub")),
+          s"${cluster.base}/wal-$table", unixSocketDir = Some(cluster.sock))
+      }
+      def timedClose(r: graft.sources.replication.Replicator): Long = {
+        val t0 = System.currentTimeMillis()
+        r.close()
+        System.currentTimeMillis() - t0
+      }
+      val busy = replicator("busy")
+      val calm = replicator("calm")
+      val ticker = new Ticker(cluster, "busy", everyMs = 50L)
+      try {
+        // busy: pump, acks and reader all active while close() runs
+        Thread.sleep(3000)
+        val busyMs = timedClose(busy)
+        assert(busyMs <= 15000, s"Replicator.close() took $busyMs ms under live traffic")
+        assert(!busy.isRunning, "the pump thread outlived close()")
+        ticker.stop().foreach(err => fail(err))
+        // calm: one commit, then silence — the idle flush writes the
+        // segment and sends its ack while the reader waits on the socket,
+        // which the server must see at once, not at its next keepalive
+        def confirmed: Long = PgReplicationClient.parseLsn(cluster.psql(
+          "SELECT confirmed_flush_lsn FROM pg_replication_slots " +
+            "WHERE slot_name = 'calm_demo_graft'").trim)
+        val before = confirmed
+        cluster.psql("INSERT INTO calm VALUES (1)")
+        val calmDir = s"${cluster.base}/wal-calm"
+        val until = System.currentTimeMillis() + 30000
+        while (WalSegments.listSegments(calmDir).isEmpty && System.currentTimeMillis() < until)
+          Thread.sleep(50)
+        assert(WalSegments.listSegments(calmDir).nonEmpty, "the quiet stream never flushed")
+        val ackBy = System.currentTimeMillis() + 3000
+        while (confirmed <= before && System.currentTimeMillis() < ackBy) Thread.sleep(100)
+        assert(confirmed > before, "the flush's ack did not reach the server on a quiet stream")
+        val calmMs = timedClose(calm)
+        assert(calmMs <= 15000, s"Replicator.close() took $calmMs ms on a quiet stream")
+        assert(!calm.isRunning, "the pump thread outlived close()")
+      } finally {
+        ticker.stop()
+        busy.close()
+        calm.close()
+      }
     } finally cluster.stop()
   }
 }

@@ -50,7 +50,7 @@ class StreamingCdcSpec extends AnyFunSuite {
       .outputMode("append").trigger(Trigger.AvailableNow())
     checkpoint.foreach(c => w = w.option("checkpointLocation", c))
     val q = w.start()
-    q.awaitTermination(120000)
+    GraftSession.awaitFinished(q, 120000)
   }
 
   // ---- source: decode + offsets ----
@@ -181,7 +181,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     val q = readStreamFrom(dir, "maxFramesPerTrigger" -> "10")
       .writeStream.format("memory").queryName(name)
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    GraftSession.awaitFinished(q, 120000)
     val batches = q.recentProgress.count(_.numInputRows > 0)
     assert(batches >= 3, s"expected >=3 rate-limited batches, got $batches")
     // rows = frames per segment summed: (4 header + per-txn frames)
@@ -203,7 +203,7 @@ class StreamingCdcSpec extends AnyFunSuite {
             .collect().map(r => (r.getString(0), r.getString(1)))
           ()
         }.start()
-      q.awaitTermination(120000)
+      GraftSession.awaitFinished(q, 120000)
     }
     run()
     assert(got.length == 6 && got.forall(_._2 == "user"))
@@ -504,7 +504,7 @@ class StreamingCdcSpec extends AnyFunSuite {
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      GraftSession.awaitFinished(q, 120000)
     }
     runOnce()
     assert(spark.read.parquet(out).count() == 4)
@@ -613,11 +613,11 @@ class StreamingCdcSpec extends AnyFunSuite {
     while (q1.recentProgress.length < 1 && System.nanoTime() < deadline)
       Thread.sleep(100)
     q1.stop()
-    q1.awaitTermination(120000)
+    GraftSession.awaitFinished(q1, 120000)
     assert(emitted.isEmpty, s"nothing may emit before the commit, got $emitted")
 
     val q2 = start(Trigger.AvailableNow()) // restart: drains the rest
-    q2.awaitTermination(120000)
+    GraftSession.awaitFinished(q2, 120000)
     // AssembledChange.seq is the global frame index: header 0-3, begin 4,
     // the six inserts are frames 5-10 (commit 11)
     assert(emitted.sorted.toSeq == (5L to 10L).toSeq,
@@ -936,7 +936,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     val config = GraftConfig("demo", publication = Some("user_only"),
       subscriptions = Seq("user"), maxFramesPerTrigger = Some(1000))
     val q = Graft.start(spark, config, dir, engine, trigger = Trigger.AvailableNow())
-    q.awaitTermination(120000)
+    GraftSession.awaitFinished(q, 120000)
     assert(seen.sorted.toSeq == Seq(("insert", "user"), ("update", "user")),
       s"unpublished tables leaked: $seen")
   }
@@ -952,7 +952,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     val config = GraftConfig("eo_demo", durableSlot = true,
       checkpointDir = Some(ckpt), exactlyOnce = true)
     val q = Graft.start(spark, config, dir, engine, trigger = Trigger.AvailableNow())
-    q.awaitTermination(120000)
+    GraftSession.awaitFinished(q, 120000)
     assert(seen.get() == 2)
     // the config path armed the engine, and markers live NEXT TO the
     // checkpoint — same filesystem, same lifecycle
@@ -972,7 +972,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     val config = GraftConfig("rocks_demo", stateStore = Some("rocksdb"))
     try {
       val q = Graft.start(spark, config, dir, engine, trigger = Trigger.AvailableNow())
-      q.awaitTermination(120000)
+      GraftSession.awaitFinished(q, 120000)
       assert(seen.get() == 2)
       // the assembler's stateful operator actually ran on RocksDB: its
       // per-operator custom metrics are provider-specific
@@ -991,6 +991,63 @@ class StreamingCdcSpec extends AnyFunSuite {
         "spark.sql.streaming.stateStore.providerClass"),
         "stateStore provider conf leaked past Graft.start")
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  }
+
+  test("Graft facade: state width is one wave of task slots; a checkpoint keeps its own") {
+    import org.apache.spark.sql.streaming.StreamingQuery
+    val width = "spark.sql.shuffle.partitions"
+    val session = spark.conf.get(width)
+    val capped = math.min(session.toInt, spark.sparkContext.defaultParallelism)
+    assert(capped < session.toInt,
+      s"the spec session must be wider than its task slots: $session vs $capped")
+    def stateWidths(q: StreamingQuery): Set[Long] = q.recentProgress.toSeq
+      .flatMap(_.stateOperators.toSeq).map(_.numShufflePartitions).toSet
+    val dir = tmpDir("width")
+    WalFixture.writeSegments(dir,
+      (0 until 6).map(i => mkChange(i, i, "insert", "user", recordId = i)))
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val engine = new Engine().onInsert("*") { df =>
+      df.select(element_at($"new_record", "id")).collect()
+        .foreach(r => ids.add(r.getString(0)))
+    }
+
+    // Graft.start and Graft.materialize: capped width, session untouched
+    val q = Graft.start(spark, GraftConfig("width_demo"), dir, engine,
+      trigger = Trigger.AvailableNow())
+    GraftSession.awaitFinished(q, 120000)
+    assert(stateWidths(q) == Set(capped.toLong), s"start ran at ${stateWidths(q)}")
+    assert(spark.conf.get(width) == session, "Graft.start leaked its width")
+    val m = Graft.materialize(spark, GraftConfig("width_matz"), dir,
+      tmpDir("width-state"), buckets = 4, trigger = Trigger.AvailableNow())
+    GraftSession.awaitFinished(m, 120000)
+    assert(stateWidths(m) == Set(capped.toLong), s"materialize ran at ${stateWidths(m)}")
+    assert(spark.conf.get(width) == session, "Graft.materialize leaked its width")
+
+    // a durable query created at width 32 (before the cap existed)
+    // resumes at 32 through Graft.start and delivers each event once
+    ids.clear()
+    val config = GraftConfig("width_ckpt", durableSlot = true,
+      checkpointDir = Some(tmpDir("width-ckpt")))
+    spark.conf.set(width, "32")
+    val wide = try engine.start(Graft.events(spark, config, dir),
+        checkpoint = config.effectiveCheckpoint, trigger = Trigger.AvailableNow(),
+        queryName = "graft-width_ckpt")
+      finally spark.conf.set(width, session)
+    GraftSession.awaitFinished(wide, 120000)
+    assert(stateWidths(wide) == Set(32L))
+    val more = (10 until 13).map(i => mkChange(i, 100 + i, "insert", "user", recordId = i))
+    val frames = (WalFixture.headerFrames ++
+      more.grouped(1).flatMap(g => WalFixture.txnFrames(g))).map(PgOutputEncoder.encode)
+    WalSegments.write(WalSegments.segmentPath(dir, WalSegments.nextSegmentIndex(dir)),
+      frames.toSeq)
+    val resumed = Graft.start(spark, config, dir, engine, trigger = Trigger.AvailableNow())
+    GraftSession.awaitFinished(resumed, 120000)
+    assert(stateWidths(resumed) == Set(32L),
+      s"a checkpoint must keep its recorded width, got ${stateWidths(resumed)}")
+    assert(spark.conf.get(width) == session)
+    val delivered = ids.toArray.toSeq.map(_.toString.toInt).sorted
+    assert(delivered == (0 until 6) ++ (10 until 13),
+      s"events lost or duplicated across the resume: $delivered")
   }
 
   test("change-table polling lane discovers newly-appended files incrementally") {
@@ -1045,7 +1102,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     val assembled = TxnAssembler.assemble(readStreamFrom(dir)).toDF()
     val q = assembled.writeStream.format("memory").queryName("t_trunc_asm")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    GraftSession.awaitFinished(q, 120000)
     val ops = spark.table("t_trunc_asm").orderBy("change_idx")
       .collect().map(r => (r.getAs[String]("op"), r.getAs[String]("table_name")))
     assert(ops.toSeq == Seq(("insert", "user"), ("truncate", "user"), ("truncate", "todo")))
@@ -1267,13 +1324,13 @@ class StreamingCdcSpec extends AnyFunSuite {
     val q1 = engine.start(events, checkpoint = Some(ckpt),
       trigger = Trigger.AvailableNow(), queryName = "ledger-restart-q1")
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q1.awaitTermination(120000)
+      GraftSession.awaitFinished(q1, 120000)
     }
     // restart on the SAME checkpoint: Spark re-plans the uncommitted batch
     // under its original batchId; A is ledger-skipped, B re-runs
     val q2 = engine.start(events, checkpoint = Some(ckpt),
       trigger = Trigger.AvailableNow(), queryName = "ledger-restart-q2")
-    q2.awaitTermination(120000)
+    GraftSession.awaitFinished(q2, 120000)
     assert(ran.toSeq == Seq("a", "crash", "recovered"),
       s"unexpected delivery sequence: $ran")
     // both markers carry SPARK's batchId (0) — the replay reused it
@@ -1605,7 +1662,7 @@ class StreamingCdcSpec extends AnyFunSuite {
       .foreachBatch { (b: org.apache.spark.sql.Dataset[Event], _: Long) =>
         collected ++= b.collect(); ()
       }.start()
-    q.awaitTermination(120000)
+    GraftSession.awaitFinished(q, 120000)
     val byOp = collected.sortBy(_.seq)
     assert(byOp.map(_.`type`) == Seq("insert", "update"))
     assert(byOp.head.new_record.get("id") == "7")
@@ -1630,7 +1687,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     val events = ChangeStream.eventsFromAssembled(
       TxnAssembler.assemble(readStreamFrom(dir)).toDF())
     val q = engine.start(events, trigger = Trigger.AvailableNow(), queryName = "t_e2e")
-    q.awaitTermination(120000)
+    GraftSession.awaitFinished(q, 120000)
     assert(inserts.toSeq == Seq(1L))
   }
 
@@ -1679,7 +1736,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     val config = GraftConfig("matz", publication = Some("graft_pub"))
     val q = Graft.materialize(spark, config, dir, state,
       buckets = 4, trigger = Trigger.AvailableNow())
-    q.awaitTermination(600000)
+    GraftSession.awaitFinished(q, 600000)
     val got = Materializer.currentState(spark, state, Graft.materializeSpec(4))
       .select(col("table_name"), col("record_key"),
         element_at(col("record"), "val_cents"))
