@@ -6,6 +6,32 @@ import org.apache.spark.sql.SparkSession
   * $SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   */
 object Bench {
+  private def jstr(s: String): String =
+    "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString } + "\""
+
+  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
+
+  /** The LAST stdout line — the compact summary a tail-capturing parser
+    * reads: totals, the error census, the crawl-loop increment ratios and
+    * the per-query seconds as an array aligned with the lexicographic
+    * query-name order (the name map rides the `per_query_sec` line and
+    * BENCH_LOCAL.json). Machine-readable keys only; it must stay inside a
+    * 2 KB tail window at the full query count.
+    */
+  private[graft] def trailer(total: Double, medTotal: Double,
+      perQuerySec: Seq[Double], errorQueries: Seq[String],
+      incrRatios: Seq[(String, Double)], sfDir: String): String = {
+    val ratios = incrRatios.map { case (q, r) => jstr(q) + ":" + r3(r) }
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
+      s""""median_total":${r3(medTotal)},"n_queries":${perQuerySec.length},""" +
+      s""""n_errors":${errorQueries.length},""" +
+      s""""error_queries":${errorQueries.map(jstr).mkString("[", ",", "]")},""" +
+      s""""per_increment_max_over_median":${ratios.mkString("{", ",", "}")},""" +
+      s""""per_query_sec_sorted":${perQuerySec.map(r3).mkString("[", ",", "]")},""" +
+      s""""per_query_order":"lexicographic","sf":${jstr(sfDir)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -106,9 +132,6 @@ object Bench {
       samples.get(name).filter(_ => !errors.contains(name))
         .map(xs => name -> median(xs))
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString } + "\""
     val qs = results.map { case (k, v, _) => jstr(k) + ":" + v }.mkString("{", ",", "}")
     val meds = medians.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
     val errs = results.collect { case (k, _, Some(m)) => jstr(k) + ":" + jstr(m.take(300)) }
@@ -222,7 +245,6 @@ object Bench {
     // parsed:null), so the parse-critical figures — totals, error census,
     // crawl-loop increment ratios — ride a ~1 KB trailer while the full
     // envelope lives in the first line and BENCH_LOCAL.json.
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
     // the flat-increment claim, measured min-envelope style: each PASS
     // streams its batches over a monotonically growing index, so a real
     // corpus-size dependency shows up as a within-pass max/median
@@ -237,11 +259,8 @@ object Bench {
         case List(a, b) if b > a => xs.slice(a, b).toList
       }.toList
       val ratios = slices.filter(_.nonEmpty).map(s => s.max / median(s))
-      if (ratios.isEmpty) None
-      else Some(jstr(q) + ":" + r3(ratios.min))
-    }.mkString("{", ",", "}")
-    val errNames = results.collect { case (k, _, Some(_)) => jstr(k) }
-      .mkString("[", ",", "]")
+      if (ratios.isEmpty) None else Some(q -> ratios.min)
+    }
     // Per-query seconds for the driver (r17 PERF gap: the comparator
     // reads only the LAST ~2-3 KB of stdout, so the 4.4 KB name→sec map
     // cannot ride the trailer without pushing its own start out of the
@@ -256,10 +275,8 @@ object Bench {
     val perQueryLine =
       s"""{"metric":"per_query_sec","unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     println(perQueryLine)
-    val perQueryArr = results.map { case (_, v, _) => r3(v) }
-      .mkString("[", ",", "]")
-    val summary =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","median_total":${r3(medTotal)},"n_queries":${results.length},"n_errors":${errors.size},"error_queries":$errNames,"per_increment_max_over_median":$incrRatios,"per_query_sec_sorted":$perQueryArr,"per_query_order":"lexicographic query names; name map on the per_query_sec line + BENCH_LOCAL.json","sf":"$sfDir","protocol":"per-query min of $repeats round-robin passes; ratio = min over passes of within-pass max/median (see first line)","full":"first stdout line + BENCH_LOCAL.json carry per-query mins/medians/notes"}"""
+    val summary = trailer(total, medTotal, results.map(_._2),
+      results.collect { case (k, _, Some(_)) => k }, incrRatios, sfDir)
     // The trailer must stay the LAST stdout line and inside the capture
     // window: shutdown-time WARNs (r17: a StateStore maintenance stack
     // trace landed AFTER the trailer and burned ~900 B of it) are noise

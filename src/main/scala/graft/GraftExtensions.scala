@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 
 /** SQL surface for the library's native expressions: register via
   * `spark.sql.extensions=graft.GraftExtensions` (or
@@ -44,7 +44,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
   * partition column, so the restriction plans as a `PartitionFilters`
   * prune (exactly the Scala API's `committedOnly` read: crash residue
   * and torn appends are invisible, a committed-empty relation reads
-  * zero rows, a legacy pre-manifest store scans everything). Every
+  * zero rows, a directory without a manifest is refused). Every
   * further SQL filter/projection lands on a plain parquet relation and
   * pushes down as usual — the TVF adds a leaf pinning, never a new
   * reader. `graft_index_at` pins a RETAINED version (leaves AND the
@@ -111,11 +111,27 @@ object GraftExtensions {
     * tomb list, every data relation on its leaf list.
     */
   private def indexPlan(path: String, rel: String,
-      meta: Option[IndexManifest.Meta]): LogicalPlan = {
-    require(rel.matches("[0-9A-Za-z_\\-]+"), s"invalid relation name: $rel")
-    val spark = SparkSession.active
-    val live = meta.map(m => if (rel == "tombs") m.tombs else m.leaves)
-    IndexManifest.committedOnly(spark.read.parquet(s"$path/$rel"), live)
+      meta: IndexManifest.Meta): LogicalPlan = {
+    IndexManifest.requireTag(rel, "relation name")
+    IndexManifest.committedOnly(
+        SparkSession.active.read.parquet(s"$path/$rel"), meta.liveOf(rel))
+      .queryExecution.logical
+  }
+
+  private def headMeta(path: String): IndexManifest.Meta =
+    IndexManifest.readMeta(path).getOrElse(
+      throw new IllegalArgumentException(
+        s"$path holds no committed index manifest"))
+
+  /** Encoder-free DataFrame construction — a TVF builder may run inside a
+    * REPL session where product-encoder reflection is unreliable.
+    */
+  private def rowsPlan(rows: Seq[Row],
+      fields: (String, DataType)*): LogicalPlan = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    SparkSession.active.createDataFrame(rows.asJava,
+        StructType(fields.map { case (n, t) => StructField(n, t, false) }))
       .queryExecution.logical
   }
 
@@ -127,11 +143,8 @@ object GraftExtensions {
     */
   private def metaPlan(path: String): LogicalPlan = {
     import org.apache.spark.sql.functions.lit
-    val spark = SparkSession.active
-    val m = IndexManifest.readMeta(path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path holds no committed index manifest"))
-    spark.range(1).select(
+    val m = headMeta(path)
+    SparkSession.active.range(1).select(
       lit(m.version).as("version"),
       lit(m.groups).as("groups"),
       lit(m.leaves.size).as("n_leaves"),
@@ -146,24 +159,11 @@ object GraftExtensions {
     * [[graft.operators.store.IndexManifest.readMetaAt]] can still
     * reach; each row carries that snapshot's leaf/tomb census.
     */
-  private def historyPlan(path: String): LogicalPlan = {
-    val spark = SparkSession.active
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    val rows: Seq[Row] = IndexManifest.retainedVersions(path).flatMap { v =>
-      IndexManifest.readMetaAt(path, v).map(m =>
-        Row(v, m.groups, m.leaves.size, m.tombs.size))
-    }
-    // encoder-free construction: the builder may run inside a REPL
-    // session where product-encoder reflection is unreliable
-    val schema = StructType(Seq(
-      StructField("version", LongType, nullable = false),
-      StructField("groups", IntegerType, nullable = false),
-      StructField("n_leaves", IntegerType, nullable = false),
-      StructField("n_tombs", IntegerType, nullable = false)))
-    spark.createDataFrame(rows.asJava, schema).queryExecution.logical
-  }
+  private def historyPlan(path: String): LogicalPlan =
+    rowsPlan(IndexManifest.history(path).map(m =>
+        Row(m.version, m.groups, m.leaves.size, m.tombs.size)),
+      "version" -> LongType, "groups" -> IntegerType,
+      "n_leaves" -> IntegerType, "n_tombs" -> IntegerType)
 
   /** One row per RETAINED state-store manifest version — the CDC
     * replica's DESCRIBE HISTORY (the [[historyPlan]] move on the
@@ -172,26 +172,15 @@ object GraftExtensions {
     * truncate-watermark count, and effective retention window.
     */
   private def stateHistoryPlan(path: String): LogicalPlan = {
-    val spark = SparkSession.active
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    val M = graft.streaming.Materializer
-    val versions = M.retainedVersions(path)
-    if (versions.isEmpty) throw new IllegalArgumentException(
+    val history = IndexManifest.history(path)
+    if (history.isEmpty) throw new IllegalArgumentException(
       s"graft_state_history: $path holds no materialized state (no manifest)")
-    val rows: Seq[Row] = versions.flatMap { v =>
-      M.readManifestAt(path, v).map(m =>
-        Row(v, m.nbuckets, m.leaves.size, m.truncates.size,
-          M.retentionOf(m)))
-    }
-    val schema = StructType(Seq(
-      StructField("version", LongType, nullable = false),
-      StructField("nbuckets", IntegerType, nullable = false),
-      StructField("n_leaves", IntegerType, nullable = false),
-      StructField("n_truncates", IntegerType, nullable = false),
-      StructField("retain", IntegerType, nullable = false)))
-    spark.createDataFrame(rows.asJava, schema).queryExecution.logical
+    rowsPlan(history.map(m =>
+        Row(m.version, m.groups, m.leaves.size, m.truncates.size,
+          IndexManifest.retentionOf(m))),
+      "version" -> LongType, "nbuckets" -> IntegerType,
+      "n_leaves" -> IntegerType, "n_truncates" -> IntegerType,
+      "retain" -> IntegerType)
   }
 
   /** One row per STORE under a root path — the fleet-discovery catalog
@@ -204,11 +193,7 @@ object GraftExtensions {
     * store, no data scan.
     */
   private def storesPlan(root: String): LogicalPlan = {
-    val spark = SparkSession.active
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     import org.apache.hadoop.fs.Path
-    import scala.jdk.CollectionConverters._
     val (fs, rootPath) = graft.sources.cdc.WalSegments.fsFor(root)
     val kids =
       try fs.listStatus(rootPath).filter(_.isDirectory).map(_.getPath).toSeq
@@ -217,36 +202,25 @@ object GraftExtensions {
       }
     val relFamilies = Seq("bands" -> "dedup", "codes" -> "vector",
       "edges" -> "graph", "hashes" -> "ahash", "chunks" -> "hamming")
-    val rows: Seq[Row] = kids.flatMap { p =>
+    // a Materializer STATE store (the CDC replica) catalogs too: family
+    // "state", the bucket dial in the groups column (both are the store's
+    // partition dial), tombstones not tracked as leaves (they are rows)
+    val rows = kids.flatMap { p =>
       IndexManifest.readMeta(p.toString).map { m =>
         val fams = relFamilies.collect {
           case (rel, fam) if fs.exists(new Path(p, rel)) => fam
         }
-        Row(p.getName, if (fams.isEmpty) "unknown" else fams.mkString("+"),
-          m.version, m.groups, m.leaves.size, m.tombs.size,
-          IndexManifest.retentionOf(m))
-      }.orElse {
-        // a Materializer STATE store (the CDC replica) catalogs too:
-        // family "state", the bucket dial in the groups column (both
-        // are the store's partition dial), tombstones not tracked as
-        // leaves (they are rows) — 0 by convention
-        val m = graft.streaming.Materializer.readManifest(p.toString)
-        if (m.version > 0L)
-          Some(Row(p.getName, "state", m.version, m.nbuckets,
-            m.leaves.size, 0, graft.streaming.Materializer.retentionOf(m)))
-        else None
+        val family =
+          if (m.kind != "index") m.kind
+          else if (fams.isEmpty) "unknown" else fams.mkString("+")
+        Row(p.getName, family, m.version, m.groups, m.leaves.size,
+          m.tombs.size, IndexManifest.retentionOf(m))
       }
     }.sortBy(_.getString(0))
-    // encoder-free construction — the REPL-classloader rule (historyPlan)
-    val schema = StructType(Seq(
-      StructField("store", StringType, nullable = false),
-      StructField("family", StringType, nullable = false),
-      StructField("version", LongType, nullable = false),
-      StructField("groups", IntegerType, nullable = false),
-      StructField("n_leaves", IntegerType, nullable = false),
-      StructField("n_tombs", IntegerType, nullable = false),
-      StructField("retain", IntegerType, nullable = false)))
-    spark.createDataFrame(rows.asJava, schema).queryExecution.logical
+    rowsPlan(rows, "store" -> StringType, "family" -> StringType,
+      "version" -> LongType, "groups" -> IntegerType,
+      "n_leaves" -> IntegerType, "n_tombs" -> IntegerType,
+      "retain" -> IntegerType)
   }
 
   /** The SEARCH table functions — the engine's signature operations
@@ -513,8 +487,7 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, s"graft_index expects (path, rel), got ${args.length}")
         val path = strArg(args, 0, "graft_index")
-        indexPlan(path, strArg(args, 1, "graft_index"),
-          IndexManifest.readMeta(path))
+        indexPlan(path, strArg(args, 1, "graft_index"), headMeta(path))
       }),
     (FunctionIdentifier("graft_index_at"),
       new ExpressionInfo(classOf[GraftExtensions].getName, "graft_index_at"),
@@ -528,7 +501,7 @@ object GraftExtensions {
             s"manifest version $v is not retained at $path — time travel " +
               s"reaches the ${IndexManifest.retentionWindow(path)}-version " +
               "grace window"))
-        indexPlan(path, strArg(args, 1, "graft_index_at"), Some(meta))
+        indexPlan(path, strArg(args, 1, "graft_index_at"), meta)
       }),
     (FunctionIdentifier("graft_index_meta"),
       new ExpressionInfo(classOf[GraftExtensions].getName, "graft_index_meta"),
@@ -548,9 +521,9 @@ object GraftExtensions {
     (FunctionIdentifier("graft_state"),
       new ExpressionInfo(classOf[GraftExtensions].getName, "graft_state"),
       (args: Seq[Expression]) => {
-        require(args.length == 2 || args.length == 3,
-          s"graft_state expects (path, key_cols [, buckets]), got ${args.length}")
-        val (path, spec) = stateSpec(args, "graft_state", bucketsAt = 2)
+        require(args.length == 2,
+          s"graft_state expects (path, key_cols), got ${args.length}")
+        val (path, spec) = stateSpec(args, "graft_state")
         graft.streaming.Materializer
           .currentState(SparkSession.active, path, spec)
           .queryExecution.logical
@@ -566,12 +539,10 @@ object GraftExtensions {
     (FunctionIdentifier("graft_state_at"),
       new ExpressionInfo(classOf[GraftExtensions].getName, "graft_state_at"),
       (args: Seq[Expression]) => {
-        require(args.length == 3 || args.length == 4,
-          s"graft_state_at expects (path, key_cols, version [, buckets]), " +
-            s"got ${args.length}")
+        require(args.length == 3,
+          s"graft_state_at expects (path, key_cols, version), got ${args.length}")
         val at = longArg(args, 2, "graft_state_at")
-        val (path, spec) = stateSpec(args, "graft_state_at", bucketsAt = 3,
-          at = Some(at))
+        val (path, spec) = stateSpec(args, "graft_state_at", at = Some(at))
         graft.streaming.Materializer
           .currentStateAt(SparkSession.active, path, spec, at)
           .queryExecution.logical
@@ -581,35 +552,24 @@ object GraftExtensions {
     * key columns come from the caller (a comma-separated literal — the
     * store's key is deployment knowledge, exactly as in the Scala API),
     * the bucket dial from the store's own manifest (`nbuckets`, recorded
-    * at apply time) unless the optional trailing argument overrides it
-    * (required for legacy stores that predate the recorded dial).
+    * at apply time). An as-of read resolves the SNAPSHOT's dial: across
+    * an intervening rebucket the head's count would mis-plan the pinned
+    * version's leaves (not-retained falls through to the head —
+    * currentStateAt then throws the loud window error).
     */
   private def stateSpec(args: Seq[Expression], fn: String,
-      bucketsAt: Int, at: Option[Long] = None):
-      (String, graft.streaming.Materializer.Spec) = {
+      at: Option[Long] = None): (String, graft.streaming.Materializer.Spec) = {
     val path = strArg(args, 0, fn)
     val keys = strArg(args, 1, fn).split(",").map(_.trim)
       .filter(_.nonEmpty).toSeq
     require(keys.nonEmpty, s"$fn: key_cols must name at least one column")
-    val buckets =
-      if (args.length > bucketsAt) longArg(args, bucketsAt, fn).toInt
-      else {
-        val head = graft.streaming.Materializer.readManifest(path)
-        if (head.version == 0L) throw new IllegalArgumentException(
-          s"$fn: $path holds no materialized state (no manifest)")
-        // an as-of read resolves the SNAPSHOT's dial: across an
-        // intervening rebucket the head's count would mis-plan the
-        // pinned version's leaves (not-retained falls through to the
-        // head — currentStateAt then throws the loud window error)
-        val m = at.flatMap(v =>
-          graft.streaming.Materializer.readManifestAt(path, v))
-          .getOrElse(head)
-        require(m.nbuckets > 0, s"$fn: $path records no bucket dial " +
-          "(legacy store) — pass buckets as the trailing argument")
-        m.nbuckets
-      }
+    val m = at.flatMap(IndexManifest.readMetaAt(path, _))
+      .orElse(IndexManifest.readMeta(path))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$fn: $path holds no materialized state (no manifest)"))
+    require(m.groups > 0, s"$fn: $path records no bucket dial")
     (path, graft.streaming.Materializer.Spec(keyCols = keys,
-      buckets = buckets))
+      buckets = m.groups))
   }
 
   private[graft] def injectTableFunctions(ext: SparkSessionExtensions): Unit =

@@ -1,5 +1,6 @@
 package graft.operators.ann
 
+import graft.operators.store.IndexManifest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object KnnGraph {
 
-  import graft.operators.store.IndexManifest
 
   /** Hash-range partition dial (the Dedup/Multimodal figure): small
     * enough that a batch's touched-group list is driver-side metadata,
@@ -147,10 +147,8 @@ object KnnGraph {
     */
   private def commitLeaf(edges: DataFrame, indexDir: String, tag: String,
       groups: Int, replace: Boolean): Unit = {
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid leaf tag: $tag")
-    val meta = metaOf(indexDir).getOrElse(IndexManifest.Meta(0L, groups,
-      IndexManifest.legacyLeaves(indexDir, Seq("edges")),
-      IndexManifest.legacyLeaves(indexDir, Seq("tombs"))))
+    IndexManifest.requireTag(tag, "leaf tag")
+    val meta = IndexManifest.readMetaOrEmpty(indexDir, groups)
     if (isDone(meta, tag)) return
     if (meta.groups != groups)
       throw new IllegalStateException(
@@ -180,7 +178,7 @@ object KnnGraph {
         val pooled = hubsParam(meta)
         if (pooled.nonEmpty || meta.leaves.isEmpty) pooled
         else IndexManifest.committedOnly(
-            spark.read.parquet(s"$indexDir/edges"), Some(meta.leaves))
+            spark.read.parquet(s"$indexDir/edges"), meta.leaves)
           .select(col("vec_id")).distinct()
           .orderBy(col("vec_id")).limit(hubN)
           .collect().map(_.getLong(0)).toSeq
@@ -209,7 +207,7 @@ object KnnGraph {
     */
   def delete(spark: SparkSession, indexDir: String, ids: DataFrame,
       tag: String): Unit = {
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid tombstone tag: $tag")
+    IndexManifest.requireTag(tag, "tombstone tag")
     val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
       s"$indexDir holds no committed k-NN graph (build first)"))
     if (isDoneTomb(meta, tag)) return
@@ -232,8 +230,8 @@ object KnnGraph {
 
   private def tombstonesSnapshot(spark: SparkSession, indexDir: String,
       meta: Option[IndexManifest.Meta]): Option[DataFrame] = {
-    val live = meta.map(_.tombs)
-    if (live.forall(_.isEmpty)) None
+    val live = meta.toSeq.flatMap(_.tombs)
+    if (live.isEmpty) None
     else Some(IndexManifest.committedOnly(
         spark.read.parquet(s"$indexDir/tombs"), live)
       .select(col("vec_id")).distinct())
@@ -270,12 +268,12 @@ object KnnGraph {
       tag, groups, replace = false)
 
   /** The committed edge relation (vec_id, nbr_id, rank, mutual) — a
-    * `leaf` partition prune over the committed set; legacy stores scan
-    * every leaf.
+    * `leaf` partition prune over the committed set.
     */
   def edges(spark: SparkSession, indexDir: String): DataFrame =
     IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/edges"), metaOf(indexDir).map(_.leaves))
+        spark.read.parquet(s"$indexDir/edges"),
+        metaOf(indexDir).toSeq.flatMap(_.leaves))
       .select(col("vec_id"), col("nbr_id"), col("rank"), col("mutual"))
 
   /** Committed leaf count — the census the harnesses gate. */
@@ -309,7 +307,7 @@ object KnnGraph {
   private def groupedEdges(spark: SparkSession, indexDir: String,
       meta: Option[IndexManifest.Meta]): DataFrame =
     IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/edges"), meta.map(_.leaves))
+        spark.read.parquet(s"$indexDir/edges"), meta.toSeq.flatMap(_.leaves))
       .select(col("ggrp"), col("vec_id"), col("nbr_id"), col("rank"),
         col("mutual"))
 
@@ -330,7 +328,7 @@ object KnnGraph {
           s"time travel reaches the ${IndexManifest.retentionWindow(indexDir)}-" +
           "version grace window"))
     val asOfEdges = IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/edges"), Some(meta.leaves))
+        spark.read.parquet(s"$indexDir/edges"), meta.leaves)
       .select(col("ggrp"), col("vec_id"), col("nbr_id"), col("rank"),
         col("mutual"))
     // the group dial pins from the SNAPSHOT (a later regroup re-keys
@@ -396,7 +394,7 @@ object KnnGraph {
         // retain deleted vertices until a refine drops them physically,
         // and a dead hub would occupy a seed slot for every search
         val scan = IndexManifest.committedOnly(
-            spark.read.parquet(s"$indexDir/edges"), Some(meta.leaves))
+            spark.read.parquet(s"$indexDir/edges"), meta.leaves)
           .select(col("vec_id")).distinct()
         tombstonesSnapshot(spark, indexDir, Some(meta))
           .fold(scan)(t => scan.join(broadcast(t), Seq("vec_id"), "left_anti"))
@@ -513,9 +511,8 @@ object KnnGraph {
     */
   def regroup(spark: SparkSession, indexDir: String, newGroups: Int,
       tag: String): Unit = {
-    import graft.operators.store.IndexManifest
     require(newGroups > 0, "newGroups must be positive")
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid regroup tag: $tag")
+    IndexManifest.requireTag(tag, "regroup tag")
     val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
       s"$indexDir holds no committed k-NN graph (build first)"))
     if (isDone(meta, tag)) return
@@ -559,12 +556,9 @@ object KnnGraph {
     */
   def merge(spark: SparkSession, srcDirs: Seq[String], destDir: String,
       tag: String, groups: Int = DefaultGroups): Unit = {
-    import graft.operators.store.IndexManifest
     require(srcDirs.nonEmpty, "merge needs at least one source")
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid merge tag: $tag")
-    val dest = metaOf(destDir).getOrElse(IndexManifest.Meta(0L, groups,
-      IndexManifest.legacyLeaves(destDir, Seq("edges")),
-      IndexManifest.legacyLeaves(destDir, Seq("tombs"))))
+    IndexManifest.requireTag(tag, "merge tag")
+    val dest = IndexManifest.readMetaOrEmpty(destDir, groups)
     if (isDone(dest, tag)) return
     if (dest.groups != groups)
       throw new IllegalStateException(
@@ -604,7 +598,7 @@ object KnnGraph {
       val pooled = hubsParam(dest)
       if (pooled.nonEmpty || dest.leaves.isEmpty) pooled
       else IndexManifest.committedOnly(
-          spark.read.parquet(s"$destDir/edges"), Some(dest.leaves))
+          spark.read.parquet(s"$destDir/edges"), dest.leaves)
         .select(col("vec_id")).distinct()
         .orderBy(col("vec_id")).limit(hubN)
         .collect().map(_.getLong(0)).toSeq
@@ -850,57 +844,57 @@ object KnnGraph {
       hops: Int = 4, beam: Int = 32, nSeeds: Int = 64): Long = {
     val base = graft.Tables.spread(graft.Tables.embeddings(spark, d)
       .select(col("vec_id"), col("embedding"))).cache()
-    val indexDir = s"${graft.Tables.scratchDir("graft_ann26")}/graph"
-    build(base.filter(col("vec_id") % 5 =!= 4L), indexDir, "corpus",
-      k = buildK, refineIters = buildRefineIters)
-    val arrivals = base.filter(col("vec_id") % 5 === 4L)
-    (0 until nBatches).foreach { b =>
-      append(spark, indexDir, base,
-        arrivals.filter(pmod(col("vec_id"), lit(5L * nBatches))
-          === (5L * b + 4L)), s"b$b")
+    // every pin the audit takes — `base` and each leg's result — is
+    // released in `finally`: a leg that throws inside `concurrently`
+    // must not leave the corpus or the surviving leg persisted
+    val pins = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    def pinned(df: DataFrame): DataFrame = {
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pins.add(p); p.count(); p
     }
-    if (refineAfter) refine(spark, indexDir, base, "r1")
-    val queries = base.filter(col("vec_id") >= 200L &&
-      col("vec_id") < 200L + nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
-    val bruteTop = broadcast(queries).join(base,
-        col("vec_id") =!= col("query_id"))
-      .withColumn("sim", Ann.cosine(col("q_emb"), col("embedding")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") === 1)
-      .select(col("query_id"), col("vec_id").as("true_nn"))
-    val seeds = queries.select(col("query_id"))
-      .crossJoin(broadcast(hubIds(spark, indexDir, nSeeds)))
-    // the audit's two measurement legs — the in-plan brute-force ground
-    // truth and the graph search — are INDEPENDENT once the store is
-    // committed and `base` is pinned: overlap them (guide §2.6) instead
-    // of letting each leg's small-job tail serialize the other, and pin
-    // each so the scoring join below reads the computed rows. The graph
-    // leg CONSTRUCTS inside its thunk: searchTopK is eager (the
-    // driver-side frontier loop), so its work happens at construction.
-    val legs: Seq[() => DataFrame] = Seq(
-      () => {
-        val p = bruteTop.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count(); p
-      },
-      () => {
-        val p = searchTopK(spark, indexDir, base, queries, seeds,
-            hops, beam, k = 1)
-          .select(col("query_id"), col("vec_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count(); p
-      })
-    val Seq(bt, gt) = graft.GraftSession.concurrently(legs, maxPar = 2)
-    val hits =
-      try gt.join(bt, Seq("query_id"))
+    try {
+      val indexDir = s"${graft.Tables.scratchDir("graft_ann26")}/graph"
+      build(base.filter(col("vec_id") % 5 =!= 4L), indexDir, "corpus",
+        k = buildK, refineIters = buildRefineIters)
+      val arrivals = base.filter(col("vec_id") % 5 === 4L)
+      (0 until nBatches).foreach { b =>
+        append(spark, indexDir, base,
+          arrivals.filter(pmod(col("vec_id"), lit(5L * nBatches))
+            === (5L * b + 4L)), s"b$b")
+      }
+      if (refineAfter) refine(spark, indexDir, base, "r1")
+      val queries = base.filter(col("vec_id") >= 200L &&
+        col("vec_id") < 200L + nQueries)
+        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
+      val bruteTop = broadcast(queries).join(base,
+          col("vec_id") =!= col("query_id"))
+        .withColumn("sim", Ann.cosine(col("q_emb"), col("embedding")))
+        .withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") === 1)
+        .select(col("query_id"), col("vec_id").as("true_nn"))
+      val seeds = queries.select(col("query_id"))
+        .crossJoin(broadcast(hubIds(spark, indexDir, nSeeds)))
+      // the audit's two measurement legs — the in-plan brute-force ground
+      // truth and the graph search — are INDEPENDENT once the store is
+      // committed and `base` is pinned: overlap them (guide §2.6) instead
+      // of letting each leg's small-job tail serialize the other, and pin
+      // each so the scoring join below reads the computed rows. The graph
+      // leg CONSTRUCTS inside its thunk: searchTopK is eager (the
+      // driver-side frontier loop), so its work happens at construction.
+      val legs: Seq[() => DataFrame] = Seq(
+        () => pinned(bruteTop),
+        () => pinned(searchTopK(spark, indexDir, base, queries, seeds,
+            hops, beam, k = 1).select(col("query_id"), col("vec_id"))))
+      val Seq(bt, gt) = graft.GraftSession.concurrently(legs, maxPar = 2)
+      gt.join(bt, Seq("query_id"))
         .filter(col("vec_id") === col("true_nn"))
         .agg(count(lit(1))).collect()(0).getLong(0)
-      finally { bt.unpersist(); gt.unpersist(); () }
-    base.unpersist()
-    hits
+    } finally {
+      pins.forEach { p => p.unpersist(); () }
+      base.unpersist(); ()
+    }
   }
 
   def persistedSearchSelfRecall(spark: SparkSession, d: String,

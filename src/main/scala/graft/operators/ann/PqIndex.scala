@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * the WAL-lane discipline):
   *
   * {{{
-  *   _idx_manifest-v00000001    // tiny JSON: version, geometry, leaf list
+  *   _manifest-v00000001        // tiny JSON: version, geometry, leaf list
   *   codebooks-v00000001/       // parquet (m, code, cent_emb) — m*ksub rows
   *   codes/cell=c/leaf=v00000001-ab12cd34/  // (vec_id, m, code) — the corpus
   *   codes/cell=c/leaf=v00000002-99e0f1a2/  // appended crawl increment(s)
@@ -391,7 +391,7 @@ object PqIndex {
       tag: Option[String]): Meta = {
     val meta = readMeta(indexDir)
     tag.foreach { t =>
-      require(t.matches("[0-9A-Za-z_\\-]+"), s"invalid idempotency tag: $t")
+      IndexManifest.requireTag(t, "idempotency tag")
       if (isDone(meta, t)) return meta
     }
     sweepUnreferenced(indexDir, meta)
@@ -462,7 +462,7 @@ object PqIndex {
   def merge(spark: SparkSession, srcDirs: Seq[String], destDir: String,
       tag: String): Meta = {
     require(srcDirs.nonEmpty, "merge needs at least one source")
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid merge tag: $tag")
+    IndexManifest.requireTag(tag, "merge tag")
     if (hasCommittedManifest(destDir)) {
       val dm = readMeta(destDir)
       if (hasTag(dm.codeLeaves, tag)) return dm
@@ -551,7 +551,7 @@ object PqIndex {
       tag: Option[String] = None): Meta = {
     val meta = readMeta(indexDir)
     tag.foreach { t =>
-      require(t.matches("[0-9A-Za-z_\\-]+"), s"invalid idempotency tag: $t")
+      IndexManifest.requireTag(t, "idempotency tag")
       if (isDone(meta, t)) return meta
     }
     val leaf = tombLeafName(meta.version + 1, tag.getOrElse(randomSuffix()))
@@ -621,7 +621,7 @@ object PqIndex {
       tag: Option[String] = None): Meta = {
     val meta = readMeta(indexDir)
     tag.foreach { t =>
-      require(t.matches("[0-9A-Za-z_\\-]+"), s"invalid idempotency tag: $t")
+      IndexManifest.requireTag(t, "idempotency tag")
       if (isDone(meta, t)) return meta
     }
     if (meta.codeLeaves.size <= 1 && meta.tombLeaves.isEmpty)
@@ -684,7 +684,7 @@ object PqIndex {
   def retrain(spark: SparkSession, indexDir: String, embProvider: DataFrame,
       tag: String, refineIters: Int = 1,
       coarseRefineIters: Int = 0): Meta = {
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid retrain tag: $tag")
+    IndexManifest.requireTag(tag, "retrain tag")
     val meta = readMeta(indexDir)
     if (isDone(meta, tag)) return meta
     require(meta.ncells > 0 && meta.coarseDir.nonEmpty,

@@ -1,5 +1,7 @@
 package graft.operators.dedup
 
+import graft.operators.store.IndexManifest
+import graft.operators.store.IndexManifest.committedOnly
 import graft.Tables
 import graft.operators.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -322,28 +324,10 @@ object Dedup {
   val DefaultIndexGroups = 32
 
   private def metaOf(indexDir: String) =
-    graft.operators.store.IndexManifest.readMeta(indexDir)
+    IndexManifest.readMeta(indexDir)
 
-  /** The committed meta, or — on a legacy (pre-manifest) store — an
-    * initial meta with every existing on-disk leaf ENROLLED, so the
-    * first manifest commit migrates the store instead of hiding it:
-    * committed readers restrict scans to the manifest's leaves, so an
-    * empty first commit would silently drop the whole pre-upgrade
-    * corpus from every screen (worst case a first [[dedupIndexDelete]]
-    * commits `leaves=[]` and the index reads as empty). Enrolled legacy
-    * leaves keep their prefix-less names (their name IS their tag, so
-    * tag idempotency still holds) and are never swept.
-    */
-  private def metaOrEnroll(indexDir: String,
-      groups: Int): graft.operators.store.IndexManifest.Meta = {
-    import graft.operators.store.IndexManifest
-    metaOf(indexDir).getOrElse(IndexManifest.Meta(0L, groups,
-      IndexManifest.legacyLeaves(indexDir, Seq("sets", "bands")),
-      IndexManifest.legacyLeaves(indexDir, Seq("tombs"))))
-  }
-
-  /** The store's group count: manifest first, default for legacy
-    * (pre-manifest) stores.
+  /** The store's group count: manifest first, default for an empty
+    * store.
     */
   private def groupsOf(indexDir: String): Int =
     metaOf(indexDir).map(_.groups).getOrElse(DefaultIndexGroups)
@@ -356,32 +340,6 @@ object Dedup {
 
   private def setGroup(c: Column, groups: Int): Column =
     pmod(xxhash64(c), lit(groups.toLong)).cast("int")
-
-  /** Restrict an index relation to the manifest's COMMITTED leaves —
-    * crash residue and retained-but-superseded compaction leftovers are
-    * invisible to readers (`leaf` is a partition column, so this is a
-    * partition prune, not a data filter). Legacy stores (no manifest)
-    * scan every leaf — the pre-manifest semantics.
-    */
-  private def committedOnly(df: DataFrame,
-      live: Option[Seq[String]]): DataFrame = live match {
-    case Some(ls) if ls.isEmpty => df.filter(lit(false))
-    case Some(ls)               => df.filter(col("leaf").isin(ls: _*))
-    case None                   => df
-  }
-
-  /** True when `leaf`'s tag is already folded into the index — the
-    * committed manifest carries it (legacy fallback: the band table's
-    * partition dirs).
-    */
-  def indexHasLeaf(spark: SparkSession, indexDir: String,
-      leaf: String): Boolean =
-    metaOf(indexDir) match {
-      case Some(m) => m.hasLeafTag(leaf)
-      case None =>
-        graft.sources.cdc.WalSegments.globNonEmpty(indexDir,
-          s"bands/*/leaf=$leaf")
-    }
 
   /** @param bid the append's position in the fold order (the facade
     *            passes the foreachBatch batch id; -1 = "the bootstrap,
@@ -414,15 +372,14 @@ object Dedup {
       preShingled: Option[DataFrame], indexDir: String, leaf: String,
       numHashes: Int, bands: Int, bid: Long,
       groups: Int): Unit = {
-    import graft.operators.store.IndexManifest
-    require(leaf.matches("[0-9A-Za-z_\\-]+"), s"invalid leaf tag: $leaf")
+    IndexManifest.requireTag(leaf, "leaf tag")
     // IDEMPOTENT fold for at-least-once delivery (foreachBatch replay):
     // a tag the committed manifest already carries is a no-op. The
     // COMMIT POINT is the manifest publish — leaf directories written
     // before a crash are invisible residue (readers restrict to
     // committed leaves) and are dropped before the re-fold, so a replay
     // can never duplicate rows.
-    val meta = metaOrEnroll(indexDir, groups)
+    val meta = IndexManifest.readMetaOrEmpty(indexDir, groups)
     if (meta.hasLeafTag(leaf)) return
     if (meta.groups != groups)
       throw new IllegalStateException(
@@ -497,9 +454,8 @@ object Dedup {
     */
   def dedupIndexDelete(spark: SparkSession, indexDir: String,
       ids: DataFrame, leaf: String, bid: Long = Long.MaxValue): Unit = {
-    import graft.operators.store.IndexManifest
-    require(leaf.matches("[0-9A-Za-z_\\-]+"), s"invalid tombstone tag: $leaf")
-    val meta = metaOrEnroll(indexDir, DefaultIndexGroups)
+    IndexManifest.requireTag(leaf, "tombstone tag")
+    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultIndexGroups)
     if (meta.hasTombTag(leaf)) return
     val leafDir = IndexManifest.leafName(meta.version + 1, leaf)
     IndexManifest.dropResidue(indexDir, Seq("tombs"), leafDir)
@@ -537,7 +493,6 @@ object Dedup {
     */
   def clearDedupTombstones(spark: SparkSession, indexDir: String,
       floorBid: Long): Int = {
-    import graft.operators.store.IndexManifest
     val meta = metaOf(indexDir).getOrElse(return 0)
     if (meta.tombs.isEmpty) return 0
     // readBidAware, like every other tombs read: a plain read whose
@@ -560,7 +515,7 @@ object Dedup {
       .select(col("doc_id"), col("bid").as("tomb_bid"), col("leaf"))
     val liveRows = committedOnly(
         withBidDefault(readBidAware(spark, s"$indexDir/bands"), -1L),
-        Some(meta.leaves))
+        meta.leaves)
       .select(col("doc_id"), col("bid"))
     val biting = candidates
       .join(liveRows, Seq("doc_id"))
@@ -589,17 +544,14 @@ object Dedup {
     tombstonesSnapshot(spark, indexDir, metaOf(indexDir))
 
   private def tombstonesSnapshot(spark: SparkSession, indexDir: String,
-      meta: Option[graft.operators.store.IndexManifest.Meta])
+      meta: Option[IndexManifest.Meta])
       : Option[DataFrame] = {
-    val live = meta.map(_.tombs)
-    if (live.exists(_.isEmpty)) None
-    else if (live.isDefined ||
-        graft.sources.cdc.WalSegments.globNonEmpty(indexDir, "tombs/leaf=*"))
-      Some(committedOnly(
-          withBidDefault(readBidAware(spark, s"$indexDir/tombs"),
-            Long.MaxValue), live)
-        .groupBy(col("doc_id")).agg(max(col("bid")).as("tomb_bid")))
-    else None
+    val live = meta.toSeq.flatMap(_.tombs)
+    if (live.isEmpty) None
+    else Some(committedOnly(
+        withBidDefault(readBidAware(spark, s"$indexDir/tombs"),
+          Long.MaxValue), live)
+      .groupBy(col("doc_id")).agg(max(col("bid")).as("tomb_bid")))
   }
 
   /** `bid` with a default for relations written before the column existed
@@ -652,12 +604,8 @@ object Dedup {
     */
   def compactDedupIndex(spark: SparkSession, indexDir: String,
       tag: String): Unit = {
-    import graft.operators.store.IndexManifest
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid compaction tag: $tag")
-    // a legacy (pre-manifest) store compacts via enrollment: its on-disk
-    // leaves become the committed set this compaction folds — the
-    // explicit migration path (the first commit must never hide them)
-    val meta = metaOrEnroll(indexDir, DefaultIndexGroups)
+    IndexManifest.requireTag(tag, "compaction tag")
+    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultIndexGroups)
     if (!meta.hasLeafTag(tag)) {
       val leafDir = IndexManifest.leafName(meta.version + 1, tag)
       IndexManifest.dropResidue(indexDir, Seq("sets", "bands"), leafDir)
@@ -683,7 +631,7 @@ object Dedup {
       graft.GraftSession.concurrently(Seq(
         () => survivors(committedOnly(
             withBidDefault(readBidAware(spark, s"$indexDir/sets"), -1L),
-            Some(meta.leaves))
+            meta.leaves)
           .select(col("doc_id"), col("sh"), col("bid"), col("sgrp")))
           .withColumn("leaf", lit(leafDir))
           .repartition(col("sgrp"))
@@ -691,7 +639,7 @@ object Dedup {
           .mode("append").parquet(s"$indexDir/sets"),
         () => survivors(committedOnly(
             withBidDefault(readBidAware(spark, s"$indexDir/bands"), -1L),
-            Some(meta.leaves))
+            meta.leaves)
           .select(col("band"), col("bucket"), col("doc_id"), col("bid"),
             col("bgrp")))
           .withColumn("leaf", lit(leafDir))
@@ -713,15 +661,10 @@ object Dedup {
     * [[compactDedupIndex]]'s harness gates (4 appends in, 1 referenced
     * out). Manifest-backed: superseded directories retained for the
     * read grace window don't count (they are no longer part of the
-    * store, merely not yet collected). Legacy fallback: distinct `leaf`
-    * partition values in the band table.
+    * store, merely not yet collected).
     */
   def indexLeafCount(spark: SparkSession, indexDir: String): Int =
-    metaOf(indexDir) match {
-      case Some(m) => m.leaves.size
-      case None => spark.read.parquet(s"$indexDir/bands").select(col("leaf"))
-        .distinct().count().toInt
-    }
+    metaOf(indexDir).fold(0)(_.leaves.size)
 
   /** Re-key the WHOLE index into `newGroups` hash-range partitions —
     * the maintenance move for when the fleet outgrows the group dial
@@ -740,17 +683,15 @@ object Dedup {
     */
   def regroupDedupIndex(spark: SparkSession, indexDir: String,
       newGroups: Int, tag: String): Unit = {
-    import graft.operators.store.IndexManifest
     require(newGroups > 0, "newGroups must be positive")
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid regroup tag: $tag")
-    // legacy stores migrate via enrollment (see metaOrEnroll)
-    val meta = metaOrEnroll(indexDir, DefaultIndexGroups)
+    IndexManifest.requireTag(tag, "regroup tag")
+    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultIndexGroups)
     if (meta.hasLeafTag(tag)) return
     val leafDir = IndexManifest.leafName(meta.version + 1, tag)
     IndexManifest.dropResidue(indexDir, Seq("sets", "bands"), leafDir)
     committedOnly(
         withBidDefault(readBidAware(spark, s"$indexDir/sets"), -1L),
-        Some(meta.leaves))
+        meta.leaves)
       .select(col("doc_id"), col("sh"), col("bid"))
       .withColumn("sgrp", setGroup(col("doc_id"), newGroups))
       .withColumn("leaf", lit(leafDir))
@@ -759,7 +700,7 @@ object Dedup {
       .mode("append").parquet(s"$indexDir/sets")
     committedOnly(
         withBidDefault(readBidAware(spark, s"$indexDir/bands"), -1L),
-        Some(meta.leaves))
+        meta.leaves)
       .select(col("band"), col("bucket"), col("doc_id"), col("bid"))
       .withColumn("bgrp", bandGroup(newGroups))
       .withColumn("leaf", lit(leafDir))
@@ -939,7 +880,6 @@ object Dedup {
   def screenAgainstIndexAt(spark: SparkSession, indexDir: String,
       batch: DataFrame, asOfVersion: Long, numHashes: Int = 64,
       bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    import graft.operators.store.IndexManifest
     val meta = IndexManifest.readMetaAt(indexDir, asOfVersion).getOrElse(
       throw new IllegalArgumentException(
         s"manifest version $asOfVersion is not retained at $indexDir — " +
@@ -950,7 +890,7 @@ object Dedup {
   }
 
   private def screenSnapshot(spark: SparkSession, indexDir: String,
-      meta: Option[graft.operators.store.IndexManifest.Meta],
+      meta: Option[IndexManifest.Meta],
       batch: DataFrame, numHashes: Int, bands: Int,
       threshold: Double, preShingled: Option[DataFrame] = None): DataFrame = {
     // resolve ONE manifest for the whole screen: leaf lists and the
@@ -958,7 +898,7 @@ object Dedup {
     // consistent snapshot even while appends/compactions keep landing
     // (retained manifests keep their leaves on disk for the grace
     // window — this plan stays executable across later commits)
-    val live = meta.map(_.leaves)
+    val live = meta.toSeq.flatMap(_.leaves)
     val ngroups = meta.map(_.groups).getOrElse(DefaultIndexGroups)
     // ONE shingle pass for the whole screen: the frame feeds the
     // touched-group collect below, the candidate band join AND the
@@ -1081,15 +1021,12 @@ object Dedup {
     * text side).
     */
   def indexedLiveIds(spark: SparkSession, indexDir: String): DataFrame = {
-    val meta = metaOf(indexDir)
+    val live = metaOf(indexDir).toSeq.flatMap(_.leaves)
     // an index that never folded anything (the catch-up bootstrap case)
     // has no committed leaves — and possibly no sets directory at all
-    if (meta.forall(_.leaves.isEmpty) &&
-        !graft.sources.cdc.WalSegments.globNonEmpty(indexDir, "sets/*/leaf=*"))
-      return spark.range(0).select(col("id").as("doc_id"))
+    if (live.isEmpty) return spark.range(0).select(col("id").as("doc_id"))
     val newest = committedOnly(
-        withBidDefault(readBidAware(spark, s"$indexDir/sets"), -1L),
-        meta.map(_.leaves))
+        withBidDefault(readBidAware(spark, s"$indexDir/sets"), -1L), live)
       .groupBy(col("doc_id")).agg(max(col("bid")).as("newest_bid"))
     tombstonesOf(spark, indexDir).fold(newest)(t =>
       newest.join(broadcast(t), Seq("doc_id"), "left")
@@ -1113,10 +1050,9 @@ object Dedup {
   def mergeDedupIndexes(spark: SparkSession, srcDirs: Seq[String],
       destDir: String, tag: String,
       groups: Int = DefaultIndexGroups): Unit = {
-    import graft.operators.store.IndexManifest
     require(srcDirs.nonEmpty, "mergeDedupIndexes needs at least one source")
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid merge tag: $tag")
-    val dest = metaOrEnroll(destDir, groups)
+    IndexManifest.requireTag(tag, "merge tag")
+    val dest = IndexManifest.readMetaOrEmpty(destDir, groups)
     if (dest.hasLeafTag(tag)) return
     if (dest.groups != groups)
       throw new IllegalStateException(
@@ -1125,10 +1061,8 @@ object Dedup {
     val leafDir = IndexManifest.leafName(dest.version + 1, tag)
     IndexManifest.dropResidue(destDir, Seq("sets", "bands", "tombs"), leafDir)
     def srcRel(dir: String, rel: String, cols: Seq[String]): Option[DataFrame] = {
-      val live = metaOf(dir).map(r => if (rel == "tombs") r.tombs else r.leaves)
-      if (live.exists(_.isEmpty)) None
-      else if (!graft.sources.cdc.WalSegments.globNonEmpty(dir, s"$rel/leaf=*") &&
-          !graft.sources.cdc.WalSegments.globNonEmpty(dir, s"$rel/*/leaf=*")) None
+      val live = metaOf(dir).toSeq.flatMap(_.liveOf(rel))
+      if (live.isEmpty) None
       else Some(committedOnly(withBidDefault(
           readBidAware(spark, s"$dir/$rel"),
           if (rel == "tombs") Long.MaxValue else -1L), live)

@@ -1,5 +1,6 @@
 package graft.operators.multimodal
 
+import graft.operators.store.IndexManifest
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
@@ -566,23 +567,7 @@ object Multimodal {
   val DefaultAHashGroups = 32
 
   private def metaOf(indexDir: String) =
-    graft.operators.store.IndexManifest.readMeta(indexDir)
-
-  /** The committed meta, or — on a legacy (pre-manifest) store — an
-    * initial meta that ENROLLS every existing on-disk leaf, so the first
-    * manifest commit migrates the store instead of hiding it from
-    * committed-leaf readers (the Dedup.metaOrEnroll rationale; an empty
-    * first commit would silently drop the pre-upgrade corpus from every
-    * screen). Enrolled legacy leaves keep their prefix-less names and
-    * are never swept.
-    */
-  private def metaOrEnroll(indexDir: String, rel: String,
-      groups: Int): graft.operators.store.IndexManifest.Meta = {
-    import graft.operators.store.IndexManifest
-    metaOf(indexDir).getOrElse(IndexManifest.Meta(0L, groups,
-      IndexManifest.legacyLeaves(indexDir, Seq(rel)),
-      IndexManifest.legacyLeaves(indexDir, Seq("tombs"))))
-  }
+    IndexManifest.readMeta(indexDir)
 
   private def groupsOf(indexDir: String): Int =
     metaOf(indexDir).map(_.groups).getOrElse(DefaultAHashGroups)
@@ -604,9 +589,8 @@ object Multimodal {
   private def mmIndexAppend(rows: DataFrame, indexDir: String, rel: String,
       grpCol: Int => org.apache.spark.sql.Column, grpName: String,
       leaf: String, groups: Int): Unit = {
-    import graft.operators.store.IndexManifest
-    require(leaf.matches("[0-9A-Za-z_\\-]+"), s"invalid leaf tag: $leaf")
-    val meta = metaOrEnroll(indexDir, rel, groups)
+    IndexManifest.requireTag(leaf, "leaf tag")
+    val meta = IndexManifest.readMetaOrEmpty(indexDir, groups)
     if (meta.hasLeafTag(leaf)) return
     if (meta.groups != groups)
       throw new IllegalStateException(
@@ -645,9 +629,8 @@ object Multimodal {
     */
   private def mmIndexDelete(spark: SparkSession, indexDir: String,
       rel: String, ids: DataFrame, leaf: String): Unit = {
-    import graft.operators.store.IndexManifest
-    require(leaf.matches("[0-9A-Za-z_\\-]+"), s"invalid tombstone tag: $leaf")
-    val meta = metaOrEnroll(indexDir, rel, DefaultAHashGroups)
+    IndexManifest.requireTag(leaf, "tombstone tag")
+    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultAHashGroups)
     if (meta.hasTombTag(leaf)) return
     val leafDir = IndexManifest.leafName(meta.version + 1, leaf)
     IndexManifest.dropResidue(indexDir, Seq("tombs"), leafDir)
@@ -667,16 +650,13 @@ object Multimodal {
     mmTombstonesSnapshot(spark, indexDir, metaOf(indexDir))
 
   private def mmTombstonesSnapshot(spark: SparkSession, indexDir: String,
-      meta: Option[graft.operators.store.IndexManifest.Meta])
+      meta: Option[IndexManifest.Meta])
       : Option[DataFrame] = {
-    val live = meta.map(_.tombs)
-    if (live.exists(_.isEmpty)) None
-    else if (live.isDefined ||
-        graft.sources.cdc.WalSegments.globNonEmpty(indexDir, "tombs/leaf=*"))
-      Some(graft.operators.store.IndexManifest.committedOnly(
-          spark.read.parquet(s"$indexDir/tombs"), live)
-        .select(col("media_id")).distinct())
-    else None
+    val live = meta.toSeq.flatMap(_.tombs)
+    if (live.isEmpty) None
+    else Some(IndexManifest.committedOnly(
+        spark.read.parquet(s"$indexDir/tombs"), live)
+      .select(col("media_id")).distinct())
   }
 
   /** The committed tombstoned media_ids as a relation (empty when none)
@@ -697,12 +677,10 @@ object Multimodal {
     */
   def mmIndexedLiveIds(spark: SparkSession, indexDir: String,
       rel: String = "hashes"): DataFrame = {
-    val meta = metaOf(indexDir)
-    if (meta.forall(_.leaves.isEmpty) &&
-        !graft.sources.cdc.WalSegments.globNonEmpty(indexDir, s"$rel/*/leaf=*"))
-      return spark.range(0).select(col("id").as("media_id"))
-    val ids = graft.operators.store.IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/$rel"), meta.map(_.leaves))
+    val live = metaOf(indexDir).toSeq.flatMap(_.leaves)
+    if (live.isEmpty) return spark.range(0).select(col("id").as("media_id"))
+    val ids = IndexManifest.committedOnly(
+        spark.read.parquet(s"$indexDir/$rel"), live)
       .select(col("media_id")).distinct()
     mmTombstones(spark, indexDir).fold(ids)(t =>
       ids.join(broadcast(t), Seq("media_id"), "left_anti"))
@@ -716,7 +694,7 @@ object Multimodal {
     */
   private def withoutTombstoned(spark: SparkSession, indexDir: String,
       cands: DataFrame,
-      meta: Option[graft.operators.store.IndexManifest.Meta]): DataFrame =
+      meta: Option[IndexManifest.Meta]): DataFrame =
     mmTombstonesSnapshot(spark, indexDir, meta).fold(cands)(t =>
       cands.join(broadcast(t.withColumnRenamed("media_id", "corpus_id")),
         Seq("corpus_id"), "left_anti"))
@@ -734,15 +712,13 @@ object Multimodal {
     */
   private def mmIndexCompact(spark: SparkSession, indexDir: String,
       rel: String, grpName: String, tag: String): Unit = {
-    import graft.operators.store.IndexManifest
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid compaction tag: $tag")
-    // legacy stores migrate via enrollment (see metaOrEnroll)
-    val meta = metaOrEnroll(indexDir, rel, DefaultAHashGroups)
+    IndexManifest.requireTag(tag, "compaction tag")
+    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultAHashGroups)
     if (!meta.hasLeafTag(tag)) {
       val leafDir = IndexManifest.leafName(meta.version + 1, tag)
       IndexManifest.dropResidue(indexDir, Seq(rel), leafDir)
       val src = IndexManifest.committedOnly(
-          spark.read.parquet(s"$indexDir/$rel"), Some(meta.leaves))
+          spark.read.parquet(s"$indexDir/$rel"), meta.leaves)
         .drop("leaf")
       // tombstoned media drop out physically; the rewritten index
       // carries an empty tombstone set (the PqIndex.compact contract —
@@ -768,16 +744,14 @@ object Multimodal {
   private def mmIndexRegroup(spark: SparkSession, indexDir: String,
       rel: String, grpCol: Int => org.apache.spark.sql.Column,
       grpName: String, newGroups: Int, tag: String): Unit = {
-    import graft.operators.store.IndexManifest
     require(newGroups > 0, "newGroups must be positive")
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid regroup tag: $tag")
-    // legacy stores migrate via enrollment (see metaOrEnroll)
-    val meta = metaOrEnroll(indexDir, rel, DefaultAHashGroups)
+    IndexManifest.requireTag(tag, "regroup tag")
+    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultAHashGroups)
     if (meta.hasLeafTag(tag)) return
     val leafDir = IndexManifest.leafName(meta.version + 1, tag)
     IndexManifest.dropResidue(indexDir, Seq(rel), leafDir)
     IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/$rel"), Some(meta.leaves))
+        spark.read.parquet(s"$indexDir/$rel"), meta.leaves)
       .drop("leaf").drop(grpName)
       .withColumn(grpName, grpCol(newGroups))
       .withColumn("leaf", lit(leafDir))
@@ -814,10 +788,9 @@ object Multimodal {
       destDir: String, rel: String,
       grpCol: Int => org.apache.spark.sql.Column, grpName: String,
       tag: String, groups: Int): Unit = {
-    import graft.operators.store.IndexManifest
     require(srcDirs.nonEmpty, "mmIndexMerge needs at least one source")
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid merge tag: $tag")
-    val dest = metaOrEnroll(destDir, rel, groups)
+    IndexManifest.requireTag(tag, "merge tag")
+    val dest = IndexManifest.readMetaOrEmpty(destDir, groups)
     if (dest.hasLeafTag(tag)) return
     if (dest.groups != groups)
       throw new IllegalStateException(
@@ -826,10 +799,8 @@ object Multimodal {
     val leafDir = IndexManifest.leafName(dest.version + 1, tag)
     IndexManifest.dropResidue(destDir, Seq(rel), leafDir)
     def srcRel(dir: String, r: String): Option[DataFrame] = {
-      val live = metaOf(dir).map(m => if (r == "tombs") m.tombs else m.leaves)
-      if (live.exists(_.isEmpty)) None
-      else if (!graft.sources.cdc.WalSegments.globNonEmpty(dir, s"$r/leaf=*") &&
-          !graft.sources.cdc.WalSegments.globNonEmpty(dir, s"$r/*/leaf=*")) None
+      val live = metaOf(dir).toSeq.flatMap(_.liveOf(r))
+      if (live.isEmpty) None
       else Some(IndexManifest.committedOnly(
         spark.read.parquet(s"$dir/$r"), live))
     }
@@ -925,8 +896,7 @@ object Multimodal {
       Some(metaAtOrThrow(indexDir, asOfVersion)), batchHashed)
 
   private def metaAtOrThrow(indexDir: String,
-      version: Long): graft.operators.store.IndexManifest.Meta = {
-    import graft.operators.store.IndexManifest
+      version: Long): IndexManifest.Meta = {
     IndexManifest.readMetaAt(indexDir, version).getOrElse(
       throw new IllegalArgumentException(
         s"manifest version $version is not retained at $indexDir — " +
@@ -935,13 +905,13 @@ object Multimodal {
   }
 
   private def screenAhashSnapshot(spark: SparkSession, indexDir: String,
-      meta: Option[graft.operators.store.IndexManifest.Meta],
+      meta: Option[IndexManifest.Meta],
       batchHashed: DataFrame): DataFrame = {
     val ngroups = meta.map(_.groups).getOrElse(DefaultAHashGroups)
     val groups = batchHashed.select(ahashGroup(ngroups).as("hgrp")).distinct()
       .collect().map(r => Int.box(r.getInt(0))).toSeq
-    val index = graft.operators.store.IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/hashes"), meta.map(_.leaves))
+    val index = IndexManifest.committedOnly(
+        spark.read.parquet(s"$indexDir/hashes"), meta.toSeq.flatMap(_.leaves))
       .filter(col("hgrp").isin(groups: _*))
       .select(col("media_id").as("corpus_id"),
         col("ahash_hi"), col("ahash_lo"))
@@ -1017,7 +987,7 @@ object Multimodal {
 
   private def screenAhashHammingSnapshot(spark: SparkSession,
       indexDir: String,
-      meta: Option[graft.operators.store.IndexManifest.Meta],
+      meta: Option[IndexManifest.Meta],
       batchHashed: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist <= 3, "4-chunk pigeonhole guarantees candidates only for d <= 3")
     val ngroups = meta.map(_.groups).getOrElse(DefaultAHashGroups)
@@ -1026,8 +996,8 @@ object Multimodal {
         col("ahash_lo").as("b_lo"), col("chunk_idx"), col("chunk"))
     val groups = bc.select(chunkGroup(ngroups).as("cgrp")).distinct()
       .collect().map(r => Int.box(r.getInt(0))).toSeq
-    val index = graft.operators.store.IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/chunks"), meta.map(_.leaves))
+    val index = IndexManifest.committedOnly(
+        spark.read.parquet(s"$indexDir/chunks"), meta.toSeq.flatMap(_.leaves))
       .filter(col("cgrp").isin(groups: _*))
       .select(col("chunk_idx"), col("chunk"), col("media_id").as("corpus_id"),
         col("ahash_hi").as("c_hi"), col("ahash_lo").as("c_lo"))

@@ -1,84 +1,106 @@
 package graft.operators.store
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.sources.cdc.WalSegments
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Versioned-manifest discipline for the partitioned immutable-leaf
-  * INDEX stores (the dedup band/set index, the multimodal hash and
-  * chunk indexes) — the same snapshot-isolation-with-grace-window
-  * contract the [[graft.streaming.Materializer]] state store and the
-  * [[graft.operators.ann.PqIndex]] already enforce, factored out so
-  * every persisted store in the repo shares ONE rule set:
+/** The ONE versioned manifest every persisted store in the repo commits
+  * through: the partitioned immutable-leaf INDEX stores (the dedup
+  * band/set index, the multimodal hash and chunk indexes, the IVF-PQ
+  * codes, the k-NN edge store), the [[graft.streaming.Materializer]]
+  * replica state store, and the [[graft.streaming.Engine]] delivery
+  * ledger. One record ([[Meta]]), one JSON codec, one exclusive-create
+  * commit, one retention rule, one file-name scheme — the owning
+  * modules keep only a typed view of the record:
   *
   *  - **The manifest is the store's single source of truth.** A tiny
-  *    immutable JSON file `_idx_manifest-v<N>` lists the live leaf
-  *    names per relation plus the store's hash-group count; readers
-  *    resolve the highest committed version and restrict their scans
-  *    to its leaves (`leaf` is a partition column, so the restriction
-  *    is a `PartitionFilters` prune, and uncommitted crash residue is
-  *    invisible even before any sweep).
+  *    immutable JSON file `_manifest-v<N>` lists the live leaf names
+  *    plus the store's partition dial; readers resolve the highest
+  *    committed version and restrict their scans to its leaves (`leaf`
+  *    is a partition column on the index stores, so the restriction is
+  *    a `PartitionFilters` prune, and uncommitted crash residue is
+  *    invisible even before any sweep). A directory with no manifest is
+  *    an empty store.
   *  - **Commits are exclusive.** A commit writes a uniquely-named temp
   *    file and publishes it at the immutable versioned name via
   *    [[WalSegments.publishExclusive]] (atomic hard-link claim on local
   *    POSIX, rename-to-existing on HDFS, PUT-if-absent on object
   *    stores): of two writers racing a version exactly one wins, the
-  *    loser throws having published nothing and its just-written leaf
-  *    is unreferenced residue.
-  *  - **Leaves are version-named.** A leaf's partition value is
+  *    loser throws [[CommitConflict]] having published nothing and its
+  *    just-written leaf is unreferenced residue.
+  *  - **Leaves are version-named.** An index leaf's partition value is
   *    `v<version>-<tag>` where `tag` is the caller's idempotency tag
   *    (foreachBatch batch id, compaction tag): the version prefix
   *    gives the sweep its safety rule, the tag suffix gives replays
   *    their no-op check — exact tag equality, never substring.
-  *  - **Retention is the read grace window.** [[RetainedManifests]]
-  *    manifest versions stay on disk after a commit, and
-  *    [[sweep]] deletes ONLY leaf directories that (a) no retained
-  *    manifest references and (b) carry a version at or below the
-  *    current committed one (an unreferenced HIGHER version may belong
-  *    to a writer mid-commit). A reader that planned its scan against
-  *    any retained manifest therefore finds every file it needs while
-  *    commits — including COMPACTIONS — keep landing: this is what
-  *    makes index compaction online-safe instead of offline-only.
-  *
-  * Legacy stores (written before this module) have no manifest:
-  * [[readMeta]] returns None and callers fall back to scanning every
-  * on-disk leaf — the pre-manifest semantics, preserved for read
-  * compatibility. The FIRST manifest commit on such a store must
-  * enroll the existing leaves via [[legacyLeaves]]: after the commit,
-  * readers restrict to committed leaves, so an un-enrolled first
-  * commit would silently hide the whole pre-upgrade corpus.
+  *  - **Retention is the read grace window.** [[retentionOf]] manifest
+  *    versions stay on disk after a commit, and [[sweep]] deletes ONLY
+  *    leaf directories that (a) no retained manifest references and (b)
+  *    carry a version at or below the current committed one (an
+  *    unreferenced HIGHER version may belong to a writer mid-commit). A
+  *    reader that planned its scan against any retained manifest
+  *    therefore finds every file it needs while commits — including
+  *    COMPACTIONS — keep landing: this is what makes compaction
+  *    online-safe instead of offline-only.
   */
 object IndexManifest {
 
-  /** The committed state of one index store.
+  /** The committed state of one store.
     *
-    * @param version monotone commit counter
-    * @param groups  hash-range partition count the store was built with
-    *                — recorded so appends and screens can refuse a
-    *                mismatched dial (the Materializer's nbuckets rule:
-    *                a mismatched writer scatters keys across wrong
-    *                groups and silently forks the store)
-    * @param leaves  live data-leaf names (`v<version>-<tag>`), shared
-    *                by every data relation of the store (relations are
-    *                written together under one tag per commit)
-    * @param tombs   live tombstone-leaf names (separate lifecycle:
-    *                compaction RETAINS them as the replay guard;
-    *                a retention floor clears them)
-    * @param params  store-specific build parameters beyond the group
-    *                dial (the PqIndex geometry: m/ksub/dim/residual and
-    *                the artifact directory names) — opaque strings the
-    *                owning module interprets; manifests written before
-    *                the field parse with it empty
+    * @param version     monotone commit counter
+    * @param groups      hash-range partition count the store was built
+    *                    with (the state store's bucket count) — recorded
+    *                    so writers and readers can refuse a mismatched
+    *                    dial (a mismatched writer scatters keys across
+    *                    wrong groups and silently forks the store)
+    * @param leaves      live data-leaf names, shared by every data
+    *                    relation of the store (relations are written
+    *                    together under one tag per commit)
+    * @param tombs       live tombstone-leaf names (separate lifecycle:
+    *                    compaction RETAINS them as the replay guard; a
+    *                    retention floor clears them)
+    * @param params      store-specific parameters beyond the group dial
+    *                    (the `retain` window, the PqIndex geometry and
+    *                    artifact directory names) — opaque strings the
+    *                    owning module interprets
+    * @param kind        which family of store wrote the manifest:
+    *                    `index`, `state` or `ledger`
+    * @param truncates   the state store's TRUNCATE watermarks (first key
+    *                    column value → seq)
+    * @param writerEpoch the state store's writer fence: epoch and id of
+    * @param writerId    the applier that last acquired the store
+    * @param registry    the delivery ledger's handler-key sequence
     */
   final case class Meta(version: Long, groups: Int,
       leaves: Seq[String], tombs: Seq[String],
-      params: Map[String, String] = Map.empty) {
+      params: Map[String, String] = Map.empty,
+      kind: String = "index",
+      truncates: Map[String, Long] = Map.empty,
+      writerEpoch: Long = 0L, writerId: String = "",
+      registry: Seq[String] = Nil) {
     def hasLeafTag(tag: String): Boolean = leaves.exists(tagOf(_) == tag)
     def hasTombTag(tag: String): Boolean = tombs.exists(tagOf(_) == tag)
+    /** The committed leaves of relation `rel`: the tombstone relation
+      * prunes on the tomb list, every data relation on the leaf list.
+      */
+    def liveOf(rel: String): Seq[String] = if (rel == "tombs") tombs else leaves
   }
 
-  private val ManifestVRe = "_idx_manifest-v(\\d+)".r
+  /** Thrown by [[commit]] when another writer already published the
+    * version: the loser published nothing and must re-read.
+    */
+  final class CommitConflict(msg: String) extends IllegalStateException(msg)
 
-  private def manifestFile(v: Long): String = f"_idx_manifest-v$v%08d"
+  /** Tags become leaf and manifest names: one alphabet for all of them. */
+  def requireTag(tag: String, what: String): Unit =
+    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid $what: $tag")
+
+  private val ManifestVRe = "_manifest-v(\\d+)".r
+
+  private def manifestFile(v: Long): String = f"_manifest-v$v%08d"
 
   /** `v<version>-<tag>`: version-prefixed for the sweep's safety rule,
     * tag-suffixed for replay idempotency.
@@ -87,9 +109,8 @@ object IndexManifest {
 
   /** The tag back out of a leaf name — structural, not positional:
     * `f"v$version%08d"` WIDENS past 1e8 versions instead of truncating,
-    * so a fixed `drop(10)` would return garbage there; and a legacy
-    * (pre-manifest) leaf enrolled by [[legacyLeaves]] has no version
-    * prefix at all, so its name IS its tag.
+    * so a fixed `drop(10)` would return garbage there; a name without a
+    * version prefix is its own tag.
     */
   def tagOf(leaf: String): String = leaf.replaceFirst("^v\\d+-", "")
 
@@ -101,24 +122,23 @@ object IndexManifest {
   }
 
   /** Default manifest versions retained after a commit — the read grace
-    * window for manifests and leaves alike (the Materializer/PqIndex
-    * figure). Per store, the `retain` manifest param OVERRIDES this
-    * ([[retentionOf]] / [[setRetention]] — the Delta/Iceberg
-    * per-table-retention move): a crawl loop committing per micro-batch
-    * burns a version per batch, so its time-travel reach in WALL time is
-    * `retain × commit cadence` — a store whose audit cadence is nightly
-    * but whose commit cadence is minutes must dial `retain` up or its
-    * reproducibility window is minutes, not days.
+    * window for manifests and leaves alike. Per store, the `retain`
+    * manifest param OVERRIDES this ([[retentionOf]] / [[setRetention]] —
+    * the Delta/Iceberg per-table-retention move): a crawl loop committing
+    * per micro-batch burns a version per batch, so its time-travel reach
+    * in WALL time is `retain × commit cadence` — a store whose audit
+    * cadence is nightly but whose commit cadence is minutes must dial
+    * `retain` up or its reproducibility window is minutes, not days.
     */
   private[graft] val RetainedManifests = 8
 
   /** The store's dialed read-grace window: the `retain` manifest param,
-    * defaulting to [[RetainedManifests]] (legacy manifests have no
-    * params at all and parse with the map empty — same default).
+    * defaulting to [[RetainedManifests]]. 0 keeps the head alone (the
+    * delivery ledger: nothing ever reads a superseded registry).
     */
   def retentionOf(meta: Meta): Int =
     meta.params.get("retain").flatMap(_.toIntOption)
-      .filter(_ >= 1).getOrElse(RetainedManifests)
+      .filter(_ >= 0).getOrElse(RetainedManifests)
 
   /** The dialed window of a store by directory — what an out-of-window
     * time-travel error should quote.
@@ -143,59 +163,72 @@ object IndexManifest {
       params = meta.params + ("retain" -> retain.toString)))
   }
 
-  private def readFully(fs: FileSystem, p: Path): String = {
+  private val json = new ObjectMapper()
+
+  private def encode(m: Meta): Array[Byte] = {
+    val o = json.createObjectNode()
+    o.put("version", m.version).put("kind", m.kind).put("groups", m.groups)
+    def arr(k: String, xs: Seq[String]) = xs.foldLeft(o.putArray(k))(_.add(_))
+    arr("leaves", m.leaves)
+    arr("tombs", m.tombs)
+    m.params.toSeq.sorted.foldLeft(o.putObject("params")) {
+      case (p, (k, v)) => p.put(k, v) }
+    m.truncates.toSeq.sorted.foldLeft(o.putObject("truncates")) {
+      case (t, (k, v)) => t.put(k, v) }
+    o.put("writerEpoch", m.writerEpoch).put("writerId", m.writerId)
+    arr("registry", m.registry)
+    json.writeValueAsBytes(o)
+  }
+
+  /** Parse a manifest; a malformed file throws an IOException (Jackson's
+    * parse errors are IOExceptions), which every lenient reader below
+    * treats like a missing file.
+    */
+  private def decode(bytes: Array[Byte]): Meta = {
+    val o = json.readTree(bytes)
+    def strs(k: String) = o.path(k).asScala.map(_.asText).toList
+    def fields(k: String) =
+      o.path(k).properties.asScala.map(e => e.getKey -> e.getValue)
+    Meta(o.path("version").asLong, o.path("groups").asInt,
+      strs("leaves"), strs("tombs"),
+      fields("params").map { case (k, v) => k -> v.asText }.toMap,
+      o.path("kind").asText("index"),
+      fields("truncates").map { case (k, v) => k -> v.asLong }.toMap,
+      o.path("writerEpoch").asLong, o.path("writerId").asText,
+      strs("registry"))
+  }
+
+  private def read(fs: FileSystem, p: Path): Meta = {
     val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
+    try decode(in.readAllBytes()) finally in.close()
   }
 
-  private def parseMeta(text: String): Meta = {
-    def num(k: String) = s""""$k"\\s*:\\s*(\\d+)""".r
-      .findFirstMatchIn(text).map(_.group(1).toLong).getOrElse(0L)
-    def list(k: String): Seq[String] =
-      s""""$k"\\s*:\\s*\\[([^\\]]*)\\]""".r.findFirstMatchIn(text)
-        .map(_.group(1)).toSeq
-        .flatMap("\"([^\"]+)\"".r.findAllMatchIn(_).map(_.group(1)))
-    val params = """"params"\s*:\s*\{([^}]*)\}""".r.findFirstMatchIn(text)
-      .map(_.group(1)).toSeq
-      .flatMap(""""([^"]+)"\s*:\s*"([^"]*)"""".r.findAllMatchIn(_)
-        .map(mm => mm.group(1) -> mm.group(2))).toMap
-    Meta(num("version"), num("groups").toInt, list("leaves"), list("tombs"),
-      params)
+  /** The highest committed manifest, or None on an empty store. */
+  def readMeta(indexDir: String,
+      conf: Configuration = WalSegments.localConf): Option[Meta] = {
+    val (fs, _) = WalSegments.fsFor(indexDir, conf)
+    retainedVersions(indexDir, conf).lastOption
+      .map(v => read(fs, new Path(indexDir, manifestFile(v))))
   }
 
-  /** The highest committed manifest, or None on a legacy (pre-manifest)
-    * or empty store.
+  /** The head manifest, or the empty version-0 store at `groups` that a
+    * first commit starts from.
     */
-  def readMeta(indexDir: String): Option[Meta] = {
-    val (fs, root) = WalSegments.fsFor(indexDir)
-    val name =
-      try fs.listStatus(root).iterator.map(_.getPath.getName)
-        .collect { case n @ ManifestVRe(v) => (v.toLong, n) }
-        .maxByOption(_._1).map(_._2)
-      catch { case _: java.io.FileNotFoundException => None }
-    name.map(n => parseMeta(readFully(fs, new Path(indexDir, n))))
-  }
+  def readMetaOrEmpty(indexDir: String, groups: Int): Meta =
+    readMeta(indexDir).getOrElse(Meta(0L, groups, Nil, Nil))
 
-  /** A SPECIFIC retained manifest version — the index stores' TIME
-    * TRAVEL (the Materializer `currentStateAt` device): any reader can
-    * re-run a screen/search against the exact snapshot a past commit
-    * published, because retained manifests keep their leaves on disk
-    * ([[sweep]]'s rule). None when the version was never committed or
-    * has left the [[RetainedManifests]] grace window — time travel
-    * reaches exactly as far as retention does, never silently further.
+  /** A SPECIFIC retained manifest version — TIME TRAVEL: any reader can
+    * re-run a screen/search/state read against the exact snapshot a past
+    * commit published, because retained manifests keep their leaves on
+    * disk ([[sweep]]'s rule). None when the version was never committed
+    * or has left the store's grace window — time travel reaches exactly
+    * as far as retention does, never silently further.
     */
-  def readMetaAt(indexDir: String, version: Long): Option[Meta] = {
-    val (fs, _) = WalSegments.fsFor(indexDir)
-    val p = new Path(indexDir, manifestFile(version))
-    try {
-      if (fs.exists(p)) Some(parseMeta(readFully(fs, p))) else None
-    } catch { case _: java.io.IOException => None }
+  def readMetaAt(indexDir: String, version: Long,
+      conf: Configuration = WalSegments.localConf): Option[Meta] = {
+    val (fs, _) = WalSegments.fsFor(indexDir, conf)
+    try Some(read(fs, new Path(indexDir, manifestFile(version))))
+    catch { case _: java.io.IOException => None }
   }
 
   /** The manifest versions currently on disk, ascending — what
@@ -203,117 +236,86 @@ object IndexManifest {
     * DESCRIBE HISTORY move). At most the store's dialed window + 1
     * entries ([[retentionOf]]).
     */
-  def retainedVersions(indexDir: String): Seq[Long] = {
-    val (fs, root) = WalSegments.fsFor(indexDir)
+  def retainedVersions(indexDir: String,
+      conf: Configuration = WalSegments.localConf): Seq[Long] = {
+    val (fs, root) = WalSegments.fsFor(indexDir, conf)
     try fs.listStatus(root).iterator.map(_.getPath.getName)
       .collect { case ManifestVRe(v) => v.toLong }.toSeq.sorted
     catch { case _: java.io.FileNotFoundException => Seq.empty }
   }
 
-  /** Commit `meta` as the next manifest version: exclusive publish (one
-    * winner per version — the loser throws having published nothing),
-    * then retire manifests past the grace window.
+  /** Every retained manifest, ascending by version — the one history
+    * read behind the SQL history surfaces. A version retired between
+    * the listing and its read is simply absent.
     */
-  def commit(indexDir: String, meta: Meta): Unit = {
-    val (fs, root) = WalSegments.fsFor(indexDir)
+  def history(indexDir: String,
+      conf: Configuration = WalSegments.localConf): Seq[Meta] =
+    retainedVersions(indexDir, conf).flatMap(readMetaAt(indexDir, _, conf))
+
+  /** Commit `meta` as the next manifest version: exclusive publish (one
+    * winner per version — the loser throws [[CommitConflict]] having
+    * published nothing), then retire manifests past the store's grace
+    * window (best-effort — readers only ever resolve the max, and leaf
+    * retention follows the retained set).
+    */
+  def commit(indexDir: String, meta: Meta,
+      conf: Configuration = WalSegments.localConf): Unit = {
+    val (fs, root) = WalSegments.fsFor(indexDir, conf)
     fs.mkdirs(root)
     val dest = new Path(indexDir, manifestFile(meta.version))
     val tmp = new Path(indexDir,
       s".${dest.getName}.${java.util.UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, false)
-    try {
-      def arr(xs: Seq[String]) = xs.map(l => s""""$l"""").mkString(",")
-      val params = meta.params.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":"$v"""" }.mkString(",")
-      out.write((s"""{"version":${meta.version},"groups":${meta.groups},""" +
-        s""""leaves":[${arr(meta.leaves)}],""" +
-        s""""tombs":[${arr(meta.tombs)}],""" +
-        s""""params":{$params}}""").getBytes("UTF-8"))
-    } finally out.close()
+    try out.write(encode(meta)) finally out.close()
     if (!WalSegments.publishExclusive(fs, tmp, dest))
-      throw new IllegalStateException(
+      throw new CommitConflict(
         s"lost index-manifest commit race for version ${meta.version} at " +
           s"$indexDir — another writer won; re-read and retry")
     try {
-      val window = retentionOf(meta) // the store's dialed grace window
-      fs.listStatus(root).foreach { st =>
-        st.getPath.getName match {
-          case ManifestVRe(v) if v.toLong < meta.version - window =>
-            try fs.delete(st.getPath, false)
-            catch { case _: java.io.IOException => () }
-          case _ => ()
-        }
+      val floor = meta.version - retentionOf(meta)
+      retainedVersions(indexDir, conf).filter(_ < floor).foreach { v =>
+        try fs.delete(new Path(indexDir, manifestFile(v)), false)
+        catch { case _: java.io.IOException => () }
       }
     } catch { case _: java.io.IOException => () }
   }
 
   /** Union of every leaf/tomb name referenced by ANY manifest version
-    * still on disk — the live set for [[sweep]]. A manifest that fails
+    * still on disk — the live set for every sweep. A manifest that fails
     * to read contributes nothing (fail-open would retain garbage
     * forever; the next sweep retries).
     */
-  private[graft] def retainedRefs(indexDir: String): Set[String] = {
-    val (fs, root) = WalSegments.fsFor(indexDir)
-    try {
-      fs.listStatus(root).iterator.map(_.getPath.getName)
-        .collect { case n @ ManifestVRe(_) => n }.toSeq
-        .flatMap { n =>
-          try {
-            val m = parseMeta(readFully(fs, new Path(indexDir, n)))
-            m.leaves ++ m.tombs
-          } catch { case _: java.io.IOException => Seq.empty }
-        }.toSet
-    } catch { case _: java.io.FileNotFoundException => Set.empty }
-  }
+  private[graft] def retainedRefs(indexDir: String,
+      conf: Configuration = WalSegments.localConf): Set[String] =
+    history(indexDir, conf).flatMap(m => m.leaves ++ m.tombs).toSet
 
-  /** Partition values of PRE-MANIFEST leaf directories (no `v<N>-`
-    * prefix) under the given relations — the legacy store's data. The
-    * FIRST manifest commit on a directory that already holds such
-    * leaves MUST enroll them ([[Meta.leaves]] / [[Meta.tombs]]):
-    * committed readers restrict their scans to the manifest's leaf
-    * list, so an empty first commit would silently hide every
-    * pre-upgrade row (worst case: a first delete commits `leaves=[]`
-    * and the whole index reads as empty). Enrolling is retention-safe
-    * — [[sweep]] never touches a version-less leaf. Handles both
-    * nested (`rel/<grp>=g/leaf=…`) and flat (`rel/leaf=…`) layouts.
+  /** Directories matching `pattern` under `indexDir` — absent paths and
+    * IO errors read as none.
     */
-  def legacyLeaves(indexDir: String, rels: Seq[String]): Seq[String] = {
-    val (fs, _) = WalSegments.fsFor(indexDir)
-    rels.flatMap { rel =>
-      def glob(pattern: String): Seq[Path] =
-        try Option(fs.globStatus(new Path(s"$indexDir/$rel/$pattern")))
-          .toSeq.flatten.filter(_.isDirectory).map(_.getPath)
-        catch { case _: java.io.IOException => Seq.empty }
-      (glob("*/leaf=*") ++ glob("leaf=*"))
-        .map(_.getName.stripPrefix("leaf="))
-    }.distinct.filter(l => versionOf(l).isEmpty).sorted
-  }
+  private def globDirs(fs: FileSystem, indexDir: String,
+      pattern: String): Seq[Path] =
+    try Option(fs.globStatus(new Path(s"$indexDir/$pattern")))
+      .toSeq.flatten.filter(_.isDirectory).map(_.getPath)
+    catch { case _: java.io.IOException => Seq.empty }
 
   /** Delete every `leaf=v<N>-<tag>` directory under the given relations
     * that NO retained manifest references and whose `N` is at or below
     * the current committed version (an unreferenced higher version may
     * belong to a writer mid-commit). Handles both nested
-    * (`rel/<grp>=g/leaf=…`) and flat (`rel/leaf=…`) layouts. Pre-
-    * manifest leaves (no `v<N>-` prefix) are never touched — they are
-    * the legacy store's data.
+    * (`rel/<grp>=g/leaf=…`) and flat (`rel/leaf=…`) layouts; a
+    * directory without a version prefix is never touched.
     */
   def sweep(indexDir: String, rels: Seq[String], currentVersion: Long): Unit = {
     val (fs, _) = WalSegments.fsFor(indexDir)
     val referenced = retainedRefs(indexDir)
-    def sweepDirs(paths: Seq[Path]): Unit = paths.foreach { p =>
+    rels.flatMap(rel => globDirs(fs, indexDir, s"$rel/*/leaf=*") ++
+        globDirs(fs, indexDir, s"$rel/leaf=*")).foreach { p =>
       val leaf = p.getName.stripPrefix("leaf=")
       versionOf(leaf) match {
         case Some(v) if !referenced.contains(leaf) && v <= currentVersion =>
           try fs.delete(p, true) catch { case _: java.io.IOException => () }
         case _ => ()
       }
-    }
-    rels.foreach { rel =>
-      def glob(pattern: String): Seq[Path] =
-        try Option(fs.globStatus(new Path(s"$indexDir/$rel/$pattern")))
-          .toSeq.flatten.filter(_.isDirectory).map(_.getPath)
-        catch { case _: java.io.IOException => Seq.empty }
-      sweepDirs(glob("*/leaf=*") ++ glob("leaf=*"))
     }
   }
 
@@ -368,11 +370,8 @@ object IndexManifest {
         .filterNot(n => n.startsWith("_") || n.startsWith("."))
       catch { case _: java.io.FileNotFoundException => Array.empty[String] }
     rels.foreach { rel =>
-      def glob(pattern: String): Seq[Path] =
-        try Option(fs.globStatus(new Path(s"$indexDir/$rel/$pattern")))
-          .toSeq.flatten.filter(_.isDirectory).map(_.getPath)
-        catch { case _: java.io.IOException => Seq.empty }
-      val leafDirs = glob("leaf=*") ++ glob("*/leaf=*")
+      val leafDirs = globDirs(fs, indexDir, s"$rel/leaf=*") ++
+        globDirs(fs, indexDir, s"$rel/*/leaf=*")
       // a child dir holding plain data FILES and no leaf layout is an
       // out-of-leaf ARTIFACT (the PqIndex codebooks/coarse-quantizer
       // parquet datasets, named by the manifest's params) — immutable
@@ -408,18 +407,14 @@ object IndexManifest {
   }
 
   /** Restrict an index relation to the committed leaves (`leaf` is a
-    * partition column, so this is a partition prune): None = legacy
-    * store, scan everything; Some(empty) = committed-empty store, no
-    * rows.
+    * partition column, so this is a partition prune); an empty list is a
+    * committed-empty store and reads no rows.
     */
   def committedOnly(df: org.apache.spark.sql.DataFrame,
-      live: Option[Seq[String]]): org.apache.spark.sql.DataFrame = {
+      live: Seq[String]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    live match {
-      case Some(ls) if ls.isEmpty => df.filter(lit(false))
-      case Some(ls)               => df.filter(col("leaf").isin(ls: _*))
-      case None                   => df
-    }
+    if (live.isEmpty) df.filter(lit(false))
+    else df.filter(col("leaf").isin(live: _*))
   }
 
   /** Delete any directory named exactly `leaf=<leaf>` under the given
@@ -429,14 +424,9 @@ object IndexManifest {
     */
   def dropResidue(indexDir: String, rels: Seq[String], leaf: String): Unit = {
     val (fs, _) = WalSegments.fsFor(indexDir)
-    rels.foreach { rel =>
-      def glob(pattern: String): Seq[Path] =
-        try Option(fs.globStatus(new Path(s"$indexDir/$rel/$pattern")))
-          .toSeq.flatten.map(_.getPath)
-        catch { case _: java.io.IOException => Seq.empty }
-      (glob(s"*/leaf=$leaf") ++ glob(s"leaf=$leaf")).foreach { p =>
-        try fs.delete(p, true) catch { case _: java.io.IOException => () }
-      }
+    rels.flatMap(rel => globDirs(fs, indexDir, s"$rel/*/leaf=$leaf") ++
+        globDirs(fs, indexDir, s"$rel/leaf=$leaf")).foreach { p =>
+      try fs.delete(p, true) catch { case _: java.io.IOException => () }
     }
   }
 }

@@ -1511,8 +1511,8 @@ object QueryPack {
     def apiRead(rel: String, at: Option[Long]): DataFrame = {
       val meta = at.fold(IndexManifest.readMeta(dir))(
         IndexManifest.readMetaAt(dir, _))
-      val live = meta.map(m => if (rel == "tombs") m.tombs else m.leaves)
-      IndexManifest.committedOnly(spark.read.parquet(s"$dir/$rel"), live)
+      IndexManifest.committedOnly(spark.read.parquet(s"$dir/$rel"),
+        meta.get.liveOf(rel))
     }
     def lane(name: String, at: Option[Long], pinned: Long): DataFrame = {
       // one action per relation, each lane computed once; the pinned

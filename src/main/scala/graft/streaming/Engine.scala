@@ -4,6 +4,7 @@ import scala.collection.mutable.ListBuffer
 import scala.concurrent.{ExecutionContext, Future}
 
 import graft.operators.cdc.ChangeStream
+import graft.operators.store.IndexManifest
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -123,11 +124,11 @@ final class Engine(isolateHandlerFailures: Boolean = false,
     * the checkpoint dir — both survive or neither), and marker identity is
     * the handler's NAME plus its occurrence among same-named handlers, so
     * a deploy that APPENDS new handlers keeps old markers valid; the
-    * registry shape is ENFORCED, not honor-system — a `_manifest` file
-    * records the key sequence, appends rewrite it, and a restart whose
-    * registry is not an append extension (reorder/rename/removal)
-    * fail-fasts before any delivery (wipe the ledger with the checkpoint
-    * to accept the new shape). Markers older than
+    * registry shape is ENFORCED, not honor-system — the directory's store
+    * manifest records the key sequence, appends commit a new version, and
+    * a restart whose registry is not an append extension
+    * (reorder/rename/removal) fail-fasts before any delivery (wipe the
+    * ledger with the checkpoint to accept the new shape). Markers older than
     * [[Engine.LedgerRetention]] batches are pruned opportunistically —
     * redelivery only ever replays the last uncommitted batch, so the
     * retention window is generous by orders of magnitude and the directory
@@ -188,52 +189,26 @@ final class Engine(isolateHandlerFailures: Boolean = false,
           s"until the ledger recovers: $e")
       }
     }
-  /** Manifest gate: the manifest holds the newline-joined key sequence
-    * the ledger's markers were written under. Current registry must
-    * EXTEND it; anything else throws. Rewrites are WRITE-NEW-THEN-SWAP
-    * over versioned names (`_manifest.v<N>`, readers take the highest N;
-    * a bare legacy `_manifest` reads as version 0): the new version is
-    * renamed into place BEFORE older versions are deleted, so at every
-    * instant of a crash window some complete manifest exists — the old
-    * delete-then-rename ordering had a window with NO manifest, which a
-    * restart would read as "empty recorded sequence" and silently accept
-    * any registry shape. Validated once per registry shape per engine
-    * instance, and re-validated on the prune cadence (every 64 batches) so
-    * a ledger directory REPLACED under a long-running engine is caught at
-    * the next window rather than never.
+  /** Manifest gate: the ledger directory carries a shared store manifest
+    * ([[IndexManifest]], kind `ledger`) whose `registry` field is the key
+    * sequence the ledger's markers were written under. Current registry
+    * must EXTEND it; anything else throws. An extension commits the next
+    * version through the shared exclusive publish (a racer that already
+    * published that version makes this batch fail rather than overwrite
+    * it), and the ledger's retention window is 0: once the new version is
+    * durable every older one is retired, so at every instant of a crash
+    * window some complete manifest exists. Validated once per registry
+    * shape per engine instance, and re-validated on the prune cadence
+    * (every 64 batches) so a ledger directory REPLACED under a
+    * long-running engine is caught at the next window rather than never.
     */
   @volatile private var manifestValidatedFor: Seq[String] = null
-  /** All manifest files as (version, path), ascending: `_manifest.v<N>`
-    * at version N, the legacy bare `_manifest` as version 0. The LAST is
-    * live; lower versions are shadowed crash residue.
-    */
-  private def manifestVersions(fs: FileSystem, dir: HPath): Seq[(Long, HPath)] = {
-    val versioned = try fs.listStatus(dir).toSeq
-      .map(_.getPath)
-      .flatMap { p =>
-        val n = p.getName
-        if (n == "_manifest") Some((0L, p))
-        else if (n.startsWith("_manifest.v") && n.drop(11).forall(_.isDigit) &&
-          n.length > 11) Some((n.drop(11).toLong, p))
-        else None
-      }
-    catch { case _: java.io.FileNotFoundException => Nil }
-    versioned.sortBy(_._1)
-  }
   private def validateManifest(fsDir: Option[(FileSystem, HPath)],
       keys: Map[Int, String]): Unit = fsDir.foreach { case (fs, dir) =>
     val current = keys.toSeq.sortBy(_._1).map(_._2)
     if (manifestValidatedFor == current) return
-    val versions = manifestVersions(fs, dir)
-    val live = versions.lastOption
-    val recorded: Seq[String] = live match {
-      case None => Nil
-      case Some((_, mf)) =>
-        val in = fs.open(mf)
-        try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(_.nonEmpty).toList
-        finally in.close()
-    }
+    val head = IndexManifest.readMeta(dir.toString, fs.getConf)
+    val recorded = head.toSeq.flatMap(_.registry)
     if (recorded != current.take(recorded.length))
       throw new IllegalStateException(
         s"delivery ledger at $dir was written under handler registry " +
@@ -242,22 +217,11 @@ final class Engine(isolateHandlerFailures: Boolean = false,
           "compatible with existing markers (reorder/rename/removal would " +
           "silently swap delivery history); wipe the ledger with the " +
           "checkpoint to accept the new shape")
-    if (recorded.length < current.length) {
-      fs.mkdirs(dir)
-      val next = new HPath(dir, s"_manifest.v${live.fold(1L)(_._1 + 1L)}")
-      val tmp = new HPath(dir, "_manifest.tmp")
-      val out = fs.create(tmp, true)
-      try out.write((current.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      if (fs.exists(next)) fs.delete(next, false) // stale crash residue
-      if (!fs.rename(tmp, next))
-        throw new java.io.IOException(s"could not commit ledger manifest $next")
-      // only AFTER the new version is durable: retire ALL older versions
-      // (best-effort — a leftover lower version is shadowed, not read)
-      versions.foreach { case (_, old) =>
-        try fs.delete(old, false) catch { case _: java.io.IOException => () }
-      }
-    }
+    if (recorded.length < current.length)
+      IndexManifest.commit(dir.toString,
+        IndexManifest.Meta(head.fold(1L)(_.version + 1L), 0, Nil, Nil,
+          Map("retain" -> "0"), kind = "ledger", registry = current),
+        fs.getConf)
     manifestValidatedFor = current
   }
   /** Drop markers more than [[Engine.LedgerRetention]] batches old. */

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.cdc.ChangeStream
+import graft.operators.store.IndexManifest
 import graft.sources.cdc.CdcSourceProvider
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -445,7 +446,7 @@ object Graft {
       dead: DataFrame, indexDir: String, embProvider: DataFrame,
       tag: String): (Long, Long) = {
     import graft.operators.ann.PqIndex
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid sync tag: $tag")
+    IndexManifest.requireTag(tag, "sync tag")
     // resurrection check: a live replica id with a standing tombstone
     // can only become searchable again through compaction (tag-
     // idempotent: a replayed cycle's compact no-ops, and once tombs are
@@ -504,7 +505,7 @@ object Graft {
       dead: DataFrame, docProvider: DataFrame, indexDir: String,
       tag: String, bid: Long): (Long, Long) = {
     import graft.operators.dedup.Dedup
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid sync tag: $tag")
+    IndexManifest.requireTag(tag, "sync tag")
     val indexed = Dedup.indexedLiveIds(spark, indexDir)
     // single-pass diffs (the syncVectorIndex device): census + commit
     // read ONE persisted computation of each diff
@@ -559,7 +560,7 @@ object Graft {
       dead: DataFrame, hashProvider: DataFrame, hashIndexDir: String,
       chunkIndexDir: String, tag: String): (Long, Long) = {
     import graft.operators.multimodal.Multimodal
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid sync tag: $tag")
+    IndexManifest.requireTag(tag, "sync tag")
     def lane(indexDir: String, rel: String,
         append: (DataFrame, String) => Unit,
         delete: (DataFrame, String) => Unit,
@@ -636,7 +637,7 @@ object Graft {
       dead: DataFrame, embProvider: DataFrame, indexDir: String,
       tag: String): (Long, Long) = {
     import graft.operators.ann.KnnGraph
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid sync tag: $tag")
+    IndexManifest.requireTag(tag, "sync tag")
     // resurrection: a live replica id with a standing (kill-all)
     // tombstone becomes searchable again only through compaction
     if (!alive.join(KnnGraph.tombstonedIds(spark, indexDir),
@@ -742,7 +743,7 @@ object Graft {
       ahash: Option[(ReplicaKey, String, String, DataFrame)] = None,
       graph: Option[(ReplicaKey, String, DataFrame)] = None):
       Map[String, (Long, Long)] = {
-    require(tag.matches("[0-9A-Za-z_\\-]+"), s"invalid sync tag: $tag")
+    IndexManifest.requireTag(tag, "sync tag")
     val keys = (vector.map(_._1).toSeq ++ dedup.map(_._1) ++
       ahash.map(_._1) ++ graph.map(_._1)).distinct
     // one persisted live/dead pair per DISTINCT key — materialized up

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.store.IndexManifest
 import graft.sources.cdc.WalSegments
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -35,7 +36,7 @@ import org.apache.spark.sql.functions._
   *    stores). Readers resolve the manifest
   *    first, so they see every batch entirely or not at all — snapshot
   *    isolation over plain parquet, and NOT just at plan time: superseded
-  *    leaves are retained for the full [[RetainedManifests]]-version
+  *    leaves are retained for the store's full manifest-retention
   *    grace window (the Iceberg vacuum rule), so a scan planned against
   *    any retained manifest finds its files even while the applier keeps
   *    committing. A crash before the swap leaves only unreferenced leaf
@@ -56,7 +57,7 @@ import org.apache.spark.sql.functions._
   * [[acquire]] stamps the manifest with a writer token (epoch + random
   * fence id); every fenced commit re-checks the token and every manifest
   * swap is an EXCLUSIVE CREATE of an immutable version-numbered file
-  * (`_state_manifest-v<N>`), so two appliers racing the same version can
+  * (the shared `_manifest-v<N>`), so two appliers racing the same version can
   * never both win — the loser's [[FencedWriterException]] is the storage
   * analogue of the slot's "replication slot is active for PID" error. A
   * fenced-out applier's already-written leaves are unreferenced residue,
@@ -118,15 +119,17 @@ object Materializer {
   }
 
   // ---- manifest: the store's single source of truth ----
-  // JSON {"version":N,"writerEpoch":E,"writerId":"…",
-  //       "buckets":{"5":"leaf=b00005-v00012", ...}} — leaf directory
-  // names are immutable and version-suffixed, and so is the manifest
-  // itself (`_state_manifest-v<N>`): a commit is an exclusive create of
-  // the next version, readers resolve the highest one. The legacy single
-  // `_state_manifest` file is still read (pre-fence stores) and retired
-  // on the first versioned commit.
+  // The state store commits through the shared store manifest
+  // ([[IndexManifest]], kind `state`): the leaf list names the live
+  // `leaf-b<bucket>-v<version>` directories (the bucket is read back from
+  // the name), `groups` records the bucket count, and the writer fence,
+  // TRUNCATE watermarks and `retain` dial ride the same record. A commit
+  // is an exclusive create of the next version, readers resolve the
+  // highest one.
 
-  /** @param truncates TRUNCATE watermarks: first-key-column value → seq.
+  /** Typed view of the shared manifest record.
+    *
+    * @param truncates TRUNCATE watermarks: first-key-column value → seq.
     *                   A row whose first key equals the entry's key and
     *                   whose seq is ≤ the watermark is DEAD — filtered at
     *                   read, physically dropped at the next [[compact]].
@@ -138,158 +141,41 @@ object Materializer {
       truncates: Map[String, Long] = Map.empty,
       retain: Int = 0)
 
-  private def legacyManifestPath(stateDir: String): Path =
-    new Path(stateDir, "_state_manifest")
+  private def toShared(m: Manifest): IndexManifest.Meta =
+    IndexManifest.Meta(m.version, m.nbuckets,
+      m.leaves.toSeq.sortBy(_._1).map(_._2), Nil,
+      if (m.retain >= 1) Map("retain" -> m.retain.toString) else Map.empty,
+      kind = "state", truncates = m.truncates,
+      writerEpoch = m.writerEpoch, writerId = m.writerId)
 
-  private def manifestFile(v: Long): String = f"_state_manifest-v$v%08d"
+  private def fromShared(s: IndexManifest.Meta): Manifest =
+    Manifest(s.version,
+      s.leaves.map(l => l.stripPrefix("leaf-b").takeWhile(_.isDigit).toInt -> l)
+        .toMap,
+      s.writerEpoch, s.writerId, s.groups, s.truncates,
+      s.params.get("retain").flatMap(_.toIntOption).getOrElse(0))
 
-  private val ManifestVRe = "_state_manifest-v(\\d+)".r
-
-  private def readFully(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
-  }
-
-  private def parseManifest(text: String): Manifest = {
-    def num(key: String) = s""""$key"\\s*:\\s*(\\d+)""".r
-      .findFirstMatchIn(text).map(_.group(1).toLong)
-    val leaves = "\"(\\d+)\"\\s*:\\s*\"([^\"]+)\"".r.findAllMatchIn(text)
-      .map(m => m.group(1).toInt -> m.group(2)).toMap
-    val truncates = """"truncates"\s*:\s*\{([^}]*)\}""".r
-      .findFirstMatchIn(text).map(_.group(1)) match {
-      case Some(body) => """"([^"]+)"\s*:\s*(\d+)""".r.findAllMatchIn(body)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap
-      case None => Map.empty[String, Long]
-    }
-    Manifest(num("version").getOrElse(0L), leaves,
-      num("writerEpoch").getOrElse(0L),
-      """"writerId"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(text)
-        .map(_.group(1)).getOrElse(""),
-      num("nbuckets").getOrElse(0L).toInt,
-      truncates,
-      num("retain").getOrElse(0L).toInt)
-  }
-
+  /** The head manifest; version 0 with no leaves on an empty store. */
   def readManifest(stateDir: String,
-      conf: Configuration = WalSegments.localConf): Manifest = {
-    val (fs, root) = WalSegments.fsFor(stateDir, conf)
-    val versioned =
-      try fs.listStatus(root).iterator
-        .map(_.getPath.getName)
-        .collect { case n @ ManifestVRe(v) => (v.toLong, n) }
-        .maxByOption(_._1)
-      catch { case _: java.io.FileNotFoundException => None }
-    versioned match {
-      case Some((_, name)) =>
-        parseManifest(readFully(fs, new Path(stateDir, name)))
-      case None =>
-        val legacy = legacyManifestPath(stateDir)
-        if (fs.exists(legacy)) parseManifest(readFully(fs, legacy))
-        else Manifest(0L, Map.empty)
-    }
-  }
+      conf: Configuration = WalSegments.localConf): Manifest =
+    IndexManifest.readMeta(stateDir, conf).map(fromShared)
+      .getOrElse(Manifest(0L, Map.empty))
 
-  /** The RETAINED manifest at `version`, or None once retired past the
-    * grace window — the state store's [[graft.operators.store
-    * .IndexManifest.readMetaAt]]: snapshot metadata (bucket dial,
-    * truncate watermarks, retention) resolves from the SNAPSHOT, not
-    * the head (a `graft_state_at` read across an intervening
-    * [[rebucket]] must plan with the pinned version's dial).
+  /** Commit a manifest version through the shared exclusive publish: of
+    * two appliers racing the same version exactly one wins; the loser
+    * throws [[FencedWriterException]] having published nothing. Versions
+    * past the store's grace window (the shared `retain` rule: a reader
+    * that planned against any retained manifest finds every leaf it
+    * references — [[sweepUnreferenced]] only deletes leaves no retained
+    * manifest names) are retired.
     */
-  private[graft] def readManifestAt(stateDir: String, version: Long,
-      conf: Configuration = WalSegments.localConf): Option[Manifest] = {
-    val (fs, _) = WalSegments.fsFor(stateDir, conf)
-    try Some(parseManifest(
-      readFully(fs, new Path(stateDir, manifestFile(version)))))
-    catch { case _: java.io.IOException => None }
-  }
-
-  /** The manifest versions currently on disk, ascending — what
-    * [[readManifestAt]]/[[currentStateAt]] can reach (the state store's
-    * time-travel catalog; the IndexManifest `retainedVersions` move).
-    */
-  def retainedVersions(stateDir: String,
-      conf: Configuration = WalSegments.localConf): Seq[Long] = {
-    val (fs, root) = WalSegments.fsFor(stateDir, conf)
-    try fs.listStatus(root).iterator.map(_.getPath.getName)
-      .collect { case ManifestVRe(v) => v.toLong }.toSeq.sorted
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
-  }
-
-  /** How many manifest versions stay on disk after a commit. This is the
-    * store's READ GRACE WINDOW, for manifests and leaves alike: a reader
-    * that planned its scan against any retained manifest finds every leaf
-    * that manifest references ([[sweepUnreferenced]] only deletes leaves
-    * no retained manifest names — the Iceberg/Delta vacuum rule, "a data
-    * file is live while any retained snapshot references it"). A query
-    * must finish within `RetainedManifests` commits of when it planned;
-    * at a typical replica cadence of one commit per multi-second
-    * micro-batch that is tens of seconds to minutes of scan time.
-    */
-  private[graft] val RetainedManifests = 8
-
-  /** The store's dialed read-grace window: the manifest's `retain` field
-    * (published by [[setRetention]]), defaulting to [[RetainedManifests]]
-    * — pre-dial manifests parse with it 0 and keep the default. The
-    * IndexManifest `retain`-param rule applied to the state store: a
-    * replica committing per micro-batch burns a version per batch, so
-    * its time-travel reach in WALL time is `retain x commit cadence`.
-    */
-  private[graft] def retentionOf(m: Manifest): Int =
-    if (m.retain >= 1) m.retain else RetainedManifests
-
-  /** Commit a manifest version: write a uniquely-named temp file, then
-    * publish it EXCLUSIVELY at the immutable `_state_manifest-v<N>`
-    * ([[WalSegments.publishExclusive]]: atomic hard-link claim on local
-    * POSIX — where a bare rename would silently overwrite a racer's
-    * manifest — rename-to-existing on HDFS, PUT-if-absent on object
-    * stores). Of two appliers racing the same version exactly one wins;
-    * the loser throws [[FencedWriterException]] having published nothing.
-    * Manifest versions older than [[RetainedManifests]], and the legacy
-    * single-file manifest, are retired best-effort — readers only ever
-    * resolve the max, and leaf retention follows the retained set.
-    */
-  private[graft] def commitManifest(fs: FileSystem, stateDir: String,
-      m: Manifest): Unit = {
-    val dest = new Path(stateDir, manifestFile(m.version))
-    val tmp = new Path(stateDir,
-      s".${dest.getName}.${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, false)
-    try {
-      val entries = m.leaves.toSeq.sortBy(_._1)
-        .map { case (b, d) => s""""$b":"$d"""" }.mkString(",")
-      val truncs = m.truncates.toSeq.sorted
-        .map { case (k, s) => s""""$k":$s""" }.mkString(",")
-      out.write((s"""{"version":${m.version},""" +
-        s""""writerEpoch":${m.writerEpoch},"writerId":"${m.writerId}",""" +
-        s""""nbuckets":${m.nbuckets},"retain":${m.retain},""" +
-        s""""truncates":{$truncs},""" +
-        s""""buckets":{$entries}}""").getBytes("UTF-8"))
-    } finally out.close()
-    if (!WalSegments.publishExclusive(fs, tmp, dest))
+  private[graft] def commitManifest(stateDir: String, m: Manifest,
+      conf: Configuration = WalSegments.localConf): Unit =
+    try IndexManifest.commit(stateDir, toShared(m), conf)
+    catch { case _: IndexManifest.CommitConflict =>
       throw new FencedWriterException(
         s"lost manifest commit race for version ${m.version} at $stateDir")
-    // retire superseded manifests (keep the store's dialed grace window)
-    try {
-      val window = retentionOf(m)
-      fs.listStatus(new Path(stateDir)).foreach { st =>
-        st.getPath.getName match {
-          case ManifestVRe(v) if v.toLong < m.version - window =>
-            try fs.delete(st.getPath, false)
-            catch { case _: java.io.IOException => () }
-          case _ => ()
-        }
-      }
-      val legacy = legacyManifestPath(stateDir)
-      if (fs.exists(legacy)) fs.delete(legacy, false)
-    } catch { case _: java.io.IOException => () }
-  }
+    }
 
   /** Dial the store's retention window — a metadata-only commit
     * publishing `retain` into the manifest, which every LATER commit's
@@ -306,14 +192,13 @@ object Materializer {
       token: Option[WriterToken] = None,
       conf: Configuration = WalSegments.localConf): Unit = {
     require(retain >= 1, s"retain must be >= 1, got $retain")
-    val (fs, _) = WalSegments.fsFor(stateDir, conf)
     val m = readManifest(stateDir, conf)
     if (m.version == 0L) throw new IllegalStateException(
       s"$stateDir holds no materialized state — dial retention on a " +
         "committed store")
     checkFence(m, token, stateDir)
-    commitManifest(fs, stateDir, m.copy(version = m.version + 1,
-      retain = retain))
+    commitManifest(stateDir, m.copy(version = m.version + 1,
+      retain = retain), conf)
   }
 
   /** Acquire the store: bump the writer epoch and commit a manifest
@@ -325,16 +210,14 @@ object Materializer {
     */
   def acquire(stateDir: String,
       conf: Configuration = WalSegments.localConf): WriterToken = {
-    val (fs, root) = WalSegments.fsFor(stateDir, conf)
-    fs.mkdirs(root)
     var tries = 0
     while (true) {
       val m = readManifest(stateDir, conf)
       val token = WriterToken(m.writerEpoch + 1,
         java.util.UUID.randomUUID().toString)
       try {
-        commitManifest(fs, stateDir, m.copy(version = m.version + 1,
-          writerEpoch = token.epoch, writerId = token.id))
+        commitManifest(stateDir, m.copy(version = m.version + 1,
+          writerEpoch = token.epoch, writerId = token.id), conf)
         return token
       } catch {
         case e: FencedWriterException =>
@@ -346,7 +229,7 @@ object Materializer {
   }
 
   /** Fail fast when `token` no longer owns the store (or, for token-less
-    * legacy callers, when anyone has fenced it).
+    * callers, when anyone has fenced it).
     */
   private def checkFence(manifest: Manifest, token: Option[WriterToken],
       stateDir: String): Unit = token match {
@@ -371,8 +254,9 @@ object Materializer {
     * applier would hash every key into the WRONG bucket — reading buckets
     * that don't hold the key, writing merged rows where no later reader
     * of that key looks — and silently fork the state. The manifest
-    * records the count (`nbuckets`; 0 on legacy stores, adopted from the
-    * first post-upgrade commit's Spec).
+    * records the count (`nbuckets`; 0 until the first apply adopts its
+    * Spec's count — an [[acquire]] on an empty store commits before any
+    * Spec is seen).
     */
   private def checkBuckets(manifest: Manifest, spec: Spec,
       stateDir: String): Unit =
@@ -382,50 +266,18 @@ object Materializer {
           s"${spec.buckets} — a mismatched applier scatters keys across " +
           "wrong buckets; use the store's count, or rebucket() offline")
 
-  /** The union of leaf directories referenced by EVERY manifest version
-    * still on disk (the [[RetainedManifests]] window plus the legacy
-    * single-file manifest). This — not the current manifest alone — is
-    * the live set for the sweep: a reader plans its scan against the
-    * manifest it read, and the applier may commit several more versions
-    * before the reader's tasks open those files; retaining every leaf any
-    * retained manifest references gives in-flight readers the same grace
-    * window the manifests themselves get. A manifest that fails to read
-    * mid-sweep contributes nothing (fail-open would retain garbage
-    * forever; the next sweep retries).
-    */
-  private[graft] def retainedLeafRefs(fs: FileSystem,
-      stateDir: String): Set[String] = {
-    try {
-      val root = new Path(stateDir)
-      val versioned = fs.listStatus(root).iterator
-        .map(_.getPath.getName)
-        .collect { case n @ ManifestVRe(_) => n }
-        .toSeq
-      val refs = Set.newBuilder[String]
-      versioned.foreach { n =>
-        try refs ++= parseManifest(readFully(fs, new Path(stateDir, n)))
-          .leaves.values
-        catch { case _: java.io.IOException => () }
-      }
-      val legacy = legacyManifestPath(stateDir)
-      if (fs.exists(legacy))
-        try refs ++= parseManifest(readFully(fs, legacy)).leaves.values
-        catch { case _: java.io.IOException => () }
-      refs.result()
-    } catch { case _: java.io.FileNotFoundException => Set.empty }
-  }
-
   /** Delete every `leaf-…` directory NO retained manifest references —
     * residue of crashes before a manifest swap (new leaves never
     * committed) and superseded leaves whose last referencing manifest has
-    * been retired past the [[RetainedManifests]] window. Superseded
+    * been retired past the store's retention window. Superseded
     * leaves still named by a retained manifest are NOT residue: an
     * in-flight reader that planned against that manifest is entitled to
     * open them (snapshot isolation with a grace window, not just at plan
     * time). Safe under the single-writer contract.
     */
-  private def sweepUnreferenced(fs: FileSystem, stateDir: String): Unit = {
-    val referenced = retainedLeafRefs(fs, stateDir)
+  private def sweepUnreferenced(fs: FileSystem, stateDir: String,
+      conf: Configuration): Unit = {
+    val referenced = IndexManifest.retainedRefs(stateDir, conf)
     try {
       fs.listStatus(new Path(stateDir)).foreach { st =>
         val n = st.getPath.getName
@@ -508,15 +360,14 @@ object Materializer {
       // acquire or apply that got there first makes this throw, and the
       // leaves written above become unreferenced residue for the
       // winner's sweep (no committed bucket is ever lost)
-      commitManifest(fs, stateDir, Manifest(nextVersion, newLeaves,
-        manifest.writerEpoch, manifest.writerId, spec.buckets,
-        manifest.truncates, manifest.retain))
+      commitManifest(stateDir, manifest.copy(version = nextVersion,
+        leaves = newLeaves, nbuckets = spec.buckets), conf)
       // superseded leaves are NOT deleted here: a reader that planned its
       // scan against the just-superseded manifest may still open them.
       // The post-commit sweep (after this commit retired manifests past
-      // the RetainedManifests window) collects only leaves NO retained
+      // the store's retention window) collects only leaves NO retained
       // manifest references — crash residue and long-superseded versions.
-      sweepUnreferenced(fs, stateDir)
+      sweepUnreferenced(fs, stateDir, conf)
     } finally batchLatest.unpersist()
   }
 
@@ -550,7 +401,7 @@ object Materializer {
 
   /** The store's rows AS OF manifest `version` — TIME TRAVEL over the
     * retention window. Retention keeps every manifest (and every leaf a
-    * retained manifest references) for [[RetainedManifests]] commits, so
+    * retained manifest references) for the store's window of commits, so
     * any still-on-disk version reads as a complete, consistent snapshot:
     * "what did the replica say N commits ago" costs one manifest read.
     * Versions retired past the window throw — use a longer-horizon
@@ -560,17 +411,14 @@ object Materializer {
   def currentStateAt(spark: SparkSession, stateDir: String, spec: Spec,
       version: Long, keepTombstones: Boolean = false,
       conf: Configuration = WalSegments.localConf): DataFrame = {
-    val (fs, _) = WalSegments.fsFor(stateDir, conf)
-    val p = new Path(stateDir, manifestFile(version))
-    val manifest =
-      try parseManifest(readFully(fs, p))
-      catch {
-        case _: java.io.IOException =>
-          val head = readManifest(stateDir, conf)
-          throw new IllegalArgumentException(
-            s"$stateDir has no retained manifest v$version — retained " +
-              s"window is (${math.max(1, head.version - retentionOf(head))}" +
-              s"..${head.version}]; older snapshots are retired")
+    val manifest = IndexManifest.readMetaAt(stateDir, version, conf)
+      .map(fromShared).getOrElse {
+        val head = readManifest(stateDir, conf)
+        val window = IndexManifest.retentionOf(toShared(head))
+        throw new IllegalArgumentException(
+          s"$stateDir has no retained manifest v$version — retained " +
+            s"window is (${math.max(1, head.version - window)}" +
+            s"..${head.version}]; older snapshots are retired")
       }
     stateOf(spark, stateDir, spec, manifest, keepTombstones)
   }
@@ -621,19 +469,17 @@ object Materializer {
   def applyTruncate(stateDir: String, key: String, upToSeq: Long, spec: Spec,
       conf: Configuration = WalSegments.localConf,
       token: Option[WriterToken] = None): Unit = {
-    val (fs, root) = WalSegments.fsFor(stateDir, conf)
-    fs.mkdirs(root)
     val manifest = readManifest(stateDir, conf)
     checkFence(manifest, token, stateDir)
     checkBuckets(manifest, spec, stateDir)
     val wm = math.max(upToSeq,
       manifest.truncates.getOrElse(key, Long.MinValue))
     // an unchanged watermark commits NOTHING: a replayed truncate must
-    // not burn the RetainedManifests time-travel window on no-op versions
+    // not burn the time-travel window on no-op versions
     if (manifest.truncates.get(key).contains(wm)) return
-    commitManifest(fs, stateDir, manifest.copy(
+    commitManifest(stateDir, manifest.copy(
       version = manifest.version + 1,
-      truncates = manifest.truncates + (key -> wm)))
+      truncates = manifest.truncates + (key -> wm)), conf)
   }
 
   /** The store's DELETE FEED — the key rows a replica-synced downstream
@@ -704,12 +550,11 @@ object Materializer {
     }
     val newLeaves = (manifest.leaves -- expirableSet) ++
       rewritten.map(b => b -> leafName(b, nextVersion)).toMap
-    commitManifest(fs, stateDir, Manifest(nextVersion, newLeaves,
-      manifest.writerEpoch, manifest.writerId, spec.buckets,
-      manifest.truncates, manifest.retain))
+    commitManifest(stateDir, manifest.copy(version = nextVersion,
+        leaves = newLeaves, nbuckets = spec.buckets), conf)
     // compacted-away leaves keep the same reader grace window as apply:
     // the sweep only collects leaves no retained manifest references
-    sweepUnreferenced(fs, stateDir)
+    sweepUnreferenced(fs, stateDir, conf)
   }
 
   /** Re-key the WHOLE store into `newBuckets` hash buckets — the one
@@ -756,10 +601,9 @@ object Materializer {
           throw new java.io.IOException(s"could not publish $n to $dest")
         n.stripPrefix("_leaf=b").take(5).toInt -> leafN
       }.toMap
-    commitManifest(fs, stateDir, Manifest(nextVersion, newLeaves,
-      manifest.writerEpoch, manifest.writerId, newBuckets,
-      manifest.truncates, manifest.retain))
-    sweepUnreferenced(fs, stateDir)
+    commitManifest(stateDir, manifest.copy(version = nextVersion,
+        leaves = newLeaves, nbuckets = newBuckets), conf)
+    sweepUnreferenced(fs, stateDir, conf)
   }
 
   /** `foreachBatch` adapter: attach the materializer to any typed change

@@ -233,12 +233,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
       s"SELECT record_id FROM graft_state_at('$stateDir', '$keys', $mark)")
       .collect().map(_.getLong(0)).toSet
     assert(asof == (1L to 6L).toSet, s"asof rows: $asof")
-    // the dial came from the manifest; the explicit trailing-argument
-    // form (the legacy-store lane) reads identically at the true dial
-    val explicit = spark.sql(
-      s"SELECT record_id FROM graft_state('$stateDir', '$keys', 4)")
-      .collect().map(_.getLong(0)).toSet
-    assert(explicit == now, s"explicit-dial rows: $explicit")
+    // the dial comes from the manifest alone: a trailing bucket
+    // argument is refused
+    val e = intercept[Exception](spark.sql(
+      s"SELECT record_id FROM graft_state('$stateDir', '$keys', 4)"))
+    assert(e.getMessage.contains("expects (path, key_cols)"), e.getMessage)
   }
 
   test("graft_state names an empty store; graft_state_at plans the SNAPSHOT's bucket dial") {

@@ -168,6 +168,27 @@ class MaterializerSpec extends AnyFunSuite {
       s"pre-truncate snapshot must include truncated rows: $timeTravel")
   }
 
+  test("truncate: watermark keys and manifest params round-trip any characters") {
+    val dir = freshDir("trunc_json")
+    Materializer.applyBatch(spark, dir, chg(
+      ("public.we}ird", 1L, 10L, "insert", 100L),
+      ("a\"b", 1L, 11L, "insert", 200L),
+      ("user", 1L, 12L, "insert", 300L)), spec)
+    Materializer.applyTruncate(dir, "public.we}ird", 10L, spec)
+    Materializer.applyTruncate(dir, "a\"b", 11L, spec)
+    assert(Materializer.readManifest(dir).truncates ==
+      Map("public.we}ird" -> 10L, "a\"b" -> 11L))
+    assert(state(dir) == Seq(("user", 1L, 12L, "insert", 300L)),
+      "truncated rows must stay hidden on the next read")
+    // a store param holding JSON punctuation survives commit -> readMeta
+    import graft.operators.store.IndexManifest
+    val idx = freshDir("param_json")
+    val odd = """x,"y"}z]"""
+    IndexManifest.commit(idx,
+      IndexManifest.Meta(1L, 4, Nil, Nil, Map("note" -> odd)))
+    assert(IndexManifest.readMeta(idx).get.params == Map("note" -> odd))
+  }
+
   test("truncate: watermark matches a NON-STRING first key column by explicit string cast") {
     // watermark keys round-trip through the JSON manifest as strings; the
     // predicate must compare the key column AS A STRING explicitly — with
@@ -298,12 +319,11 @@ class MaterializerSpec extends AnyFunSuite {
 
   test("fence backstop: the manifest commit is an exclusive create — one winner per version") {
     val dir = freshDir("fence_cas")
-    val (fs, _) = graft.sources.cdc.WalSegments.fsFor(dir)
     val m = Materializer.Manifest(7L, Map(0 -> "leaf-b00000-v00000007"))
-    Materializer.commitManifest(fs, dir, m)
+    Materializer.commitManifest(dir, m)
     // a racer committing the SAME version must lose, having published nothing
     intercept[Materializer.FencedWriterException] {
-      Materializer.commitManifest(fs, dir,
+      Materializer.commitManifest(dir,
         m.copy(leaves = Map(1 -> "leaf-b00001-v00000007")))
     }
     assert(Materializer.readManifest(dir).leaves == m.leaves,
@@ -327,12 +347,12 @@ class MaterializerSpec extends AnyFunSuite {
     // (the reader grace window — superseded leaves live as long as a
     // manifest naming them does) or THIS round's planted residue, which
     // the next apply sweeps
-    val retained = Materializer.retainedLeafRefs(fs, dir)
+    val retained = graft.operators.store.IndexManifest.retainedRefs(dir)
     val unref = leafDirs -- retained
     assert(unref.forall(_.contains("-v000090")),
       s"leaves beyond the retained-manifest window must not accumulate: $unref")
     // manifests are retired past the grace window, not kept forever
-    assert(names.count(_.startsWith("_state_manifest-v")) <= 10,
+    assert(names.count(_.startsWith("_manifest-v")) <= 10,
       s"manifest versions must be bounded: ${names.toSeq.sorted}")
     // one more apply sweeps the planted crash residue (it is referenced by
     // no manifest at all); retained superseded leaves survive
@@ -340,11 +360,12 @@ class MaterializerSpec extends AnyFunSuite {
       chg(("user", 0L, 99L, "update", 99L)), spec, token = w)
     val after = fs.listStatus(root).map(_.getPath.getName)
       .filter(_.startsWith("leaf-")).toSet
-    assert(after == Materializer.retainedLeafRefs(fs, dir),
+    assert(after == graft.operators.store.IndexManifest.retainedRefs(dir),
       "apply must sweep down to exactly the leaves retained manifests reference")
     // and the retained set is itself bounded: ≤ window+1 manifests, each
     // naming ≤ spec.buckets leaves
-    assert(after.size <= (Materializer.RetainedManifests + 2) * spec.buckets,
+    assert(after.size <=
+        (graft.operators.store.IndexManifest.RetainedManifests + 2) * spec.buckets,
       s"retained leaf set unbounded: ${after.size}")
   }
 

@@ -1738,7 +1738,7 @@ class OperatorsSpec extends AnyFunSuite {
     }
     val (fs, root) = graft.sources.cdc.WalSegments.fsFor(dir)
     val manifests = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("_idx_manifest-v"))
+      .filter(_.startsWith("_manifest-v"))
     assert(manifests.length == IndexManifest.RetainedManifests + 1,
       s"retention window must bound the directory: ${manifests.toSeq.sorted}")
     assert(IndexManifest.readMeta(dir).get.version == 15L)
@@ -2437,75 +2437,6 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
-  test("legacy (pre-manifest) store: the first manifest commit ENROLLS existing leaves") {
-    import graft.operators.dedup.Dedup
-    import graft.operators.store.IndexManifest
-    import spark.implicits._
-    val docs = (1L to 12L).map(i => (i, s"alpha beta gamma delta epsilon " +
-      s"zeta eta theta iota kappa doc$i marker$i")).toDF("doc_id", "text")
-    val tmp = graft.Tables.scratchDir("graft_legacy_enroll")
-    val indexDir = s"$tmp/index"
-    Dedup.dedupIndexAppend(docs, indexDir, "corpus", bid = 0L)
-    // fabricate the PRE-MANIFEST layout this store would have had before
-    // the IndexManifest module: drop the manifests and strip the version
-    // prefix off every leaf partition dir (legacy leaves were leaf=<tag>)
-    val (fs, root) = graft.sources.cdc.WalSegments.fsFor(indexDir)
-    fs.listStatus(root).foreach { st =>
-      if (st.getPath.getName.startsWith("_idx_manifest"))
-        fs.delete(st.getPath, false)
-    }
-    Seq("sets", "bands", "tombs").foreach { rel =>
-      def glob(pat: String) =
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-          s"$indexDir/$rel/$pat"))).toSeq.flatten.map(_.getPath)
-      (glob("*/leaf=*") ++ glob("leaf=*")).foreach { p =>
-        val tag = p.getName.stripPrefix("leaf=").replaceFirst("^v\\d+-", "")
-        if (p.getName != s"leaf=$tag")
-          fs.rename(p, new org.apache.hadoop.fs.Path(p.getParent, s"leaf=$tag"))
-      }
-    }
-    assert(IndexManifest.readMeta(indexDir).isEmpty, "legacy = no manifest")
-    val probe = docs.select((col("doc_id") + 100000L).as("doc_id"), col("text"))
-    def hits(): Set[Long] =
-      Dedup.screenAgainstIndex(spark, indexDir, probe)
-        .filter(col("corpus_id") === col("batch_id") - 100000L)
-        .select("corpus_id").collect().map(_.getLong(0)).toSet
-    assert(hits() == (1L to 12L).toSet, "legacy fallback scans every leaf")
-    // the ADVICE worst case: the FIRST commit on the legacy store is a
-    // DELETE — without enrollment it would commit leaves=[] and
-    // committed-leaf pruning would read the ENTIRE index as empty
-    Dedup.dedupIndexDelete(spark, indexDir, Seq(Tuple1(3L)).toDF("doc_id"),
-      "del0", bid = 1L)
-    val m = IndexManifest.readMeta(indexDir).get
-    assert(m.leaves.contains("corpus"),
-      s"first commit must enroll the legacy leaf: ${m.leaves}")
-    assert(hits() == (1L to 12L).toSet - 3L,
-      "pre-upgrade corpus stays visible; only the deleted doc drops")
-    // appends keep folding beside the enrolled leaf, and tag idempotency
-    // holds for the prefix-less legacy tag too (its name IS its tag)
-    Dedup.dedupIndexAppend(docs.select((col("doc_id") + 50L).as("doc_id"),
-      col("text")), indexDir, "inc1", bid = 2L)
-    val v = IndexManifest.readMeta(indexDir).get.version
-    Dedup.dedupIndexAppend(docs, indexDir, "corpus", bid = 3L) // replay
-    assert(IndexManifest.readMeta(indexDir).get.version == v,
-      "an enrolled legacy tag must no-op on replay")
-    // the identity-pair filter keeps corpus 1-12; the +50 fold is the
-    // SECOND match for each probe text — its presence proves the new
-    // leaf landed beside the enrolled one
-    assert(hits() == (1L to 12L).toSet - 3L,
-      "pre-upgrade corpus stays visible after post-migration folds")
-    val paired = Dedup.screenAgainstIndex(spark, indexDir, probe)
-      .filter(col("corpus_id") === col("batch_id") - 100000L + 50L)
-      .select("corpus_id").collect().map(_.getLong(0)).toSet
-    // (53 is alive: the tombstone killed doc_id 3, not its +50 re-fold)
-    assert(paired == (51L to 62L).toSet,
-      s"post-migration folds land beside the enrolled corpus: $paired")
-    // compaction folds the enrolled + new leaves into one, rows intact
-    Dedup.compactDedupIndex(spark, indexDir, "c0")
-    assert(Dedup.indexLeafCount(spark, indexDir) == 1)
-    assert(hits() == (1L to 12L).toSet - 3L)
-  }
-
   test("IndexManifest.tagOf is structural: survives version widening and legacy names") {
     import graft.operators.store.IndexManifest
     // f"v$v%08d" WIDENS past 1e8 — a positional drop(10) returns garbage
@@ -3167,6 +3098,19 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
 
+  test("ann26 recall audit: a leg that throws leaves no pin behind") {
+    import graft.operators.ann.KnnGraph
+    val before = spark.sparkContext.getPersistentRDDs.size
+    // hops = 5 fails the graph leg's argument check inside
+    // `concurrently`, after the brute-force leg has pinned its rows
+    intercept[IllegalArgumentException] {
+      KnnGraph.recallHits(spark, sf, nBatches = 0, buildRefineIters = 0,
+        refineAfter = false, hops = 5)
+    }
+    val after = spark.sparkContext.getPersistentRDDs.size
+    assert(after == before, s"pins leaked by the failed audit: $before -> $after")
+  }
+
   test("syncAllIndexes: ONE state scan feeds every family; results equal the solo facades") {
     import graft.operators.ann.KnnGraph
     import graft.streaming.{Graft, Materializer}
@@ -3416,7 +3360,7 @@ class OperatorsSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(torn)
       .getFileSystem(new org.apache.hadoop.conf.Configuration())
     fs.listStatus(new org.apache.hadoop.fs.Path(torn))
-      .filter(_.getPath.getName.startsWith("_idx_manifest"))
+      .filter(_.getPath.getName.startsWith("_manifest"))
       .foreach(st => fs.delete(st.getPath, false))
     assert(IndexManifest.readMeta(torn).isEmpty, "torn clone has no manifest")
     // the RETRY must clear the residue (FileUtil.copy into an existing

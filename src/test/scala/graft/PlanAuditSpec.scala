@@ -658,7 +658,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // the frontier's groups of the committed store, never the store.
     val meta = IndexManifest.readMeta(dir).get
     val edges = IndexManifest.committedOnly(
-        spark.read.parquet(s"$dir/edges"), Some(meta.leaves))
+        spark.read.parquet(s"$dir/edges"), meta.leaves)
       .select(col("ggrp"), col("vec_id"), col("nbr_id"))
     val frontier = Seq((0L, 0L), (0L, 5L), (1L, 7L))
       .toDF("query_id", "vec_id")
@@ -683,7 +683,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // optimization changes evaluation order only, never the answer
     val lazySearched = Ann.graphSearchTopK(
       IndexManifest.committedOnly(
-          spark.read.parquet(s"$dir/edges"), Some(meta.leaves))
+          spark.read.parquet(s"$dir/edges"), meta.leaves)
         .select(col("ggrp"), col("vec_id"), col("nbr_id"),
           col("rank"), col("mutual")),
       corpus, queries, seeds, hops = 2, beam = 4, k = 3,

@@ -444,7 +444,7 @@ class PqIndexSpec extends AnyFunSuite {
     val m = PqIndex.append(spark, dir, batch, tag = Some("b000001"))
     val (fs, _) = graft.sources.cdc.WalSegments.fsFor(dir)
     fs.delete(new org.apache.hadoop.fs.Path(dir,
-      f"_idx_manifest-v${m.version}%08d"), false)
+      f"_manifest-v${m.version}%08d"), false)
     assert(PqIndex.readMeta(dir).version == m.version - 1,
       "fixture must read back the pre-append manifest")
     // the foreachBatch replay: same tag, same deterministic leaf name —

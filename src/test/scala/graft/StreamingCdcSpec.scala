@@ -958,7 +958,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     // checkpoint — same filesystem, same lifecycle
     assert(engine.deliveryLedgerDir.contains(s"$ckpt/_graft_delivery"))
     val names = new java.io.File(s"$ckpt/_graft_delivery").listFiles().map(_.getName)
-    assert(names.exists(_.matches("b\\d+_on_event___0")) && names.exists(_.startsWith("_manifest.v")),
+    assert(names.exists(_.matches("b\\d+_on_event___0")) && names.exists(_.startsWith("_manifest-v")),
       s"ledger not materialized by the facade: ${names.toSeq}")
   }
 
@@ -1178,7 +1178,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     // handler "on_event:*" sanitizes to the Hadoop-safe "on_event__"
     assert(names.contains("b3_on_event___0") && names.contains("b4_on_event___0"),
       s"marker files missing: $names")
-    assert(names.exists(_.startsWith("_manifest.v")), s"manifest missing: $names")
+    assert(names.exists(_.startsWith("_manifest-v")), s"manifest missing: $names")
   }
 
   test("delivery ledger manifest: appends are accepted, reorders fail fast") {
@@ -1204,44 +1204,15 @@ class StreamingCdcSpec extends AnyFunSuite {
     // the extension (v1 was retired only after v2 landed)
     val mfs = new java.io.File(ledger).listFiles()
       .filter(_.getName.startsWith("_manifest")).map(_.getName).sorted
-    assert(mfs.toSeq == Seq("_manifest.v2"), s"expected one live manifest: ${mfs.toSeq}")
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(ledger, "_manifest.v2"))
-    assert(lines.size == 3 && lines.get(2).startsWith("on_delete_user"),
+    assert(mfs.toSeq == Seq("_manifest-v00000002"), s"expected one live manifest: ${mfs.toSeq}")
+    val lines = graft.operators.store.IndexManifest.readMeta(ledger).get.registry
+    assert(lines.size == 3 && lines(2).startsWith("on_delete_user"),
       s"manifest not extended: $lines")
     // reordered deploy: delivery history would silently swap — must throw
     val reordered = new Engine(deliveryLedger = Some(ledger))
       .onUpdate("user") { _ => () }
       .onInsert("user") { _ => () }
     val e = intercept[IllegalStateException](reordered.dispatch(batch, 2L))
-    assert(e.getMessage.contains("APPENDING"), e.getMessage)
-  }
-
-  test("ledger manifest: legacy bare _manifest reads as v0 and is retired on extension") {
-    import graft.streaming.Engine
-    val ledger = tmpDir("ledger-legacy")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(ledger, "_manifest"), "on_insert_user_0\n")
-    val batch = spark.range(1).selectExpr(
-      "'user' AS name", "'insert' AS type",
-      "CAST(null AS map<string,struct<old_value:string,new_value:string>>) AS changes",
-      "map('id','1') AS new_record",
-      "CAST(null AS map<string,string>) AS old_record")
-    // extends the legacy shape → new versioned manifest, legacy retired
-    new Engine(deliveryLedger = Some(ledger))
-      .onInsert("user") { _ => () }
-      .onUpdate("user") { _ => () }
-      .dispatch(batch, 0L)
-    val mfs = new java.io.File(ledger).listFiles()
-      .filter(_.getName.startsWith("_manifest")).map(_.getName).sorted
-    assert(mfs.toSeq == Seq("_manifest.v1"), s"legacy manifest not upgraded: ${mfs.toSeq}")
-    // a conflicting legacy shape still fails fast
-    val bad = tmpDir("ledger-legacy2")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(bad, "_manifest"), "on_update_user_0\n")
-    val e = intercept[IllegalStateException](
-      new Engine(deliveryLedger = Some(bad))
-        .onInsert("user") { _ => () }.dispatch(batch, 0L))
     assert(e.getMessage.contains("APPENDING"), e.getMessage)
   }
 
@@ -1260,8 +1231,9 @@ class StreamingCdcSpec extends AnyFunSuite {
     // engine with one from a different deployment. The per-shape cache
     // makes steady-state batches skip the gate...
     new java.io.File(ledger).listFiles().foreach(_.delete())
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(ledger, "_manifest.v7"), "on_event_other_0\n")
+    graft.operators.store.IndexManifest.commit(ledger,
+      graft.operators.store.IndexManifest.Meta(7L, 0, Nil, Nil,
+        kind = "ledger", registry = Seq("on_event_other_0")))
     engine.dispatch(batch, 1L) // cached shape — not yet caught (documented)
     // ...but the next revalidation window (batchId % 64 == 0) re-reads it
     val e = intercept[IllegalStateException](engine.dispatch(batch, 64L))
