@@ -487,92 +487,109 @@ object Ann {
       .orderBy(col("vec_id"))
   }
 
-  /** GREEDY GRAPH SEARCH over a [[knnGraphOf]] graph — the consumer
-    * that makes the k-NN graph load-bearing (HNSW/NSG's beam-search
-    * move as a relational plan): starting from per-query SEED vertices,
-    * expand `hops` rounds of graph neighbors, keep a beam of the best
-    * `beam` visited candidates per query by EXACT cosine after each
-    * round, and return the top-k of everything visited. Candidates come
-    * ONLY from the seeds and the graph's edges — no cell probe, no
-    * corpus scan — so search cost is |queries| · beam · degree per hop
-    * regardless of corpus size, and a broken graph (a missing edge)
+  /** GREEDY GRAPH SEARCH over a k-NN edge relation — the consumer that
+    * makes the graph load-bearing (HNSW/NSG's beam-search move): starting
+    * from per-query SEED vertices, expand `hops` rounds of graph
+    * neighbors, keep a beam of the best `beam` visited vertices per query
+    * by EXACT cosine after each round, and return the top-k of everything
+    * visited. Candidates come ONLY from the seeds and the graph's edges —
+    * no cell probe, no corpus scan — so a broken graph (a missing edge)
     * surfaces as a missing result, never silently recovered.
     *
-    * Scale shape: each hop is one edge equi-join (ids only ride it)
-    * plus one point-lookup-shaped embedding join for the new frontier
-    * and a per-query WindowGroupLimit beam cut; `hops` is a small
-    * constant so the plan is a fixed chain. The graph side is the
-    * (vec_id → nbr_id) relation, co-located by vec_id at 100 TB.
+    * The contract, hop by hop:
+    *  - hop 1 expands EVERY distinct (query_id, vec_id) seed pair: the
+    *    beam never cuts the seeds, and a seed with no embedding row still
+    *    routes (it is never scored, so it cannot rank or re-expand);
+    *  - after each expansion the next frontier is the `beam` best scored
+    *    visited vertices per query, seeds included, ordered by sim desc
+    *    then vec_id asc (`Double.compare`, Spark's own sort order: NaN
+    *    largest, -0.0 below 0.0);
+    *  - the result is the top `k` scored visited vertices per query, with
+    *    the query itself and `exclude`d vertices removed BEFORE the cut.
     *
-    * @param graph   (vec_id, nbr_id, …) edge relation ([[knnGraphOf]])
-    * @param emb     (vec_id, embedding) store for exact scoring
-    * @param queries (query_id, q_emb) — tiny, broadcast
-    * @param seeds   (query_id, vec_id) entry points (an IVF probe's
-    *                coarse winners, a prior result, or any known-near
-    *                vertex)
-    * @param exclude (vec_id) vertices banned from the RESULT — the
-    *                persisted store's tombstone set. Anti-joined BEFORE
-    *                the top-k cut (a dead vertex must not consume
-    *                result slots — the ann14/ann15 pre-filter rule) but
-    *                NOT from expansion: a tombstoned vertex keeps
-    *                ROUTING until compaction drops its edges physically
-    *                (the HNSW soft-delete discipline — removing a hub
-    *                from routing would orphan its neighborhood).
+    * Evaluation: the frontier and visited sets live on the DRIVER. Each
+    * hop is one bounded job ([[hopExpansion]]: the frontier broadcast into
+    * the edge relation, statically group-pruned on a persisted store),
+    * whose new candidates are scored and collected; the returned relation
+    * ranks a LocalRelation of the collected scores, so its plan does not
+    * grow with `hops`. Condition on the caller: each hop collects
+    * ≤ |queries| · (seeds + beam·degree·hops) rows, so the query batch
+    * times the seed count must fit the driver (Spark's
+    * `spark.driver.maxResultSize` bounds every collect). `graph` and `emb`
+    * are re-read by every hop's job: pass a stored or pinned relation,
+    * never an in-plan construction ([[graphSearchSelfRecall]] pins its
+    * [[knnGraphOf]] output for the call).
+    *
+    * @param graph     (vec_id, nbr_id, …) edge relation; with `groupedBy`
+    *                  it also carries the store's `ggrp` partition column
+    * @param emb       (vec_id, embedding) store for exact scoring
+    * @param queries   (query_id, q_emb) — tiny, broadcast
+    * @param seeds     (query_id, vec_id) entry points (an IVF probe's
+    *                  coarse winners, a prior result, or any known-near
+    *                  vertex)
+    * @param exclude   (vec_id) vertices banned from the RESULT — the
+    *                  persisted store's tombstone set. Anti-joined BEFORE
+    *                  the top-k cut (a dead vertex must not consume result
+    *                  slots — the ann14/ann15 pre-filter rule) but NOT
+    *                  from expansion: a tombstoned vertex keeps ROUTING
+    *                  until compaction drops its edges physically (the
+    *                  HNSW soft-delete discipline — removing a hub from
+    *                  routing would orphan its neighborhood).
+    * @param groupedBy the persisted store's group dial: the frontier's
+    *                  groups then prune each hop's edge scan
     */
   def graphSearchTopK(graph: DataFrame, emb: DataFrame, queries: DataFrame,
       seeds: DataFrame, hops: Int = 2, beam: Int = 8, k: Int = 5,
       exclude: Option[DataFrame] = None,
-      groupedBy: Option[Int] = None,
-      eagerHops: Boolean = false): DataFrame = {
+      groupedBy: Option[Int] = None): DataFrame = {
     require(hops >= 1 && hops <= 4, "hops must be a small constant (1..4)")
-    if (eagerHops)
-      return graphSearchTopKEager(graph, emb, queries, seeds, hops, beam,
-        k, exclude, groupedBy)
-    // The frontier and candidate sets are ids-only and beam-bounded
-    // (≤ |queries| · (seeds + beam·degree·hops) rows), so they ride
-    // every join as the BROADCAST side: a hop streams the edge (or
-    // embedding) relation past a hash map instead of shuffling it —
-    // the 1×-vs-10×-corpus probe measured the unhinted hops growing
-    // with corpus size through exactly those exchanges. On a PERSISTED
-    // graph (`groupedBy` = the store's group dial) the hop join also
-    // carries the `ggrp` partition column, computed frontier-side with
-    // the store's own hash: the broadcast then feeds DYNAMIC PARTITION
-    // PRUNING, so the scan reads the frontier's groups, not the store
-    // — the screens' group-INSET rule, runtime-driven, which is what
-    // keeps a hop sub-corpus at a 64Ki-group dial.
+    val spark = graph.sparkSession
+    import spark.implicits._
     val edges = groupedBy match {
       case Some(_) => graph.select(col("ggrp"), col("vec_id"), col("nbr_id"))
       case None    => graph.select(col("vec_id"), col("nbr_id"))
     }
-    def withGrp(ids: DataFrame): DataFrame = groupedBy match {
-      case Some(n) => ids.withColumn("ggrp",
-        pmod(xxhash64(col("vec_id")), lit(n.toLong)).cast("int"))
-      case None => ids
+    def scoreCollect(cands: DataFrame): Seq[(Long, Long, Double)] =
+      broadcast(cands)
+        .join(emb, Seq("vec_id"))
+        .join(broadcast(queries), Seq("query_id"))
+        .select(col("query_id").cast("long"), col("vec_id").cast("long"),
+          cosine(col("q_emb"), col("embedding")).as("sim"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSeq
+    def beamOf(scored: Seq[(Long, Long, Double)]): Seq[(Long, Long)] =
+      scored.groupBy(_._1).valuesIterator.flatMap { qs =>
+        qs.sortWith { (a, b) =>
+          val c = java.lang.Double.compare(a._3, b._3)
+          if (c != 0) c > 0 else a._2 < b._2
+        }.take(beam)
+      }.map { case (q, v, _) => (q, v) }.toSeq.sorted
+    val seedPairs = seeds
+      .select(col("query_id").cast("long"), col("vec_id").cast("long"))
+      .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    var seen = seedPairs.toSet
+    var frontier = seedPairs
+    var scored = Seq.empty[(Long, Long, Double)]
+    var hop = 0
+    while (hop < hops && frontier.nonEmpty) {
+      val cands = hopExpansion(edges, frontier.toDF("query_id", "vec_id"),
+          groupedBy)
+        .distinct()
+        .join(broadcast(seen.toSeq.toDF("query_id", "vec_id")),
+          Seq("query_id", "vec_id"), "left_anti")
+      // the seeds are scored in hop 1's job, beside its candidates
+      val fresh = scoreCollect(if (hop > 0) cands
+        else cands.unionByName(seedPairs.toDF("query_id", "vec_id")))
+      scored = scored ++ fresh
+      seen = seen ++ fresh.map { case (q, v, _) => (q, v) }
+      frontier = beamOf(scored)
+      hop += 1
     }
-    val hopKeys = groupedBy.fold(Seq("vec_id"))(_ => Seq("ggrp", "vec_id"))
     val wSim = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("vec_id"))
-    def score(cands: DataFrame): DataFrame = broadcast(cands)
-      .join(emb, Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("sim", cosine(col("q_emb"), col("embedding")))
-      .select(col("query_id"), col("vec_id"), col("sim"))
-    var visited = seeds.select(col("query_id"), col("vec_id")).distinct()
-    var frontier = visited
-    for (_ <- 1 to hops) {
-      val expanded = broadcast(withGrp(frontier))
-        .join(edges, hopKeys)
-        .select(col("query_id"), col("nbr_id").as("vec_id"))
-      visited = visited.unionByName(expanded).distinct()
-      // greedy beam: only the best `beam` visited vertices expand next
-      frontier = score(visited)
-        .withColumn("rnk", row_number().over(wSim))
-        .filter(col("rnk") <= beam)
-        .select(col("query_id"), col("vec_id"))
-    }
-    val scored = score(visited)
-    exclude.fold(scored)(t =>
-        scored.join(broadcast(t.select(col("vec_id"))), Seq("vec_id"),
+    val scoredDf = scored.toDF("query_id", "vec_id", "sim")
+    exclude.fold(scoredDf)(t =>
+        scoredDf.join(broadcast(t.select(col("vec_id"))), Seq("vec_id"),
           "left_anti"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("rnk", row_number().over(wSim))
@@ -582,15 +599,14 @@ object Ann {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** The ONE-HOP expansion relation of [[graphSearchTopKEager]], factored
-    * so its plan shape is spec-pinnable: a driver-side frontier (ids +
-    * their precomputed `ggrp`s) broadcast into the grouped edge relation,
-    * with the frontier's group list applied as a STATIC partition filter
-    * (`ggrp IN (…)` at plan time — the committed store is hash-range
-    * partitioned by `ggrp`, so the scan reads the frontier's groups and
-    * nothing else; the lazy path gets the same effect at runtime via
-    * dynamic partition pruning, which the eager path strictly improves
-    * on: the prune happens before the plan ever executes).
+  /** One hop of [[graphSearchTopK]], factored so its plan shape is
+    * spec-pinnable: a driver-side frontier (query_id, vec_id) broadcast
+    * into the edge relation, returning (query_id, vec_id = neighbor).
+    * With `groupedBy` (a persisted store's dial) the frontier's groups
+    * are computed with the store's own hash and applied as a STATIC
+    * partition filter (`ggrp IN (…)` at plan time — the committed store
+    * is hash-range partitioned by `ggrp`), so the scan reads the
+    * frontier's groups and nothing else.
     */
   private[graft] def hopExpansion(edges: DataFrame,
       frontier: DataFrame, groupedBy: Option[Int]): DataFrame = {
@@ -612,91 +628,6 @@ object Ann {
     }
     broadcast(keyed).join(pruned, hopKeys)
       .select(col("query_id"), col("nbr_id").as("vec_id"))
-  }
-
-  /** [[graphSearchTopK]] with DRIVER-SIDE frontier state — the carve-out
-    * for PERSISTED graphs (guide §8: decide with small rows, and §3.3:
-    * very deep lazy loops make PLANNING the bottleneck). The lazy loop
-    * references each hop's `visited` twice (union + beam re-score), so
-    * its static plan DOUBLES per hop (ann18: 5,331 lines at hops = 2;
-    * 4-hop searches pay 4× that planning cost on every call — per
-    * micro-batch in the crawl loops). Here the frontier/visited sets —
-    * ids + sims, ≤ |queries| · (seeds + beam·degree·hops) rows, the same
-    * bound that justifies broadcasting them — are COLLECTED instead:
-    * each hop is one bounded job over a constant-size plan (broadcast
-    * frontier → statically group-pruned edge scan → embedding join →
-    * cosine), and the returned relation is a LocalRelation-rooted
-    * ranking plan whose size no longer depends on `hops` at all.
-    *
-    * Only for storage-backed edge relations: an IN-PLAN graph
-    * ([[knnGraphOf]] output) would re-run its whole construction on
-    * every hop's job — the lazy single-plan form with AQE exchange
-    * reuse is right there, measured (the r17 hop-pinning revert).
-    *
-    * Exact-equivalence argument (oracle-checked per consumer, plus the
-    * eager-vs-lazy parity spec): the hop recursion, the beam cut's
-    * (sim desc, vec_id asc) tie-break, the visited-set union semantics,
-    * cosine's evaluation (same codegen'd expression over the same
-    * stored rows — doubles round-trip the driver exactly), the
-    * tombstone anti-join and the final k-cut are all the lazy path's,
-    * only evaluated per hop instead of at the terminal action.
-    */
-  private def graphSearchTopKEager(graph: DataFrame, emb: DataFrame,
-      queries: DataFrame, seeds: DataFrame, hops: Int, beam: Int, k: Int,
-      exclude: Option[DataFrame], groupedBy: Option[Int]): DataFrame = {
-    val spark = graph.sparkSession
-    import spark.implicits._
-    val edges = groupedBy match {
-      case Some(_) => graph.select(col("ggrp"), col("vec_id"), col("nbr_id"))
-      case None    => graph.select(col("vec_id"), col("nbr_id"))
-    }
-    def scoreCollect(cands: DataFrame): Array[(Long, Long, Double)] =
-      broadcast(cands)
-        .join(emb, Seq("vec_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id").cast("long"), col("vec_id").cast("long"),
-          cosine(col("q_emb"), col("embedding")).as("sim"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    def beamOf(scored: Seq[(Long, Long, Double)]): Seq[(Long, Long)] =
-      scored.groupBy(_._1).valuesIterator.flatMap { qs =>
-        // the lazy beam cut's ordering exactly — sim desc, vec_id asc —
-        // via Double.compare, which matches Spark's sort semantics on
-        // the edge values too (NaN sorts largest, -0.0 below 0.0)
-        qs.sortWith { (a, b) =>
-          val c = java.lang.Double.compare(a._3, b._3)
-          if (c != 0) c > 0 else a._2 < b._2
-        }.take(beam)
-      }.map { case (q, v, _) => (q, v) }.toSeq.sorted
-    // seeds score in one job (they are the initial visited set)
-    var scored = scoreCollect(
-      seeds.select(col("query_id"), col("vec_id")).distinct()).toSeq
-    var seen = scored.map { case (q, v, _) => (q, v) }.toSet
-    var frontier = beamOf(scored)
-    var hop = 0
-    while (hop < hops && frontier.nonEmpty) {
-      val cands = hopExpansion(edges,
-          frontier.toDF("query_id", "vec_id"), groupedBy)
-        .distinct()
-        .join(broadcast(seen.toSeq.toDF("query_id", "vec_id")),
-          Seq("query_id", "vec_id"), "left_anti")
-      val fresh = scoreCollect(cands)
-      scored = scored ++ fresh
-      seen = seen ++ fresh.map { case (q, v, _) => (q, v) }
-      frontier = beamOf(scored)
-      hop += 1
-    }
-    val wSim = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val scoredDf = scored.toDF("query_id", "vec_id", "sim")
-    exclude.fold(scoredDf)(t =>
-        scoredDf.join(broadcast(t.select(col("vec_id"))), Seq("vec_id"),
-          "left_anti"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("rnk", row_number().over(wSim))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("vec_id"),
-        round(col("sim"), 4).as("sim"))
-      .orderBy(col("query_id"), col("rnk"))
   }
 
   /** One NN-DESCENT refinement round (Dong et al. 2011) — the
@@ -794,14 +725,17 @@ object Ann {
     val copies2 = qs.select((col("vec_id") + 200000L).as("vec_id"),
       col("embedding"))
     val all = base.unionByName(copies1).unionByName(copies2)
-    val graph = knnGraphOf(all)
     val queries = copies2.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"))
     val seeds = copies2.select((col("vec_id")).as("query_id"),
       col("vec_id"))
-    graphSearchTopK(graph, all, queries, seeds, hops = 2, beam = 8, k = 1)
+    // every hop re-reads the graph: build it once; the search returns
+    // rows already collected to the driver, so the pin ends with the call
+    val graph = knnGraphOf(all).cache()
+    try graphSearchTopK(graph, all, queries, seeds, hops = 2, beam = 8, k = 1)
       .select(col("query_id"), col("vec_id").as("match_id"), col("sim"))
       .orderBy(col("query_id"))
+    finally { graph.unpersist(); () }
   }
 
   /** Per-label embedding stats (norm distribution) — the sanity scan a

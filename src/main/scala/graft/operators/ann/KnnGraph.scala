@@ -106,41 +106,12 @@ object KnnGraph {
     meta.params.get("hubs").toSeq.flatMap(_.split(","))
       .filter(_.nonEmpty).map(_.toLong)
 
-  /** Tags RETIRED from the manifest's leaf/tomb lists by replace commits
-    * (refine/compact/regroup rewrite the store as one fresh leaf, which
-    * would otherwise erase every prior commit's tag) — kept in the
-    * manifest's `donetags` param so tag idempotency survives the
-    * rewrite: a checkpoint-replayed crawl batch whose leaf was folded
-    * away by an intervening refine still no-ops instead of committing
-    * duplicate edges. Growth is one short tag per retired commit —
-    * manifest-sized metadata, linear in commits ever made, the price of
-    * an exactly-once fold claim that holds across maintenance.
-    */
-  private def doneTags(meta: IndexManifest.Meta): Set[String] =
-    meta.params.get("donetags").toSeq.flatMap(_.split(","))
-      .filter(_.nonEmpty).toSet
-
-  /** Has `tag` been committed — as a live leaf OR retired by a later
-    * replace commit? The idempotency check every fold uses.
-    */
-  private def isDone(meta: IndexManifest.Meta, tag: String): Boolean =
-    meta.hasLeafTag(tag) || doneTags(meta).contains(tag)
-
-  private def isDoneTomb(meta: IndexManifest.Meta, tag: String): Boolean =
-    meta.hasTombTag(tag) || doneTags(meta).contains(tag)
-
-  /** The `donetags` value a replace commit publishes: prior retired tags
-    * plus every leaf/tomb tag the rewrite erases.
-    */
-  private def retiredTags(meta: IndexManifest.Meta): String =
-    (doneTags(meta) ++ meta.leaves.map(IndexManifest.tagOf) ++
-      meta.tombs.map(IndexManifest.tagOf)).toSeq.sorted.mkString(",")
-
   /** Write one committed edge leaf (vec_id, nbr_id, rank, mutual) and
     * publish the next manifest — the shared append/build/refine commit
     * path. `replace = true` commits ONLY the new leaf AND clears the
     * tombstone set (compaction/refine semantics: dead edges were
-    * dropped physically by the caller); otherwise the leaf joins the
+    * dropped physically by the caller), retiring every erased tag
+    * ([[IndexManifest.Meta.retiring]]); otherwise the leaf joins the
     * committed set and tombstones carry over. Every commit refreshes
     * the manifest's HUB pool from the written leaf ([[nextHubs]]), so
     * seed selection never scans the store.
@@ -149,7 +120,7 @@ object KnnGraph {
       groups: Int, replace: Boolean): Unit = {
     IndexManifest.requireTag(tag, "leaf tag")
     val meta = IndexManifest.readMetaOrEmpty(indexDir, groups)
-    if (isDone(meta, tag)) return
+    if (meta.isDone(tag)) return
     if (meta.groups != groups)
       throw new IllegalStateException(
         s"$indexDir is grouped at ${meta.groups} but the write says " +
@@ -184,12 +155,11 @@ object KnnGraph {
           .collect().map(_.getLong(0)).toSeq
       }
     val hubs = nextHubs(spark, indexDir, leafDir, prior, hubN)
-    val params = meta.params + ("hubs" -> hubs.mkString(",")) ++
-      (if (replace) Map("donetags" -> retiredTags(meta)) else Map.empty)
-    IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
+    val next = if (replace) meta.retiring(meta.leaves ++ meta.tombs) else meta
+    IndexManifest.commit(indexDir, next.copy(version = meta.version + 1,
       leaves = if (replace) Seq(leafDir) else meta.leaves :+ leafDir,
       tombs = if (replace) Seq.empty else meta.tombs,
-      params = params))
+      params = next.params + ("hubs" -> hubs.mkString(","))))
     IndexManifest.sweep(indexDir, Seq("edges", "tombs"), meta.version + 1)
   }
 
@@ -210,7 +180,7 @@ object KnnGraph {
     IndexManifest.requireTag(tag, "tombstone tag")
     val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
       s"$indexDir holds no committed k-NN graph (build first)"))
-    if (isDoneTomb(meta, tag)) return
+    if (meta.isDoneTomb(tag)) return
     val leafDir = IndexManifest.leafName(meta.version + 1, tag)
     IndexManifest.dropResidue(indexDir, Seq("tombs"), leafDir)
     ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
@@ -289,25 +259,36 @@ object KnnGraph {
     */
   def searchTopK(spark: SparkSession, indexDir: String, emb: DataFrame,
       queries: DataFrame, seeds: DataFrame, hops: Int = 2, beam: Int = 8,
-      k: Int = 5): DataFrame = {
-    val meta = metaOf(indexDir)
-    // eagerHops: the store is the storage-backed case the driver-side
-    // frontier carve-out exists for — constant-size per-hop plans with
-    // STATIC ggrp partition pruning, instead of a lazy plan that doubles
-    // per hop (see Ann.graphSearchTopKEager's scaladoc)
-    Ann.graphSearchTopK(groupedEdges(spark, indexDir, meta), emb, queries,
-      seeds, hops, beam, k, exclude = tombstones(spark, indexDir),
-      groupedBy = meta.map(_.groups), eagerHops = true)
-  }
+      k: Int = 5): DataFrame =
+    searchSnapshot(spark, indexDir, headOf(indexDir), emb, queries, seeds,
+      hops, beam, k)
 
-  /** The committed edge relation WITH its `ggrp` partition column — the
-    * hop joins carry it so the frontier's groups prune the scan at
-    * runtime (dynamic partition pruning; see [[Ann.graphSearchTopK]]).
+  /** The head manifest, or the empty store at the default dial. */
+  private def headOf(indexDir: String): IndexManifest.Meta =
+    IndexManifest.readMetaOrEmpty(indexDir, DefaultGroups)
+
+  /** The ONE persisted-graph search: edges, tombstones and the group dial
+    * all come from the single manifest snapshot `meta`, so a
+    * refine/compact committing mid-call can never pair the retained
+    * pre-compaction leaves with the post-compaction (empty) tombstone
+    * set, and a later regroup can never re-key the frontier's hash
+    * against the snapshot's partitions.
+    */
+  private def searchSnapshot(spark: SparkSession, indexDir: String,
+      meta: IndexManifest.Meta, emb: DataFrame, queries: DataFrame,
+      seeds: DataFrame, hops: Int, beam: Int, k: Int): DataFrame =
+    Ann.graphSearchTopK(groupedEdges(spark, indexDir, meta), emb, queries,
+      seeds, hops, beam, k,
+      exclude = tombstonesSnapshot(spark, indexDir, Some(meta)),
+      groupedBy = Some(meta.groups))
+
+  /** The committed edge relation WITH its `ggrp` partition column, which
+    * each hop's scan prunes on ([[Ann.hopExpansion]]).
     */
   private def groupedEdges(spark: SparkSession, indexDir: String,
-      meta: Option[IndexManifest.Meta]): DataFrame =
+      meta: IndexManifest.Meta): DataFrame =
     IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/edges"), meta.toSeq.flatMap(_.leaves))
+        spark.read.parquet(s"$indexDir/edges"), meta.leaves)
       .select(col("ggrp"), col("vec_id"), col("nbr_id"), col("rank"),
         col("mutual"))
 
@@ -327,16 +308,7 @@ object KnnGraph {
         s"manifest version $asOfVersion is not retained at $indexDir — " +
           s"time travel reaches the ${IndexManifest.retentionWindow(indexDir)}-" +
           "version grace window"))
-    val asOfEdges = IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/edges"), meta.leaves)
-      .select(col("ggrp"), col("vec_id"), col("nbr_id"), col("rank"),
-        col("mutual"))
-    // the group dial pins from the SNAPSHOT (a later regroup re-keys
-    // ggrp — hashing the frontier with the head's dial would prune to
-    // the wrong partitions)
-    Ann.graphSearchTopK(asOfEdges, emb, queries, seeds, hops, beam, k,
-      exclude = tombstonesSnapshot(spark, indexDir, Some(meta)),
-      groupedBy = Some(meta.groups), eagerHops = true)
+    searchSnapshot(spark, indexDir, meta, emb, queries, seeds, hops, beam, k)
   }
 
   /** Deterministic HUB seeds: the store's `n` smallest vec_ids — the
@@ -357,15 +329,18 @@ object KnnGraph {
     * serves any n exactly.
     */
   private[graft] def hubIds(spark: SparkSession, indexDir: String,
-      n: Int): DataFrame = {
-    val meta = metaOf(indexDir)
-    val hubN = hubCountOf(meta)
-    val pooled = meta.map(hubsParam).getOrElse(Seq.empty)
+      n: Int): DataFrame =
+    hubsOf(spark, indexDir, headOf(indexDir), n)
+
+  private def hubsOf(spark: SparkSession, indexDir: String,
+      meta: IndexManifest.Meta, n: Int): DataFrame = {
+    val hubN = hubCountOf(Some(meta))
+    val pooled = hubsParam(meta)
     if (pooled.nonEmpty && (n <= pooled.size || pooled.size < hubN)) {
       import spark.implicits._
       pooled.take(n).toDF("vec_id")
     } else
-      edges(spark, indexDir).select(col("vec_id")).distinct()
+      groupedEdges(spark, indexDir, meta).select(col("vec_id")).distinct()
         .orderBy(col("vec_id")).limit(n)
   }
 
@@ -425,7 +400,7 @@ object KnnGraph {
       beam: Int = 8, nSeeds: Int = 16): Unit = {
     val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
       s"$indexDir holds no committed k-NN graph (build first)"))
-    if (isDone(meta, tag)) return
+    if (meta.isDone(tag)) return
     linkFound(spark, indexDir,
       searchForLink(spark, indexDir, emb, batch, nSeeds, hops, beam, k),
       tag, k)
@@ -444,12 +419,10 @@ object KnnGraph {
       k: Int = 3): DataFrame = {
     val queries = batch.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"))
+    val meta = headOf(indexDir)
     val seeds = queries.select(col("query_id"))
-      .crossJoin(broadcast(hubIds(spark, indexDir, nSeeds)))
-    val meta = metaOf(indexDir)
-    Ann.graphSearchTopK(groupedEdges(spark, indexDir, meta), emb, queries,
-      seeds, hops, beam, k, exclude = tombstones(spark, indexDir),
-      groupedBy = meta.map(_.groups), eagerHops = true)
+      .crossJoin(broadcast(hubsOf(spark, indexDir, meta, nSeeds)))
+    searchSnapshot(spark, indexDir, meta, emb, queries, seeds, hops, beam, k)
   }
 
   /** [[append]]'s LINK half: ONE leaf commits the found relation's
@@ -464,7 +437,7 @@ object KnnGraph {
       tag: String, k: Int = 3): Unit = {
     val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
       s"$indexDir holds no committed k-NN graph (build first)"))
-    if (isDone(meta, tag)) return
+    if (meta.isDone(tag)) return
     val fwd = found.select(col("query_id").as("vec_id"),
       col("vec_id").as("nbr_id"), col("rnk").as("rank"),
       lit(true).as("mutual"))
@@ -486,7 +459,7 @@ object KnnGraph {
       tag: String, k: Int = 3): Unit = {
     val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
       s"$indexDir holds no committed k-NN graph (build first)"))
-    if (isDone(meta, tag)) return
+    if (meta.isDone(tag)) return
     // dead vertices leave physically here: tombstoned endpoints' edges
     // drop before the round, so they neither survive nor become
     // candidates, and the replace-commit clears the tombstone set
@@ -515,7 +488,7 @@ object KnnGraph {
     IndexManifest.requireTag(tag, "regroup tag")
     val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
       s"$indexDir holds no committed k-NN graph (build first)"))
-    if (isDone(meta, tag)) return
+    if (meta.isDone(tag)) return
     val leafDir = IndexManifest.leafName(meta.version + 1, tag)
     IndexManifest.dropResidue(indexDir, Seq("edges"), leafDir)
     edges(spark, indexDir)
@@ -525,13 +498,10 @@ object KnnGraph {
       .write.partitionBy("ggrp", "leaf")
       .mode("append").parquet(s"$indexDir/edges")
     // a regroup erases every prior leaf tag (leaves := the one fresh
-    // leaf) — retire them into donetags so replayed folds still no-op;
-    // tombs carry over, so only the LEAF tags retire here
-    val retired = (doneTags(meta) ++ meta.leaves.map(IndexManifest.tagOf))
-      .toSeq.sorted.mkString(",")
-    IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-      groups = newGroups, leaves = Seq(leafDir),
-      params = meta.params + ("donetags" -> retired)))
+    // leaf) — retire them so replayed folds still no-op; tombs carry
+    // over, so only the LEAF tags retire here
+    IndexManifest.commit(indexDir, meta.retiring(meta.leaves).copy(
+      version = meta.version + 1, groups = newGroups, leaves = Seq(leafDir)))
     IndexManifest.sweep(indexDir, Seq("edges", "tombs"), meta.version + 1)
   }
 
@@ -559,7 +529,7 @@ object KnnGraph {
     require(srcDirs.nonEmpty, "merge needs at least one source")
     IndexManifest.requireTag(tag, "merge tag")
     val dest = IndexManifest.readMetaOrEmpty(destDir, groups)
-    if (isDone(dest, tag)) return
+    if (dest.isDone(tag)) return
     if (dest.groups != groups)
       throw new IllegalStateException(
         s"$destDir is grouped at ${dest.groups} but the merge says " +
@@ -622,22 +592,11 @@ object KnnGraph {
   def compact(spark: SparkSession, indexDir: String, tag: String): Unit = {
     val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
       s"$indexDir holds no committed k-NN graph (build first)"))
-    if (isDone(meta, tag)) return
+    if (meta.isDone(tag)) return
     commitLeaf(liveEdges(spark, indexDir), indexDir, tag, meta.groups,
       replace = true)
   }
 
-  /** ann20's driver-checked shape — ann18's planted theorem through
-    * BUILD → PERSIST → RELOAD → SEARCH: the graph over corpus + two
-    * exact copies per planted original commits to storage, and the
-    * search then runs against the COMMITTED edge relation only (a torn
-    * commit, a leaf lost by the manifest, or a broken reload surfaces
-    * as a missing row — the persisted artifact is load-bearing). Each
-    * +200000 copy queries the stored graph seeded at itself; hop 1
-    * provably reaches both its twins through stored edges and exact
-    * rerank puts the ORIGINAL first (the ann18 argument, unchanged).
-    * The committed-leaf census rides the relation.
-    */
   /** ann22's driver-checked shape — TAKEDOWNS through the persisted
     * graph (the delete matrix's sixth and last store family): build
     * over corpus + two exact copies per planted original, tombstone
@@ -881,8 +840,8 @@ object KnnGraph {
       // committed and `base` is pinned: overlap them (guide §2.6) instead
       // of letting each leg's small-job tail serialize the other, and pin
       // each so the scoring join below reads the computed rows. The graph
-      // leg CONSTRUCTS inside its thunk: searchTopK is eager (the
-      // driver-side frontier loop), so its work happens at construction.
+      // leg calls searchTopK inside its thunk because the search runs its
+      // hops when called; only the final ranking is left to the pin.
       val legs: Seq[() => DataFrame] = Seq(
         () => pinned(bruteTop),
         () => pinned(searchTopK(spark, indexDir, base, queries, seeds,
@@ -897,6 +856,17 @@ object KnnGraph {
     }
   }
 
+  /** ann20's driver-checked shape — ann18's planted theorem through
+    * BUILD → PERSIST → RELOAD → SEARCH: the graph over corpus + two
+    * exact copies per planted original commits to storage, and the
+    * search then runs against the COMMITTED edge relation only (a torn
+    * commit, a leaf lost by the manifest, or a broken reload surfaces
+    * as a missing row — the persisted artifact is load-bearing). Each
+    * +200000 copy queries the stored graph seeded at itself; hop 1
+    * provably reaches both its twins through stored edges and exact
+    * rerank puts the ORIGINAL first (the ann18 argument, unchanged).
+    * The committed-leaf census rides the relation.
+    */
   def persistedSearchSelfRecall(spark: SparkSession, d: String,
       nQueries: Int = 64): DataFrame = {
     val base = graft.Tables.spread(graft.Tables.embeddings(spark, d)

@@ -127,36 +127,21 @@ object PqIndex {
   private def tombLeafName(version: Long, suffix: String) =
     IndexManifest.leafName(version, suffix)
 
-  private def hasTag(leaves: Seq[String], tag: String): Boolean =
-    leaves.exists(IndexManifest.tagOf(_) == tag)
-
-  /** Tags RETIRED from the leaf/tomb lists by replace commits
-    * ([[compact]] / [[retrain]] rewrite the store as one fresh leaf,
-    * which would otherwise erase every prior commit's tag) — kept in
-    * the manifest's `donetags` param (via [[Meta.extraParams]]) so tag
-    * idempotency survives the rewrite: a checkpoint-replayed crawl
-    * batch whose leaf was folded away by an intervening maintenance
-    * commit still no-ops instead of committing duplicate codes. The
-    * KnnGraph discipline applied to the vector store; growth is one
-    * short tag per retired commit — manifest-sized metadata.
-    */
-  private def doneTags(meta: Meta): Set[String] =
-    meta.extraParams.get("donetags").toSeq.flatMap(_.split(","))
-      .filter(_.nonEmpty).toSet
-
   /** Has `tag` committed — as a live code/tomb leaf OR retired by a
-    * later replace commit? The idempotency check every fold uses.
+    * later replace commit ([[compact]] / [[retrain]] retire every erased
+    * tag, [[IndexManifest.Meta.retiring]])? The idempotency check every
+    * fold uses.
     */
-  private def isDone(meta: Meta, tag: String): Boolean =
-    hasTag(meta.codeLeaves, tag) || hasTag(meta.tombLeaves, tag) ||
-      doneTags(meta).contains(tag)
+  private def isDone(meta: Meta, tag: String): Boolean = {
+    val shared = toShared(meta)
+    shared.isDone(tag) || shared.hasTombTag(tag)
+  }
 
-  /** The `donetags` value a replace commit publishes: prior retired
-    * tags plus every code/tomb leaf tag the rewrite erases.
+  /** `meta` with every code/tomb leaf tag retired — the base of a
+    * replace commit.
     */
-  private def retiredTags(meta: Meta): String =
-    (doneTags(meta) ++ meta.codeLeaves.map(IndexManifest.tagOf) ++
-      meta.tombLeaves.map(IndexManifest.tagOf)).toSeq.sorted.mkString(",")
+  private def retired(meta: Meta): Meta =
+    fromShared(toShared(meta).retiring(meta.codeLeaves ++ meta.tombLeaves))
 
   private def randomSuffix(): String =
     java.util.UUID.randomUUID().toString.take(8)
@@ -465,7 +450,7 @@ object PqIndex {
     IndexManifest.requireTag(tag, "merge tag")
     if (hasCommittedManifest(destDir)) {
       val dm = readMeta(destDir)
-      if (hasTag(dm.codeLeaves, tag)) return dm
+      if (isDone(dm, tag)) return dm
       throw new IllegalStateException(
         s"$destDir already holds a committed pq index — merge builds a " +
           "fresh destination")
@@ -639,9 +624,8 @@ object PqIndex {
       .parquet(s"$indexDir/codes")
     // a replace commit: retire every erased leaf tag into donetags so
     // checkpoint-replayed tagged folds still no-op after the rewrite
-    val next = meta.copy(version = meta.version + 1, codeLeaves = Seq(leaf),
-      tombLeaves = Seq.empty,
-      extraParams = meta.extraParams + ("donetags" -> retiredTags(meta)))
+    val next = retired(meta).copy(version = meta.version + 1,
+      codeLeaves = Seq(leaf), tombLeaves = Seq.empty)
     writeMeta(indexDir, next)
     next
   }
@@ -720,10 +704,8 @@ object PqIndex {
     writeCodesLeaf(spark, indexDir, live, leaf,
       artifact(spark, s"$indexDir/$booksDir"), storedCoarse,
       meta.subLen, meta.residual)
-    val next = meta.copy(version = v, codebooksDir = booksDir,
-      coarseDir = coarseDir, codeLeaves = Seq(leaf),
-      tombLeaves = Seq.empty,
-      extraParams = meta.extraParams + ("donetags" -> retiredTags(meta)))
+    val next = retired(meta).copy(version = v, codebooksDir = booksDir,
+      coarseDir = coarseDir, codeLeaves = Seq(leaf), tombLeaves = Seq.empty)
     writeMeta(indexDir, next)
     next
   }

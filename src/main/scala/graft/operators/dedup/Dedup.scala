@@ -374,13 +374,14 @@ object Dedup {
       groups: Int): Unit = {
     IndexManifest.requireTag(leaf, "leaf tag")
     // IDEMPOTENT fold for at-least-once delivery (foreachBatch replay):
-    // a tag the committed manifest already carries is a no-op. The
-    // COMMIT POINT is the manifest publish — leaf directories written
-    // before a crash are invisible residue (readers restrict to
-    // committed leaves) and are dropped before the re-fold, so a replay
-    // can never duplicate rows.
+    // a tag the committed manifest already carries — as a live leaf, or
+    // retired by a later compaction/regroup — is a no-op. The COMMIT
+    // POINT is the manifest publish — leaf directories written before a
+    // crash are invisible residue (readers restrict to committed leaves)
+    // and are dropped before the re-fold, so a replay can never
+    // duplicate rows.
     val meta = IndexManifest.readMetaOrEmpty(indexDir, groups)
-    if (meta.hasLeafTag(leaf)) return
+    if (meta.isDone(leaf)) return
     if (meta.groups != groups)
       throw new IllegalStateException(
         s"$indexDir is grouped at ${meta.groups} but the append says " +
@@ -456,6 +457,7 @@ object Dedup {
       ids: DataFrame, leaf: String, bid: Long = Long.MaxValue): Unit = {
     IndexManifest.requireTag(leaf, "tombstone tag")
     val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultIndexGroups)
+    // tomb leaves survive compaction here, so no tomb tag ever retires
     if (meta.hasTombTag(leaf)) return
     val leafDir = IndexManifest.leafName(meta.version + 1, leaf)
     IndexManifest.dropResidue(indexDir, Seq("tombs"), leafDir)
@@ -606,7 +608,7 @@ object Dedup {
       tag: String): Unit = {
     IndexManifest.requireTag(tag, "compaction tag")
     val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultIndexGroups)
-    if (!meta.hasLeafTag(tag)) {
+    if (!meta.isDone(tag)) {
       val leafDir = IndexManifest.leafName(meta.version + 1, tag)
       IndexManifest.dropResidue(indexDir, Seq("sets", "bands"), leafDir)
       // DEAD rows (tombstoned at a bid above theirs) and SUPERSEDED
@@ -647,9 +649,9 @@ object Dedup {
           .write.partitionBy("bgrp", "leaf")
           .mode("append").parquet(s"$indexDir/bands")), maxPar = 2)
       // THE commit: the next manifest references only the new leaf (and
-      // the retained tombstones)
-      IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-        leaves = Seq(leafDir)))
+      // the retained tombstones); the folded leaves' tags retire
+      IndexManifest.commit(indexDir, meta.retiring(meta.leaves).copy(
+        version = meta.version + 1, leaves = Seq(leafDir)))
     }
     // collect only leaves NO retained manifest references — in-flight
     // readers planned against retained manifests keep their files
@@ -686,7 +688,7 @@ object Dedup {
     require(newGroups > 0, "newGroups must be positive")
     IndexManifest.requireTag(tag, "regroup tag")
     val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultIndexGroups)
-    if (meta.hasLeafTag(tag)) return
+    if (meta.isDone(tag)) return
     val leafDir = IndexManifest.leafName(meta.version + 1, tag)
     IndexManifest.dropResidue(indexDir, Seq("sets", "bands"), leafDir)
     committedOnly(
@@ -707,8 +709,8 @@ object Dedup {
       .repartition(col("bgrp"))
       .write.partitionBy("bgrp", "leaf")
       .mode("append").parquet(s"$indexDir/bands")
-    IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-      groups = newGroups, leaves = Seq(leafDir)))
+    IndexManifest.commit(indexDir, meta.retiring(meta.leaves).copy(
+      version = meta.version + 1, groups = newGroups, leaves = Seq(leafDir)))
     IndexManifest.sweep(indexDir, Seq("sets", "bands", "tombs"),
       meta.version + 1)
   }
@@ -1053,7 +1055,7 @@ object Dedup {
     require(srcDirs.nonEmpty, "mergeDedupIndexes needs at least one source")
     IndexManifest.requireTag(tag, "merge tag")
     val dest = IndexManifest.readMetaOrEmpty(destDir, groups)
-    if (dest.hasLeafTag(tag)) return
+    if (dest.isDone(tag)) return
     if (dest.groups != groups)
       throw new IllegalStateException(
         s"$destDir is grouped at ${dest.groups} but the merge says " +

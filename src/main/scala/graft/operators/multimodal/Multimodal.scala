@@ -591,7 +591,7 @@ object Multimodal {
       leaf: String, groups: Int): Unit = {
     IndexManifest.requireTag(leaf, "leaf tag")
     val meta = IndexManifest.readMetaOrEmpty(indexDir, groups)
-    if (meta.hasLeafTag(leaf)) return
+    if (meta.isDone(leaf)) return
     if (meta.groups != groups)
       throw new IllegalStateException(
         s"$indexDir is grouped at ${meta.groups} but the append says " +
@@ -631,7 +631,7 @@ object Multimodal {
       rel: String, ids: DataFrame, leaf: String): Unit = {
     IndexManifest.requireTag(leaf, "tombstone tag")
     val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultAHashGroups)
-    if (meta.hasTombTag(leaf)) return
+    if (meta.isDoneTomb(leaf)) return
     val leafDir = IndexManifest.leafName(meta.version + 1, leaf)
     IndexManifest.dropResidue(indexDir, Seq("tombs"), leafDir)
     ids.select(col("media_id").cast("long").as("media_id")).distinct()
@@ -714,7 +714,7 @@ object Multimodal {
       rel: String, grpName: String, tag: String): Unit = {
     IndexManifest.requireTag(tag, "compaction tag")
     val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultAHashGroups)
-    if (!meta.hasLeafTag(tag)) {
+    if (!meta.isDone(tag)) {
       val leafDir = IndexManifest.leafName(meta.version + 1, tag)
       IndexManifest.dropResidue(indexDir, Seq(rel), leafDir)
       val src = IndexManifest.committedOnly(
@@ -730,8 +730,9 @@ object Multimodal {
         .repartition(col(grpName))
         .write.partitionBy(grpName, "leaf")
         .mode("append").parquet(s"$indexDir/$rel")
-      IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-        leaves = Seq(leafDir), tombs = Seq.empty))
+      IndexManifest.commit(indexDir,
+        meta.retiring(meta.leaves ++ meta.tombs).copy(
+          version = meta.version + 1, leaves = Seq(leafDir), tombs = Seq.empty))
     }
     IndexManifest.sweep(indexDir, Seq(rel, "tombs"),
       metaOf(indexDir).map(_.version).getOrElse(meta.version))
@@ -747,7 +748,7 @@ object Multimodal {
     require(newGroups > 0, "newGroups must be positive")
     IndexManifest.requireTag(tag, "regroup tag")
     val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultAHashGroups)
-    if (meta.hasLeafTag(tag)) return
+    if (meta.isDone(tag)) return
     val leafDir = IndexManifest.leafName(meta.version + 1, tag)
     IndexManifest.dropResidue(indexDir, Seq(rel), leafDir)
     IndexManifest.committedOnly(
@@ -758,8 +759,8 @@ object Multimodal {
       .repartition(col(grpName))
       .write.partitionBy(grpName, "leaf")
       .mode("append").parquet(s"$indexDir/$rel")
-    IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-      groups = newGroups, leaves = Seq(leafDir)))
+    IndexManifest.commit(indexDir, meta.retiring(meta.leaves).copy(
+      version = meta.version + 1, groups = newGroups, leaves = Seq(leafDir)))
     IndexManifest.sweep(indexDir, Seq(rel, "tombs"), meta.version + 1)
   }
 
@@ -791,7 +792,7 @@ object Multimodal {
     require(srcDirs.nonEmpty, "mmIndexMerge needs at least one source")
     IndexManifest.requireTag(tag, "merge tag")
     val dest = IndexManifest.readMetaOrEmpty(destDir, groups)
-    if (dest.hasLeafTag(tag)) return
+    if (dest.isDone(tag)) return
     if (dest.groups != groups)
       throw new IllegalStateException(
         s"$destDir is grouped at ${dest.groups} but the merge says " +

@@ -87,6 +87,26 @@ object IndexManifest {
       * prunes on the tomb list, every data relation on the leaf list.
       */
     def liveOf(rel: String): Seq[String] = if (rel == "tombs") tombs else leaves
+    /** Tags RETIRED by replace commits (a compaction, refine, regroup or
+      * retrain rewrites the store as one fresh leaf, which would
+      * otherwise erase every earlier commit's tag), kept in the
+      * `donetags` param so tag idempotency survives the rewrite: a
+      * checkpoint-replayed fold whose leaf was folded away still no-ops.
+      * Growth is one short tag per retired commit.
+      */
+    def doneTags: Set[String] =
+      params.get("donetags").toSeq.flatMap(_.split(",")).filter(_.nonEmpty).toSet
+    /** Has `tag` committed — as a live leaf, or retired since? The
+      * idempotency check of every fold.
+      */
+    def isDone(tag: String): Boolean = hasLeafTag(tag) || doneTags(tag)
+    /** [[isDone]] for tombstone folds. */
+    def isDoneTomb(tag: String): Boolean = hasTombTag(tag) || doneTags(tag)
+    /** This record with the tags of the `erased` leaves retired into
+      * `donetags` — what a replace commit publishes.
+      */
+    def retiring(erased: Seq[String]): Meta = copy(params = params +
+      ("donetags" -> (doneTags ++ erased.map(tagOf)).toSeq.sorted.mkString(",")))
   }
 
   /** Thrown by [[commit]] when another writer already published the

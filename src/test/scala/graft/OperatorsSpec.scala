@@ -2941,6 +2941,56 @@ class OperatorsSpec extends AnyFunSuite {
     base.unpersist()
   }
 
+  test("Dedup index: compaction and regroup retire folded tags — replayed folds no-op") {
+    import graft.operators.dedup.Dedup
+    import graft.operators.store.IndexManifest
+    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
+      .filter($"doc_id" < 40)
+    val dir = s"${graft.Tables.scratchDir("graft_dedup_donetags")}/index"
+    Dedup.dedupIndexAppend(docs, dir, "a")
+    Dedup.compactDedupIndex(spark, dir, "c0")
+    val v0 = IndexManifest.readMeta(dir).get.version
+    // a crash between the compaction commit and the checkpoint commit
+    // replays the batch's fold with its already-folded tag
+    Dedup.dedupIndexAppend(docs, dir, "a")
+    assert(Dedup.indexLeafCount(spark, dir) == 1 &&
+      IndexManifest.readMeta(dir).get.version == v0,
+      "a fold retired by compaction must not commit a second leaf")
+    Dedup.regroupDedupIndex(spark, dir, 8, "g0")
+    val v1 = IndexManifest.readMeta(dir).get.version
+    Dedup.dedupIndexAppend(docs, dir, "a")
+    Dedup.compactDedupIndex(spark, dir, "c0")
+    assert(Dedup.indexLeafCount(spark, dir) == 1 &&
+      IndexManifest.readMeta(dir).get.version == v1,
+      "tags retired by regroup must stay done")
+  }
+
+  test("aHash hash index: compaction and regroup retire folded tags — replayed folds no-op") {
+    import graft.operators.multimodal.Multimodal
+    import graft.operators.store.IndexManifest
+    val hashed = (1L to 20L).map(i => (i, i * 7L % 97L, i * 13L % 89L))
+      .toDF("media_id", "ahash_hi", "ahash_lo")
+    val dir = s"${graft.Tables.scratchDir("graft_ahash_donetags")}/index"
+    Multimodal.ahashIndexAppend(hashed, dir, "a")
+    Multimodal.ahashIndexDelete(spark, dir, Seq(Tuple1(3L)).toDF("media_id"), "d")
+    Multimodal.compactAhashIndex(spark, dir, "c0")
+    val v0 = IndexManifest.readMeta(dir).get.version
+    Multimodal.ahashIndexAppend(hashed, dir, "a")
+    Multimodal.ahashIndexDelete(spark, dir, Seq(Tuple1(3L)).toDF("media_id"), "d")
+    assert(Multimodal.mmIndexLeafCount(dir) == 1 &&
+      IndexManifest.readMeta(dir).get.version == v0,
+      "folds retired by compaction must commit nothing")
+    assert(Multimodal.mmTombstonedIds(spark, dir).isEmpty,
+      "a processed delete must not re-tombstone after its physical drop")
+    Multimodal.regroupAhashIndex(spark, dir, 8, "g0")
+    val v1 = IndexManifest.readMeta(dir).get.version
+    Multimodal.ahashIndexAppend(hashed, dir, "a")
+    Multimodal.compactAhashIndex(spark, dir, "c0")
+    assert(Multimodal.mmIndexLeafCount(dir) == 1 &&
+      IndexManifest.readMeta(dir).get.version == v1,
+      "tags retired by regroup must stay done")
+  }
+
   test("KnnGraph: a pre-pool store enrolls its hub pool from the committed scan, not the batch") {
     import graft.operators.ann.KnnGraph
     import graft.operators.store.IndexManifest

@@ -609,15 +609,17 @@ class PlanAuditSpec extends AnyFunSuite {
     val corpus = Tables.spread(Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))).cache()
     val graph = Ann.knnGraphOf(corpus)
-    val queries = corpus.filter(col("vec_id") < 2)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val seeds = queries.select(col("query_id"), col("query_id").as("vec_id"))
-    val searched = Ann.graphSearchTopK(graph, corpus, queries, seeds,
-      hops = 2, beam = 4, k = 3)
-    searched.collect()
-    val p1 = searched.queryExecution.executedPlan.toString
+    // the search ranks rows it already collected, so its own plan is a
+    // LocalRelation; the per-hop building block is what scans the graph
+    // — audit one hop over the in-plan graph
+    val frontier = corpus.filter(col("vec_id") < 2)
+      .select(col("vec_id").as("query_id"), col("vec_id"))
+    val hop = Ann.hopExpansion(graph.select(col("vec_id"), col("nbr_id")),
+      frontier, None)
+    hop.collect()
+    val p1 = hop.queryExecution.executedPlan.toString
     assert(!p1.contains("CartesianProduct"),
-      s"graph search must never go quadratic:\n${p1.take(2000)}")
+      s"graph search hops must never go quadratic:\n${p1.take(2000)}")
     val refined = Ann.nnDescentRound(graph, corpus, k = 3)
     refined.collect()
     val p2 = refined.queryExecution.executedPlan.toString
@@ -649,13 +651,11 @@ class PlanAuditSpec extends AnyFunSuite {
     // deletes since compaction), never a shuffle of the result side
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
       s"tombstone exclusion must broadcast:\n${p.take(2000)}")
-    // the search is EAGER-HOP (driver-side frontier, the carve-out for
-    // persisted stores): each hop is one bounded job whose edge scan is
-    // STATICALLY pruned to the frontier's groups — the pin below audits
-    // the per-hop building block's plan directly, replacing the r17 DPP
-    // pin (the prune moved from runtime-dynamic to plan-time-static,
-    // strictly earlier). The property guarded is unchanged: a hop reads
-    // the frontier's groups of the committed store, never the store.
+    // the search keeps its frontier on the driver: each hop is one
+    // bounded job whose edge scan is STATICALLY pruned to the frontier's
+    // groups — the pin below audits that per-hop building block's plan
+    // directly: a hop reads the frontier's groups of the committed
+    // store, never the store.
     val meta = IndexManifest.readMeta(dir).get
     val edges = IndexManifest.committedOnly(
         spark.read.parquet(s"$dir/edges"), meta.leaves)
@@ -677,21 +677,125 @@ class PlanAuditSpec extends AnyFunSuite {
       .getOrElse(fail(s"edges scan not pruned by frontier groups: $scanLine"))
     assert(inset.split(",").length <= 3,
       s"prune list not frontier-sized: $inset")
-    // EQUIVALENCE gate: the eager driver-side frontier loop must return
-    // exactly the lazy single-plan search's rows (same hop recursion,
-    // same beam/tie-break/visited semantics, same final cut) — the
-    // optimization changes evaluation order only, never the answer
-    val lazySearched = Ann.graphSearchTopK(
-      IndexManifest.committedOnly(
-          spark.read.parquet(s"$dir/edges"), meta.leaves)
-        .select(col("ggrp"), col("vec_id"), col("nbr_id"),
-          col("rank"), col("mutual")),
-      corpus, queries, seeds, hops = 2, beam = 4, k = 3,
-      exclude = Some(Seq(Tuple1(1L)).toDF("vec_id")),
-      groupedBy = Some(meta.groups), eagerHops = false)
-    assert(searched.collect().toSeq == lazySearched.collect().toSeq,
-      "eager-hop search must be row-identical to the lazy plan")
+    // EQUIVALENCE gate: the search must return exactly the rows of a
+    // plain-Scala greedy beam search written from the graphSearchTopK
+    // contract, run over the same store's collected edges and
+    // embeddings — with fewer seeds than the beam, and with more
+    val adj = edges.select(col("vec_id"), col("nbr_id")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).groupMap(_._1)(_._2)
+    val embs = corpus.collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    val hubs = KnnGraph.hubIds(spark, dir, 6).collect().map(_.getLong(0))
+    val wideSeeds = queries.select(col("query_id")).crossJoin(
+      hubs.toSeq.toDF("vec_id"))
+    for ((sd, beam) <- Seq((seeds, 4), (wideSeeds, 2))) {
+      val got = KnnGraph.searchTopK(spark, dir, corpus, queries, sd,
+          hops = 2, beam = beam, k = 3).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
+      val want = referenceBeamSearch(adj, embs,
+        sd.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq,
+        hops = 2, beam = beam, k = 3, exclude = Set(1L))
+      assert(got.nonEmpty && got == want,
+        s"search at beam $beam differs from the reference:\n$got\n$want")
+    }
     corpus.unpersist(); ()
+  }
+
+  /** Greedy beam search in plain Scala, from [[graft.operators.ann.Ann.graphSearchTopK]]'s
+    * contract: hop 1 expands every distinct seed; after each expansion
+    * the frontier is the `beam` best scored visited vertices (sim desc,
+    * vec_id asc); the result is the top `k` scored visited vertices,
+    * the query and `exclude` removed first. A query's embedding is its
+    * own corpus row. Returns (query_id, rnk, vec_id, sim rounded to 4).
+    */
+  private def referenceBeamSearch(adj: Map[Long, Array[Long]],
+      emb: Map[Long, Array[Float]], seeds: Seq[(Long, Long)], hops: Int,
+      beam: Int, k: Int, exclude: Set[Long]): Seq[(Long, Int, Long, Double)] = {
+    def cosine(a: Array[Float], b: Array[Float]): Double = {
+      var (dot, na, nb) = (0.0, 0.0, 0.0)
+      a.indices.foreach { i =>
+        val (x, y) = (a(i).toDouble, b(i).toDouble)
+        dot += x * y; na += x * x; nb += y * y
+      }
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    def best(q: Long, vs: Set[Long], n: Int): Seq[(Long, Double)] =
+      vs.toSeq.flatMap(v => emb.get(v).map(e => v -> cosine(emb(q), e)))
+        .sortWith { (a, b) =>
+          val c = java.lang.Double.compare(a._2, b._2)
+          if (c != 0) c > 0 else a._1 < b._1
+        }.take(n)
+    seeds.distinct.groupMap(_._1)(_._2).toSeq.sortBy(_._1).flatMap {
+      case (q, entry) =>
+        var visited = entry.toSet
+        var frontier = visited
+        (1 to hops).foreach { _ =>
+          visited ++= frontier.flatMap(adj.getOrElse(_, Array.empty[Long]))
+          frontier = best(q, visited, beam).map(_._1).toSet
+        }
+        best(q, visited.filter(v => v != q && !exclude(v)), k)
+          .zipWithIndex.map { case ((v, sim), i) =>
+            (q, i + 1, v, BigDecimal(sim)
+              .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+          }
+    }
+  }
+
+  /** A persisted graph store holding exactly `edges` (one leaf). */
+  private def handBuiltGraph(dir: String, edges: Seq[(Long, Long)]): Unit = {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    import graft.operators.store.IndexManifest
+    import spark.implicits._
+    val leaf = IndexManifest.leafName(1L, "hand")
+    edges.toDF("vec_id", "nbr_id")
+      .withColumn("rank", lit(1)).withColumn("mutual", lit(false))
+      .withColumn("ggrp", pmod(xxhash64(col("vec_id")), lit(4L)).cast("int"))
+      .withColumn("leaf", lit(leaf))
+      .write.partitionBy("ggrp", "leaf").parquet(s"$dir/edges")
+    IndexManifest.commit(dir, IndexManifest.Meta(1L, 4, Seq(leaf), Nil))
+  }
+
+  /** A unit vector at `deg` degrees in the first plane of 4 dimensions. */
+  private def at(deg: Double): Array[Float] = {
+    val r = math.toRadians(deg)
+    Array(math.cos(r).toFloat, math.sin(r).toFloat, 0f, 0f)
+  }
+
+  test("graph search contract: hop 1 expands every seed, even past the beam") {
+    import graft.operators.ann.KnnGraph
+    import spark.implicits._
+    // seeds 1..6 score 0.98 down to 0.17 against the query; the only edge
+    // to the exact answer (7) leaves the LOWEST-scoring seed, 6
+    val dir = java.nio.file.Files.createTempDirectory("audit_seeds").toString
+    handBuiltGraph(dir, Seq((1L, 2L), (2L, 3L), (6L, 7L)))
+    val emb = (Seq(1L -> 10.0, 2L -> 20.0, 3L -> 30.0, 4L -> 40.0,
+      5L -> 50.0, 6L -> 80.0, 7L -> 0.0).map { case (v, d) => (v, at(d)) })
+      .toDF("vec_id", "embedding")
+    val queries = Seq((100L, at(0.0))).toDF("query_id", "q_emb")
+    val seeds = (1L to 6L).map(v => (100L, v)).toDF("query_id", "vec_id")
+    val top = KnnGraph.searchTopK(spark, dir, emb, queries, seeds,
+        hops = 1, beam = 2, k = 1)
+      .collect().map(_.getLong(2)).toSeq
+    assert(top == Seq(7L),
+      s"6 seeds at beam 2: the answer behind the weakest seed was lost: $top")
+  }
+
+  test("graph search contract: a seed with no embedding row still routes") {
+    import graft.operators.ann.KnnGraph
+    import spark.implicits._
+    // seed 8 has edges but no embedding: it cannot be scored or returned,
+    // yet hop 1 must still expand it and reach 9
+    val dir = java.nio.file.Files.createTempDirectory("audit_noemb").toString
+    handBuiltGraph(dir, Seq((8L, 9L)))
+    val emb = Seq((9L, at(10.0))).toDF("vec_id", "embedding")
+    val queries = Seq((100L, at(0.0))).toDF("query_id", "q_emb")
+    val seeds = Seq((100L, 8L)).toDF("query_id", "vec_id")
+    val found = KnnGraph.searchTopK(spark, dir, emb, queries, seeds,
+        hops = 1, beam = 8, k = 5)
+      .collect().map(_.getLong(2)).toSeq
+    assert(found == Seq(9L),
+      s"the unscored seed must route to its neighbour and not surface: $found")
   }
 
   test("ann24 loop increment: hub seeds broadcast, committed-leaf prune, no cartesian") {
@@ -710,14 +814,14 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = found.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"),
       s"the loop increment must never go quadratic:\n${p.take(2000)}")
-    // the increment search is eager-hop: the committed-leaf prune and
-    // the frontier-group static prune of its per-hop edge scans are
+    // the committed-leaf prune and the frontier-group static prune of
+    // the increment search's per-hop edge scans are
     // pinned by the hopExpansion audit in the ann20/ann22 test (shared
     // building block); the returned relation is the LocalRelation-rooted
     // final ranking, whose plan must stay join-light — the hub-seed
     // pairing and the hop scans no longer appear in it by design
     assert(found.queryExecution.analyzed.toString.contains("LocalRelation"),
-      s"eager increment search must rank from collected rows:\n${p.take(2000)}")
+      s"the increment search must rank from collected rows:\n${p.take(2000)}")
     corpus.unpersist(); ()
   }
 
