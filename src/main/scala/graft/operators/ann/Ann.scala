@@ -2,8 +2,11 @@ package graft.operators.ann
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -378,14 +381,20 @@ object Ann {
     * consumers execute after construction returns).
     */
   private[graft] def coarseCentroids(emb: DataFrame, nlist: Int,
-      refineIters: Int): DataFrame = {
+      refineIters: Int): DataFrame =
+    centroidGenerations(emb, nlist, refineIters).last
+
+  /** Every pinned generation of [[coarseCentroids]], oldest first: for a
+    * caller that releases them once its plan over the last one has run.
+    */
+  private[ann] def centroidGenerations(emb: DataFrame, nlist: Int,
+      refineIters: Int): Seq[DataFrame] = {
     val cents0 = emb
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"),
         xxhash64(col("vec_id")).as("h"))
       .orderBy(col("h"), col("cent_id")).limit(nlist).drop("h")
-    val pin = (df: DataFrame) => df.cache()
     (0 until refineIters)
-      .foldLeft(pin(cents0))((c, _) => pin(kmeansRefineOnce(emb, c)))
+      .scanLeft(cents0.cache())((c, _) => kmeansRefineOnce(emb, c).cache())
   }
 
   /** Corpus → nearest coarse cell: slim (vec_id, cent_id, sim) projection
@@ -449,8 +458,12 @@ object Ann {
     * the k·n edge relation — embeddings never ride it.
     */
   def knnGraphOf(emb: DataFrame, nlist: Int = 16, k: Int = 3,
-      refineIters: Int = 1): DataFrame = {
-    val cents = coarseCentroids(emb, nlist, refineIters)
+      refineIters: Int = 1): DataFrame =
+    knnGraphWith(emb, coarseCentroids(emb, nlist, refineIters), k)
+
+  /** [[knnGraphOf]] over a given coarse codebook `cents`. */
+  private[ann] def knnGraphWith(emb: DataFrame, cents: DataFrame,
+      k: Int): DataFrame = {
     val keyed = assignCells(emb, cents).join(emb, Seq("vec_id"))
     val nbrs = keyed.select(col("cell"), col("vec_id").as("nbr_id"),
       col("embedding").as("nbr_emb"))
@@ -504,31 +517,39 @@ object Ann {
     *    visited vertices per query, seeds included, ordered by sim desc
     *    then vec_id asc (`Double.compare`, Spark's own sort order: NaN
     *    largest, -0.0 below 0.0);
+    *  - a vec_id with several `emb` rows is scored once per row, and each
+    *    scored row competes for the beam and the result on its own;
     *  - the result is the top `k` scored visited vertices per query, with
     *    the query itself and `exclude`d vertices removed BEFORE the cut.
     *
-    * Evaluation: the frontier and visited sets live on the DRIVER. Each
-    * hop is one bounded job ([[hopExpansion]]: the frontier broadcast into
-    * the edge relation, statically group-pruned on a persisted store),
-    * whose new candidates are scored and collected; the returned relation
-    * ranks a LocalRelation of the collected scores, so its plan does not
-    * grow with `hops`. Condition on the caller: each hop collects
-    * ≤ |queries| · (seeds + beam·degree·hops) rows, so the query batch
-    * times the seed count must fit the driver (Spark's
-    * `spark.driver.maxResultSize` bounds every collect). `graph` and `emb`
-    * are re-read by every hop's job: pass a stored or pinned relation,
-    * never an in-plan construction ([[graphSearchSelfRecall]] pins its
-    * [[knnGraphOf]] output for the call).
+    * Evaluation: the queries, the frontier, the visited set and the scores
+    * live on the DRIVER, and Spark only reads the stores. Each hop is two
+    * bounded scans with no join and no shuffle: [[hopExpansion]] reads the
+    * frontier vertices' edges (statically group-pruned on a persisted
+    * store), and one `vec_id IN (…)` read of `emb` fetches the new
+    * candidates' embeddings. The fan-out to queries, the `seen` filter,
+    * the scoring ([[graft.plans.SketchUtil.cosineSimilarity]], the kernel
+    * the codegen'd [[cosine]] runs, so sims are bit-identical), the beam
+    * and the final top-k are plain driver code; `exclude` is one
+    * `vec_id IN (scored ids)` read. The result is a sorted LocalRelation.
+    * Condition on the caller: per hop the driver holds
+    * ≤ |queries| · (seeds + beam·degree) (query, vertex) pairs and at most
+    * that many distinct candidate embeddings, so the query batch times the
+    * seed count must fit the driver; Spark's `spark.driver.maxResultSize`
+    * is the only guard on each read. `graph` and `emb` are re-read by
+    * every hop: pass a stored or pinned relation, never an in-plan
+    * construction ([[graphSearchSelfRecall]] pins its [[knnGraphOf]]
+    * output for the call).
     *
     * @param graph     (vec_id, nbr_id, …) edge relation; with `groupedBy`
     *                  it also carries the store's `ggrp` partition column
     * @param emb       (vec_id, embedding) store for exact scoring
-    * @param queries   (query_id, q_emb) — tiny, broadcast
+    * @param queries   (query_id, q_emb) — small, collected once
     * @param seeds     (query_id, vec_id) entry points (an IVF probe's
     *                  coarse winners, a prior result, or any known-near
     *                  vertex)
     * @param exclude   (vec_id) vertices banned from the RESULT — the
-    *                  persisted store's tombstone set. Anti-joined BEFORE
+    *                  persisted store's tombstone set. Removed BEFORE
     *                  the top-k cut (a dead vertex must not consume result
     *                  slots — the ann14/ann15 pre-filter rule) but NOT
     *                  from expansion: a tombstoned vertex keeps ROUTING
@@ -545,90 +566,115 @@ object Ann {
     require(hops >= 1 && hops <= 4, "hops must be a small constant (1..4)")
     val spark = graph.sparkSession
     import spark.implicits._
-    val edges = groupedBy match {
-      case Some(_) => graph.select(col("ggrp"), col("vec_id"), col("nbr_id"))
-      case None    => graph.select(col("vec_id"), col("nbr_id"))
+    type Scored = (Long, Long, Double)
+    val before: (Scored, Scored) => Boolean = { (a, b) =>
+      val c = java.lang.Double.compare(a._3, b._3)
+      if (c != 0) c > 0 else a._2 < b._2
     }
-    def scoreCollect(cands: DataFrame): Seq[(Long, Long, Double)] =
-      broadcast(cands)
-        .join(emb, Seq("vec_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id").cast("long"), col("vec_id").cast("long"),
-          cosine(col("q_emb"), col("embedding")).as("sim"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSeq
-    def beamOf(scored: Seq[(Long, Long, Double)]): Seq[(Long, Long)] =
-      scored.groupBy(_._1).valuesIterator.flatMap { qs =>
-        qs.sortWith { (a, b) =>
-          val c = java.lang.Double.compare(a._3, b._3)
-          if (c != 0) c > 0 else a._2 < b._2
-        }.take(beam)
-      }.map { case (q, v, _) => (q, v) }.toSeq.sorted
+    val qEmbs = embeddingsById(queries, "query_id", "q_emb")
+    def score(pairs: Seq[(Long, Long)]): Seq[Scored] = {
+      val ids = pairs.map(_._2).distinct
+      val embs = if (ids.isEmpty) Map.empty[Long, Seq[ArrayData]]
+        else embeddingsById(emb.filter(col("vec_id").isin(ids: _*)),
+          "vec_id", "embedding")
+      for {
+        (q, v) <- pairs
+        qe <- qEmbs.getOrElse(q, Nil)
+        e <- embs.getOrElse(v, Nil)
+      } yield (q, v, cosineOf(qe, e, q, v))
+    }
+    def beamOf(scored: Seq[Scored]): Seq[(Long, Long)] =
+      scored.groupBy(_._1).valuesIterator
+        .flatMap(_.sortWith(before).take(beam))
+        .map { case (q, v, _) => (q, v) }.toSeq.distinct
     val seedPairs = seeds
       .select(col("query_id").cast("long"), col("vec_id").cast("long"))
-      .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.distinct
     var seen = seedPairs.toSet
     var frontier = seedPairs
-    var scored = Seq.empty[(Long, Long, Double)]
+    var scored = Vector.empty[Scored]
     var hop = 0
     while (hop < hops && frontier.nonEmpty) {
-      val cands = hopExpansion(edges, frontier.toDF("query_id", "vec_id"),
-          groupedBy)
-        .distinct()
-        .join(broadcast(seen.toSeq.toDF("query_id", "vec_id")),
-          Seq("query_id", "vec_id"), "left_anti")
-      // the seeds are scored in hop 1's job, beside its candidates
-      val fresh = scoreCollect(if (hop > 0) cands
-        else cands.unionByName(seedPairs.toDF("query_id", "vec_id")))
-      scored = scored ++ fresh
-      seen = seen ++ fresh.map { case (q, v, _) => (q, v) }
+      val adj = hopExpansion(graph, frontier.map(_._2).distinct, groupedBy)
+        .collect().toSeq.groupMap(_.getLong(0))(_.getLong(1))
+      val cands = frontier.flatMap { case (q, v) =>
+        adj.getOrElse(v, Nil).map(q -> _)
+      }.distinct.filterNot(seen)
+      // the seeds are scored in hop 1's read, beside its candidates
+      scored ++= score(if (hop > 0) cands else cands ++ seedPairs)
+      seen ++= cands
       frontier = beamOf(scored)
       hop += 1
     }
-    val wSim = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val scoredDf = scored.toDF("query_id", "vec_id", "sim")
-    exclude.fold(scoredDf)(t =>
-        scoredDf.join(broadcast(t.select(col("vec_id"))), Seq("vec_id"),
-          "left_anti"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("rnk", row_number().over(wSim))
-      .filter(col("rnk") <= k)
+    val dead = exclude match {
+      case Some(t) if scored.nonEmpty =>
+        val ids = scored.map(_._2).distinct
+        t.filter(col("vec_id").isin(ids: _*))
+          .select(col("vec_id").cast("long")).collect().map(_.getLong(0)).toSet
+      case _ => Set.empty[Long]
+    }
+    scored.filter { case (q, v, _) => v != q && !dead(v) }
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap { case (_, qs) =>
+        qs.sortWith(before).take(k).zipWithIndex
+          .map { case ((q, v, sim), i) => (q, i + 1, v, sim) }
+      }
+      .toDF("query_id", "rnk", "vec_id", "sim")
       .select(col("query_id"), col("rnk"), col("vec_id"),
         round(col("sim"), 4).as("sim"))
-      .orderBy(col("query_id"), col("rnk"))
+  }
+
+  /** (id, embedding) rows of `df` collected and keyed by id, one entry
+    * per row, as the ArrayData the cosine kernel reads (nulls preserved).
+    */
+  private def embeddingsById(df: DataFrame, idCol: String,
+      embCol: String): Map[Long, Seq[ArrayData]] = {
+    df.schema(embCol).dataType match {
+      case ArrayType(FloatType, _) => ()
+      case t => throw new IllegalArgumentException(
+        s"graph search scores ARRAY<FLOAT> embeddings; $embCol is $t")
+    }
+    df.select(col(idCol).cast("long"), col(embCol)).collect().toSeq
+      .groupMap(_.getLong(0)) { r =>
+        Option(r.getSeq[Any](1)).map(s => new GenericArrayData(s.toArray))
+          .orNull: ArrayData
+      }
+  }
+
+  private def cosineOf(a: ArrayData, b: ArrayData, q: Long, v: Long): Double = {
+    val sim =
+      if (a == null || b == null) null
+      else graft.plans.SketchUtil.cosineSimilarity(a, b)
+    if (sim == null) throw new IllegalArgumentException(
+      s"cosine of query $q and vertex $v is undefined: a null embedding, " +
+        "a null element or mismatched lengths")
+    sim
   }
 
   /** One hop of [[graphSearchTopK]], factored so its plan shape is
-    * spec-pinnable: a driver-side frontier (query_id, vec_id) broadcast
-    * into the edge relation, returning (query_id, vec_id = neighbor).
-    * With `groupedBy` (a persisted store's dial) the frontier's groups
-    * are computed with the store's own hash and applied as a STATIC
-    * partition filter (`ggrp IN (…)` at plan time — the committed store
-    * is hash-range partitioned by `ggrp`), so the scan reads the
-    * frontier's groups and nothing else.
+    * spec-pinnable: the edges `(vec_id, nbr_id)` leaving the frontier's
+    * distinct vertex `ids`, as ONE scan with no join and no shuffle
+    * (`vec_id IN (…)`). With `groupedBy` (a persisted store's dial) the
+    * ids' groups are computed on the driver with the store's own hash
+    * ([[groupOf]]) and applied as a STATIC partition filter
+    * (`ggrp IN (…)` at plan time — the committed store is hash-range
+    * partitioned by `ggrp`), so the scan reads the frontier's groups and
+    * nothing else.
     */
-  private[graft] def hopExpansion(edges: DataFrame,
-      frontier: DataFrame, groupedBy: Option[Int]): DataFrame = {
-    val (keyed, hopKeys) = groupedBy match {
-      case Some(n) =>
-        val withG = frontier.withColumn("ggrp",
-          pmod(xxhash64(col("vec_id")), lit(n.toLong)).cast("int"))
-        (withG, Seq("ggrp", "vec_id"))
-      case None => (frontier, Seq("vec_id"))
-    }
-    val pruned = groupedBy match {
-      case Some(_) =>
-        // the frontier is LOCAL data: its group list is computable at
-        // plan time and lands in the scan's PartitionFilters
-        val ggrps = keyed.select(col("ggrp")).distinct()
-          .collect().map(r => Int.box(r.getInt(0))).toSeq
-        edges.filter(col("ggrp").isin(ggrps: _*))
-      case None => edges
-    }
-    broadcast(keyed).join(pruned, hopKeys)
-      .select(col("query_id"), col("nbr_id").as("vec_id"))
-  }
+  private[graft] def hopExpansion(edges: DataFrame, ids: Seq[Long],
+      groupedBy: Option[Int]): DataFrame =
+    groupedBy.fold(edges)(n => edges.filter(col("ggrp").isin(
+        ids.map(groupOf(_, n)).distinct.map(Int.box): _*)))
+      .filter(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").cast("long"), col("nbr_id").cast("long"))
+
+  /** A vertex's group under a store dial of `n`: Spark's
+    * `pmod(xxhash64(vec_id), n)` for a BIGINT vec_id, evaluated on the
+    * driver (the same XXH64 kernel and seed the `xxhash64` expression
+    * runs).
+    */
+  private[graft] def groupOf(id: Long, n: Int): Int =
+    java.lang.Math.floorMod(XXH64.hashLong(id, 42L), n.toLong).toInt
 
   /** One NN-DESCENT refinement round (Dong et al. 2011) — the
     * graph-improvement move that turns a cheap/degraded initial k-NN
@@ -730,12 +776,13 @@ object Ann {
     val seeds = copies2.select((col("vec_id")).as("query_id"),
       col("vec_id"))
     // every hop re-reads the graph: build it once; the search returns
-    // rows already collected to the driver, so the pin ends with the call
-    val graph = knnGraphOf(all).cache()
+    // rows already collected to the driver, so every pin ends with the call
+    val cents = centroidGenerations(all, nlist = 16, refineIters = 1)
+    val graph = knnGraphWith(all, cents.last, k = 3).cache()
     try graphSearchTopK(graph, all, queries, seeds, hops = 2, beam = 8, k = 1)
       .select(col("query_id"), col("vec_id").as("match_id"), col("sim"))
       .orderBy(col("query_id"))
-    finally { graph.unpersist(); () }
+    finally { (graph +: cents :+ base).foreach(_.unpersist()) }
   }
 
   /** Per-label embedding stats (norm distribution) — the sanity scan a

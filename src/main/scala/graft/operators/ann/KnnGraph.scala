@@ -3,6 +3,7 @@ package graft.operators.ann
 import graft.operators.store.IndexManifest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** PERSISTED k-NN graph — the edge relation [[Ann.knnGraphOf]] builds,
   * committed as a store instead of rebuilt in-plan per consumer: at
@@ -45,6 +46,20 @@ object KnnGraph {
   val DefaultGroups = 32
 
   private def metaOf(indexDir: String) = IndexManifest.readMeta(indexDir)
+
+  /** The stored schemas of the two relations (`commitLeaf` and `delete`
+    * write exactly these types), so a read plans without the
+    * schema-inference job a bare `read.parquet` would launch.
+    */
+  private val EdgeSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("nbr_id", LongType),
+    StructField("rank", IntegerType), StructField("mutual", BooleanType),
+    StructField("ggrp", IntegerType), StructField("leaf", StringType)))
+  private val TombSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("leaf", StringType)))
+
+  private def edgeLeaves(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.schema(EdgeSchema).parquet(s"$indexDir/edges")
 
   private def ggrp(groups: Int) =
     pmod(xxhash64(col("vec_id")), lit(groups.toLong)).cast("int")
@@ -91,7 +106,7 @@ object KnnGraph {
   private def nextHubs(spark: SparkSession, indexDir: String,
       leafDir: String, prior: Seq[Long], hubN: Int,
       exclude: Option[DataFrame] = None): Seq[Long] = {
-    val freshBase = spark.read.parquet(s"$indexDir/edges")
+    val freshBase = edgeLeaves(spark, indexDir)
       .filter(col("leaf") === leafDir)
       .select(col("vec_id")).distinct()
     val fresh = exclude.fold(freshBase)(t =>
@@ -128,7 +143,8 @@ object KnnGraph {
     val leafDir = IndexManifest.leafName(meta.version + 1, tag)
     IndexManifest.dropResidue(indexDir, Seq("edges"), leafDir)
     edges
-      .select(col("vec_id"), col("nbr_id"), col("rank"), col("mutual"))
+      .select(col("vec_id").cast("long"), col("nbr_id").cast("long"),
+        col("rank").cast("int"), col("mutual"))
       .withColumn("ggrp", ggrp(groups))
       .withColumn("leaf", lit(leafDir))
       .repartition(col("ggrp"))
@@ -149,7 +165,7 @@ object KnnGraph {
         val pooled = hubsParam(meta)
         if (pooled.nonEmpty || meta.leaves.isEmpty) pooled
         else IndexManifest.committedOnly(
-            spark.read.parquet(s"$indexDir/edges"), meta.leaves)
+            edgeLeaves(spark, indexDir), meta.leaves)
           .select(col("vec_id")).distinct()
           .orderBy(col("vec_id")).limit(hubN)
           .collect().map(_.getLong(0)).toSeq
@@ -168,10 +184,10 @@ object KnnGraph {
     * stop appearing in ANY search result without rewriting a committed
     * edge leaf, so deletes commit as immutable id-leaves
     * (`tombs/leaf=v<N>-<tag>`, parquet of `vec_id`) under the same
-    * tag-idempotent manifest discipline. [[searchTopK]] anti-joins the
-    * set BEFORE its top-k cut; the tombstoned vertex keeps ROUTING
-    * (its edges stay — the HNSW soft-delete rule: dropping a hub from
-    * routing would orphan its neighborhood) until [[refine]] or
+    * tag-idempotent manifest discipline. [[searchTopK]] removes the
+    * set's members BEFORE its top-k cut; the tombstoned vertex keeps
+    * ROUTING (its edges stay — the HNSW soft-delete rule: dropping a hub
+    * from routing would orphan its neighborhood) until [[refine]] or
     * [[compact]] drops every incident edge physically and clears the
     * set, after which a re-crawled vector re-links via [[append]].
     */
@@ -199,12 +215,20 @@ object KnnGraph {
     tombstonesSnapshot(spark, indexDir, metaOf(indexDir))
 
   private def tombstonesSnapshot(spark: SparkSession, indexDir: String,
+      meta: Option[IndexManifest.Meta]): Option[DataFrame] =
+    tombLeaves(spark, indexDir, meta).map(_.distinct())
+
+  /** The committed tombstone rows as stored (an id tombstoned under two
+    * tags appears twice): a scan with no aggregation, for readers that
+    * only test membership.
+    */
+  private def tombLeaves(spark: SparkSession, indexDir: String,
       meta: Option[IndexManifest.Meta]): Option[DataFrame] = {
     val live = meta.toSeq.flatMap(_.tombs)
     if (live.isEmpty) None
     else Some(IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/tombs"), live)
-      .select(col("vec_id")).distinct())
+        spark.read.schema(TombSchema).parquet(s"$indexDir/tombs"), live)
+      .select(col("vec_id")))
   }
 
   /** The committed tombstoned vec_ids as a relation (empty when none) —
@@ -233,16 +257,20 @@ object KnnGraph {
     */
   def build(emb: DataFrame, indexDir: String, tag: String,
       nlist: Int = 16, k: Int = 3, refineIters: Int = 1,
-      groups: Int = DefaultGroups): Unit =
-    commitLeaf(Ann.knnGraphOf(emb, nlist, k, refineIters), indexDir,
-      tag, groups, replace = false)
+      groups: Int = DefaultGroups): Unit = {
+    // the codebook generations are pinned for the build's write only
+    val cents = Ann.centroidGenerations(emb, nlist, refineIters)
+    try commitLeaf(Ann.knnGraphWith(emb, cents.last, k), indexDir, tag,
+      groups, replace = false)
+    finally cents.foreach(_.unpersist())
+  }
 
   /** The committed edge relation (vec_id, nbr_id, rank, mutual) — a
     * `leaf` partition prune over the committed set.
     */
   def edges(spark: SparkSession, indexDir: String): DataFrame =
     IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/edges"),
+        edgeLeaves(spark, indexDir),
         metaOf(indexDir).toSeq.flatMap(_.leaves))
       .select(col("vec_id"), col("nbr_id"), col("rank"), col("mutual"))
 
@@ -253,9 +281,12 @@ object KnnGraph {
   /** Greedy beam search over the COMMITTED graph ([[Ann.graphSearchTopK]]
     * reading edges from storage): candidates come only from the stored
     * edges, so cost is |queries| · beam · degree per hop regardless of
-    * corpus size — the property persisting the graph buys. Tombstoned
-    * vertices ([[delete]]) are anti-joined out BEFORE the top-k cut
-    * but keep routing until compaction.
+    * corpus size — the property persisting the graph buys. Each hop is
+    * one group-pruned edge read and one embedding read; the queries and
+    * seeds are collected once. Tombstoned vertices ([[delete]]) are
+    * removed BEFORE the top-k cut (one read of the tombstone leaves,
+    * filtered to the scored ids) but keep routing until compaction.
+    * Returns the ranked rows as a LocalRelation.
     */
   def searchTopK(spark: SparkSession, indexDir: String, emb: DataFrame,
       queries: DataFrame, seeds: DataFrame, hops: Int = 2, beam: Int = 8,
@@ -279,7 +310,7 @@ object KnnGraph {
       seeds: DataFrame, hops: Int, beam: Int, k: Int): DataFrame =
     Ann.graphSearchTopK(groupedEdges(spark, indexDir, meta), emb, queries,
       seeds, hops, beam, k,
-      exclude = tombstonesSnapshot(spark, indexDir, Some(meta)),
+      exclude = tombLeaves(spark, indexDir, Some(meta)),
       groupedBy = Some(meta.groups))
 
   /** The committed edge relation WITH its `ggrp` partition column, which
@@ -288,7 +319,7 @@ object KnnGraph {
   private def groupedEdges(spark: SparkSession, indexDir: String,
       meta: IndexManifest.Meta): DataFrame =
     IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/edges"), meta.leaves)
+        edgeLeaves(spark, indexDir), meta.leaves)
       .select(col("ggrp"), col("vec_id"), col("nbr_id"), col("rank"),
         col("mutual"))
 
@@ -369,7 +400,7 @@ object KnnGraph {
         // retain deleted vertices until a refine drops them physically,
         // and a dead hub would occupy a seed slot for every search
         val scan = IndexManifest.committedOnly(
-            spark.read.parquet(s"$indexDir/edges"), meta.leaves)
+            edgeLeaves(spark, indexDir), meta.leaves)
           .select(col("vec_id")).distinct()
         tombstonesSnapshot(spark, indexDir, Some(meta))
           .fold(scan)(t => scan.join(broadcast(t), Seq("vec_id"), "left_anti"))
@@ -412,16 +443,25 @@ object KnnGraph {
     * seeded at the [[hubIds]] hub vertices. Tombstoned vertices are
     * excluded — a match must never surface a takedown, and a newcomer
     * should link to LIVE neighbors (the dead still route mid-search,
-    * the soft-delete rule). Returns (query_id, rnk, vec_id, sim).
+    * the soft-delete rule). The batch's (query_id, q_emb) rows are read
+    * ONCE; the seed pairs (every query × the manifest's hub pool) are
+    * built on the driver, so the search's only Spark work is its per-hop
+    * store reads. Returns (query_id, rnk, vec_id, sim) as a sorted
+    * LocalRelation — already collected, nothing for a caller to pin.
     */
   def searchForLink(spark: SparkSession, indexDir: String, emb: DataFrame,
       batch: DataFrame, nSeeds: Int = 16, hops: Int = 2, beam: Int = 8,
       k: Int = 3): DataFrame = {
-    val queries = batch.select(col("vec_id").as("query_id"),
+    import spark.implicits._
+    val q = batch.select(col("vec_id").cast("long").as("query_id"),
       col("embedding").as("q_emb"))
+    val rows = q.collect()
+    val queries = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      q.schema)
     val meta = headOf(indexDir)
-    val seeds = queries.select(col("query_id"))
-      .crossJoin(broadcast(hubsOf(spark, indexDir, meta, nSeeds)))
+    val hubs = hubsOf(spark, indexDir, meta, nSeeds).collect().map(_.getLong(0))
+    val seeds = rows.toSeq.flatMap(r => hubs.map(r.getLong(0) -> _))
+      .toDF("query_id", "vec_id")
     searchSnapshot(spark, indexDir, meta, emb, queries, seeds, hops, beam, k)
   }
 
@@ -568,7 +608,7 @@ object KnnGraph {
       val pooled = hubsParam(dest)
       if (pooled.nonEmpty || dest.leaves.isEmpty) pooled
       else IndexManifest.committedOnly(
-          spark.read.parquet(s"$destDir/edges"), dest.leaves)
+          edgeLeaves(spark, destDir), dest.leaves)
         .select(col("vec_id")).distinct()
         .orderBy(col("vec_id")).limit(hubN)
         .collect().map(_.getLong(0)).toSeq
@@ -604,7 +644,7 @@ object KnnGraph {
     * vectors), and search each +200000 copy seeded at itself. Both
     * twins sit in the seed's stored edge list at sim 1.0, so the
     * answer is the ORIGINAL exactly when it survived and the +100000
-    * twin exactly when it was tombstoned (the anti-join runs before
+    * twin exactly when it was tombstoned (the exclusion runs before
     * the top-k cut — a dead vertex cannot consume the slot; ascending-
     * id tie-break fixes each case). Then [[compact]] drops every
     * incident edge physically and clears the set, and the re-search is
@@ -621,26 +661,30 @@ object KnnGraph {
     val copies2 = qs.select((col("vec_id") + 200000L).as("vec_id"),
       col("embedding"))
     val all = base.unionByName(copies1).unionByName(copies2)
-    val indexDir = s"${graft.Tables.scratchDir("graft_ann22")}/graph"
-    build(all, indexDir, "corpus")
-    val dead = qs.filter(col("vec_id") % 7 === 0).select(col("vec_id"))
-    delete(spark, indexDir, dead, "takedown0")
-    val census = dead.agg(count(lit(1)).as("n_tombstones"))
-    val queries = copies2.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"))
-    val seeds = copies2.select(col("vec_id").as("query_id"), col("vec_id"))
-    def search(): DataFrame =
-      searchTopK(spark, indexDir, all, queries, seeds,
-        hops = 2, beam = 8, k = 1)
-        .select(col("query_id"), col("vec_id").as("match_id"), col("sim"))
-    val pre = search() // planned pre-compaction, grace window keeps it live
-    compact(spark, indexDir, "compact0")
-    val post = search()
-    pre.unionByName(post)
-      .groupBy(col("query_id"), col("match_id"), col("sim"))
-      .agg(count(lit(1)).as("n_passes")) // 2 ⇔ pre/post agree
-      .crossJoin(broadcast(census))
-      .orderBy(col("query_id"))
+    // the searches return collected rows (the census re-reads the
+    // corpus lazily), so the pin ends with the call
+    try {
+      val indexDir = s"${graft.Tables.scratchDir("graft_ann22")}/graph"
+      build(all, indexDir, "corpus")
+      val dead = qs.filter(col("vec_id") % 7 === 0).select(col("vec_id"))
+      delete(spark, indexDir, dead, "takedown0")
+      val census = dead.agg(count(lit(1)).as("n_tombstones"))
+      val queries = copies2.select(col("vec_id").as("query_id"),
+        col("embedding").as("q_emb"))
+      val seeds = copies2.select(col("vec_id").as("query_id"), col("vec_id"))
+      def search(): DataFrame =
+        searchTopK(spark, indexDir, all, queries, seeds,
+          hops = 2, beam = 8, k = 1)
+          .select(col("query_id"), col("vec_id").as("match_id"), col("sim"))
+      val pre = search() // searched (and collected) before the compaction
+      compact(spark, indexDir, "compact0")
+      val post = search()
+      pre.unionByName(post)
+        .groupBy(col("query_id"), col("match_id"), col("sim"))
+        .agg(count(lit(1)).as("n_passes")) // 2 ⇔ pre/post agree
+        .crossJoin(broadcast(census))
+        .orderBy(col("query_id"))
+    } finally { base.unpersist(); () }
   }
 
   /** ann23's driver-checked shape — the SCALE-OUT BUILD through the
@@ -653,7 +697,7 @@ object KnnGraph {
     * each +200000 copy at itself, the answer is the ORIGINAL exactly
     * when it survived its shard's takedown and the +100000 twin
     * exactly when it was tombstoned (tombstones ride the merge per
-    * source; the anti-join runs before the top-k cut). `n_leaves = 1`
+    * source; the exclusion runs before the top-k cut). `n_leaves = 1`
     * pins the single merged edge leaf; the tombstone census rides. A
     * merge that lost a shard's edges, re-keyed groups wrong, or
     * dropped a ridden takedown breaks its rows.
@@ -668,23 +712,27 @@ object KnnGraph {
     val copies2 = qs.select((col("vec_id") + 200000L).as("vec_id"),
       col("embedding"))
     val all = base.unionByName(copies1).unionByName(copies2)
-    val tmp = graft.Tables.scratchDir("graft_ann23")
-    val (s0, s1, m) = (s"$tmp/s0", s"$tmp/s1", s"$tmp/merged")
-    build(all.filter(col("vec_id") % 2 === 0), s0, "shard", groups = 16)
-    build(all.filter(col("vec_id") % 2 === 1), s1, "shard", groups = 64)
-    val dead = qs.filter(col("vec_id") % 7 === 0).select(col("vec_id"))
-    delete(spark, s0, dead.filter(col("vec_id") % 2 === 0), "takedown0")
-    delete(spark, s1, dead.filter(col("vec_id") % 2 === 1), "takedown0")
-    merge(spark, Seq(s0, s1), m, "merge0")
-    val census = dead.agg(count(lit(1)).as("n_tombstones"))
-    val queries = copies2.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"))
-    val seeds = copies2.select(col("vec_id").as("query_id"), col("vec_id"))
-    searchTopK(spark, m, all, queries, seeds, hops = 2, beam = 8, k = 1)
-      .select(col("query_id"), col("vec_id").as("match_id"), col("sim"),
-        lit(leafCount(m)).as("n_leaves"))
-      .crossJoin(broadcast(census))
-      .orderBy(col("query_id"))
+    // the search returns collected rows (the census re-reads the corpus
+    // lazily), so the pin ends with the call
+    try {
+      val tmp = graft.Tables.scratchDir("graft_ann23")
+      val (s0, s1, m) = (s"$tmp/s0", s"$tmp/s1", s"$tmp/merged")
+      build(all.filter(col("vec_id") % 2 === 0), s0, "shard", groups = 16)
+      build(all.filter(col("vec_id") % 2 === 1), s1, "shard", groups = 64)
+      val dead = qs.filter(col("vec_id") % 7 === 0).select(col("vec_id"))
+      delete(spark, s0, dead.filter(col("vec_id") % 2 === 0), "takedown0")
+      delete(spark, s1, dead.filter(col("vec_id") % 2 === 1), "takedown0")
+      merge(spark, Seq(s0, s1), m, "merge0")
+      val census = dead.agg(count(lit(1)).as("n_tombstones"))
+      val queries = copies2.select(col("vec_id").as("query_id"),
+        col("embedding").as("q_emb"))
+      val seeds = copies2.select(col("vec_id").as("query_id"), col("vec_id"))
+      searchTopK(spark, m, all, queries, seeds, hops = 2, beam = 8, k = 1)
+        .select(col("query_id"), col("vec_id").as("match_id"), col("sim"),
+          lit(leafCount(m)).as("n_leaves"))
+        .crossJoin(broadcast(census))
+        .orderBy(col("query_id"))
+    } finally { base.unpersist(); () }
   }
 
   /** ann24's driver-checked shape — the GRAPH crawl loop as a STREAM
@@ -718,33 +766,37 @@ object KnnGraph {
     val copies = base.filter(col("vec_id") < nQueries)
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
     val all = base.unionByName(copies).cache() // the loop's emb store
-    val tmp = graft.Tables.scratchDir("graft-knn-stream")
-    val indexDir = s"$tmp/graph"
-    val stageDir = s"$tmp/arrivals"
-    val outDir = s"$tmp/matches"
-    // one-off corpus build, metered apart from the increments (bench:
-    // bootstrap_sec vs per_increment_sec); the shared embedding store
-    // materializes here too, not inside the first micro-batch
-    graft.streaming.Graft.CrawlMetrics
-      .timed("graft-search-and-link-bootstrap") {
-        build(base, indexDir, "corpus")
-        all.count()
-        ()
-      }
-    copies.repartition(nBatches, col("vec_id")).write.parquet(stageDir)
-    val schema = spark.read.parquet(stageDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stageDir)
-    val q = graft.GraftSession.withStreamShuffle(spark)(
-      graft.streaming.Graft.searchAndLink(stream, indexDir, outDir,
-        embProvider = all, k = 1, hops = 2, beam = 8, nSeeds = nQueries,
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-        refineEvery = 2))
-    graft.GraftSession.awaitFinished(q)
-    spark.read.parquet(outDir)
-      .select(col("query_id"), col("vec_id").as("match_id"), col("sim"))
-      .filter(col("match_id") === col("query_id") - 100000L)
-      .orderBy(col("query_id"))
+    // the result re-reads the finished loop's output, so both pins end
+    // with the call
+    try {
+      val tmp = graft.Tables.scratchDir("graft-knn-stream")
+      val indexDir = s"$tmp/graph"
+      val stageDir = s"$tmp/arrivals"
+      val outDir = s"$tmp/matches"
+      // one-off corpus build, metered apart from the increments (bench:
+      // bootstrap_sec vs per_increment_sec); the shared embedding store
+      // materializes here too, not inside the first micro-batch
+      graft.streaming.Graft.CrawlMetrics
+        .timed("graft-search-and-link-bootstrap") {
+          build(base, indexDir, "corpus")
+          all.count()
+          ()
+        }
+      copies.repartition(nBatches, col("vec_id")).write.parquet(stageDir)
+      val schema = spark.read.parquet(stageDir).schema
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(stageDir)
+      val q = graft.GraftSession.withStreamShuffle(spark)(
+        graft.streaming.Graft.searchAndLink(stream, indexDir, outDir,
+          embProvider = all, k = 1, hops = 2, beam = 8, nSeeds = nQueries,
+          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+          refineEvery = 2))
+      graft.GraftSession.awaitFinished(q)
+      spark.read.parquet(outDir)
+        .select(col("query_id"), col("vec_id").as("match_id"), col("sim"))
+        .filter(col("match_id") === col("query_id") - 100000L)
+        .orderBy(col("query_id"))
+    } finally { all.unpersist(); base.unpersist(); () }
   }
 
   /** ann26's driver-checked shape — graph QUALITY, not reachability:
@@ -877,15 +929,18 @@ object KnnGraph {
     val copies2 = qs.select((col("vec_id") + 200000L).as("vec_id"),
       col("embedding"))
     val all = base.unionByName(copies1).unionByName(copies2)
-    val indexDir = s"${graft.Tables.scratchDir("graft_ann20")}/graph"
-    build(all, indexDir, "corpus")
-    val queries = copies2.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"))
-    val seeds = copies2.select(col("vec_id").as("query_id"), col("vec_id"))
-    searchTopK(spark, indexDir, all, queries, seeds,
-      hops = 2, beam = 8, k = 1)
-      .select(col("query_id"), col("vec_id").as("match_id"), col("sim"),
-        lit(leafCount(indexDir)).as("n_leaves"))
-      .orderBy(col("query_id"))
+    // the search returns collected rows, so the pin ends with the call
+    try {
+      val indexDir = s"${graft.Tables.scratchDir("graft_ann20")}/graph"
+      build(all, indexDir, "corpus")
+      val queries = copies2.select(col("vec_id").as("query_id"),
+        col("embedding").as("q_emb"))
+      val seeds = copies2.select(col("vec_id").as("query_id"), col("vec_id"))
+      searchTopK(spark, indexDir, all, queries, seeds,
+        hops = 2, beam = 8, k = 1)
+        .select(col("query_id"), col("vec_id").as("match_id"), col("sim"),
+          lit(leafCount(indexDir)).as("n_leaves"))
+        .orderBy(col("query_id"))
+    } finally { base.unpersist(); () }
   }
 }

@@ -82,10 +82,23 @@ object Engine {
     */
   def perEvent(fn: Row => Unit): DataFrame => Unit =
     df => df.foreachPartition((it: Iterator[Row]) => it.foreach(fn))
+
+  /** One registered handler: which events it takes (table, op, filters)
+    * and what it runs on them. Declared in the companion, so a match on
+    * `Handler` needs no outer-instance check.
+    */
+  final case class Handler(
+      name: String,
+      table: String, // "*" = all subscribed tables
+      op: String,    // insert|update|delete|* (F5/F2)
+      filters: EventFilters,
+      sideEffects: Seq[DataFrame => Unit],
+      fn: DataFrame => Unit)
 }
 
 final class Engine(isolateHandlerFailures: Boolean = false,
     deliveryLedger: Option[String] = None) {
+  import Engine.Handler
 
   // settable AFTER construction so config-driven assembly (GraftConfig
   // .deliveryLedger / exactlyOnce → Graft.start) can arm the ledger on an
@@ -245,14 +258,6 @@ final class Engine(isolateHandlerFailures: Boolean = false,
           s"next prune window): $e")
     }
   }
-
-  final case class Handler(
-      name: String,
-      table: String, // "*" = all subscribed tables
-      op: String,    // insert|update|delete|* (F5/F2)
-      filters: EventFilters,
-      sideEffects: Seq[DataFrame => Unit],
-      fn: DataFrame => Unit)
 
   private val registry = ListBuffer.empty[Handler] // K7
 

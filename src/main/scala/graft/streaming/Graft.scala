@@ -1127,7 +1127,8 @@ object Graft {
     * search's results then link the batch into the graph
     * ([[graft.operators.ann.KnnGraph.linkFound]] — forward + reverse
     * edges, one immutable leaf) so later batches can reach it. One
-    * search serves both outputs (persisted for the two reads). An
+    * search serves both outputs: it returns its rows already collected
+    * to the driver, so the two writes read them without a pin. An
     * EMPTY store bootstraps from the first batch
     * ([[graft.operators.ann.KnnGraph.build]], batch-sized cell count —
     * the [[syncGraphIndex]] rule) with zero matches.
@@ -1168,23 +1169,19 @@ object Graft {
           val nlist = math.max(1L, math.min(256L, n / 64L)).toInt
           KnnGraph.build(batch, indexDir, f"b$bid%06d", nlist = nlist)
         } else {
+          // the search returns rows already collected to the driver, so
+          // its two consumers read them without a pin. They are
+          // INDEPENDENT — disjoint sinks (matches parquet vs the edge
+          // store) — and overlap (guide §2.6); ordering was never a
+          // delivery guarantee (matches are at-least-once, the link fold
+          // is tag-idempotent, and a crash between the two was already
+          // possible in either order)
           val found = KnnGraph.searchForLink(spark, indexDir, emb, batch,
             nSeeds, hops, beam, k)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // the two consumers of the pinned search are INDEPENDENT —
-            // disjoint sinks (matches parquet vs the edge store), shared
-            // input pinned (CacheManager locks per partition, so a
-            // concurrent first materialization computes each partition
-            // once) — overlap them (guide §2.6); ordering was never a
-            // delivery guarantee (matches are at-least-once, the link
-            // fold is tag-idempotent, and a crash between the two was
-            // already possible in either order)
-            graft.GraftSession.concurrently(Seq(
-              () => found.write.mode("append").parquet(matchesDir),
-              () => KnnGraph.linkFound(spark, indexDir, found,
-                f"b$bid%06d", k)), maxPar = 2)
-          } finally { found.unpersist(); () }
+          graft.GraftSession.concurrently(Seq(
+            () => found.write.mode("append").parquet(matchesDir),
+            () => KnnGraph.linkFound(spark, indexDir, found,
+              f"b$bid%06d", k)), maxPar = 2)
         }
         if (refineEvery > 0 && (bid + 1) % refineEvery == 0)
           KnnGraph.refine(spark, indexDir, emb, f"r$bid%06d", k)

@@ -609,17 +609,19 @@ class PlanAuditSpec extends AnyFunSuite {
     val corpus = Tables.spread(Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))).cache()
     val graph = Ann.knnGraphOf(corpus)
-    // the search ranks rows it already collected, so its own plan is a
-    // LocalRelation; the per-hop building block is what scans the graph
-    // — audit one hop over the in-plan graph
-    val frontier = corpus.filter(col("vec_id") < 2)
-      .select(col("vec_id").as("query_id"), col("vec_id"))
-    val hop = Ann.hopExpansion(graph.select(col("vec_id"), col("nbr_id")),
-      frontier, None)
+    // the search ranks rows it already collected on the driver, so its
+    // own plan is a LocalRelation; the per-hop building block is what
+    // scans the graph — audit one hop over the graph pinned as the ann18
+    // lane pins it
+    val pinned = graph.select(col("vec_id"), col("nbr_id")).cache()
+    val hop = Ann.hopExpansion(pinned, Seq(0L, 1L), None)
     hop.collect()
     val p1 = hop.queryExecution.executedPlan.toString
     assert(!p1.contains("CartesianProduct"),
       s"graph search hops must never go quadratic:\n${p1.take(2000)}")
+    assert(exchangesOf(hop).isEmpty,
+      s"a hop is one scan of the pinned graph, never an exchange:\n${p1.take(2000)}")
+    pinned.unpersist()
     val refined = Ann.nnDescentRound(graph, corpus, k = 3)
     refined.collect()
     val p2 = refined.queryExecution.executedPlan.toString
@@ -628,7 +630,7 @@ class PlanAuditSpec extends AnyFunSuite {
     corpus.unpersist(); ()
   }
 
-  test("ann20/ann22 persisted graph: committed-leaf prune, no cartesian, broadcast tombstone anti-join") {
+  test("ann20/ann22 persisted graph: committed-leaf prune, no cartesian, no exchange, IN-filtered tombstone read") {
     import org.apache.spark.sql.functions.col
     import graft.operators.ann.{Ann, KnnGraph}
     import graft.operators.store.IndexManifest
@@ -641,32 +643,43 @@ class PlanAuditSpec extends AnyFunSuite {
     val queries = corpus.filter(col("vec_id") < 2)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val seeds = queries.select(col("query_id"), col("query_id").as("vec_id"))
-    val searched = KnnGraph.searchTopK(spark, dir, corpus, queries, seeds,
-      hops = 2, beam = 4, k = 3)
-    searched.collect()
+    val (searched, _, execs) = recorded {
+      val s = KnnGraph.searchTopK(spark, dir, corpus, queries, seeds,
+        hops = 2, beam = 4, k = 3)
+      s.collect()
+      s
+    }
     val p = searched.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"),
       s"persisted graph search must never go quadratic:\n${p.take(2000)}")
-    // the tombstone exclusion is a BROADCAST anti-join (bounded by
-    // deletes since compaction), never a shuffle of the result side
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
-      s"tombstone exclusion must broadcast:\n${p.take(2000)}")
-    // the search keeps its frontier on the driver: each hop is one
-    // bounded job whose edge scan is STATICALLY pruned to the frontier's
-    // groups — the pin below audits that per-hop building block's plan
-    // directly: a hop reads the frontier's groups of the committed
-    // store, never the store.
+    // the tombstone exclusion is ONE read of the tombstone leaves,
+    // filtered to the scored ids (bounded by the result, not by deletes
+    // since compaction), with no exchange: no broadcast, no shuffle
+    val tombReads = execs.filter(e => scansOf(e.sparkPlanInfo)
+      .exists(_.metadata.get("Location").exists(_.contains("/tombs"))))
+    assert(tombReads.size == 1,
+      s"want one tombstone read per search, got ${tombReads.size}")
+    val tp = tombReads.head.physicalPlanDescription
+    assert("vec_id#\\d+L? (?:INSET|IN) ".r.findFirstIn(tp).isDefined,
+      s"tombstone read not filtered to the scored ids:\n$tp")
+    assert(!nodesOf(tombReads.head.sparkPlanInfo).exists(_.nodeName.contains("Exchange")),
+      s"tombstone read must not exchange:\n$tp")
+    // the search keeps its frontier on the driver: each hop's edge read
+    // is one scan STATICALLY pruned to the frontier's groups — the pin
+    // below audits that per-hop building block's plan directly: a hop
+    // reads the frontier's groups of the committed store, never the
+    // store, and never joins or exchanges.
     val meta = IndexManifest.readMeta(dir).get
     val edges = IndexManifest.committedOnly(
         spark.read.parquet(s"$dir/edges"), meta.leaves)
       .select(col("ggrp"), col("vec_id"), col("nbr_id"))
-    val frontier = Seq((0L, 0L), (0L, 5L), (1L, 7L))
-      .toDF("query_id", "vec_id")
-    val hop = Ann.hopExpansion(edges, frontier, Some(meta.groups))
+    val hop = Ann.hopExpansion(edges, Seq(0L, 5L, 7L), Some(meta.groups))
     hop.collect()
     val hp = hop.queryExecution.executedPlan.toString
     assert(!hp.contains("CartesianProduct"),
       s"hop expansion must never go quadratic:\n${hp.take(2000)}")
+    assert(exchangesOf(hop).isEmpty && !hp.contains("Join"),
+      s"hop expansion is one scan, no join and no exchange:\n${hp.take(2000)}")
     val scanLine = hp.linesIterator.find(l =>
       l.contains("/edges") && l.contains("PartitionFilters"))
       .getOrElse(fail(s"no partition-filtered edges scan in hop plan:\n$hp"))
@@ -815,14 +828,73 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"),
       s"the loop increment must never go quadratic:\n${p.take(2000)}")
     // the committed-leaf prune and the frontier-group static prune of
-    // the increment search's per-hop edge scans are
-    // pinned by the hopExpansion audit in the ann20/ann22 test (shared
-    // building block); the returned relation is the LocalRelation-rooted
-    // final ranking, whose plan must stay join-light — the hub-seed
-    // pairing and the hop scans no longer appear in it by design
+    // the increment search's per-hop edge scans are pinned by the
+    // hopExpansion audit in the ann20/ann22 test (shared building block),
+    // its job budget by the test below; the hub seeds are paired with the
+    // batch on the driver and the ranking runs there too, so the
+    // returned relation is the collected, ranked rows
     assert(found.queryExecution.analyzed.toString.contains("LocalRelation"),
       s"the increment search must rank from collected rows:\n${p.take(2000)}")
     corpus.unpersist(); ()
+  }
+
+  test("ann24 loop increment: one search is 1 + 2·hops jobs, none of them shuffles") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.ann.KnnGraph
+    val corpus = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding")).cache()
+    corpus.count()
+    val dir = java.nio.file.Files.createTempDirectory("audit_budget").toString
+    KnnGraph.build(corpus, dir, "corpus") // commits the hub pool too
+    val batch = corpus.filter(col("vec_id") < 8)
+      .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
+    val hops = 2
+    val (found, jobs, _) = recorded {
+      KnnGraph.searchForLink(spark, dir, corpus.unionByName(batch), batch,
+        nSeeds = 4, hops = hops, beam = 4, k = 2)
+    }
+    assert(found.count() == 8L * 2, "every query finds k neighbours")
+    // the batch read once, then per hop one edge read and one embedding
+    // read: the seed pairing, the dedup, the seen filter, the scoring and
+    // the ranking are driver work, not jobs
+    assert(jobs.size <= 1 + 2 * hops,
+      s"search ran ${jobs.size} jobs, budget ${1 + 2 * hops}: " +
+        jobs.map(_.stageInfos.map(_.name).mkString("+")).mkString("; "))
+    // a job's stages are its ShuffleMapStages plus its one ResultStage
+    val shuffling = jobs.filter(_.stageInfos.size > 1)
+    assert(shuffling.isEmpty, "the search must not shuffle: " +
+      shuffling.map(_.stageInfos.map(_.name).mkString("+")).mkString("; "))
+    corpus.unpersist(); ()
+  }
+
+  test("graph store groups: the driver's groupOf equals Spark's pmod(xxhash64(vec_id), n)") {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    import graft.operators.ann.Ann
+    import spark.implicits._
+    // a mismatch would prune a hop's scan to the wrong groups and drop
+    // edges silently, so the driver hash is pinned to the store's
+    val ids = Seq(Long.MinValue, -1L << 40, -65537L, -1L, 0L, 1L, 2L, 41L,
+      99999L, 100000L, 200063L, 1L << 33, Long.MaxValue - 1, Long.MaxValue)
+    for (n <- Seq(1, 4, 32)) {
+      val spark0 = ids.toDF("vec_id")
+        .select(col("vec_id"),
+          pmod(xxhash64(col("vec_id")), lit(n.toLong)).cast("int"))
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      ids.foreach { id =>
+        assert(Ann.groupOf(id, n) == spark0(id),
+          s"vec_id $id at dial $n: driver ${Ann.groupOf(id, n)}, Spark ${spark0(id)}")
+      }
+    }
+  }
+
+  test("ann20 lane releases its pins: no persisted RDD outlives the query") {
+    import graft.operators.ann.KnnGraph
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val rows = KnnGraph.persistedSearchSelfRecall(spark, sf).collect()
+    assert(rows.nonEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.size == before,
+      s"the lane left ${spark.sparkContext.getPersistentRDDs.size - before} " +
+        "persisted RDDs behind")
   }
 
   test("ann08 IVF search: codes scan reads only the probed cells' partitions") {
@@ -1087,5 +1159,64 @@ class PlanAuditSpec extends AnyFunSuite {
         assert(df.queryExecution.executedPlan.toString.contains("*(1)"),
           s"$q lost codegen")
       }
+  }
+
+  /** The exchanges of a collected query's final physical plan (through
+    * adaptive query stages, not into cached relations).
+    */
+  private def exchangesOf(df: org.apache.spark.sql.DataFrame) = {
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    H.collect(df.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    }
+  }
+
+  private def nodesOf(p: org.apache.spark.sql.execution.SparkPlanInfo)
+      : Seq[org.apache.spark.sql.execution.SparkPlanInfo] =
+    p +: p.children.toSeq.flatMap(nodesOf)
+
+  private def scansOf(p: org.apache.spark.sql.execution.SparkPlanInfo) =
+    nodesOf(p).filter(_.nodeName.startsWith("Scan"))
+
+  /** Runs `body` under a fresh job group and returns its value with the
+    * Spark jobs and SQL executions the group started. A marker job run
+    * after `body` is awaited on the same listener queue, so every event
+    * of `body` has been delivered when this returns.
+    */
+  private def recorded[T](body: => T): (T,
+      Seq[org.apache.spark.scheduler.SparkListenerJobStart],
+      Seq[org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart]) = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val group = s"audit-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val execs =
+      new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == group => jobs.add(e)
+          case Some(g) if g == s"$group-drain" => drained.countDown()
+          case _ => ()
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(group) =>
+          execs.add(x)
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "audit")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-drain", "audit drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener events were not delivered within 60 s")
+      import scala.jdk.CollectionConverters._
+      (out, jobs.asScala.toSeq, execs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
   }
 }
