@@ -186,33 +186,25 @@ object GraftExtensions {
   /** One row per STORE under a root path — the fleet-discovery catalog
     * (compose with [[graft_index_history]] / [[graft_index_meta]] for
     * drill-down): child directories holding a committed manifest list
-    * with their family (inferred from which relation dirs exist), head
-    * version, group dial, leaf/tomb census, and dialed retention — an
+    * with their family (the manifest's recorded `kind`), head version, group dial, leaf/tomb census, and dialed retention — an
     * auditor enumerates a deployment's stores without deployment
     * knowledge. Metadata-only: one FS listing + one manifest read per
     * store, no data scan.
     */
   private def storesPlan(root: String): LogicalPlan = {
-    import org.apache.hadoop.fs.Path
     val (fs, rootPath) = graft.sources.cdc.WalSegments.fsFor(root)
     val kids =
       try fs.listStatus(rootPath).filter(_.isDirectory).map(_.getPath).toSeq
       catch { case _: java.io.FileNotFoundException =>
         throw new IllegalArgumentException(s"graft_stores: $root does not exist")
       }
-    val relFamilies = Seq("bands" -> "dedup", "codes" -> "vector",
-      "edges" -> "graph", "hashes" -> "ahash", "chunks" -> "hamming")
     // a Materializer STATE store (the CDC replica) catalogs too: family
     // "state", the bucket dial in the groups column (both are the store's
-    // partition dial), tombstones not tracked as leaves (they are rows)
+    // partition dial), tombstones not tracked as leaves (they are rows);
+    // a manifest naming no family reads "unknown"
     val rows = kids.flatMap { p =>
       IndexManifest.readMeta(p.toString).map { m =>
-        val fams = relFamilies.collect {
-          case (rel, fam) if fs.exists(new Path(p, rel)) => fam
-        }
-        val family =
-          if (m.kind != "index") m.kind
-          else if (fams.isEmpty) "unknown" else fams.mkString("+")
+        val family = if (m.kind == "index") "unknown" else m.kind
         Row(p.getName, family, m.version, m.groups, m.leaves.size,
           m.tombs.size, IndexManifest.retentionOf(m))
       }
@@ -408,11 +400,11 @@ object GraftExtensions {
     *
     * `graft_compact(path, tag)` folds a store's committed leaves to one
     * — compaction is family-specific (each family owns its rewrite), so
-    * the call infers the family from the store's relation directory
-    * exactly as [[graft_stores]] does and dispatches to that family's
-    * Scala compact (same idempotency tag contract: a replayed tag
-    * no-ops). A directory matching no family — or more than one — is a
-    * loud error naming what was found:
+    * the call reads the family the store's manifest records (the `kind`
+    * [[graft_stores]] reports) and dispatches to that family's Scala
+    * compact (same idempotency tag contract: a replayed tag no-ops). A
+    * directory whose manifest names no index family is a loud error
+    * naming what was found:
     *
     * {{{
     *   SELECT * FROM graft_compact('/indexes/neardup', 'nightly-2026-08-17')
@@ -452,27 +444,24 @@ object GraftExtensions {
         val path = strArg(args, 0, "graft_compact")
         val tag = strArg(args, 1, "graft_compact")
         val spark = SparkSession.active
-        val (fs, root) = graft.sources.cdc.WalSegments.fsFor(path)
-        val fams = Seq("bands", "codes", "edges", "hashes", "chunks")
-          .filter(r => fs.exists(new org.apache.hadoop.fs.Path(root, r)))
-        require(fams.size == 1,
-          s"graft_compact: $path must hold exactly one store family " +
-            s"(relation dirs bands/codes/edges/hashes/chunks); found " +
-            s"${if (fams.isEmpty) "none" else fams.mkString(", ")} — use " +
-            "the family's Scala compact for anything irregular")
-        fams.head match {
-          case "bands" =>
+        IndexManifest.readMeta(path).map(_.kind) match {
+          case Some("dedup") =>
             graft.operators.dedup.Dedup.compactDedupIndex(spark, path, tag)
-          case "codes" =>
+          case Some("vector") =>
             graft.operators.ann.PqIndex.compact(spark, path, Some(tag)); ()
-          case "edges" =>
+          case Some("graph") =>
             graft.operators.ann.KnnGraph.compact(spark, path, tag)
-          case "hashes" =>
+          case Some("ahash") =>
             graft.operators.multimodal.Multimodal
               .compactAhashIndex(spark, path, tag)
-          case "chunks" =>
+          case Some("hamming") =>
             graft.operators.multimodal.Multimodal
               .compactAhashChunkIndex(spark, path, tag)
+          case kind => throw new IllegalArgumentException(
+            s"graft_compact: $path must hold exactly one store family " +
+              "(a manifest of kind dedup, vector, graph, ahash or hamming); " +
+              s"found ${kind.getOrElse("no manifest")} — use the family's " +
+              "Scala compact for anything irregular")
         }
         metaPlan(path) // the receipt: the store's post-compaction row
       }))

@@ -831,19 +831,26 @@ object Ann {
     * linear plan growth).
     */
   private[graft] def pqCodebooks(emb: DataFrame, m: Int, ksub: Int,
-      subLen: Int, refineIters: Int): DataFrame = {
-    val pin = (df: DataFrame) => df.cache()
+      subLen: Int, refineIters: Int): DataFrame =
+    pqCodebookGenerations(emb, m, ksub, subLen, refineIters).last
+
+  /** Every pinned generation of [[pqCodebooks]], oldest first: for a
+    * caller that releases them once its plan over the last one has run.
+    */
+  private[ann] def pqCodebookGenerations(emb: DataFrame, m: Int, ksub: Int,
+      subLen: Int, refineIters: Int): Seq[DataFrame] = {
     // all m subspace lanes of the hash-ranked seed sample in one frame:
     // explode the subspace index, slice by column arithmetic — no per-lane
     // corpus pass at init or during refinement
-    val init = pin(emb
+    val init = emb
       .select(col("vec_id"), col("embedding"), xxhash64(col("vec_id")).as("h"))
       .orderBy(col("h"), col("vec_id")).limit(ksub)
       .select(col("vec_id").as("code"), col("embedding"),
         explode(sequence(lit(0), lit(m - 1))).as("m"))
       .select(col("m"), col("code"),
-        slice(col("embedding"), col("m") * subLen + 1, lit(subLen)).as("cent_emb")))
-    (0 until refineIters).foldLeft(init)((b, _) => pin(pqRefineOnce(emb, b, subLen)))
+        slice(col("embedding"), col("m") * subLen + 1, lit(subLen)).as("cent_emb"))
+    (0 until refineIters)
+      .scanLeft(init.cache())((b, _) => pqRefineOnce(emb, b, subLen).cache())
   }
 
   /** One Lloyd iteration over ALL m subspace codebooks in a single corpus

@@ -1,6 +1,6 @@
 package graft.operators.ann
 
-import graft.operators.store.IndexManifest
+import graft.operators.store.{IndexManifest, LeafStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,15 +10,13 @@ import org.apache.spark.sql.types._
   * 100 TB the graph exists precisely so a search does NOT pay a
   * corpus-wide pass, so rebuilding it per query ([[Ann.graphSearchTopK]]
   * over an in-plan build) is exactly the cost the artifact should
-  * amortize. The store gives the edge relation the same discipline as
-  * every other persisted index in the repo
-  * ([[graft.operators.store.IndexManifest]]): immutable hash-grouped
-  * leaves (`edges/ggrp=<g>/leaf=v<N>-<tag>`, grouped by `vec_id` so a
-  * node's adjacency list is one partition probe and the relation
-  * co-locates with other vec_id-keyed stores), exclusive-publish
-  * versioned manifests, committed-leaf pruning, tag idempotency for
-  * at-least-once crawl folds, online-safe compaction under the retained
-  * grace window.
+  * amortize. The edge relation is a [[LeafStore]] family (`graph`):
+  * `edges/ggrp=<g>/leaf=v<N>-<tag>`, grouped by `vec_id` so a node's
+  * adjacency list is one partition probe and the relation co-locates
+  * with other vec_id-keyed stores. What the graph adds to the store is
+  * its HUB POOL (the seed vertices every commit maintains in the
+  * manifest) and SOFT-DELETE ROUTING (a tombstoned vertex leaves the
+  * results but keeps routing until a replace commit drops its edges).
   *
   * Lifecycle (the crawl-loop shape):
   *  - [[build]] — one full construction pass ([[Ann.knnGraphOf]]:
@@ -38,31 +36,29 @@ import org.apache.spark.sql.types._
   */
 object KnnGraph {
 
-
   /** Hash-range partition dial (the Dedup/Multimodal figure): small
     * enough that a batch's touched-group list is driver-side metadata,
     * large enough that point probes prune most of the store.
     */
   val DefaultGroups = 32
 
-  private def metaOf(indexDir: String) = IndexManifest.readMeta(indexDir)
+  private val Edges = LeafStore.Rel("edges", StructType(Seq(
+      StructField("vec_id", LongType), StructField("nbr_id", LongType),
+      StructField("rank", IntegerType), StructField("mutual", BooleanType),
+      StructField("ggrp", IntegerType), StructField("leaf", StringType))),
+    Some("ggrp" -> (groups =>
+      pmod(xxhash64(col("vec_id")), lit(groups.toLong)).cast("int"))))
 
-  /** The stored schemas of the two relations (`commitLeaf` and `delete`
-    * write exactly these types), so a read plans without the
-    * schema-inference job a bare `read.parquet` would launch.
-    */
-  private val EdgeSchema = StructType(Seq(
-    StructField("vec_id", LongType), StructField("nbr_id", LongType),
-    StructField("rank", IntegerType), StructField("mutual", BooleanType),
-    StructField("ggrp", IntegerType), StructField("leaf", StringType)))
-  private val TombSchema = StructType(Seq(
-    StructField("vec_id", LongType), StructField("leaf", StringType)))
+  /** The graph store: one edge relation plus kill-all vertex tombstones. */
+  private[graft] val Store = LeafStore.Family("graph", Seq(Edges),
+    LeafStore.Rel("tombs", StructType(Seq(
+      StructField("vec_id", LongType), StructField("leaf", StringType)))),
+    DefaultGroups)
 
-  private def edgeLeaves(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.schema(EdgeSchema).parquet(s"$indexDir/edges")
-
-  private def ggrp(groups: Int) =
-    pmod(xxhash64(col("vec_id")), lit(groups.toLong)).cast("int")
+  /** The head manifest, refusing an empty store. */
+  private def committed(indexDir: String): IndexManifest.Meta =
+    IndexManifest.readMeta(indexDir).getOrElse(throw new IllegalStateException(
+      s"$indexDir holds no committed k-NN graph (build first)"))
 
   /** How many hub ids ride the manifest — the seed pool [[hubIds]]
     * serves without scanning the store. This is the DEFAULT; each
@@ -79,173 +75,104 @@ object KnnGraph {
     * throws a CONTEXTUAL error instead of a bare
     * NumberFormatException from every later commit/search.
     */
-  private def hubCountOf(meta: Option[IndexManifest.Meta]): Int =
-    meta.flatMap(_.params.get("hubs_n")).map(_.trim).filter(_.nonEmpty)
+  private def hubCountOf(meta: IndexManifest.Meta): Int =
+    meta.params.get("hubs_n").map(_.trim).filter(_.nonEmpty)
       .map { s =>
         s.toIntOption.getOrElse(throw new IllegalStateException(
           s"malformed hubs_n manifest param '$s' — the hub-pool dial " +
             "must be a positive INT; repair it with setHubCount"))
       }.filter(_ >= 1).getOrElse(DefaultHubCount)
 
-  /** The next commit's hub list: the `hubN` (store-dialed) smallest vec_ids of
-    * (prior hubs ∪ the just-written leaf's vertices). The leaf read-back
-    * is a partition-pruned TakeOrdered over ONE leaf — batch-sized for
-    * appends, so maintaining the pool costs O(batch) there. [[merge]] is
-    * the documented exception: its single leaf IS the union of the
-    * shards, so the read-back is merge-sized — paid once per merge, the
-    * same order as the merge's own write. On a replace commit
-    * (refine/compact) the prior pool is DROPPED: the new leaf IS the
-    * whole store and tombstoned vertices were dropped physically before
-    * the write, so the read-back can never resurrect a stale hub after
-    * the tombstone set clears. `exclude` anti-joins known-tombstoned
-    * vec_ids out of the read-back (the merge path rides its sources'
-    * takedowns into the same commit — without the exclusion a dead
-    * vertex would enroll as a hub in the very commit that tombstones
-    * it, contradicting the rule above).
-    */
-  private def nextHubs(spark: SparkSession, indexDir: String,
-      leafDir: String, prior: Seq[Long], hubN: Int,
-      exclude: Option[DataFrame] = None): Seq[Long] = {
-    val freshBase = edgeLeaves(spark, indexDir)
-      .filter(col("leaf") === leafDir)
-      .select(col("vec_id")).distinct()
-    val fresh = exclude.fold(freshBase)(t =>
-        freshBase.join(broadcast(t.select(col("vec_id"))), Seq("vec_id"),
-          "left_anti"))
-      .orderBy(col("vec_id")).limit(hubN)
-      .collect().map(_.getLong(0)).toSeq
-    (prior ++ fresh).distinct.sorted.take(hubN)
-  }
-
   private def hubsParam(meta: IndexManifest.Meta): Seq[Long] =
     meta.params.get("hubs").toSeq.flatMap(_.split(","))
       .filter(_.nonEmpty).map(_.toLong)
 
-  /** Write one committed edge leaf (vec_id, nbr_id, rank, mutual) and
-    * publish the next manifest — the shared append/build/refine commit
-    * path. `replace = true` commits ONLY the new leaf AND clears the
-    * tombstone set (compaction/refine semantics: dead edges were
-    * dropped physically by the caller), retiring every erased tag
-    * ([[IndexManifest.Meta.retiring]]); otherwise the leaf joins the
-    * committed set and tombstones carry over. Every commit refreshes
-    * the manifest's HUB pool from the written leaf ([[nextHubs]]), so
-    * seed selection never scans the store.
-    */
-  private def commitLeaf(edges: DataFrame, indexDir: String, tag: String,
-      groups: Int, replace: Boolean): Unit = {
-    IndexManifest.requireTag(tag, "leaf tag")
-    val meta = IndexManifest.readMetaOrEmpty(indexDir, groups)
-    if (meta.isDone(tag)) return
-    if (meta.groups != groups)
-      throw new IllegalStateException(
-        s"$indexDir is grouped at ${meta.groups} but the write says " +
-          s"$groups — use the store's dial")
-    val leafDir = IndexManifest.leafName(meta.version + 1, tag)
-    IndexManifest.dropResidue(indexDir, Seq("edges"), leafDir)
-    edges
-      .select(col("vec_id").cast("long"), col("nbr_id").cast("long"),
-        col("rank").cast("int"), col("mutual"))
-      .withColumn("ggrp", ggrp(groups))
-      .withColumn("leaf", lit(leafDir))
-      .repartition(col("ggrp"))
-      .write.partitionBy("ggrp", "leaf")
-      .mode("append").parquet(s"$indexDir/edges")
-    val spark = edges.sparkSession
-    val hubN = hubCountOf(Some(meta))
-    // prior pool for the fold: a replace commit drops it (the new leaf
-    // IS the store); a PRE-POOL store (committed before the pool
-    // existed, or a merge destination upgraded mid-life) enrolls from
-    // the full committed scan ONCE here — reading only the new leaf
-    // would silently seed the pool with the batch's ids, not the
-    // store's smallest, and the scan fallback in hubIds would stop
-    // triggering the moment this commit publishes a partial pool
-    val prior =
-      if (replace) Seq.empty
-      else {
-        val pooled = hubsParam(meta)
-        if (pooled.nonEmpty || meta.leaves.isEmpty) pooled
-        else IndexManifest.committedOnly(
-            edgeLeaves(spark, indexDir), meta.leaves)
-          .select(col("vec_id")).distinct()
-          .orderBy(col("vec_id")).limit(hubN)
-          .collect().map(_.getLong(0)).toSeq
-      }
-    val hubs = nextHubs(spark, indexDir, leafDir, prior, hubN)
-    val next = if (replace) meta.retiring(meta.leaves ++ meta.tombs) else meta
-    IndexManifest.commit(indexDir, next.copy(version = meta.version + 1,
-      leaves = if (replace) Seq(leafDir) else meta.leaves :+ leafDir,
-      tombs = if (replace) Seq.empty else meta.tombs,
-      params = next.params + ("hubs" -> hubs.mkString(","))))
-    IndexManifest.sweep(indexDir, Seq("edges", "tombs"), meta.version + 1)
+  /** The `n` smallest vertex ids of `edges`, minus `exclude`'s ids. */
+  private def smallestIds(edges: DataFrame, n: Int,
+      exclude: Option[DataFrame] = None): Seq[Long] = {
+    val ids = edges.select(col("vec_id")).distinct()
+    exclude.fold(ids)(t =>
+        ids.join(broadcast(t.select(col("vec_id"))), Seq("vec_id"), "left_anti"))
+      .orderBy(col("vec_id")).limit(n)
+      .collect().map(_.getLong(0)).toSeq
   }
+
+  /** The HUB POOL a commit records — the store-dialed `hubs_n` smallest
+    * vec_ids of (prior hubs ∪ the just-written leaf's vertices). The
+    * leaf read-back is a partition-pruned TakeOrdered over ONE leaf —
+    * batch-sized for appends, so maintaining the pool costs O(batch)
+    * there. [[merge]] is the documented exception: its single leaf IS
+    * the union of the shards, so the read-back is merge-sized — paid
+    * once per merge, the same order as the merge's own write. A
+    * `replace` commit (refine/compact) DROPS the prior pool: the new
+    * leaf IS the whole store and tombstoned vertices were dropped
+    * physically before the write, so the read-back can never resurrect
+    * a stale hub after the tombstone set clears. A PRE-POOL store
+    * (committed before the pool existed, or a merge destination
+    * upgraded mid-life) enrolls its prior pool from the full committed
+    * scan ONCE here — reading only the new leaf would silently seed the
+    * pool with the batch's ids, not the store's smallest. `exclude`
+    * anti-joins known-tombstoned vec_ids out of the read-back (the merge
+    * path rides its sources' takedowns into the same commit — a dead
+    * vertex must not enroll as a hub in the commit that tombstones it).
+    */
+  private def hubPool(spark: SparkSession, indexDir: String,
+      replace: Boolean, exclude: Option[DataFrame] = None): LeafStore.Params =
+    (meta, leaf) => {
+      val hubN = hubCountOf(meta)
+      val prior =
+        if (replace) Seq.empty
+        else {
+          val pooled = hubsParam(meta)
+          if (pooled.nonEmpty || meta.leaves.isEmpty) pooled
+          else smallestIds(LeafStore.read(spark, indexDir, Edges, meta), hubN)
+        }
+      val fresh = smallestIds(LeafStore.read(spark, indexDir, Edges,
+        meta.copy(leaves = Seq(leaf))), hubN, exclude)
+      Map("hubs" -> (prior ++ fresh).distinct.sorted.take(hubN).mkString(","))
+    }
 
   /** KILL-ALL vertex tombstones — the takedown lane on the graph store
     * (mm18/ann15's device on the edge relation): a deleted vector must
     * stop appearing in ANY search result without rewriting a committed
-    * edge leaf, so deletes commit as immutable id-leaves
-    * (`tombs/leaf=v<N>-<tag>`, parquet of `vec_id`) under the same
-    * tag-idempotent manifest discipline. [[searchTopK]] removes the
-    * set's members BEFORE its top-k cut; the tombstoned vertex keeps
-    * ROUTING (its edges stay — the HNSW soft-delete rule: dropping a hub
-    * from routing would orphan its neighborhood) until [[refine]] or
-    * [[compact]] drops every incident edge physically and clears the
-    * set, after which a re-crawled vector re-links via [[append]].
+    * edge leaf. [[searchTopK]] removes the set's members BEFORE its
+    * top-k cut; the tombstoned vertex keeps ROUTING (its edges stay —
+    * the HNSW soft-delete rule: dropping a hub from routing would
+    * orphan its neighborhood) until [[refine]] or [[compact]] drops
+    * every incident edge physically and clears the set, after which a
+    * re-crawled vector re-links via [[append]].
     */
   def delete(spark: SparkSession, indexDir: String, ids: DataFrame,
       tag: String): Unit = {
-    IndexManifest.requireTag(tag, "tombstone tag")
-    val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
-      s"$indexDir holds no committed k-NN graph (build first)"))
-    if (meta.isDoneTomb(tag)) return
-    val leafDir = IndexManifest.leafName(meta.version + 1, tag)
-    IndexManifest.dropResidue(indexDir, Seq("tombs"), leafDir)
-    ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
-      .withColumn("leaf", lit(leafDir))
-      .coalesce(1) // a delete batch is id-sized: one file per tag
-      .write.partitionBy("leaf").mode("append").parquet(s"$indexDir/tombs")
-    IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-      tombs = meta.tombs :+ leafDir))
+    committed(indexDir)
+    LeafStore.tombstone(indexDir, Store, tag, ids.select(col("vec_id")))
   }
 
-  /** The committed tombstoned vec_ids (None when nothing was deleted —
-    * zero cost on the search path).
-    */
-  private def tombstones(spark: SparkSession,
-      indexDir: String): Option[DataFrame] =
-    tombstonesSnapshot(spark, indexDir, metaOf(indexDir))
-
-  private def tombstonesSnapshot(spark: SparkSession, indexDir: String,
-      meta: Option[IndexManifest.Meta]): Option[DataFrame] =
-    tombLeaves(spark, indexDir, meta).map(_.distinct())
-
-  /** The committed tombstone rows as stored (an id tombstoned under two
-    * tags appears twice): a scan with no aggregation, for readers that
-    * only test membership.
+  /** The tombstoned vec_ids `meta` committed, as stored (an id
+    * tombstoned under two tags appears twice): a scan with no
+    * aggregation, for readers that only test membership.
     */
   private def tombLeaves(spark: SparkSession, indexDir: String,
-      meta: Option[IndexManifest.Meta]): Option[DataFrame] = {
-    val live = meta.toSeq.flatMap(_.tombs)
-    if (live.isEmpty) None
-    else Some(IndexManifest.committedOnly(
-        spark.read.schema(TombSchema).parquet(s"$indexDir/tombs"), live)
-      .select(col("vec_id")))
-  }
+      meta: IndexManifest.Meta): Option[DataFrame] =
+    LeafStore.tombRows(spark, indexDir, Store, meta)
 
   /** The committed tombstoned vec_ids as a relation (empty when none) —
     * public for reconcile jobs, the
     * [[graft.operators.ann.PqIndex.tombstonedIds]] rationale.
     */
   def tombstonedIds(spark: SparkSession, indexDir: String): DataFrame =
-    tombstones(spark, indexDir)
-      .getOrElse(spark.range(0).select(col("id").as("vec_id")))
+    LeafStore.tombstonedIds(spark, indexDir, Store)
 
-  /** Drop every edge INCIDENT to a tombstoned vertex (either endpoint)
-    * — what [[refine]]/[[compact]] fold, making the physical drop.
+  /** `meta`'s edges minus every edge INCIDENT to a tombstoned vertex
+    * (either endpoint) — what [[refine]]/[[compact]] fold, making the
+    * physical drop.
     */
-  private def liveEdges(spark: SparkSession, indexDir: String): DataFrame = {
-    val e = edges(spark, indexDir)
-    tombstones(spark, indexDir).fold(e) { t =>
-      val bt = broadcast(t)
+  private def liveEdges(spark: SparkSession, indexDir: String,
+      meta: IndexManifest.Meta): DataFrame = {
+    val e = LeafStore.read(spark, indexDir, Edges, meta)
+      .select(col("vec_id"), col("nbr_id"), col("rank"), col("mutual"))
+    tombLeaves(spark, indexDir, meta).fold(e) { t =>
+      val bt = broadcast(t.distinct())
       e.join(bt, Seq("vec_id"), "left_anti")
         .join(bt.withColumnRenamed("vec_id", "nbr_id"), Seq("nbr_id"),
           "left_anti")
@@ -260,8 +187,9 @@ object KnnGraph {
       groups: Int = DefaultGroups): Unit = {
     // the codebook generations are pinned for the build's write only
     val cents = Ann.centroidGenerations(emb, nlist, refineIters)
-    try commitLeaf(Ann.knnGraphWith(emb, cents.last, k), indexDir, tag,
-      groups, replace = false)
+    try LeafStore.append(indexDir, Store, tag, groups,
+      Seq(Edges -> Ann.knnGraphWith(emb, cents.last, k)),
+      hubPool(emb.sparkSession, indexDir, replace = false))
     finally cents.foreach(_.unpersist())
   }
 
@@ -269,14 +197,11 @@ object KnnGraph {
     * `leaf` partition prune over the committed set.
     */
   def edges(spark: SparkSession, indexDir: String): DataFrame =
-    IndexManifest.committedOnly(
-        edgeLeaves(spark, indexDir),
-        metaOf(indexDir).toSeq.flatMap(_.leaves))
+    groupedEdges(spark, indexDir, headOf(indexDir))
       .select(col("vec_id"), col("nbr_id"), col("rank"), col("mutual"))
 
   /** Committed leaf count — the census the harnesses gate. */
-  def leafCount(indexDir: String): Int =
-    metaOf(indexDir).map(_.leaves.size).getOrElse(0)
+  def leafCount(indexDir: String): Int = LeafStore.leafCount(indexDir)
 
   /** Greedy beam search over the COMMITTED graph ([[Ann.graphSearchTopK]]
     * reading edges from storage): candidates come only from the stored
@@ -296,7 +221,7 @@ object KnnGraph {
 
   /** The head manifest, or the empty store at the default dial. */
   private def headOf(indexDir: String): IndexManifest.Meta =
-    IndexManifest.readMetaOrEmpty(indexDir, DefaultGroups)
+    LeafStore.head(indexDir, Store)
 
   /** The ONE persisted-graph search: edges, tombstones and the group dial
     * all come from the single manifest snapshot `meta`, so a
@@ -310,7 +235,7 @@ object KnnGraph {
       seeds: DataFrame, hops: Int, beam: Int, k: Int): DataFrame =
     Ann.graphSearchTopK(groupedEdges(spark, indexDir, meta), emb, queries,
       seeds, hops, beam, k,
-      exclude = tombLeaves(spark, indexDir, Some(meta)),
+      exclude = tombLeaves(spark, indexDir, meta),
       groupedBy = Some(meta.groups))
 
   /** The committed edge relation WITH its `ggrp` partition column, which
@@ -318,8 +243,7 @@ object KnnGraph {
     */
   private def groupedEdges(spark: SparkSession, indexDir: String,
       meta: IndexManifest.Meta): DataFrame =
-    IndexManifest.committedOnly(
-        edgeLeaves(spark, indexDir), meta.leaves)
+    LeafStore.read(spark, indexDir, Edges, meta)
       .select(col("ggrp"), col("vec_id"), col("nbr_id"), col("rank"),
         col("mutual"))
 
@@ -333,18 +257,13 @@ object KnnGraph {
     */
   def searchTopKAt(spark: SparkSession, indexDir: String, emb: DataFrame,
       queries: DataFrame, seeds: DataFrame, asOfVersion: Long,
-      hops: Int = 2, beam: Int = 8, k: Int = 5): DataFrame = {
-    val meta = IndexManifest.readMetaAt(indexDir, asOfVersion).getOrElse(
-      throw new IllegalArgumentException(
-        s"manifest version $asOfVersion is not retained at $indexDir — " +
-          s"time travel reaches the ${IndexManifest.retentionWindow(indexDir)}-" +
-          "version grace window"))
-    searchSnapshot(spark, indexDir, meta, emb, queries, seeds, hops, beam, k)
-  }
+      hops: Int = 2, beam: Int = 8, k: Int = 5): DataFrame =
+    searchSnapshot(spark, indexDir, LeafStore.at(indexDir, asOfVersion),
+      emb, queries, seeds, hops, beam, k)
 
   /** Deterministic HUB seeds: the store's `n` smallest vec_ids — the
     * fixed entry points [[append]] searches from. Served from the
-    * MANIFEST's hub pool (maintained by every commit, [[nextHubs]]), so
+    * MANIFEST's hub pool (maintained by every commit, [[hubPool]]), so
     * a crawl-loop increment pays O(1) metadata here instead of a
     * distinct+sort over the whole edge relation — the scan that would
     * otherwise make "per-increment cost independent of corpus size"
@@ -365,7 +284,7 @@ object KnnGraph {
 
   private def hubsOf(spark: SparkSession, indexDir: String,
       meta: IndexManifest.Meta, n: Int): DataFrame = {
-    val hubN = hubCountOf(Some(meta))
+    val hubN = hubCountOf(meta)
     val pooled = hubsParam(meta)
     if (pooled.nonEmpty && (n <= pooled.size || pooled.size < hubN)) {
       import spark.implicits._
@@ -389,27 +308,17 @@ object KnnGraph {
     */
   def setHubCount(spark: SparkSession, indexDir: String, n: Int): Unit = {
     require(n >= 1, s"hubs_n must be >= 1, got $n")
-    val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
-      s"$indexDir holds no committed k-NN graph (build first)"))
+    val meta = committed(indexDir)
     val pooled = hubsParam(meta)
+    // dial-up re-enrollment EXCLUDES tombstoned vertices: committed edge
+    // leaves retain deleted vertices until a refine drops them, and a
+    // dead hub would occupy a seed slot for every search
     val pool =
       if (n <= pooled.size || meta.leaves.isEmpty) pooled.take(n)
-      else {
-        // dial-up re-enrollment must EXCLUDE tombstoned vertices (the
-        // merge/nextHubs exclude semantics): committed edge leaves
-        // retain deleted vertices until a refine drops them physically,
-        // and a dead hub would occupy a seed slot for every search
-        val scan = IndexManifest.committedOnly(
-            edgeLeaves(spark, indexDir), meta.leaves)
-          .select(col("vec_id")).distinct()
-        tombstonesSnapshot(spark, indexDir, Some(meta))
-          .fold(scan)(t => scan.join(broadcast(t), Seq("vec_id"), "left_anti"))
-          .orderBy(col("vec_id")).limit(n)
-          .collect().map(_.getLong(0)).toSeq
-      }
-    IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-      params = meta.params ++ Map(
-        "hubs_n" -> n.toString, "hubs" -> pool.mkString(","))))
+      else smallestIds(LeafStore.read(spark, indexDir, Edges, meta), n,
+        tombLeaves(spark, indexDir, meta))
+    LeafStore.setParams(indexDir, meta,
+      Map("hubs_n" -> n.toString, "hubs" -> pool.mkString(",")))
   }
 
   /** Link a new batch into the committed graph — the crawl-increment
@@ -429,9 +338,7 @@ object KnnGraph {
   def append(spark: SparkSession, indexDir: String, emb: DataFrame,
       batch: DataFrame, tag: String, k: Int = 3, hops: Int = 2,
       beam: Int = 8, nSeeds: Int = 16): Unit = {
-    val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
-      s"$indexDir holds no committed k-NN graph (build first)"))
-    if (meta.isDone(tag)) return
+    if (committed(indexDir).isDone(tag)) return
     linkFound(spark, indexDir,
       searchForLink(spark, indexDir, emb, batch, nSeeds, hops, beam, k),
       tag, k)
@@ -475,17 +382,16 @@ object KnnGraph {
     */
   def linkFound(spark: SparkSession, indexDir: String, found: DataFrame,
       tag: String, k: Int = 3): Unit = {
-    val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
-      s"$indexDir holds no committed k-NN graph (build first)"))
-    if (meta.isDone(tag)) return
+    val meta = committed(indexDir)
     val fwd = found.select(col("query_id").as("vec_id"),
       col("vec_id").as("nbr_id"), col("rnk").as("rank"),
       lit(true).as("mutual"))
     val rev = found.select(col("vec_id"),
       col("query_id").as("nbr_id"), lit(k).as("rank"),
       lit(true).as("mutual"))
-    commitLeaf(fwd.unionByName(rev), indexDir, tag, meta.groups,
-      replace = false)
+    LeafStore.append(indexDir, Store, tag, meta.groups,
+      Seq(Edges -> fwd.unionByName(rev)),
+      hubPool(spark, indexDir, replace = false))
   }
 
   /** One NN-descent maintenance round over the committed edges
@@ -497,20 +403,19 @@ object KnnGraph {
     */
   def refine(spark: SparkSession, indexDir: String, emb: DataFrame,
       tag: String, k: Int = 3): Unit = {
-    val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
-      s"$indexDir holds no committed k-NN graph (build first)"))
-    if (meta.isDone(tag)) return
+    committed(indexDir)
     // dead vertices leave physically here: tombstoned endpoints' edges
     // drop before the round, so they neither survive nor become
-    // candidates, and the replace-commit clears the tombstone set
-    val refined = Ann.nnDescentRound(liveEdges(spark, indexDir), emb, k)
-      .select(col("vec_id"), col("nbr_id"), col("rank"))
-    val rev = refined.select(col("nbr_id").as("vec_id"),
-      col("vec_id").as("nbr_id"), lit(true).as("mutual"))
-    val withMutual = refined
-      .join(rev, Seq("vec_id", "nbr_id"), "left")
-      .withColumn("mutual", coalesce(col("mutual"), lit(false)))
-    commitLeaf(withMutual, indexDir, tag, meta.groups, replace = true)
+    // candidates, and the rewrite clears the tombstone set
+    LeafStore.rewrite(indexDir, Store, tag, meta => {
+      val refined = Ann.nnDescentRound(liveEdges(spark, indexDir, meta), emb, k)
+        .select(col("vec_id"), col("nbr_id"), col("rank"))
+      val rev = refined.select(col("nbr_id").as("vec_id"),
+        col("vec_id").as("nbr_id"), lit(true).as("mutual"))
+      Seq(Edges -> refined
+        .join(rev, Seq("vec_id", "nbr_id"), "left")
+        .withColumn("mutual", coalesce(col("mutual"), lit(false))))
+    }, clearTombs = true, params = hubPool(spark, indexDir, replace = true))
   }
 
   /** Re-key the committed edge relation into `newGroups` hash-range
@@ -519,122 +424,54 @@ object KnnGraph {
     * fresh leaf under the new dial (tombstoned vertices' edges ride —
     * they keep ROUTING, the soft-delete rule — and the tombstone set
     * carries over), the manifest records the new dial, and mismatched
-    * old-dial writes are refused from then on. Tag-idempotent,
-    * online-safe under the retained grace window.
+    * old-dial writes are refused from then on.
     */
   def regroup(spark: SparkSession, indexDir: String, newGroups: Int,
       tag: String): Unit = {
     require(newGroups > 0, "newGroups must be positive")
-    IndexManifest.requireTag(tag, "regroup tag")
-    val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
-      s"$indexDir holds no committed k-NN graph (build first)"))
-    if (meta.isDone(tag)) return
-    val leafDir = IndexManifest.leafName(meta.version + 1, tag)
-    IndexManifest.dropResidue(indexDir, Seq("edges"), leafDir)
-    edges(spark, indexDir)
-      .withColumn("ggrp", ggrp(newGroups))
-      .withColumn("leaf", lit(leafDir))
-      .repartition(col("ggrp"))
-      .write.partitionBy("ggrp", "leaf")
-      .mode("append").parquet(s"$indexDir/edges")
-    // a regroup erases every prior leaf tag (leaves := the one fresh
-    // leaf) — retire them so replayed folds still no-op; tombs carry
-    // over, so only the LEAF tags retire here
-    IndexManifest.commit(indexDir, meta.retiring(meta.leaves).copy(
-      version = meta.version + 1, groups = newGroups, leaves = Seq(leafDir)))
-    IndexManifest.sweep(indexDir, Seq("edges", "tombs"), meta.version + 1)
+    committed(indexDir)
+    LeafStore.rewrite(indexDir, Store, tag,
+      meta => Seq(Edges -> LeafStore.read(spark, indexDir, Edges, meta)),
+      clearTombs = false, groups = Some(newGroups))
   }
 
   /** MERGE several graph stores into one — the scale-out BUILD path
     * (dd22/ann21/mm19's device on the edge relation): a 100 TB corpus
     * builds as N independent per-shard graphs (each [[build]] over its
     * slice, no coordination), then one merge folds the shards'
-    * committed edges into the destination as a single
-    * manifest-committed leaf. The union of per-shard k-NN graphs is
-    * the standard distributed NN-descent INITIALIZATION (Dong et al.
-    * 2011): within-shard edges are exact for within-shard neighbors,
-    * and a [[refine]] round over the merged store then converges
-    * toward the global graph without any corpus × corpus pass. Edges
-    * copy VERBATIM (only the group key depends on the dial, so it is
-    * recomputed against the destination's — mixed-dial shards merge
-    * fine); tombstones ride as one destination leaf per source
-    * (kill-all vec_ids — a takedown known to any shard stays a
-    * takedown; overlapping vec_id spaces therefore OR their deletes).
-    * One manifest commit publishes the edge leaf and every ridden tomb
-    * leaf together; replaying a completed merge no-ops on its tag, a
-    * torn attempt rewrites its deterministic leaf names.
+    * committed edges into the destination as a single leaf
+    * ([[LeafStore.merge]]). The union of per-shard k-NN graphs is the
+    * standard distributed NN-descent INITIALIZATION (Dong et al. 2011):
+    * within-shard edges are exact for within-shard neighbors, and a
+    * [[refine]] round over the merged store then converges toward the
+    * global graph without any corpus × corpus pass. Kill-all tombstones
+    * ride per source — a takedown known to any shard stays a takedown —
+    * and never enroll as hubs in the merge commit.
     */
   def merge(spark: SparkSession, srcDirs: Seq[String], destDir: String,
       tag: String, groups: Int = DefaultGroups): Unit = {
-    require(srcDirs.nonEmpty, "merge needs at least one source")
-    IndexManifest.requireTag(tag, "merge tag")
-    val dest = IndexManifest.readMetaOrEmpty(destDir, groups)
-    if (dest.isDone(tag)) return
-    if (dest.groups != groups)
-      throw new IllegalStateException(
-        s"$destDir is grouped at ${dest.groups} but the merge says " +
-          s"$groups — use the destination's dial")
     srcDirs.foreach { dir =>
-      if (metaOf(dir).isEmpty) throw new IllegalStateException(
+      if (IndexManifest.readMeta(dir).isEmpty) throw new IllegalStateException(
         s"$dir holds no committed k-NN graph — merge folds committed shards")
     }
-    val leafDir = IndexManifest.leafName(dest.version + 1, tag)
-    IndexManifest.dropResidue(destDir, Seq("edges"), leafDir)
-    srcDirs.map(edges(spark, _)).reduce(_ unionByName _)
-      .withColumn("ggrp", ggrp(groups))
-      .withColumn("leaf", lit(leafDir))
-      .repartition(col("ggrp"))
-      .write.partitionBy("ggrp", "leaf")
-      .mode("append").parquet(s"$destDir/edges")
-    val tombsMerged = srcDirs.zipWithIndex.flatMap { case (dir, i) =>
-      tombstones(spark, dir).map { t =>
-        val tl = IndexManifest.leafName(dest.version + 1, s"$tag-t$i")
-        IndexManifest.dropResidue(destDir, Seq("tombs"), tl)
-        t.withColumn("leaf", lit(tl))
-          .coalesce(1)
-          .write.partitionBy("leaf").mode("append").parquet(s"$destDir/tombs")
-        tl
-      }
-    }
-    // ridden takedowns must not enroll as hubs in the commit that
-    // tombstones them — anti-join the sources' dead ids out of the
-    // (merge-sized, see nextHubs) read-back. A PRE-POOL destination
-    // with committed leaves enrolls its prior pool from the full
-    // committed scan, the commitLeaf rule.
-    val ridden = srcDirs.flatMap(tombstones(spark, _))
+    val ridden = srcDirs.flatMap(d =>
+        tombLeaves(spark, d, LeafStore.head(d, Store)))
       .reduceOption(_ unionByName _)
-    val hubN = hubCountOf(Some(dest))
-    val prior = {
-      val pooled = hubsParam(dest)
-      if (pooled.nonEmpty || dest.leaves.isEmpty) pooled
-      else IndexManifest.committedOnly(
-          edgeLeaves(spark, destDir), dest.leaves)
-        .select(col("vec_id")).distinct()
-        .orderBy(col("vec_id")).limit(hubN)
-        .collect().map(_.getLong(0)).toSeq
-    }
-    val hubs = nextHubs(spark, destDir, leafDir, prior, hubN,
-      exclude = ridden)
-    IndexManifest.commit(destDir, dest.copy(version = dest.version + 1,
-      leaves = dest.leaves :+ leafDir,
-      tombs = dest.tombs ++ tombsMerged,
-      params = dest.params + ("hubs" -> hubs.mkString(","))))
-    IndexManifest.sweep(destDir, Seq("edges", "tombs"), dest.version + 1)
+    LeafStore.merge(spark, srcDirs, destDir, Store, tag, groups,
+      params = hubPool(spark, destDir, replace = false, exclude = ridden))
   }
 
   /** Small-file fold of the committed leaves into one (the crawl
     * loop's maintenance cadence): LIVE edges copy verbatim, edges
     * incident to a tombstoned vertex drop physically, the tombstone
     * set clears — searches are identical (deletes were already
-    * invisible), and the commit is online-safe under the manifest
-    * grace window.
+    * invisible).
     */
   def compact(spark: SparkSession, indexDir: String, tag: String): Unit = {
-    val meta = metaOf(indexDir).getOrElse(throw new IllegalStateException(
-      s"$indexDir holds no committed k-NN graph (build first)"))
-    if (meta.isDone(tag)) return
-    commitLeaf(liveEdges(spark, indexDir), indexDir, tag, meta.groups,
-      replace = true)
+    committed(indexDir)
+    LeafStore.rewrite(indexDir, Store, tag,
+      meta => Seq(Edges -> liveEdges(spark, indexDir, meta)),
+      clearTombs = true, params = hubPool(spark, indexDir, replace = true))
   }
 
   /** ann22's driver-checked shape — TAKEDOWNS through the persisted

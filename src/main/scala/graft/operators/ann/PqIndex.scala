@@ -1,10 +1,11 @@
 package graft.operators.ann
 
 import graft.Tables
-import graft.sources.cdc.WalSegments
+import graft.operators.store.{IndexManifest, LeafStore}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** PERSISTED product-quantization index — the build-once / search-many /
   * append-increments artifact the ANN lane needs at 100 TB, mirroring the
@@ -19,21 +20,19 @@ import org.apache.spark.sql.functions._
   * {{{
   *   _manifest-v00000001        // tiny JSON: version, geometry, leaf list
   *   codebooks-v00000001/       // parquet (m, code, cent_emb) — m*ksub rows
+  *   coarse-v00000001/          // parquet (cent_id, cent_emb) — ncells rows
   *   codes/cell=c/leaf=v00000001-ab12cd34/  // (vec_id, m, code) — the corpus
   *   codes/cell=c/leaf=v00000002-99e0f1a2/  // appended crawl increment(s)
   * }}}
   *
-  * Leaf directory names are immutable, version-prefixed for ordering and
-  * random-suffixed for collision freedom; the manifest records the exact
-  * names. A commit is an EXCLUSIVE publish of the next immutable manifest
-  * version ([[WalSegments.publishExclusive]]) and readers resolve the max
-  * — the Materializer's snapshot-isolation contract applied to an index,
-  * including its read grace window: superseded manifests (and every leaf
-  * they reference) are retained for [[RetainedManifests]] versions, so a
-  * search planned against a just-superseded manifest still finds its
-  * files. Appends never rewrite existing code leaves: an increment is
-  * one new leaf plus a manifest swap, so append cost is O(batch), not
-  * O(corpus).
+  * The codes are a [[LeafStore]] family (`vector`) grouped by the stored
+  * IVF `cell` (the dial is `ncells`), so a search prunes its scan to the
+  * probed cells. What PqIndex adds to the store is its GEOMETRY and the
+  * CODEBOOK FENCE: the quantization dials and the version-named artifact
+  * directories ride the manifest params, artifacts are immutable once
+  * committed (a retrain writes new ones), every search resolves them
+  * from the same snapshot as its codes, and a merge refuses shards whose
+  * codebooks differ.
   *
   * Scale ledger: the stored index is (vec_id, m, code) + m*ksub centroids
   * — ~m bytes per vector against dim*4 for raw embeddings (64× at
@@ -58,17 +57,18 @@ object PqIndex {
     def subLen: Int = dim / m
   }
 
-  import graft.operators.store.IndexManifest
+  private val Codes = LeafStore.Rel("codes", StructType(Seq(
+      StructField("vec_id", LongType), StructField("m", IntegerType),
+      StructField("code", LongType), StructField("cell", IntegerType),
+      StructField("leaf", StringType))),
+    Some("cell" -> (_ => col("cell"))))
 
-  /** The PqIndex view of the SHARED index-manifest format
-    * ([[graft.operators.store.IndexManifest]] — one rule set for every
-    * persisted store in the repo: exclusive-publish versioned
-    * manifests, committed-leaf pruning, the retained read grace
-    * window, the version-guarded sweep): `groups` carries `ncells`
-    * (the store's partition dial — codes are cell-partitioned), and
-    * the PQ geometry + artifact directory names ride the manifest's
-    * `params` map.
-    */
+  /** The code store: cell-grouped codes plus kill-all vec_id tombstones. */
+  private[graft] val Store = LeafStore.Family("vector", Seq(Codes),
+    LeafStore.Rel("tombs", StructType(Seq(
+      StructField("vec_id", LongType), StructField("leaf", StringType)))),
+    defaultGroups = 16)
+
   /** The manifest-param keys PqIndex itself owns — anything else in the
     * shared params map (the `retain` retention dial, future
     * store-generic knobs) is FOREIGN and must round-trip untouched
@@ -78,13 +78,19 @@ object PqIndex {
   private val OwnParamKeys =
     Set("m", "ksub", "dim", "residual", "codebooks", "coarse")
 
+  /** The PqIndex view of the shared manifest: `groups` carries `ncells`
+    * (codes are cell-grouped), the geometry and artifact directory
+    * names ride `params`.
+    */
   private def toShared(meta: Meta): IndexManifest.Meta =
     IndexManifest.Meta(meta.version, meta.ncells,
-      meta.codeLeaves, meta.tombLeaves,
-      meta.extraParams ++
-        Map("m" -> meta.m.toString, "ksub" -> meta.ksub.toString,
-          "dim" -> meta.dim.toString, "residual" -> meta.residual.toString,
-          "codebooks" -> meta.codebooksDir, "coarse" -> meta.coarseDir))
+      meta.codeLeaves, meta.tombLeaves, meta.extraParams ++ geometry(meta),
+      kind = Store.kind)
+
+  private def geometry(meta: Meta): Map[String, String] =
+    Map("m" -> meta.m.toString, "ksub" -> meta.ksub.toString,
+      "dim" -> meta.dim.toString, "residual" -> meta.residual.toString,
+      "codebooks" -> meta.codebooksDir, "coarse" -> meta.coarseDir)
 
   private def fromShared(s: IndexManifest.Meta): Meta =
     Meta(s.version,
@@ -106,61 +112,24 @@ object PqIndex {
   private def hasCommittedManifest(indexDir: String): Boolean =
     IndexManifest.readMeta(indexDir).isDefined
 
-  /** Commit a meta version through the shared manifest rules: exclusive
-    * publish (two appenders racing a version have exactly one winner;
-    * the loser throws having published nothing — its just-written leaf
-    * is unreferenced residue), retention past the read grace window.
-    */
-  private[graft] def writeMeta(indexDir: String, meta: Meta): Unit =
-    IndexManifest.commit(indexDir, toShared(meta))
-
-  /** A new leaf's directory name — the shared `v<version>-<suffix>`
-    * scheme: version-prefixed for the sweep's safety rule, suffixed so
-    * two appenders racing a version write DISTINCT directories (random
-    * by default; [[append]] callers pin an idempotency tag instead).
-    * Code and tombstone leaves share the scheme — their RELATIONS
-    * (`codes/`, `tombs/`) distinguish them.
-    */
-  private def leafName(version: Long, suffix: String) =
-    IndexManifest.leafName(version, suffix)
-
-  private def tombLeafName(version: Long, suffix: String) =
-    IndexManifest.leafName(version, suffix)
-
-  /** Has `tag` committed — as a live code/tomb leaf OR retired by a
-    * later replace commit ([[compact]] / [[retrain]] retire every erased
-    * tag, [[IndexManifest.Meta.retiring]])? The idempotency check every
-    * fold uses.
-    */
-  private def isDone(meta: Meta, tag: String): Boolean = {
-    val shared = toShared(meta)
-    shared.isDone(tag) || shared.hasTombTag(tag)
-  }
-
-  /** `meta` with every code/tomb leaf tag retired — the base of a
-    * replace commit.
-    */
-  private def retired(meta: Meta): Meta =
-    fromShared(toShared(meta).retiring(meta.codeLeaves ++ meta.tombLeaves))
-
   private def randomSuffix(): String =
     java.util.UUID.randomUUID().toString.take(8)
 
+  /** Write a trained artifact (the last of its pinned generations) and
+    * release every generation: the written directory is what searches
+    * read back ([[artifact]]), so nothing keeps the training pins alive.
+    */
+  private def writeArtifact(generations: Seq[DataFrame], path: String): Unit =
+    try generations.last.write.mode("overwrite").parquet(path)
+    finally generations.foreach(_.unpersist())
+
   /** Build the index: train the PQ codebooks AND the IVF coarse
     * quantizer on the corpus (the ONE training pass; [[Ann.pqCodebooks]]
-    * / [[Ann.coarseCentroids]] — hash-ranked seeds, Lloyd refinement,
-    * cache-pinned generations), encode every vector, assign it a coarse
-    * cell, persist all three relations as parquet, and commit with one
-    * manifest write. The corpus embeddings are read, never stored — the
-    * artifact is codes + centroids only.
-    *
-    * Codes land in ONE partitioned table `codes/cell=<c>/leaf=<tag>/`:
-    * cell-first nesting is what lets a later [[topKIvfAgainst]] prune
-    * its scan to the probed cells, while the `leaf` partition keeps each
-    * append an immutable directory set and lets readers restrict to
-    * COMMITTED leaves only (the manifest's leaf list as a partition
-    * filter — crash residue is invisible to readers even before the
-    * sweep collects it).
+    * / [[Ann.coarseCentroids]] — hash-ranked seeds, Lloyd refinement),
+    * encode every vector, assign it a coarse cell, persist the artifacts
+    * and commit the codes as the store's first leaf. The corpus
+    * embeddings are read, never stored — the artifact is codes +
+    * centroids only.
     */
   def build(emb: DataFrame, indexDir: String, m: Int = 4, ksub: Int = 16,
       dim: Int = 64, refineIters: Int = 1, ncells: Int = 16,
@@ -182,27 +151,26 @@ object PqIndex {
     // Coarse FIRST: residual mode trains the PQ codebooks on residuals
     // against the PERSISTED coarse centroids
     val coarseDir = f"coarse-v${1L}%08d"
-    Ann.coarseCentroids(emb, ncells, coarseRefineIters)
-      .write.mode("overwrite").parquet(s"$indexDir/$coarseDir")
+    writeArtifact(Ann.centroidGenerations(emb, ncells, coarseRefineIters),
+      s"$indexDir/$coarseDir")
     val spark = emb.sparkSession
     val storedCoarse = artifact(spark, s"$indexDir/$coarseDir")
     val trainIn =
       if (!residual) emb
       else residualsOf(emb, storedCoarse).select(col("vec_id"), col("embedding"))
-    val books = Ann.pqCodebooks(trainIn, m, ksub, subLen, refineIters)
     val booksDir = f"codebooks-v${1L}%08d"
-    books.write.mode("overwrite").parquet(s"$indexDir/$booksDir")
+    writeArtifact(Ann.pqCodebookGenerations(trainIn, m, ksub, subLen,
+      refineIters), s"$indexDir/$booksDir")
     // encode against the PERSISTED codebooks, not the in-memory frame:
     // what a later encodeBatch reads back must be bit-identical to what
     // the corpus was coded with (parquet float roundtrip is exact, but
     // reading back removes even the possibility of drift)
-    val leaf = leafName(1L, randomSuffix())
-    writeCodesLeaf(spark, indexDir, emb, leaf,
-      artifact(spark, s"$indexDir/$booksDir"), storedCoarse, subLen, residual)
-    val meta = Meta(1L, m, ksub, dim, booksDir, Seq(leaf), ncells, coarseDir,
-      residual)
-    writeMeta(indexDir, meta)
-    meta
+    val geo = geometry(Meta(1L, m, ksub, dim, booksDir, Nil, ncells,
+      coarseDir, residual))
+    fromShared(LeafStore.append(indexDir, Store, randomSuffix(), ncells,
+      Seq(Codes -> encoded(emb, artifact(spark, s"$indexDir/$booksDir"),
+        storedCoarse, subLen, residual)),
+      (_, _) => geo))
   }
 
   /** v ↦ (vec_id, embedding = v − centroid(cell(v)), cell): the IVFADC
@@ -220,31 +188,20 @@ object PqIndex {
           .as("embedding"),
         col("cell"))
 
-  /** Encode + cell-assign one vector set and append it as the immutable
-    * `leaf=<tag>` partition set of the shared codes table. The (codes ⋈
-    * cells) join is ids-and-codes only, one vec_id shuffle of the BATCH.
-    * Repartition by cell before the write: one file per (cell, leaf)
-    * instead of one per (task, cell) — without it every task writes
-    * every cell dir and the file count (hence later listings and
-    * cell-pruned scans) explodes.
+  /** Encode + cell-assign one vector set: the (vec_id, m, code, cell)
+    * rows of a codes leaf. The (codes ⋈ cells) join is ids-and-codes
+    * only, one vec_id shuffle of the BATCH.
     */
-  private def writeCodesLeaf(spark: SparkSession, indexDir: String,
-      emb: DataFrame, leaf: String, books: DataFrame, coarse: DataFrame,
-      subLen: Int, residual: Boolean): Unit = {
-    val rows =
-      if (!residual)
-        Ann.pqEncode(emb, books, subLen)
-          .join(Ann.assignCells(emb, coarse), Seq("vec_id"))
-      else {
-        val res = residualsOf(emb, coarse)
-        Ann.pqEncode(res.select(col("vec_id"), col("embedding")), books, subLen)
-          .join(res.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      }
-    rows.withColumn("leaf", lit(leaf))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell", "leaf")
-      .parquet(s"$indexDir/codes")
-  }
+  private def encoded(emb: DataFrame, books: DataFrame, coarse: DataFrame,
+      subLen: Int, residual: Boolean): DataFrame =
+    if (!residual)
+      Ann.pqEncode(emb, books, subLen)
+        .join(Ann.assignCells(emb, coarse), Seq("vec_id"))
+    else {
+      val res = residualsOf(emb, coarse)
+      Ann.pqEncode(res.select(col("vec_id"), col("embedding")), books, subLen)
+        .join(res.select(col("vec_id"), col("cell")), Seq("vec_id"))
+    }
 
   /** Tiny immutable artifacts (codebooks, coarse centroids) memoized per
     * version-named directory: the dirs never change once committed, so
@@ -275,13 +232,11 @@ object PqIndex {
   }
 
   /** The stored code relation with its partition columns, restricted to
-    * COMMITTED leaves (the manifest's leaf list as a `leaf` partition
-    * filter — uncommitted crash residue never reaches a reader).
+    * the leaves `meta` committed.
     */
   private def codesRaw(spark: SparkSession, indexDir: String,
       meta: Meta): DataFrame =
-    spark.read.parquet(s"$indexDir/codes")
-      .filter(col("leaf").isin(meta.codeLeaves: _*))
+    LeafStore.read(spark, indexDir, Codes, toShared(meta))
 
   /** The stored code relation (vec_id, m, code) across every committed
     * leaf — one partition-filtered scan of the shared codes table.
@@ -297,25 +252,20 @@ object PqIndex {
     codesRaw(spark, indexDir, readMeta(indexDir))
       .select(col("vec_id"), col("m"), col("code"), col("cell"))
 
-  /** Committed codes restricted to `cells` — the cell-pruned scan
+  /** `meta`'s codes restricted to `cells` — the cell-pruned scan
     * (`PartitionFilters` on the shared codes table). `cells` is a
     * driver-side list bounded by ncells: metadata, never data.
     */
+  private def codesIn(spark: SparkSession, indexDir: String, meta: Meta,
+      cells: Seq[Long]): DataFrame =
+    codesRaw(spark, indexDir, meta)
+      .filter(col("cell").isin(cells.map(v => Int.box(v.toInt)): _*))
+
+  /** Committed codes restricted to `cells` ([[codesIn]] at the head). */
   def codesInCells(spark: SparkSession, indexDir: String,
-      cells: Seq[Long]): DataFrame = {
-    val meta = readMeta(indexDir)
-    val codesDf = spark.read.parquet(s"$indexDir/codes")
-    // partition-value inference types `cell` by its values — box the
-    // literals to the inferred type so pruning stays cast-free
-    val lits: Seq[Any] = codesDf.schema("cell").dataType match {
-      case org.apache.spark.sql.types.IntegerType =>
-        cells.map(v => Int.box(v.toInt))
-      case _ => cells.map(Long.box)
-    }
-    codesDf.filter(col("leaf").isin(meta.codeLeaves: _*) &&
-      col("cell").isin(lits: _*))
+      cells: Seq[Long]): DataFrame =
+    codesIn(spark, indexDir, readMeta(indexDir), cells)
       .select(col("vec_id"), col("m"), col("code"))
-  }
 
   /** Encode an arriving batch against the STORED codebooks — no
     * retraining, no corpus pass: the crawl-increment shape. One batch
@@ -335,28 +285,8 @@ object PqIndex {
     Ann.pqEncode(in, codebooks(spark, indexDir), meta.subLen)
   }
 
-  /** Delete every dead leaf — referenced by NO manifest version still
-    * on disk (the retained read grace window: a searcher that planned
-    * against any retained manifest must find its leaves, the
-    * Materializer/Iceberg vacuum rule) AND with a version at or below
-    * the current committed one (an unreferenced HIGHER version may
-    * belong to a concurrent appender mid-commit). One call into the
-    * shared rule set — see [[IndexManifest.sweep]].
-    */
-  private def sweepUnreferenced(indexDir: String, meta: Meta): Unit =
-    IndexManifest.sweep(indexDir, Seq("codes", "tombs"), meta.version)
-
-  /** Delete residue of a torn TAGGED write about to be retried under
-    * the same deterministic name ([[IndexManifest.dropResidue]] —
-    * mode("append") would otherwise duplicate its rows).
-    */
-  private def dropLeafResidue(indexDir: String, rel: String,
-      leaf: String): Unit =
-    IndexManifest.dropResidue(indexDir, Seq(rel), leaf)
-
   /** Append a batch's codes as a new immutable leaf + manifest swap.
-    * O(batch) work; existing leaves are never read or rewritten; crash
-    * residue from earlier failed appends is swept first. Caller
+    * O(batch) work; existing leaves are never read or rewritten. Caller
     * contract: batch vec_ids are new (the Materializer lane is the
     * upsert path; an index rebuild is the delete path).
     */
@@ -366,36 +296,19 @@ object PqIndex {
 
   /** [[append]] with an optional IDEMPOTENCY tag — the exactly-once fold
     * for at-least-once delivery (a `foreachBatch` replay after restart):
-    * the tag becomes the leaf-name suffix, and an append whose tag is
-    * already carried by a COMMITTED leaf is a no-op. A crash after the
-    * leaf write but before the manifest commit leaves unreferenced
-    * residue (swept later); the replay then writes a fresh leaf and
-    * commits — no duplicate ever becomes visible. Tags: `[0-9A-Za-z_-]`.
+    * the tag becomes the leaf-name suffix, and an append whose tag
+    * already committed is a no-op. Untagged appends take a random
+    * suffix. Tags: `[0-9A-Za-z_-]`.
     */
   def append(spark: SparkSession, indexDir: String, batch: DataFrame,
       tag: Option[String]): Meta = {
     val meta = readMeta(indexDir)
-    tag.foreach { t =>
-      IndexManifest.requireTag(t, "idempotency tag")
-      if (isDone(meta, t)) return meta
-    }
-    sweepUnreferenced(indexDir, meta)
-    val leaf = leafName(meta.version + 1, tag.getOrElse(randomSuffix()))
-    // a TAGGED append's leaf name is deterministic, so a replay after a
-    // crash between the leaf write and the manifest commit would
-    // mode("append") into the SAME directories and duplicate every row
-    // once committed — and the version-guarded sweep above cannot
-    // collect that residue (its version is ABOVE the current commit).
-    // Drop the torn attempt's dirs explicitly before rewriting.
-    dropLeafResidue(indexDir, "codes", leaf)
-    writeCodesLeaf(spark, indexDir, batch, leaf,
-      artifact(spark, s"$indexDir/${meta.codebooksDir}"),
-      artifact(spark, s"$indexDir/${meta.coarseDir}"), meta.subLen,
-      meta.residual)
-    val next = meta.copy(version = meta.version + 1,
-      codeLeaves = meta.codeLeaves :+ leaf)
-    writeMeta(indexDir, next)
-    next
+    fromShared(LeafStore.append(indexDir, Store,
+      tag.getOrElse(randomSuffix()), meta.ncells,
+      Seq(Codes -> encoded(batch,
+        artifact(spark, s"$indexDir/${meta.codebooksDir}"),
+        artifact(spark, s"$indexDir/${meta.coarseDir}"), meta.subLen,
+        meta.residual))))
   }
 
   /** Encode `emb` as a SHARD of a distributed build: a fresh index at
@@ -414,46 +327,43 @@ object PqIndex {
     require(!hasCommittedManifest(shardDir),
       s"$shardDir already holds a committed pq index — shards build into " +
         "fresh directories")
-    artifact(spark, s"$templateDir/${t.codebooksDir}")
-      .write.mode("overwrite").parquet(s"$shardDir/${t.codebooksDir}")
-    if (t.coarseDir.nonEmpty)
-      artifact(spark, s"$templateDir/${t.coarseDir}")
-        .write.mode("overwrite").parquet(s"$shardDir/${t.coarseDir}")
-    val leaf = leafName(1L, randomSuffix())
-    writeCodesLeaf(spark, shardDir, emb, leaf,
-      artifact(spark, s"$shardDir/${t.codebooksDir}"),
-      artifact(spark, s"$shardDir/${t.coarseDir}"), t.subLen, t.residual)
-    val meta = Meta(1L, t.m, t.ksub, t.dim, t.codebooksDir, Seq(leaf),
-      t.ncells, t.coarseDir, t.residual)
-    writeMeta(shardDir, meta)
-    meta
+    copyArtifacts(spark, templateDir, t, shardDir)
+    fromShared(LeafStore.append(shardDir, Store, randomSuffix(), t.ncells,
+      Seq(Codes -> encoded(emb, artifact(spark, s"$shardDir/${t.codebooksDir}"),
+        artifact(spark, s"$shardDir/${t.coarseDir}"), t.subLen, t.residual)),
+      (_, _) => geometry(t)))
   }
 
+  /** Copy `src`'s codebook and coarse artifacts into `destDir`. */
+  private def copyArtifacts(spark: SparkSession, srcDir: String, src: Meta,
+      destDir: String): Unit =
+    (src.codebooksDir +: Seq(src.coarseDir).filter(_.nonEmpty)).foreach { a =>
+      artifact(spark, s"$srcDir/$a").write.mode("overwrite")
+        .parquet(s"$destDir/$a")
+    }
+
   /** MERGE several pq-index shards into one fresh destination — the
-    * fold after [[buildShardFrom]]'s parallel fleet: one codes leaf
-    * carrying every shard's committed rows VERBATIM (codes are pure
-    * functions of (embedding, codebooks) and cells of (embedding,
-    * coarse), so the merged store is row-identical to a single build),
-    * tombstones riding as one destination leaf per source (kill-all
-    * ids — a delete known to any shard stays a delete). REFUSES shards
-    * whose codebook or coarse content differs from the first's (the
-    * group-dial rule on the codebook axis: codes from different
-    * codebooks are incomparable, and merging them would silently
-    * corrupt every ADC score — the content check is a collect of
-    * m·ksub + ncells broadcast-sized rows per shard). Replaying a
-    * completed merge no-ops on its tag; a torn attempt rewrites its
-    * deterministic leaf names.
+    * fold after [[buildShardFrom]]'s parallel fleet ([[LeafStore.merge]]):
+    * one codes leaf carrying every shard's committed rows VERBATIM (codes
+    * are pure functions of (embedding, codebooks) and cells of
+    * (embedding, coarse), so the merged store is row-identical to a
+    * single build), kill-all tombstones riding per source. REFUSES
+    * shards whose codebook or coarse content differs from the first's
+    * (the CODEBOOK FENCE: codes from different codebooks are
+    * incomparable, and merging them would silently corrupt every ADC
+    * score — the content check is a collect of m·ksub + ncells
+    * broadcast-sized rows per shard), and a destination that already
+    * holds an index unless the merge's own tag committed it.
     */
   def merge(spark: SparkSession, srcDirs: Seq[String], destDir: String,
       tag: String): Meta = {
     require(srcDirs.nonEmpty, "merge needs at least one source")
-    IndexManifest.requireTag(tag, "merge tag")
-    if (hasCommittedManifest(destDir)) {
-      val dm = readMeta(destDir)
-      if (isDone(dm, tag)) return dm
-      throw new IllegalStateException(
+    IndexManifest.readMeta(destDir) match {
+      case Some(dm) if dm.isDone(tag) => return fromShared(dm)
+      case Some(_) => throw new IllegalStateException(
         s"$destDir already holds a committed pq index — merge builds a " +
           "fresh destination")
+      case None => ()
     }
     val metas = srcDirs.map(readMeta)
     val h = metas.head
@@ -482,48 +392,15 @@ object PqIndex {
         s"shard $dir carries a different coarse quantizer — its cells " +
           "are incomparable; rebuild it from the shared template")
     }
-    artifact(spark, s"${srcDirs.head}/${h.codebooksDir}")
-      .write.mode("overwrite").parquet(s"$destDir/${h.codebooksDir}")
-    if (h.coarseDir.nonEmpty)
-      artifact(spark, s"${srcDirs.head}/${h.coarseDir}")
-        .write.mode("overwrite").parquet(s"$destDir/${h.coarseDir}")
-    val leaf = leafName(1L, tag)
-    dropLeafResidue(destDir, "codes", leaf)
-    srcDirs.zip(metas).map { case (dir, m) =>
-      codesRaw(spark, dir, m)
-        .select(col("vec_id"), col("m"), col("code"), col("cell"))
-    }.reduce(_ unionByName _)
-      .withColumn("leaf", lit(leaf))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell", "leaf")
-      .parquet(s"$destDir/codes")
-    val tombLeaves = srcDirs.zip(metas).zipWithIndex.flatMap {
-      case ((dir, m), i) =>
-        tombstones(spark, dir, m).map { t =>
-          val tl = tombLeafName(1L, s"$tag-t$i")
-          dropLeafResidue(destDir, "tombs", tl)
-          t.distinct().withColumn("leaf", lit(tl))
-            .coalesce(1)
-            .write.mode("append").partitionBy("leaf")
-            .parquet(s"$destDir/tombs")
-          tl
-        }
-    }
-    val meta = Meta(1L, h.m, h.ksub, h.dim, h.codebooksDir, Seq(leaf),
-      h.ncells, h.coarseDir, h.residual, tombLeaves)
-    writeMeta(destDir, meta)
-    meta
+    copyArtifacts(spark, srcDirs.head, h, destDir)
+    fromShared(LeafStore.merge(spark, srcDirs, destDir, Store, tag, h.ncells,
+      params = (_, _) => geometry(h)))
   }
 
   /** DELETE vectors from the index by TOMBSTONE — the CDC-sync shape
     * ([[graft.queries.QueryPack.streamReplicaVectorIndex]] / pgvector
     * style): a replicated row's DELETE must leave the index without
-    * rewriting any committed code leaf, so deletes commit as immutable
-    * tombstone id-leaves (`tombs/leaf=<tag>`, parquet of `vec_id`) under
-    * the SAME exclusive-publish manifest discipline as [[append]] —
-    * one winner per version, idempotency tags for at-least-once replays,
-    * readers restricted to committed tomb leaves, retention following
-    * the manifest grace window. Every search path anti-joins the
+    * rewriting any committed code leaf. Every search path anti-joins the
     * tombstone set BEFORE the ADC shortlist cut (a deleted vector must
     * not consume shortlist slots — the ann14 pre-filter reasoning), and
     * [[compact]] physically drops tombstoned codes and clears the set,
@@ -534,21 +411,9 @@ object PqIndex {
     */
   def delete(spark: SparkSession, indexDir: String, ids: DataFrame,
       tag: Option[String] = None): Meta = {
-    val meta = readMeta(indexDir)
-    tag.foreach { t =>
-      IndexManifest.requireTag(t, "idempotency tag")
-      if (isDone(meta, t)) return meta
-    }
-    val leaf = tombLeafName(meta.version + 1, tag.getOrElse(randomSuffix()))
-    dropLeafResidue(indexDir, "tombs", leaf) // torn tagged-replay residue
-    ids.select(col("vec_id").cast("long").as("vec_id"))
-      .withColumn("leaf", lit(leaf))
-      .write.mode("append").partitionBy("leaf")
-      .parquet(s"$indexDir/tombs")
-    val next = meta.copy(version = meta.version + 1,
-      tombLeaves = meta.tombLeaves :+ leaf)
-    writeMeta(indexDir, next)
-    next
+    readMeta(indexDir)
+    fromShared(LeafStore.tombstone(indexDir, Store,
+      tag.getOrElse(randomSuffix()), ids.select(col("vec_id"))))
   }
 
   /** The committed tombstoned vec_ids as a (vec_id: long) relation —
@@ -560,21 +425,14 @@ object PqIndex {
     * deleted-then-reinserted live id.
     */
   def tombstonedIds(spark: SparkSession, indexDir: String): DataFrame =
-    tombstones(spark, indexDir, readMeta(indexDir))
-      .getOrElse(spark.range(0).select(col("id").as("vec_id")))
+    LeafStore.tombstonedIds(spark, indexDir, Store)
 
-  /** The committed tombstone ids (empty frame when none). */
-  private def tombstones(spark: SparkSession, indexDir: String,
-      meta: Meta): Option[DataFrame] =
-    if (meta.tombLeaves.isEmpty) None
-    else Some(spark.read.parquet(s"$indexDir/tombs")
-      .filter(col("leaf").isin(meta.tombLeaves: _*))
-      .select(col("vec_id")))
-
-  /** Drop tombstoned rows from a code scan (no-op without deletes). */
+  /** Drop `meta`'s tombstoned rows from a code scan (no-op without
+    * deletes).
+    */
   private def liveOnly(spark: SparkSession, indexDir: String, meta: Meta,
       codes: DataFrame): DataFrame =
-    tombstones(spark, indexDir, meta) match {
+    LeafStore.tombRows(spark, indexDir, Store, toShared(meta)) match {
       case None        => codes
       case Some(tombs) => codes.join(tombs, Seq("vec_id"), "left_anti")
     }
@@ -583,52 +441,30 @@ object PqIndex {
     * maintenance pass every streaming append path eventually needs: a crawl
     * loop commits one leaf per micro-batch, so after N increments every
     * cell partition holds N tiny files and the cell-pruned scan pays N
-    * listings + opens per cell. Compaction reads the committed relation
-    * once, rewrites it as a single leaf (still `cell=<c>/leaf=<tag>`
-    * partitioned — one file per cell), and commits a manifest referencing
-    * only the new leaf. Codes are copied verbatim (no re-encode), so
-    * search over the compacted index is IDENTICAL row-for-row.
-    *
-    * Readers keep working throughout: a search planned against any
-    * retained pre-compaction manifest still finds the old leaves (they
-    * stay referenced by retained manifests and are therefore not
-    * sweepable — the [[RetainedManifests]] grace window); once those
-    * manifests retire, the next append's sweep collects the old leaves.
-    * Concurrency: the manifest commit is the same exclusive publish as
-    * [[append]] — a compaction racing an append has exactly one winner
-    * and the loser throws having published nothing. The optional `tag`
-    * gives scheduled compactions the same idempotency contract as
-    * appends (a committed leaf already carrying the tag makes the call a
-    * no-op). This is the Iceberg/Delta `rewrite_data_files` / `OPTIMIZE`
-    * shape applied to the index artifact.
+    * listings + opens per cell. Codes are copied verbatim (no re-encode)
+    * and tombstoned codes drop out physically (the tombstone set clears),
+    * so search over the compacted index is IDENTICAL row-for-row. An
+    * index already at one leaf and no tombstones is left as it is. This
+    * is the Iceberg/Delta `rewrite_data_files` / `OPTIMIZE` shape applied
+    * to the index artifact.
     */
   def compact(spark: SparkSession, indexDir: String,
       tag: Option[String] = None): Meta = {
     val meta = readMeta(indexDir)
-    tag.foreach { t =>
-      IndexManifest.requireTag(t, "idempotency tag")
-      if (isDone(meta, t)) return meta
-    }
     if (meta.codeLeaves.size <= 1 && meta.tombLeaves.isEmpty)
       return meta // already compact
-    val leaf = leafName(meta.version + 1, tag.getOrElse(randomSuffix()))
-    dropLeafResidue(indexDir, "codes", leaf) // torn tagged-replay residue
-    // tombstoned codes drop out physically here; the rewritten index
-    // carries an empty tombstone set (deletes are already invisible to
-    // every search path, so the compacted relation is search-identical)
-    liveOnly(spark, indexDir, meta, codesRaw(spark, indexDir, meta))
-      .select(col("vec_id"), col("m"), col("code"), col("cell"))
-      .withColumn("leaf", lit(leaf))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell", "leaf")
-      .parquet(s"$indexDir/codes")
-    // a replace commit: retire every erased leaf tag into donetags so
-    // checkpoint-replayed tagged folds still no-op after the rewrite
-    val next = retired(meta).copy(version = meta.version + 1,
-      codeLeaves = Seq(leaf), tombLeaves = Seq.empty)
-    writeMeta(indexDir, next)
-    next
+    fromShared(LeafStore.rewrite(indexDir, Store,
+      tag.getOrElse(randomSuffix()), head => {
+        val m = fromShared(head)
+        Seq(Codes -> liveOnly(spark, indexDir, m, codesRaw(spark, indexDir, m)))
+      }, clearTombs = true))
   }
+
+  /** The version-named artifact directories a commit at version `v`
+    * writes.
+    */
+  private def artifactDirs(v: Long): (String, String) =
+    (f"coarse-v$v%08d", f"codebooks-v$v%08d")
 
   /** RETRAIN the quantization geometry from the CURRENT live corpus —
     * the drift-maintenance axis [[append]] deliberately lacks: every
@@ -637,7 +473,7 @@ object PqIndex {
     * crawl) ADC quantization error grows and shortlist recall decays
     * with no maintenance move to fix it — compact/merge copy codes
     * verbatim. This is Faiss/Milvus "rebuild" expressed as one more
-    * replace commit under the SAME manifest discipline:
+    * replace commit ([[LeafStore.rewrite]]):
     *
     *  1. the live id set is codes ∖ tombstones (one committed-leaf
     *     scan, ids only); raw vectors re-attach from `embProvider` by
@@ -651,64 +487,52 @@ object PqIndex {
     *     their own geometry;
     *  3. the live corpus re-encodes against the fresh geometry as ONE
     *     new leaf, and the manifest swap publishes (new codebooks dir,
-    *     new coarse dir, the one leaf, empty tombstones) atomically —
-    *     erased leaf tags retire into `donetags`, so replayed tagged
-    *     appends/deletes still no-op (the exactly-once fold survives,
-    *     exactly as across [[compact]]).
+    *     new coarse dir, the one leaf, empty tombstones) atomically.
     *
-    * Readers keep working throughout: a search planned against any
-    * retained pre-retrain manifest still finds its leaves AND its
-    * codebooks (every `*At` lane resolves geometry from the pinned
-    * snapshot), and the exclusive manifest publish gives a retrain
-    * racing an append exactly one winner. Cost is one full pass over
-    * the live corpus (train + re-encode) — a scheduled maintenance
-    * job, never the serving or increment path. Idempotent per `tag`;
-    * a torn attempt rewrites its deterministic artifact/leaf names.
+    * Cost is one full pass over the live corpus (train + re-encode) — a
+    * scheduled maintenance job, never the serving or increment path.
+    * Idempotent per `tag`; a torn attempt rewrites its deterministic
+    * artifact/leaf names.
     */
   def retrain(spark: SparkSession, indexDir: String, embProvider: DataFrame,
       tag: String, refineIters: Int = 1,
       coarseRefineIters: Int = 0): Meta = {
-    IndexManifest.requireTag(tag, "retrain tag")
     val meta = readMeta(indexDir)
-    if (isDone(meta, tag)) return meta
     require(meta.ncells > 0 && meta.coarseDir.nonEmpty,
       s"$indexDir is a pre-IVF index — rebuild into a fresh directory " +
         "instead of retraining")
-    sweepUnreferenced(indexDir, meta)
-    val v = meta.version + 1
-    // the live corpus: committed code ids minus tombstones, re-attached
-    // to raw vectors by id (point-lookup-shaped join against the
-    // embedding store — the topKAgainst rerank discipline, corpus-wide)
-    val liveIds = liveOnly(spark, indexDir, meta,
-      codesRaw(spark, indexDir, meta).select(col("vec_id"))).distinct()
-    val live = embProvider.join(liveIds, Seq("vec_id"))
-      .select(col("vec_id"), col("embedding"))
-    // fresh geometry in NEW version-named immutable dirs; a torn prior
-    // attempt at this version left stale files AND possibly stale
-    // memoized relations — drop both before overwriting
-    val coarseDir = f"coarse-v$v%08d"
-    val booksDir = f"codebooks-v$v%08d"
-    artifactCache.remove(s"$indexDir/$coarseDir")
-    artifactCache.remove(s"$indexDir/$booksDir")
-    Ann.coarseCentroids(live, meta.ncells, coarseRefineIters)
-      .write.mode("overwrite").parquet(s"$indexDir/$coarseDir")
-    val storedCoarse = artifact(spark, s"$indexDir/$coarseDir")
-    val trainIn =
-      if (!meta.residual) live
-      else residualsOf(live, storedCoarse)
+    fromShared(LeafStore.rewrite(indexDir, Store, tag, head => {
+      val m = fromShared(head)
+      // the live corpus: committed code ids minus tombstones, re-attached
+      // to raw vectors by id (point-lookup-shaped join against the
+      // embedding store — the topKAgainst rerank discipline, corpus-wide)
+      val liveIds = liveOnly(spark, indexDir, m,
+        codesRaw(spark, indexDir, m).select(col("vec_id"))).distinct()
+      val live = embProvider.join(liveIds, Seq("vec_id"))
         .select(col("vec_id"), col("embedding"))
-    Ann.pqCodebooks(trainIn, meta.m, meta.ksub, meta.subLen, refineIters)
-      .write.mode("overwrite").parquet(s"$indexDir/$booksDir")
-    val leaf = leafName(v, tag)
-    dropLeafResidue(indexDir, "codes", leaf) // torn tagged-replay residue
-    writeCodesLeaf(spark, indexDir, live, leaf,
-      artifact(spark, s"$indexDir/$booksDir"), storedCoarse,
-      meta.subLen, meta.residual)
-    val next = retired(meta).copy(version = v, codebooksDir = booksDir,
-      coarseDir = coarseDir, codeLeaves = Seq(leaf), tombLeaves = Seq.empty)
-    writeMeta(indexDir, next)
-    next
+      // fresh geometry in NEW version-named immutable dirs; a torn prior
+      // attempt at this version left stale files AND possibly stale
+      // memoized relations — drop both before overwriting
+      val (coarseDir, booksDir) = artifactDirs(m.version + 1)
+      artifactCache.remove(s"$indexDir/$coarseDir")
+      artifactCache.remove(s"$indexDir/$booksDir")
+      writeArtifact(Ann.centroidGenerations(live, m.ncells, coarseRefineIters),
+        s"$indexDir/$coarseDir")
+      val storedCoarse = artifact(spark, s"$indexDir/$coarseDir")
+      val trainIn =
+        if (!m.residual) live
+        else residualsOf(live, storedCoarse)
+          .select(col("vec_id"), col("embedding"))
+      writeArtifact(Ann.pqCodebookGenerations(trainIn, m.m, m.ksub, m.subLen,
+        refineIters), s"$indexDir/$booksDir")
+      Seq(Codes -> encoded(live, artifact(spark, s"$indexDir/$booksDir"),
+        storedCoarse, m.subLen, m.residual))
+    }, clearTombs = true, params = (head, _) => {
+      val (coarseDir, booksDir) = artifactDirs(head.version + 1)
+      Map("coarse" -> coarseDir, "codebooks" -> booksDir)
+    }))
   }
+
 
   /** ADC top-k against the PERSISTED index — [[Ann.pqTopKOf]]'s search
     * stage reading (codebooks, codes) from storage instead of training
@@ -746,11 +570,7 @@ object PqIndex {
     * shared resolution every `*At` search uses.
     */
   private def metaAt(indexDir: String, asOfVersion: Long): Meta =
-    IndexManifest.readMetaAt(indexDir, asOfVersion)
-      .map(fromShared).getOrElse(throw new IllegalArgumentException(
-        s"manifest version $asOfVersion is not retained at $indexDir — " +
-          s"time travel reaches the ${IndexManifest.retentionWindow(indexDir)}-" +
-          "version grace window"))
+    fromShared(LeafStore.at(indexDir, asOfVersion))
 
   private def topKSnapshot(spark: SparkSession, indexDir: String,
       meta: Meta, queries: DataFrame, embProvider: DataFrame,
@@ -851,22 +671,12 @@ object PqIndex {
       probeRows.toDF("query_id", "cell")
     }
     // the probed-cell union: bounded by ncells — metadata, never data
-    val probedVals = probeRows.map(_._2).distinct.toArray
-    val codesDf = spark.read.parquet(s"$indexDir/codes")
-    // partition-value inference types `cell` by its values (int when they
-    // fit) — box the probe literals to the inferred type so the pruning
-    // predicate stays cast-free
-    val cellLits: Seq[Any] = codesDf.schema("cell").dataType match {
-      case org.apache.spark.sql.types.IntegerType =>
-        probedVals.toIndexedSeq.map(v => Int.box(v.toInt))
-      case _ => probedVals.toIndexedSeq.map(Long.box)
-    }
-    val probedCodes = liveOnly(spark, indexDir, meta, codesDf
-      .filter(col("leaf").isin(meta.codeLeaves: _*) &&
-        col("cell").isin(cellLits: _*))
-      .select(col("vec_id"), col("m"), col("code"), col("cell")))
+    val probedVals = probeRows.map(_._2).distinct
+    val probedCodes = liveOnly(spark, indexDir, meta,
+      codesIn(spark, indexDir, meta, probedVals)
+        .select(col("vec_id"), col("m"), col("code"), col("cell")))
     val books = artifact(spark, s"$indexDir/${meta.codebooksDir}")
-    val cellType = codesDf.schema("cell").dataType
+    val cellType = IntegerType
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").desc, col("vec_id"))
     // ADC pairing differs by coding mode. Raw mode: one lookup table per
@@ -983,19 +793,12 @@ object PqIndex {
       import spark.implicits._
       probeRows.toDF("query_id", "cell")
     }
-    val probedVals = probeRows.map(_._2).distinct.toArray
-    val codesDf = spark.read.parquet(s"$indexDir/codes")
-    val cellLits: Seq[Any] = codesDf.schema("cell").dataType match {
-      case org.apache.spark.sql.types.IntegerType =>
-        probedVals.toIndexedSeq.map(v => Int.box(v.toInt))
-      case _ => probedVals.toIndexedSeq.map(Long.box)
-    }
-    val probedCodes = liveOnly(spark, indexDir, meta, codesDf
-      .filter(col("leaf").isin(meta.codeLeaves: _*) &&
-        col("cell").isin(cellLits: _*))
-      .select(col("vec_id"), col("m"), col("code"), col("cell")))
+    val probedVals = probeRows.map(_._2).distinct
+    val probedCodes = liveOnly(spark, indexDir, meta,
+      codesIn(spark, indexDir, meta, probedVals)
+        .select(col("vec_id"), col("m"), col("code"), col("cell")))
     val books = artifact(spark, s"$indexDir/${meta.codebooksDir}")
-    val cellType = codesDf.schema("cell").dataType
+    val cellType = IntegerType
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").desc, col("vec_id"))
     val scored =

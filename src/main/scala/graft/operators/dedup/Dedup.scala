@@ -1,12 +1,12 @@
 package graft.operators.dedup
 
-import graft.operators.store.IndexManifest
-import graft.operators.store.IndexManifest.committedOnly
+import graft.operators.store.{IndexManifest, LeafStore}
 import graft.Tables
 import graft.operators.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication family for training-data pipelines.
   *
@@ -297,17 +297,12 @@ object Dedup {
     * scaladoc prescribes, so candidate verification is an id-keyed
     * lookup, never a corpus re-shingle.
     *
-    * Layout: ONE partitioned table per relation —
-    * `bands/bgrp=<g>/leaf=<tag>/` and `sets/sgrp=<g>/leaf=<tag>/` —
-    * where the group is a hash range of the lookup key and `leaf` is
-    * this append's tag. An append only CREATES `leaf=<tag>` dirs (tags
-    * must be unique per append), never touches existing files — the
-    * PqIndex / Materializer immutable-leaf discipline — while the
-    * group-first nesting keeps the whole index one consistently
-    * partitioned relation a screening batch can PRUNE by its touched
-    * groups. (A production deployment would carry the same
-    * manifest-commit + writer fence as the Materializer, elided here
-    * where the single writer is the stream by construction.)
+    * The store is a [[LeafStore]] family (`dedup`): `bands/bgrp=<g>/`
+    * and `sets/sgrp=<g>/` leaves, the group a hash range of the lookup
+    * key, so a screening batch PRUNES its scan to its touched groups.
+    * What the dedup store adds is its BID ORDER: every row carries the
+    * fold's bid, a tombstone kills only strictly older folds, and
+    * compaction keeps each doc's newest surviving fold.
     */
   /** DEFAULT hash-range partition count for the persisted index leaves.
     * Small enough that a screening batch's touched-group list is
@@ -323,23 +318,36 @@ object Dedup {
     */
   val DefaultIndexGroups = 32
 
-  private def metaOf(indexDir: String) =
-    IndexManifest.readMeta(indexDir)
-
-  /** The store's group count: manifest first, default for an empty
-    * store.
-    */
-  private def groupsOf(indexDir: String): Int =
-    metaOf(indexDir).map(_.groups).getOrElse(DefaultIndexGroups)
-
-  // INT group keys: Spark infers integral partition-directory values as
-  // IntegerType on read, so probing with int literals keeps the pruning
-  // predicate cast-free (a long-vs-int mismatch can defeat PartitionFilters)
+  // INT group keys: the stored group columns are declared IntegerType, so
+  // probing with int literals keeps the pruning predicate cast-free (a
+  // long-vs-int mismatch can defeat PartitionFilters)
   private def bandGroup(groups: Int): Column =
     pmod(xxhash64(col("band"), col("bucket")), lit(groups.toLong)).cast("int")
 
   private def setGroup(c: Column, groups: Int): Column =
     pmod(xxhash64(c), lit(groups.toLong)).cast("int")
+
+  private val Sets = LeafStore.Rel("sets", StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("sh", ArrayType(StringType)),
+      StructField("bid", LongType), StructField("sgrp", IntegerType),
+      StructField("leaf", StringType))),
+    Some("sgrp" -> (groups => setGroup(col("doc_id"), groups))))
+
+  private val Bands = LeafStore.Rel("bands", StructType(Seq(
+      StructField("band", IntegerType), StructField("bucket", LongType),
+      StructField("doc_id", LongType), StructField("bid", LongType),
+      StructField("bgrp", IntegerType), StructField("leaf", StringType))),
+    Some("bgrp" -> bandGroup))
+
+  /** The dedup store: set and band relations written together under one
+    * tag per fold, plus bid-ordered tombstones (doc_id, bid).
+    */
+  private[graft] val Store = LeafStore.Family("dedup", Seq(Sets, Bands),
+    LeafStore.Rel("tombs", StructType(Seq(
+      StructField("doc_id", LongType), StructField("bid", LongType),
+      StructField("leaf", StringType)))),
+    DefaultIndexGroups)
 
   /** @param bid the append's position in the fold order (the facade
     *            passes the foreachBatch batch id; -1 = "the bootstrap,
@@ -372,65 +380,17 @@ object Dedup {
       preShingled: Option[DataFrame], indexDir: String, leaf: String,
       numHashes: Int, bands: Int, bid: Long,
       groups: Int): Unit = {
-    IndexManifest.requireTag(leaf, "leaf tag")
-    // IDEMPOTENT fold for at-least-once delivery (foreachBatch replay):
-    // a tag the committed manifest already carries — as a live leaf, or
-    // retired by a later compaction/regroup — is a no-op. The COMMIT
-    // POINT is the manifest publish — leaf directories written before a
-    // crash are invisible residue (readers restrict to committed leaves)
-    // and are dropped before the re-fold, so a replay can never
-    // duplicate rows.
-    val meta = IndexManifest.readMetaOrEmpty(indexDir, groups)
-    if (meta.isDone(leaf)) return
-    if (meta.groups != groups)
-      throw new IllegalStateException(
-        s"$indexDir is grouped at ${meta.groups} but the append says " +
-          s"$groups — a mismatched appender scatters keys across wrong " +
-          "groups; use the store's count, or regroupDedupIndex() offline")
-    val leafDir = IndexManifest.leafName(meta.version + 1, leaf)
-    IndexManifest.dropResidue(indexDir, Seq("sets", "bands"), leafDir)
     // a pre-shingled frame is pinned by its caller; otherwise pin the
-    // pass here for the two writes below
+    // pass here for the two relation writes, which consume it together
     val sh = preShingled.getOrElse(shingledOf(docs).cache())
-    try {
-      // leaves are PARTITIONED by hash range of their lookup key — band
-      // leaves by (band, bucket) hash, set leaves by doc_id hash — so a
-      // later screening batch prunes its scan to the partitions its keys
-      // touch instead of reading every leaf whole. Repartition by the
-      // group first: one file per (leaf, group) instead of one per
-      // (task, group) — without it every task writes every group dir and
-      // the file count (hence later listings and scans) explodes
-      // the two relation writes consume the same pinned shingle frame
-      // into disjoint directories — overlap them (guide §2.6; the
-      // manifest below commits both or neither, unchanged)
-      graft.GraftSession.concurrently(Seq(
-        () => sh.select(col("doc_id"), col("sh"))
-          .withColumn("bid", lit(bid))
-          .withColumn("sgrp", setGroup(col("doc_id"), groups))
-          .withColumn("leaf", lit(leafDir))
-          .repartition(col("sgrp"))
-          .write.partitionBy("sgrp", "leaf")
-          .mode("append").parquet(s"$indexDir/sets"),
-        () => sh.select(col("doc_id"),
-          posexplode(graft.plans.SketchCols.minHashBandBuckets(
-            col("shh"), numHashes, bands)))
-          .withColumnRenamed("pos", "band")
-          .withColumnRenamed("col", "bucket")
-          .select(col("band"), col("bucket"), col("doc_id"))
-          .withColumn("bid", lit(bid))
-          .withColumn("bgrp", bandGroup(groups))
-          .withColumn("leaf", lit(leafDir))
-          .repartition(col("bgrp"))
-          .write.partitionBy("bgrp", "leaf")
-          .mode("append").parquet(s"$indexDir/bands")), maxPar = 2)
-    } finally { if (preShingled.isEmpty) sh.unpersist(); () }
-    IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-      leaves = meta.leaves :+ leafDir))
-    // collect leaves whose last referencing manifest retired past the
-    // grace window (compaction leftovers; crash residue is handled by
-    // dropResidue at the tag that rewrites it)
-    IndexManifest.sweep(indexDir, Seq("sets", "bands", "tombs"),
-      meta.version + 1)
+    try LeafStore.append(indexDir, Store, leaf, groups, Seq(
+        Sets -> sh.select(col("doc_id"), col("sh"), lit(bid).as("bid")),
+        Bands -> sh.select(col("doc_id"),
+            posexplode(graft.plans.SketchCols.minHashBandBuckets(
+              col("shh"), numHashes, bands)))
+          .select(col("pos").as("band"), col("col").as("bucket"),
+            col("doc_id"), lit(bid).as("bid"))))
+    finally { if (preShingled.isEmpty) sh.unpersist(); () }
   }
 
   /** TOMBSTONE deletes for the persisted dedup index — the CDC-sync
@@ -454,21 +414,9 @@ object Dedup {
     * floor once the replay horizon passes.
     */
   def dedupIndexDelete(spark: SparkSession, indexDir: String,
-      ids: DataFrame, leaf: String, bid: Long = Long.MaxValue): Unit = {
-    IndexManifest.requireTag(leaf, "tombstone tag")
-    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultIndexGroups)
-    // tomb leaves survive compaction here, so no tomb tag ever retires
-    if (meta.hasTombTag(leaf)) return
-    val leafDir = IndexManifest.leafName(meta.version + 1, leaf)
-    IndexManifest.dropResidue(indexDir, Seq("tombs"), leafDir)
-    ids.select(col("doc_id")).distinct()
-      .withColumn("bid", lit(bid))
-      .withColumn("leaf", lit(leafDir))
-      .coalesce(1) // a delete batch is id-sized: one file per tag
-      .write.partitionBy("leaf").mode("append").parquet(s"$indexDir/tombs")
-    IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-      tombs = meta.tombs :+ leafDir))
-  }
+      ids: DataFrame, leaf: String, bid: Long = Long.MaxValue): Unit =
+    LeafStore.tombstone(indexDir, Store, leaf,
+      ids.select(col("doc_id"), lit(bid).as("bid")))
 
   /** Clear tombstones at or below the retention floor — the promised
     * consumer-ack device ([[graft.streaming.Graft.compactState]] /
@@ -495,14 +443,9 @@ object Dedup {
     */
   def clearDedupTombstones(spark: SparkSession, indexDir: String,
       floorBid: Long): Int = {
-    val meta = metaOf(indexDir).getOrElse(return 0)
+    val meta = IndexManifest.readMeta(indexDir).getOrElse(return 0)
     if (meta.tombs.isEmpty) return 0
-    // readBidAware, like every other tombs read: a plain read whose
-    // sampled footer predates the bid column would default EVERY leaf's
-    // bid to MaxValue and the floor compare would silently never fire
-    val tombRows = withBidDefault(
-      readBidAware(spark, s"$indexDir/tombs")
-        .filter(col("leaf").isin(meta.tombs: _*)), Long.MaxValue)
+    val tombRows = LeafStore.read(spark, indexDir, Store.tombs, meta)
     // one bid per tomb leaf: the per-leaf max IS the leaf's bid
     val leafBids = tombRows
       .groupBy(col("leaf")).agg(max(col("bid")).as("bid"))
@@ -515,9 +458,7 @@ object Dedup {
     // must stay — clearing it would resurrect the dead fold
     val candidates = tombRows.filter(col("leaf").isin(belowFloor: _*))
       .select(col("doc_id"), col("bid").as("tomb_bid"), col("leaf"))
-    val liveRows = committedOnly(
-        withBidDefault(readBidAware(spark, s"$indexDir/bands"), -1L),
-        meta.leaves)
+    val liveRows = LeafStore.read(spark, indexDir, Bands, meta)
       .select(col("doc_id"), col("bid"))
     val biting = candidates
       .join(liveRows, Seq("doc_id"))
@@ -526,58 +467,19 @@ object Dedup {
       .collect().map(_.getString(0)).toSet
     val cleared = belowFloor.filterNot(biting)
     if (cleared.isEmpty) return 0
-    val clearedSet = cleared.toSet
-    IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-      tombs = meta.tombs.filterNot(clearedSet)))
-    IndexManifest.sweep(indexDir, Seq("sets", "bands", "tombs"),
-      meta.version + 1)
+    LeafStore.clearTombs(indexDir, Store, meta, cleared.toSet)
     cleared.size
   }
 
-  /** Per-doc tombstone watermark (doc_id, tomb_bid) — None when nothing
-    * was ever deleted (the common crawl case — zero cost on the screen
-    * path). Legacy bid-less tombstones read as MaxValue (kill-all, their
-    * original semantics). Restricted to the manifest's committed tomb
-    * leaves; cleared tombstones are invisible the moment the clearing
-    * manifest commits.
+  /** Per-doc tombstone watermark (doc_id, tomb_bid) as `meta` committed
+    * it — None when nothing was ever deleted (the common crawl case —
+    * zero cost on the screen path). Cleared tombstones are invisible the
+    * moment the clearing manifest commits.
     */
-  private def tombstonesOf(spark: SparkSession,
-      indexDir: String): Option[DataFrame] =
-    tombstonesSnapshot(spark, indexDir, metaOf(indexDir))
-
   private def tombstonesSnapshot(spark: SparkSession, indexDir: String,
-      meta: Option[IndexManifest.Meta])
-      : Option[DataFrame] = {
-    val live = meta.toSeq.flatMap(_.tombs)
-    if (live.isEmpty) None
-    else Some(committedOnly(
-        withBidDefault(readBidAware(spark, s"$indexDir/tombs"),
-          Long.MaxValue), live)
-      .groupBy(col("doc_id")).agg(max(col("bid")).as("tomb_bid")))
-  }
-
-  /** `bid` with a default for relations written before the column existed
-    * (or rows from bid-less leaves under a merged schema): tombstones
-    * default to kill-all, data rows to "the bootstrap".
-    */
-  private def withBidDefault(df: DataFrame, dflt: Long): DataFrame =
-    if (df.columns.contains("bid"))
-      df.withColumn("bid", coalesce(col("bid"), lit(dflt)))
-    else df.withColumn("bid", lit(dflt))
-
-  /** Read an index relation bid-aware WITHOUT paying per-leaf footer
-    * merging on the hot path: every append since the bid column exists
-    * writes it, so the sampled schema normally has it and the plain read
-    * suffices (files that lack a schema column surface it as null —
-    * [[withBidDefault]] fills the default). Only when the SAMPLE predates
-    * the column (a legacy index) does the read fall back to mergeSchema
-    * to find bids in newer leaves.
-    */
-  private def readBidAware(spark: SparkSession, path: String): DataFrame = {
-    val plain = spark.read.parquet(path)
-    if (plain.columns.contains("bid")) plain
-    else spark.read.option("mergeSchema", "true").parquet(path)
-  }
+      meta: IndexManifest.Meta): Option[DataFrame] =
+    LeafStore.tombRows(spark, indexDir, Store, meta).map(
+      _.groupBy(col("doc_id")).agg(max(col("bid")).as("tomb_bid")))
 
   /** COMPACT the dedup index's per-batch leaves into one leaf per
     * relation — the small-file maintenance pass the crawl loop needs
@@ -586,37 +488,24 @@ object Dedup {
     * the screen's pruned scan pays N listings + opens per touched
     * group. Row content is copied verbatim (each doc lives in exactly
     * one leaf, so the union has no duplicates) — screening against the
-    * compacted index is IDENTICAL row-for-row.
-    *
-    * ONLINE-SAFE: the commit point is a manifest publish, and
-    * superseded leaves are retained for the full manifest grace window
-    * — a screen that planned its scan against any retained manifest
-    * (its leaf list is a partition filter) still finds every file it
-    * references while this compaction, and the commits after it, keep
-    * landing; the old leaves are collected only once no retained
-    * manifest names them (the Materializer/PqIndex/Iceberg vacuum
-    * rule). Crash-safe and replayable: a torn attempt's leaf residue is
-    * dropped and re-folded (residue is invisible to readers — they
-    * restrict to committed leaves), and a `tag` the manifest already
-    * carries skips straight to the sweep. Tombstone leaves are RETAINED
-    * (the replay guard: a re-delivered delete batch must no-op on its
-    * tag); [[clearDedupTombstones]] expires them at the consumer-ack
-    * floor. Writer concurrency follows the store's single-writer
-    * contract — schedule compaction from the crawl loop's own cadence.
+    * compacted index is IDENTICAL row-for-row. Online-safe and
+    * replayable as every [[LeafStore.rewrite]] is. Tombstone leaves are
+    * RETAINED (the replay guard: a re-delivered delete batch must no-op
+    * on its tag); [[clearDedupTombstones]] expires them at the
+    * consumer-ack floor.
     */
   def compactDedupIndex(spark: SparkSession, indexDir: String,
-      tag: String): Unit = {
-    IndexManifest.requireTag(tag, "compaction tag")
-    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultIndexGroups)
-    if (!meta.isDone(tag)) {
-      val leafDir = IndexManifest.leafName(meta.version + 1, tag)
-      IndexManifest.dropResidue(indexDir, Seq("sets", "bands"), leafDir)
+      tag: String): Unit =
+    LeafStore.rewrite(indexDir, Store, tag, meta => {
       // DEAD rows (tombstoned at a bid above theirs) and SUPERSEDED
       // generations (a newer fold of the same doc exists) both leave
       // PHYSICALLY here: only each doc's newest fold survives — and only
       // if no tombstone outranks it. Both reductions are ids+bids only.
-      val tombs = tombstonesOf(spark, indexDir)
-      def survivors(df: DataFrame): DataFrame = {
+      // Bids are PRESERVED so retained tombstones keep ranking below
+      // survivors.
+      val tombs = tombstonesSnapshot(spark, indexDir, meta)
+      def survivors(rel: LeafStore.Rel): DataFrame = {
+        val df = LeafStore.read(spark, indexDir, rel, meta)
         val newest = df.groupBy(col("doc_id")).agg(max(col("bid")).as("mbid"))
         val alive = tombs.fold(newest)(t =>
           newest.join(broadcast(t), Seq("doc_id"), "left")
@@ -625,39 +514,8 @@ object Dedup {
         df.join(alive, df("doc_id") === alive("doc_id") &&
             df("bid") === alive("mbid"), "left_semi")
       }
-      // fold the committed leaves' surviving rows into one new leaf per
-      // relation. Bids are PRESERVED so retained tombstones keep ranking
-      // below survivors.
-      // the two relation folds are independent reads+writes of disjoint
-      // directories — overlap them (guide §2.6)
-      graft.GraftSession.concurrently(Seq(
-        () => survivors(committedOnly(
-            withBidDefault(readBidAware(spark, s"$indexDir/sets"), -1L),
-            meta.leaves)
-          .select(col("doc_id"), col("sh"), col("bid"), col("sgrp")))
-          .withColumn("leaf", lit(leafDir))
-          .repartition(col("sgrp"))
-          .write.partitionBy("sgrp", "leaf")
-          .mode("append").parquet(s"$indexDir/sets"),
-        () => survivors(committedOnly(
-            withBidDefault(readBidAware(spark, s"$indexDir/bands"), -1L),
-            meta.leaves)
-          .select(col("band"), col("bucket"), col("doc_id"), col("bid"),
-            col("bgrp")))
-          .withColumn("leaf", lit(leafDir))
-          .repartition(col("bgrp"))
-          .write.partitionBy("bgrp", "leaf")
-          .mode("append").parquet(s"$indexDir/bands")), maxPar = 2)
-      // THE commit: the next manifest references only the new leaf (and
-      // the retained tombstones); the folded leaves' tags retire
-      IndexManifest.commit(indexDir, meta.retiring(meta.leaves).copy(
-        version = meta.version + 1, leaves = Seq(leafDir)))
-    }
-    // collect only leaves NO retained manifest references — in-flight
-    // readers planned against retained manifests keep their files
-    IndexManifest.sweep(indexDir, Seq("sets", "bands", "tombs"),
-      metaOf(indexDir).map(_.version).getOrElse(meta.version))
-  }
+      Seq(Sets -> survivors(Sets), Bands -> survivors(Bands))
+    }, clearTombs = false)
 
   /** Committed leaf count per relation — the leaf census
     * [[compactDedupIndex]]'s harness gates (4 appends in, 1 referenced
@@ -666,7 +524,7 @@ object Dedup {
     * store, merely not yet collected).
     */
   def indexLeafCount(spark: SparkSession, indexDir: String): Int =
-    metaOf(indexDir).fold(0)(_.leaves.size)
+    LeafStore.leafCount(indexDir)
 
   /** Re-key the WHOLE index into `newGroups` hash-range partitions —
     * the maintenance move for when the fleet outgrows the group dial
@@ -686,33 +544,9 @@ object Dedup {
   def regroupDedupIndex(spark: SparkSession, indexDir: String,
       newGroups: Int, tag: String): Unit = {
     require(newGroups > 0, "newGroups must be positive")
-    IndexManifest.requireTag(tag, "regroup tag")
-    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultIndexGroups)
-    if (meta.isDone(tag)) return
-    val leafDir = IndexManifest.leafName(meta.version + 1, tag)
-    IndexManifest.dropResidue(indexDir, Seq("sets", "bands"), leafDir)
-    committedOnly(
-        withBidDefault(readBidAware(spark, s"$indexDir/sets"), -1L),
-        meta.leaves)
-      .select(col("doc_id"), col("sh"), col("bid"))
-      .withColumn("sgrp", setGroup(col("doc_id"), newGroups))
-      .withColumn("leaf", lit(leafDir))
-      .repartition(col("sgrp"))
-      .write.partitionBy("sgrp", "leaf")
-      .mode("append").parquet(s"$indexDir/sets")
-    committedOnly(
-        withBidDefault(readBidAware(spark, s"$indexDir/bands"), -1L),
-        meta.leaves)
-      .select(col("band"), col("bucket"), col("doc_id"), col("bid"))
-      .withColumn("bgrp", bandGroup(newGroups))
-      .withColumn("leaf", lit(leafDir))
-      .repartition(col("bgrp"))
-      .write.partitionBy("bgrp", "leaf")
-      .mode("append").parquet(s"$indexDir/bands")
-    IndexManifest.commit(indexDir, meta.retiring(meta.leaves).copy(
-      version = meta.version + 1, groups = newGroups, leaves = Seq(leafDir)))
-    IndexManifest.sweep(indexDir, Seq("sets", "bands", "tombs"),
-      meta.version + 1)
+    LeafStore.rewrite(indexDir, Store, tag,
+      meta => Store.rels.map(rel => rel -> LeafStore.read(spark, indexDir, rel, meta)),
+      clearTombs = false, groups = Some(newGroups))
   }
 
   /** dd19's driver-checked shape — dd11's planting theorem THROUGH
@@ -807,7 +641,7 @@ object Dedup {
     val indexDir = s"$tmp/index"
     dedupIndexAppend(base.filter(col("doc_id") % 2 === 0), indexDir, "c1",
       bid = 0L)
-    val v1 = metaOf(indexDir).get.version
+    val v1 = IndexManifest.readMeta(indexDir).get.version
     dedupIndexAppend(base.filter(col("doc_id") % 2 === 1), indexDir, "c2",
       bid = 1L)
     dedupIndexDelete(spark, indexDir,
@@ -847,7 +681,7 @@ object Dedup {
   def screenAgainstIndex(spark: SparkSession, indexDir: String,
       batch: DataFrame, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8): DataFrame =
-    screenSnapshot(spark, indexDir, metaOf(indexDir), batch,
+    screenSnapshot(spark, indexDir, LeafStore.head(indexDir, Store), batch,
       numHashes, bands, threshold)
 
   /** [[screenAgainstIndex]] over a PRE-SHINGLED batch frame (the
@@ -860,7 +694,7 @@ object Dedup {
   private[graft] def screenAgainstIndexShingled(spark: SparkSession,
       indexDir: String, bsh: DataFrame, numHashes: Int = 64,
       bands: Int = 16, threshold: Double = 0.8): DataFrame =
-    screenSnapshot(spark, indexDir, metaOf(indexDir),
+    screenSnapshot(spark, indexDir, LeafStore.head(indexDir, Store),
       batch = bsh.sparkSession.emptyDataFrame, numHashes, bands, threshold,
       preShingled = Some(bsh))
 
@@ -881,18 +715,12 @@ object Dedup {
     */
   def screenAgainstIndexAt(spark: SparkSession, indexDir: String,
       batch: DataFrame, asOfVersion: Long, numHashes: Int = 64,
-      bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    val meta = IndexManifest.readMetaAt(indexDir, asOfVersion).getOrElse(
-      throw new IllegalArgumentException(
-        s"manifest version $asOfVersion is not retained at $indexDir — " +
-          s"time travel reaches the ${IndexManifest.retentionWindow(indexDir)}-" +
-          "version grace window"))
-    screenSnapshot(spark, indexDir, Some(meta), batch,
-      numHashes, bands, threshold)
-  }
+      bands: Int = 16, threshold: Double = 0.8): DataFrame =
+    screenSnapshot(spark, indexDir, LeafStore.at(indexDir, asOfVersion),
+      batch, numHashes, bands, threshold)
 
   private def screenSnapshot(spark: SparkSession, indexDir: String,
-      meta: Option[IndexManifest.Meta],
+      meta: IndexManifest.Meta,
       batch: DataFrame, numHashes: Int, bands: Int,
       threshold: Double, preShingled: Option[DataFrame] = None): DataFrame = {
     // resolve ONE manifest for the whole screen: leaf lists and the
@@ -900,8 +728,7 @@ object Dedup {
     // consistent snapshot even while appends/compactions keep landing
     // (retained manifests keep their leaves on disk for the grace
     // window — this plan stays executable across later commits)
-    val live = meta.toSeq.flatMap(_.leaves)
-    val ngroups = meta.map(_.groups).getOrElse(DefaultIndexGroups)
+    val ngroups = meta.groups
     // ONE shingle pass for the whole screen: the frame feeds the
     // touched-group collect below, the candidate band join AND the
     // verify-stage set attach — unpinned, the batch tokenized+minhashed
@@ -921,12 +748,10 @@ object Dedup {
       .withColumnRenamed("col", "bucket")
     val groups = batchBands.select(bandGroup(ngroups).as("bgrp")).distinct()
       .collect().map(r => Int.box(r.getInt(0))).toSeq
-    val index = committedOnly(
-        withBidDefault(readBidAware(spark, s"$indexDir/bands"), -1L), live)
+    val index = LeafStore.read(spark, indexDir, Bands, meta)
       .filter(col("bgrp").isin(groups: _*))
       .select(col("band"), col("bucket"), col("doc_id"))
-    val sets = committedOnly(
-      withBidDefault(readBidAware(spark, s"$indexDir/sets"), -1L), live)
+    val sets = LeafStore.read(spark, indexDir, Sets, meta)
     val cand = batchBands
       .join(index, Seq("band", "bucket"))
       .select(col("batch_id"), col("doc_id").as("corpus_id"))
@@ -1023,14 +848,10 @@ object Dedup {
     * text side).
     */
   def indexedLiveIds(spark: SparkSession, indexDir: String): DataFrame = {
-    val live = metaOf(indexDir).toSeq.flatMap(_.leaves)
-    // an index that never folded anything (the catch-up bootstrap case)
-    // has no committed leaves — and possibly no sets directory at all
-    if (live.isEmpty) return spark.range(0).select(col("id").as("doc_id"))
-    val newest = committedOnly(
-        withBidDefault(readBidAware(spark, s"$indexDir/sets"), -1L), live)
+    val meta = LeafStore.head(indexDir, Store)
+    val newest = LeafStore.read(spark, indexDir, Sets, meta)
       .groupBy(col("doc_id")).agg(max(col("bid")).as("newest_bid"))
-    tombstonesOf(spark, indexDir).fold(newest)(t =>
+    tombstonesSnapshot(spark, indexDir, meta).fold(newest)(t =>
       newest.join(broadcast(t), Seq("doc_id"), "left")
         .filter(col("tomb_bid").isNull || col("newest_bid") >= col("tomb_bid")))
       .select(col("doc_id"))
@@ -1046,76 +867,24 @@ object Dedup {
     * single-build index's (group keys are recomputed against the
     * destination's dial, which also lets shards with different dials
     * merge). Tombstones ride along with their bids (a delete known to
-    * any shard stays a delete). Tag-idempotent and crash-replayable
-    * under the same manifest discipline as every other commit.
+    * any shard stays a delete), one tomb leaf per (source, bid)
+    * ([[LeafStore.merge]]).
     */
   def mergeDedupIndexes(spark: SparkSession, srcDirs: Seq[String],
       destDir: String, tag: String,
-      groups: Int = DefaultIndexGroups): Unit = {
-    require(srcDirs.nonEmpty, "mergeDedupIndexes needs at least one source")
-    IndexManifest.requireTag(tag, "merge tag")
-    val dest = IndexManifest.readMetaOrEmpty(destDir, groups)
-    if (dest.isDone(tag)) return
-    if (dest.groups != groups)
-      throw new IllegalStateException(
-        s"$destDir is grouped at ${dest.groups} but the merge says " +
-          s"$groups — use the destination's dial")
-    val leafDir = IndexManifest.leafName(dest.version + 1, tag)
-    IndexManifest.dropResidue(destDir, Seq("sets", "bands", "tombs"), leafDir)
-    def srcRel(dir: String, rel: String, cols: Seq[String]): Option[DataFrame] = {
-      val live = metaOf(dir).toSeq.flatMap(_.liveOf(rel))
-      if (live.isEmpty) None
-      else Some(committedOnly(withBidDefault(
-          readBidAware(spark, s"$dir/$rel"),
-          if (rel == "tombs") Long.MaxValue else -1L), live)
-        .select(cols.map(col): _*))
-    }
-    def unionAll(rel: String, cols: Seq[String]): Option[DataFrame] =
-      srcDirs.flatMap(srcRel(_, rel, cols)).reduceOption(_ unionByName _)
-    unionAll("sets", Seq("doc_id", "sh", "bid")).foreach {
-      _.withColumn("sgrp", setGroup(col("doc_id"), groups))
-        .withColumn("leaf", lit(leafDir))
-        .repartition(col("sgrp"))
-        .write.partitionBy("sgrp", "leaf")
-        .mode("append").parquet(s"$destDir/sets")
-    }
-    unionAll("bands", Seq("band", "bucket", "doc_id", "bid")).foreach {
-      _.withColumn("bgrp", bandGroup(groups))
-        .withColumn("leaf", lit(leafDir))
-        .repartition(col("bgrp"))
-        .write.partitionBy("bgrp", "leaf")
-        .mode("append").parquet(s"$destDir/bands")
-    }
+      groups: Int = DefaultIndexGroups): Unit =
     // tombstones keep the ONE-BID-PER-LEAF invariant across the merge
     // ([[clearDedupTombstones]]'s per-leaf floor compare depends on it —
     // a mixed-bid leaf is only clearable once its MAX bid passes the
-    // floor, retaining the rest indefinitely): one destination tomb
-    // leaf per (source, distinct bid), names deterministic so a torn
-    // replay rewrites the same directories. Bids are compared as ONE
-    // space — sources whose doc_id sets overlap must share a bid space
-    // (the facade's monotone-bid contract), else a doc alive in its own
-    // shard could read dead under another shard's higher tombstone.
-    val tombsMerged = srcDirs.zipWithIndex.flatMap { case (dir, i) =>
-      srcRel(dir, "tombs", Seq("doc_id", "bid")).toSeq.flatMap { t =>
-        val bids = t.select(col("bid")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        bids.zipWithIndex.map { case (b, j) =>
-          val tl = IndexManifest.leafName(dest.version + 1, s"$tag-t$i-$j")
-          IndexManifest.dropResidue(destDir, Seq("tombs"), tl)
-          t.filter(col("bid") === b)
-            .withColumn("leaf", lit(tl))
-            .coalesce(1)
-            .write.partitionBy("leaf").mode("append").parquet(s"$destDir/tombs")
-          tl
-        }
-      }
-    }
-    IndexManifest.commit(destDir, dest.copy(version = dest.version + 1,
-      leaves = dest.leaves :+ leafDir,
-      tombs = dest.tombs ++ tombsMerged))
-    IndexManifest.sweep(destDir, Seq("sets", "bands", "tombs"),
-      dest.version + 1)
-  }
+    // floor, retaining the rest indefinitely): one destination tomb leaf
+    // per (source, distinct bid). Bids are compared as ONE space —
+    // sources whose doc_id sets overlap must share a bid space (the
+    // facade's monotone-bid contract), else a doc alive in its own shard
+    // could read dead under another shard's higher tombstone.
+    LeafStore.merge(spark, srcDirs, destDir, Store, tag, groups,
+      splitTombs = t => t.select(col("bid")).distinct()
+        .collect().map(_.getLong(0)).sorted.toSeq
+        .map(b => t.filter(col("bid") === b)))
 
   /** dd22's driver-checked shape — the planting theorem through the
     * SHARDED build: the corpus splits across TWO shard indexes (built

@@ -1,6 +1,6 @@
 package graft.operators.multimodal
 
-import graft.operators.store.IndexManifest
+import graft.operators.store.{IndexManifest, LeafStore}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
@@ -566,98 +566,46 @@ object Multimodal {
     */
   val DefaultAHashGroups = 32
 
-  private def metaOf(indexDir: String) =
-    IndexManifest.readMeta(indexDir)
-
-  private def groupsOf(indexDir: String): Int =
-    metaOf(indexDir).map(_.groups).getOrElse(DefaultAHashGroups)
-
   private def ahashGroup(groups: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(col("ahash_hi"), col("ahash_lo")),
       lit(groups.toLong)).cast("int")
 
-  /** Generic manifest-committed leaf append for the two multimodal index
-    * relations (`hashes`, `chunks` — ONE relation per index directory):
-    * tag-idempotent against the committed manifest, crash residue
-    * dropped before the re-write, manifest publish as the commit point,
-    * long-unreferenced leaves swept after (the
-    * [[graft.operators.store.IndexManifest]] discipline — readers
-    * restricted to committed leaves never see residue, and readers
-    * planned against retained manifests keep their files across later
-    * commits including compactions).
-    */
-  private def mmIndexAppend(rows: DataFrame, indexDir: String, rel: String,
-      grpCol: Int => org.apache.spark.sql.Column, grpName: String,
-      leaf: String, groups: Int): Unit = {
-    IndexManifest.requireTag(leaf, "leaf tag")
-    val meta = IndexManifest.readMetaOrEmpty(indexDir, groups)
-    if (meta.isDone(leaf)) return
-    if (meta.groups != groups)
-      throw new IllegalStateException(
-        s"$indexDir is grouped at ${meta.groups} but the append says " +
-          s"$groups — a mismatched appender scatters keys across wrong " +
-          "groups; use the store's count, or regroup offline")
-    val leafDir = IndexManifest.leafName(meta.version + 1, leaf)
-    IndexManifest.dropResidue(indexDir, Seq(rel), leafDir)
-    rows
-      .withColumn(grpName, grpCol(groups))
-      .withColumn("leaf", lit(leafDir))
-      .repartition(col(grpName))
-      .write.partitionBy(grpName, "leaf")
-      .mode("append").parquet(s"$indexDir/$rel")
-    IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-      leaves = meta.leaves :+ leafDir))
-    IndexManifest.sweep(indexDir, Seq(rel, "tombs"), meta.version + 1)
-  }
+  private def chunkGroup(groups: Int): org.apache.spark.sql.Column =
+    pmod(xxhash64(col("chunk_idx"), col("chunk")),
+      lit(groups.toLong)).cast("int")
 
-  /** KILL-ALL tombstone deletes for a multimodal index — the TAKEDOWN
-    * path (a replica DELETE, a GDPR/abuse takedown) that must leave the
-    * perceptual indexes without rewriting any committed leaf: deletes
-    * commit as immutable id-leaves (`tombs/leaf=v<N>-<tag>`, parquet of
-    * `media_id`) under the same tag-idempotent exclusive-publish
-    * manifest discipline as appends. Semantics are
-    * [[graft.operators.ann.PqIndex.delete]]'s, NOT the dedup index's
-    * bid order: a tombstone kills EVERY row of its media_id — current
-    * and future folds alike — until [[mmIndexCompact]] drops the dead
-    * rows physically and clears the set, after which a re-crawl
-    * restores the media (the resurrection contract
-    * [[graft.streaming.Graft.syncVectorIndex]] automates; deletes are
-    * bounded between compactions, so the screens' anti-join side stays
-    * broadcast-small). Every screen anti-joins the tombstone set
-    * BEFORE its verify/distinct cut — dead content can neither match
-    * nor consume verify work.
-    */
-  private def mmIndexDelete(spark: SparkSession, indexDir: String,
-      rel: String, ids: DataFrame, leaf: String): Unit = {
-    IndexManifest.requireTag(leaf, "tombstone tag")
-    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultAHashGroups)
-    if (meta.isDoneTomb(leaf)) return
-    val leafDir = IndexManifest.leafName(meta.version + 1, leaf)
-    IndexManifest.dropResidue(indexDir, Seq("tombs"), leafDir)
-    ids.select(col("media_id").cast("long").as("media_id")).distinct()
-      .withColumn("leaf", lit(leafDir))
-      .coalesce(1) // a delete batch is id-sized: one file per tag
-      .write.partitionBy("leaf").mode("append").parquet(s"$indexDir/tombs")
-    IndexManifest.commit(indexDir, meta.copy(version = meta.version + 1,
-      tombs = meta.tombs :+ leafDir))
-  }
+  private val Hashes = LeafStore.Rel("hashes", StructType(Seq(
+      StructField("media_id", LongType), StructField("ahash_hi", LongType),
+      StructField("ahash_lo", LongType), StructField("hgrp", IntegerType),
+      StructField("leaf", StringType))),
+    Some("hgrp" -> ahashGroup))
 
-  /** The committed tombstoned media_ids (None when nothing was ever
-    * deleted — zero cost on the screen path, the common crawl case).
-    */
-  private def mmTombstones(spark: SparkSession,
-      indexDir: String): Option[DataFrame] =
-    mmTombstonesSnapshot(spark, indexDir, metaOf(indexDir))
+  private val Chunks = LeafStore.Rel("chunks", StructType(Seq(
+      StructField("media_id", LongType), StructField("ahash_hi", LongType),
+      StructField("ahash_lo", LongType), StructField("chunk_idx", IntegerType),
+      StructField("chunk", LongType), StructField("cgrp", IntegerType),
+      StructField("leaf", StringType))),
+    Some("cgrp" -> chunkGroup))
 
-  private def mmTombstonesSnapshot(spark: SparkSession, indexDir: String,
-      meta: Option[IndexManifest.Meta])
-      : Option[DataFrame] = {
-    val live = meta.toSeq.flatMap(_.tombs)
-    if (live.isEmpty) None
-    else Some(IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/tombs"), live)
-      .select(col("media_id")).distinct())
-  }
+  private val MediaTombs = LeafStore.Rel("tombs", StructType(Seq(
+    StructField("media_id", LongType), StructField("leaf", StringType))))
+
+  /** The two multimodal index families — ONE relation per index
+    * directory (the equality hash index, the Hamming chunk index), each
+    * with kill-all media_id tombstones. Semantics are
+    * [[graft.operators.ann.PqIndex.delete]]'s, NOT the dedup index's bid
+    * order: a tombstone kills EVERY row of its media_id — current and
+    * future folds alike — until a compaction drops the dead rows
+    * physically and clears the set, after which a re-crawl restores the
+    * media (the resurrection contract
+    * [[graft.streaming.Graft.syncVectorIndex]] automates). Every screen
+    * anti-joins the tombstone set BEFORE its verify/distinct cut — dead
+    * content can neither match nor consume verify work.
+    */
+  private[graft] val HashStore = LeafStore.Family("ahash", Seq(Hashes),
+    MediaTombs, DefaultAHashGroups)
+  private[graft] val ChunkStore = LeafStore.Family("hamming", Seq(Chunks),
+    MediaTombs, DefaultAHashGroups)
 
   /** The committed tombstoned media_ids as a relation (empty when none)
     * — public so reconcile jobs
@@ -666,76 +614,45 @@ object Multimodal {
     * [[graft.operators.ann.PqIndex.tombstonedIds]] rationale.
     */
   def mmTombstonedIds(spark: SparkSession, indexDir: String): DataFrame =
-    mmTombstones(spark, indexDir)
-      .getOrElse(spark.range(0).select(col("id").as("media_id")))
+    LeafStore.tombstonedIds(spark, indexDir, HashStore)
 
   /** The index's LIVE media_ids — every committed row's id minus the
     * tombstone set (what the screens can still match): the
     * reconcile-job diff base ([[graft.operators.dedup.Dedup.indexedLiveIds]]
-    * on the multimodal axis). One ids-only distinct over the committed
-    * relation plus the broadcast tombstone anti-join.
+    * on the multimodal axis).
     */
   def mmIndexedLiveIds(spark: SparkSession, indexDir: String,
       rel: String = "hashes"): DataFrame = {
-    val live = metaOf(indexDir).toSeq.flatMap(_.leaves)
-    if (live.isEmpty) return spark.range(0).select(col("id").as("media_id"))
-    val ids = IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/$rel"), live)
-      .select(col("media_id")).distinct()
-    mmTombstones(spark, indexDir).fold(ids)(t =>
-      ids.join(broadcast(t), Seq("media_id"), "left_anti"))
+    val store = if (rel == Chunks.name) ChunkStore else HashStore
+    LeafStore.liveIds(spark, indexDir, store, store.rels.head)
   }
 
-  /** Anti-join a screen's candidate side against the committed
-    * tombstones — applied BEFORE the verify/distinct cut so dead
-    * content neither matches nor consumes verify work. Broadcast: the
-    * tombstone relation is bounded by deletes since the last
-    * compaction.
+  /** Anti-join a screen's candidate side against `meta`'s tombstones —
+    * applied BEFORE the verify/distinct cut so dead content neither
+    * matches nor consumes verify work. Broadcast: the tombstone relation
+    * is bounded by deletes since the last compaction.
     */
   private def withoutTombstoned(spark: SparkSession, indexDir: String,
-      cands: DataFrame,
-      meta: Option[IndexManifest.Meta]): DataFrame =
-    mmTombstonesSnapshot(spark, indexDir, meta).fold(cands)(t =>
-      cands.join(broadcast(t.withColumnRenamed("media_id", "corpus_id")),
+      cands: DataFrame, meta: IndexManifest.Meta): DataFrame =
+    LeafStore.tombRows(spark, indexDir, HashStore, meta).fold(cands)(t =>
+      cands.join(broadcast(t.distinct().withColumnRenamed("media_id", "corpus_id")),
         Seq("corpus_id"), "left_anti"))
 
   /** Fold every committed leaf's rows into ONE new leaf — the
     * small-file maintenance pass the crawl loops need (after N
     * micro-batches every group partition holds N tiny files). LIVE rows
-    * are copied VERBATIM (group values are a pure function of row
-    * content, unchanged) while TOMBSTONED rows drop out physically and
+    * are copied VERBATIM while TOMBSTONED rows drop out physically and
     * the tombstone set clears — deletes are already invisible to every
-    * screen, so the compacted relation is screen-identical — and
-    * ONLINE-SAFE: the old leaves stay on disk for the manifest grace
-    * window, so a screen planned before the compaction still finds its
-    * files.
+    * screen, so the compacted relation is screen-identical.
     */
   private def mmIndexCompact(spark: SparkSession, indexDir: String,
-      rel: String, grpName: String, tag: String): Unit = {
-    IndexManifest.requireTag(tag, "compaction tag")
-    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultAHashGroups)
-    if (!meta.isDone(tag)) {
-      val leafDir = IndexManifest.leafName(meta.version + 1, tag)
-      IndexManifest.dropResidue(indexDir, Seq(rel), leafDir)
-      val src = IndexManifest.committedOnly(
-          spark.read.parquet(s"$indexDir/$rel"), meta.leaves)
-        .drop("leaf")
-      // tombstoned media drop out physically; the rewritten index
-      // carries an empty tombstone set (the PqIndex.compact contract —
-      // a later re-crawl of a deleted media restores it)
-      val live = mmTombstones(spark, indexDir).fold(src)(t =>
-        src.join(broadcast(t), Seq("media_id"), "left_anti"))
-      live
-        .withColumn("leaf", lit(leafDir))
-        .repartition(col(grpName))
-        .write.partitionBy(grpName, "leaf")
-        .mode("append").parquet(s"$indexDir/$rel")
-      IndexManifest.commit(indexDir,
-        meta.retiring(meta.leaves ++ meta.tombs).copy(
-          version = meta.version + 1, leaves = Seq(leafDir), tombs = Seq.empty))
-    }
-    IndexManifest.sweep(indexDir, Seq(rel, "tombs"),
-      metaOf(indexDir).map(_.version).getOrElse(meta.version))
+      store: LeafStore.Family, tag: String): Unit = {
+    val rel = store.rels.head
+    LeafStore.rewrite(indexDir, store, tag, meta => {
+      val src = LeafStore.read(spark, indexDir, rel, meta)
+      Seq(rel -> LeafStore.tombRows(spark, indexDir, store, meta).fold(src)(t =>
+        src.join(broadcast(t.distinct()), Seq("media_id"), "left_anti")))
+    }, clearTombs = true)
   }
 
   /** Re-key the whole relation into `newGroups` hash-range partitions —
@@ -743,135 +660,65 @@ object Multimodal {
     * manifest records the new dial and old-dial appends are refused.
     */
   private def mmIndexRegroup(spark: SparkSession, indexDir: String,
-      rel: String, grpCol: Int => org.apache.spark.sql.Column,
-      grpName: String, newGroups: Int, tag: String): Unit = {
+      store: LeafStore.Family, newGroups: Int, tag: String): Unit = {
     require(newGroups > 0, "newGroups must be positive")
-    IndexManifest.requireTag(tag, "regroup tag")
-    val meta = IndexManifest.readMetaOrEmpty(indexDir, DefaultAHashGroups)
-    if (meta.isDone(tag)) return
-    val leafDir = IndexManifest.leafName(meta.version + 1, tag)
-    IndexManifest.dropResidue(indexDir, Seq(rel), leafDir)
-    IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/$rel"), meta.leaves)
-      .drop("leaf").drop(grpName)
-      .withColumn(grpName, grpCol(newGroups))
-      .withColumn("leaf", lit(leafDir))
-      .repartition(col(grpName))
-      .write.partitionBy(grpName, "leaf")
-      .mode("append").parquet(s"$indexDir/$rel")
-    IndexManifest.commit(indexDir, meta.retiring(meta.leaves).copy(
-      version = meta.version + 1, groups = newGroups, leaves = Seq(leafDir)))
-    IndexManifest.sweep(indexDir, Seq(rel, "tombs"), meta.version + 1)
+    val rel = store.rels.head
+    LeafStore.rewrite(indexDir, store, tag,
+      meta => Seq(rel -> LeafStore.read(spark, indexDir, rel, meta)),
+      clearTombs = false, groups = Some(newGroups))
   }
 
   /** Committed leaf count — the census the compaction harnesses gate
     * (N appends in, 1 referenced out; retained-but-superseded
     * directories don't count).
     */
-  def mmIndexLeafCount(indexDir: String): Int =
-    metaOf(indexDir).map(_.leaves.size).getOrElse(0)
+  def mmIndexLeafCount(indexDir: String): Int = LeafStore.leafCount(indexDir)
 
   /** MERGE several multimodal indexes into one — the scale-out BUILD
     * path (dd22's device on the perceptual stores): a 100 TB media
     * corpus hashes as N independent shards (each a plain append over
     * its slice, no coordination), then one merge folds the shards'
-    * committed rows into the destination as a single
-    * manifest-committed leaf. Rows are PURE per-media functions — only
+    * committed rows into the destination as a single leaf
+    * ([[LeafStore.merge]]). Rows are PURE per-media functions — only
     * the group key depends on the dial — so the merged index is
-    * row-identical to a single build (group keys recomputed against
-    * the destination's dial; mixed-dial shards merge fine). Tombstones
-    * ride as one destination leaf per source (kill-all ids — a delete
-    * known to any shard stays a delete; overlapping media_id spaces
-    * therefore OR their deletes). Tag-idempotent and crash-replayable
-    * under the same manifest discipline as every other commit.
+    * row-identical to a single build; kill-all tombstones ride per
+    * source (overlapping media_id spaces therefore OR their deletes).
     */
-  private def mmIndexMerge(spark: SparkSession, srcDirs: Seq[String],
-      destDir: String, rel: String,
-      grpCol: Int => org.apache.spark.sql.Column, grpName: String,
-      tag: String, groups: Int): Unit = {
-    require(srcDirs.nonEmpty, "mmIndexMerge needs at least one source")
-    IndexManifest.requireTag(tag, "merge tag")
-    val dest = IndexManifest.readMetaOrEmpty(destDir, groups)
-    if (dest.isDone(tag)) return
-    if (dest.groups != groups)
-      throw new IllegalStateException(
-        s"$destDir is grouped at ${dest.groups} but the merge says " +
-          s"$groups — use the destination's dial")
-    val leafDir = IndexManifest.leafName(dest.version + 1, tag)
-    IndexManifest.dropResidue(destDir, Seq(rel), leafDir)
-    def srcRel(dir: String, r: String): Option[DataFrame] = {
-      val live = metaOf(dir).toSeq.flatMap(_.liveOf(r))
-      if (live.isEmpty) None
-      else Some(IndexManifest.committedOnly(
-        spark.read.parquet(s"$dir/$r"), live))
-    }
-    srcDirs.flatMap(srcRel(_, rel).map(_.drop("leaf").drop(grpName)))
-      .reduceOption(_ unionByName _).foreach {
-        _.withColumn(grpName, grpCol(groups))
-          .withColumn("leaf", lit(leafDir))
-          .repartition(col(grpName))
-          .write.partitionBy(grpName, "leaf")
-          .mode("append").parquet(s"$destDir/$rel")
-      }
-    val tombsMerged = srcDirs.zipWithIndex.flatMap { case (dir, i) =>
-      srcRel(dir, "tombs").map { t =>
-        val tl = IndexManifest.leafName(dest.version + 1, s"$tag-t$i")
-        IndexManifest.dropResidue(destDir, Seq("tombs"), tl)
-        t.select(col("media_id")).distinct()
-          .withColumn("leaf", lit(tl))
-          .coalesce(1)
-          .write.partitionBy("leaf").mode("append").parquet(s"$destDir/tombs")
-        tl
-      }
-    }
-    IndexManifest.commit(destDir, dest.copy(version = dest.version + 1,
-      leaves = dest.leaves :+ leafDir,
-      tombs = dest.tombs ++ tombsMerged))
-    IndexManifest.sweep(destDir, Seq(rel, "tombs"), dest.version + 1)
-  }
-
-  /** [[mmIndexMerge]] for the aHash equality index. */
   def mergeAhashIndexes(spark: SparkSession, srcDirs: Seq[String],
       destDir: String, tag: String,
       groups: Int = DefaultAHashGroups): Unit =
-    mmIndexMerge(spark, srcDirs, destDir, "hashes", ahashGroup, "hgrp",
-      tag, groups)
+    LeafStore.merge(spark, srcDirs, destDir, HashStore, tag, groups)
 
-  /** [[mmIndexMerge]] for the Hamming chunk index. */
+  /** [[mergeAhashIndexes]] for the Hamming chunk index. */
   def mergeAhashChunkIndexes(spark: SparkSession, srcDirs: Seq[String],
       destDir: String, tag: String,
       groups: Int = DefaultAHashGroups): Unit =
-    mmIndexMerge(spark, srcDirs, destDir, "chunks", chunkGroup, "cgrp",
-      tag, groups)
+    LeafStore.merge(spark, srcDirs, destDir, ChunkStore, tag, groups)
 
   /** Idempotent O(batch) leaf append of (media_id, ahash) rows into the
-    * partitioned hash table `hashes/hgrp=g/leaf=v<N>-tag` — immutable
-    * manifest-committed leaves, a replayed foreachBatch tag no-ops (the
-    * dd13 fold discipline).
+    * partitioned hash table `hashes/hgrp=g/leaf=v<N>-tag` — a replayed
+    * foreachBatch tag no-ops (the dd13 fold discipline).
     */
   def ahashIndexAppend(hashed: DataFrame, indexDir: String,
       leaf: String, groups: Int = DefaultAHashGroups): Unit =
-    mmIndexAppend(
-      hashed.select(col("media_id"), col("ahash_hi"), col("ahash_lo")),
-      indexDir, "hashes", ahashGroup, "hgrp", leaf, groups)
+    LeafStore.append(indexDir, HashStore, leaf, groups, Seq(Hashes -> hashed))
 
-  /** [[mmIndexDelete]] for the aHash equality index — the takedown
-    * lane (mm18's device on the hash store).
+  /** Kill-all tombstone deletes for the aHash equality index — the
+    * takedown lane (mm18's device on the hash store).
     */
   def ahashIndexDelete(spark: SparkSession, indexDir: String,
       ids: DataFrame, leaf: String): Unit =
-    mmIndexDelete(spark, indexDir, "hashes", ids, leaf)
+    LeafStore.tombstone(indexDir, HashStore, leaf, ids.select(col("media_id")))
 
   /** [[mmIndexCompact]] for the aHash equality index. */
   def compactAhashIndex(spark: SparkSession, indexDir: String,
       tag: String): Unit =
-    mmIndexCompact(spark, indexDir, "hashes", "hgrp", tag)
+    mmIndexCompact(spark, indexDir, HashStore, tag)
 
   /** [[mmIndexRegroup]] for the aHash equality index. */
   def regroupAhashIndex(spark: SparkSession, indexDir: String,
       newGroups: Int, tag: String): Unit =
-    mmIndexRegroup(spark, indexDir, "hashes", ahashGroup, "hgrp",
-      newGroups, tag)
+    mmIndexRegroup(spark, indexDir, HashStore, newGroups, tag)
 
   /** Screen a hashed batch against the committed index leaves: exact
     * (hi, lo) equi-collisions, the scan PRUNED to the batch's touched
@@ -884,7 +731,8 @@ object Multimodal {
     */
   def screenAhash(spark: SparkSession, indexDir: String,
       batchHashed: DataFrame): DataFrame =
-    screenAhashSnapshot(spark, indexDir, metaOf(indexDir), batchHashed)
+    screenAhashSnapshot(spark, indexDir, LeafStore.head(indexDir, HashStore),
+      batchHashed)
 
   /** TIME-TRAVEL equality screen — [[screenAhash]] against the exact
     * snapshot a PAST manifest version committed (leaves, dial, AND the
@@ -893,26 +741,14 @@ object Multimodal {
     */
   def screenAhashAt(spark: SparkSession, indexDir: String,
       batchHashed: DataFrame, asOfVersion: Long): DataFrame =
-    screenAhashSnapshot(spark, indexDir,
-      Some(metaAtOrThrow(indexDir, asOfVersion)), batchHashed)
-
-  private def metaAtOrThrow(indexDir: String,
-      version: Long): IndexManifest.Meta = {
-    IndexManifest.readMetaAt(indexDir, version).getOrElse(
-      throw new IllegalArgumentException(
-        s"manifest version $version is not retained at $indexDir — " +
-          s"time travel reaches the ${IndexManifest.retentionWindow(indexDir)}-" +
-          "version grace window"))
-  }
+    screenAhashSnapshot(spark, indexDir, LeafStore.at(indexDir, asOfVersion),
+      batchHashed)
 
   private def screenAhashSnapshot(spark: SparkSession, indexDir: String,
-      meta: Option[IndexManifest.Meta],
-      batchHashed: DataFrame): DataFrame = {
-    val ngroups = meta.map(_.groups).getOrElse(DefaultAHashGroups)
-    val groups = batchHashed.select(ahashGroup(ngroups).as("hgrp")).distinct()
+      meta: IndexManifest.Meta, batchHashed: DataFrame): DataFrame = {
+    val groups = batchHashed.select(ahashGroup(meta.groups).as("hgrp")).distinct()
       .collect().map(r => Int.box(r.getInt(0))).toSeq
-    val index = IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/hashes"), meta.toSeq.flatMap(_.leaves))
+    val index = LeafStore.read(spark, indexDir, Hashes, meta)
       .filter(col("hgrp").isin(groups: _*))
       .select(col("media_id").as("corpus_id"),
         col("ahash_hi"), col("ahash_lo"))
@@ -924,10 +760,6 @@ object Multimodal {
           .join(index, Seq("ahash_hi", "ahash_lo")), meta)
       .select(col("batch_id"), col("corpus_id"))
   }
-
-  private def chunkGroup(groups: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(col("chunk_idx"), col("chunk")),
-      lit(groups.toLong)).cast("int")
 
   /** The 4 × 16-bit multi-index chunks of a hash relation (mm15's MIH
     * decomposition) — the unit the Hamming-tolerant index stores and the
@@ -942,29 +774,27 @@ object Multimodal {
 
   /** Fold a hashed batch into the persisted CHUNK index (4 rows per
     * image, partitioned by chunk-hash group) — the Hamming-searchable
-    * sibling of [[ahashIndexAppend]]'s equality index; same immutable
-    * manifest-committed tag-idempotent leaf discipline.
+    * sibling of [[ahashIndexAppend]]'s equality index.
     */
   def ahashChunkIndexAppend(hashed: DataFrame, indexDir: String,
       leaf: String, groups: Int = DefaultAHashGroups): Unit =
-    mmIndexAppend(ahashChunks(hashed), indexDir, "chunks", chunkGroup,
-      "cgrp", leaf, groups)
+    LeafStore.append(indexDir, ChunkStore, leaf, groups,
+      Seq(Chunks -> ahashChunks(hashed)))
 
-  /** [[mmIndexDelete]] for the Hamming chunk index. */
+  /** [[ahashIndexDelete]] for the Hamming chunk index. */
   def ahashChunkIndexDelete(spark: SparkSession, indexDir: String,
       ids: DataFrame, leaf: String): Unit =
-    mmIndexDelete(spark, indexDir, "chunks", ids, leaf)
+    LeafStore.tombstone(indexDir, ChunkStore, leaf, ids.select(col("media_id")))
 
   /** [[mmIndexCompact]] for the Hamming chunk index. */
   def compactAhashChunkIndex(spark: SparkSession, indexDir: String,
       tag: String): Unit =
-    mmIndexCompact(spark, indexDir, "chunks", "cgrp", tag)
+    mmIndexCompact(spark, indexDir, ChunkStore, tag)
 
   /** [[mmIndexRegroup]] for the Hamming chunk index. */
   def regroupAhashChunkIndex(spark: SparkSession, indexDir: String,
       newGroups: Int, tag: String): Unit =
-    mmIndexRegroup(spark, indexDir, "chunks", chunkGroup, "cgrp",
-      newGroups, tag)
+    mmIndexRegroup(spark, indexDir, ChunkStore, newGroups, tag)
 
   /** Screen a hashed batch against the chunk index WITHIN HAMMING
     * DISTANCE `maxDist` (≤ 3 — the 4-chunk pigeonhole bound): candidates
@@ -974,8 +804,8 @@ object Multimodal {
     */
   def screenAhashHamming(spark: SparkSession, indexDir: String,
       batchHashed: DataFrame, maxDist: Int = 3): DataFrame =
-    screenAhashHammingSnapshot(spark, indexDir, metaOf(indexDir),
-      batchHashed, maxDist)
+    screenAhashHammingSnapshot(spark, indexDir,
+      LeafStore.head(indexDir, ChunkStore), batchHashed, maxDist)
 
   /** TIME-TRAVEL Hamming screen — [[screenAhashHamming]] pinned to a
     * retained manifest version (the dd23 device; see [[screenAhashAt]]).
@@ -984,21 +814,18 @@ object Multimodal {
       batchHashed: DataFrame, asOfVersion: Long,
       maxDist: Int = 3): DataFrame =
     screenAhashHammingSnapshot(spark, indexDir,
-      Some(metaAtOrThrow(indexDir, asOfVersion)), batchHashed, maxDist)
+      LeafStore.at(indexDir, asOfVersion), batchHashed, maxDist)
 
   private def screenAhashHammingSnapshot(spark: SparkSession,
-      indexDir: String,
-      meta: Option[IndexManifest.Meta],
+      indexDir: String, meta: IndexManifest.Meta,
       batchHashed: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist <= 3, "4-chunk pigeonhole guarantees candidates only for d <= 3")
-    val ngroups = meta.map(_.groups).getOrElse(DefaultAHashGroups)
     val bc = ahashChunks(batchHashed)
       .select(col("media_id").as("batch_id"), col("ahash_hi").as("b_hi"),
         col("ahash_lo").as("b_lo"), col("chunk_idx"), col("chunk"))
-    val groups = bc.select(chunkGroup(ngroups).as("cgrp")).distinct()
+    val groups = bc.select(chunkGroup(meta.groups).as("cgrp")).distinct()
       .collect().map(r => Int.box(r.getInt(0))).toSeq
-    val index = IndexManifest.committedOnly(
-        spark.read.parquet(s"$indexDir/chunks"), meta.toSeq.flatMap(_.leaves))
+    val index = LeafStore.read(spark, indexDir, Chunks, meta)
       .filter(col("cgrp").isin(groups: _*))
       .select(col("chunk_idx"), col("chunk"), col("media_id").as("corpus_id"),
         col("ahash_hi").as("c_hi"), col("ahash_lo").as("c_lo"))

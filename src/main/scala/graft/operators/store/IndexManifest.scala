@@ -66,8 +66,10 @@ object IndexManifest {
     *                    (the `retain` window, the PqIndex geometry and
     *                    artifact directory names) — opaque strings the
     *                    owning module interprets
-    * @param kind        which family of store wrote the manifest:
-    *                    `index`, `state` or `ledger`
+    * @param kind        which family of store wrote the manifest: an
+    *                    index family ([[LeafStore.Family.kind]]: `dedup`,
+    *                    `ahash`, `hamming`, `vector`, `graph`), `state`
+    *                    or `ledger`; `index` when none was recorded
     * @param truncates   the state store's TRUNCATE watermarks (first key
     *                    column value → seq)
     * @param writerEpoch the state store's writer fence: epoch and id of

@@ -96,9 +96,10 @@ class PqIndexSpec extends AnyFunSuite {
     // appender B read the index BEFORE A committed (stale meta at v1) and
     // now races the SAME version — its commit must lose, publishing
     // nothing, and A's manifest must be untouched
-    val stale = mA.copy(codeLeaves = mA.codeLeaves.init :+ "codes-v00000099")
+    val committed = graft.operators.store.IndexManifest.readMeta(dir).get
+    val stale = committed.copy(leaves = mA.codeLeaves.init :+ "codes-v00000099")
     val e = intercept[IllegalStateException] {
-      PqIndex.writeMeta(dir, stale)
+      graft.operators.store.IndexManifest.commit(dir, stale)
     }
     assert(e.getMessage.contains("lost index-manifest commit race"))
     assert(PqIndex.readMeta(dir) == mA,
@@ -685,5 +686,27 @@ class PqIndexSpec extends AnyFunSuite {
     val m2 = PqIndex.append(spark, dir, wave2, Some("wave-2"))
     assert(m2.version == post.version + 1 &&
       m2.codebooksDir == post.codebooksDir)
+  }
+
+  test("build and retrain release their training pins: only the artifact read-backs stay cached") {
+    val base = Tables.spread(emb).cache()
+    base.count()
+    val dir = tmpDir()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // the manifest's codebook and coarse dirs are cached read-backs; the
+    // training generations behind them must be released after the write
+    def artifactsCached(meta: PqIndex.Meta): Boolean =
+      Seq(meta.codebooksDir, meta.coarseDir).forall(a =>
+        spark.read.parquet(s"$dir/$a").storageLevel.useMemory)
+    val beforeBuild = persisted
+    val built = PqIndex.build(base, dir, refineIters = 2, coarseRefineIters = 1)
+    val afterBuild = persisted
+    assert(artifactsCached(built) && (afterBuild -- beforeBuild).size == 2,
+      s"build left ${(afterBuild -- beforeBuild).size} RDDs pinned")
+    val retrained = PqIndex.retrain(spark, dir, base, "rt-pins",
+      refineIters = 2, coarseRefineIters = 1)
+    assert(artifactsCached(retrained) && (persisted -- afterBuild).size == 2,
+      s"retrain left ${(persisted -- afterBuild).size} RDDs pinned")
+    base.unpersist()
   }
 }
