@@ -739,12 +739,18 @@ object Ann {
     val copies2 = qs.select((col("vec_id") + 200000L).as("vec_id"),
       col("embedding"))
     val all = base.unionByName(copies1).unionByName(copies2)
-    val degraded = knnGraphOf(all, k = 1)
-    nnDescentRound(degraded, all, k = 2)
-      .filter(col("vec_id") >= 200000L)
-      .select(col("vec_id").as("node_id"), col("rank"),
-        col("nbr_id"), col("sim"))
-      .orderBy(col("node_id"), col("rank"))
+    // the ≤ 2·nQueries result rows are collected into a LocalRelation,
+    // so the corpus and centroid pins end with the call
+    val cents = centroidGenerations(all, nlist = 16, refineIters = 1)
+    try {
+      val found = nnDescentRound(knnGraphWith(all, cents.last, k = 1), all, k = 2)
+        .filter(col("vec_id") >= 200000L)
+        .select(col("vec_id").as("node_id"), col("rank"),
+          col("nbr_id"), col("sim"))
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(found.collect().toSeq.asJava, found.schema)
+        .orderBy(col("node_id"), col("rank"))
+    } finally { (cents :+ base).foreach(_.unpersist()) }
   }
 
   /** ann18's driver-checked shape — the planted theorem through

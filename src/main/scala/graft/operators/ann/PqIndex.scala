@@ -215,6 +215,25 @@ object PqIndex {
   private def artifact(spark: SparkSession, path: String): DataFrame =
     artifactCache.getOrElseUpdate(path, spark.read.parquet(path).cache())
 
+  private def evict(path: String): Unit =
+    artifactCache.remove(path).foreach(_.unpersist())
+
+  /** Evict and unpersist every memoized artifact of `indexDir` that no
+    * retained manifest names: a [[retrain]] supersedes the store's
+    * geometry, and without this each superseded codebook and coarse
+    * relation would stay cached for the rest of the session.
+    */
+  private def evictRetired(indexDir: String): Unit = {
+    val named = IndexManifest.history(indexDir)
+      .flatMap(m => Seq("codebooks", "coarse").flatMap(m.params.get))
+      .toSet
+    val prefix = s"$indexDir/"
+    artifactCache.keys.toSeq.foreach { k =>
+      val name = k.stripPrefix(prefix)
+      if (k.startsWith(prefix) && !name.contains('/') && !named(name)) evict(k)
+    }
+  }
+
   /** The stored codebooks relation (m, code, cent_emb) — m*ksub rows,
     * always broadcast by consumers.
     */
@@ -501,7 +520,7 @@ object PqIndex {
     require(meta.ncells > 0 && meta.coarseDir.nonEmpty,
       s"$indexDir is a pre-IVF index — rebuild into a fresh directory " +
         "instead of retraining")
-    fromShared(LeafStore.rewrite(indexDir, Store, tag, head => {
+    val committed = fromShared(LeafStore.rewrite(indexDir, Store, tag, head => {
       val m = fromShared(head)
       // the live corpus: committed code ids minus tombstones, re-attached
       // to raw vectors by id (point-lookup-shaped join against the
@@ -514,8 +533,8 @@ object PqIndex {
       // attempt at this version left stale files AND possibly stale
       // memoized relations — drop both before overwriting
       val (coarseDir, booksDir) = artifactDirs(m.version + 1)
-      artifactCache.remove(s"$indexDir/$coarseDir")
-      artifactCache.remove(s"$indexDir/$booksDir")
+      evict(s"$indexDir/$coarseDir")
+      evict(s"$indexDir/$booksDir")
       writeArtifact(Ann.centroidGenerations(live, m.ncells, coarseRefineIters),
         s"$indexDir/$coarseDir")
       val storedCoarse = artifact(spark, s"$indexDir/$coarseDir")
@@ -531,6 +550,8 @@ object PqIndex {
       val (coarseDir, booksDir) = artifactDirs(head.version + 1)
       Map("coarse" -> coarseDir, "codebooks" -> booksDir)
     }))
+    evictRetired(indexDir)
+    committed
   }
 
 

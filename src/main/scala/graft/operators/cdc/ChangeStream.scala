@@ -515,8 +515,8 @@ object ChangeStream {
     * the post-DDL suffix WITH it — into one Materializer store, and reads
     * the evolved state back: a key whose last change predates the DDL
     * surfaces `val_cents` NULL (its leaf parquet has no such column — the
-    * mergeSchema read supplies it); keys touched after the DDL carry real
-    * values. The phase boundary (`max(seq) div 2`, both engines derive
+    * read with the manifest's recorded schema supplies it); keys touched
+    * after the DDL carry real values. The phase boundary (`max(seq) div 2`, both engines derive
     * it) and the null/echo arithmetic are the gated relation, so a store
     * that dropped old rows, rewrote them, or mis-merged schemas all fail
     * the hash.

@@ -177,7 +177,7 @@ object QueryPack {
     "cdc25_materialize"      -> ((s, d) => streamMaterialize(s, d)), // current-state store
     // mid-stream ADD COLUMN: pre-DDL batches lack val_cents, post-DDL
     // batches carry it; the store widens with NO rewrite of old leaves
-    // (mergeSchema read) — stale keys surface NULL, fresh ones real values
+    // (recorded-schema read) — stale keys surface NULL, fresh ones real values
     "cdc28_schema_evolution" -> ((s, d) => ChangeStream.schemaEvolutionStore(s, d)),
     // TRUNCATE applied as an O(1) manifest watermark: pre-truncate rows of
     // the table die with no per-row tombstones; post-truncate rows live

@@ -6,6 +6,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Current-state table maintenance from the change stream — the MERGE
   * INTO every CDC consumer ultimately wants (reference README.md:14-16
@@ -21,12 +23,25 @@ import org.apache.spark.sql.functions._
   *    its keys fall in — the apply cost scales with the CHANGE RATE, not
   *    the table size. (Size buckets so one bucket ≈ an executor-friendly
   *    rewrite unit: a 100 TB table at 64 Ki buckets is ~1.5 GB/bucket.)
-  *  - **One shuffle per batch.** The merge is
-  *    `groupBy(key).agg(max_by(row, seq))` over (affected state ∪ batch)
-  *    — ids and the packed row ride a single exchange; no window, no
-  *    sort, no driver-side state. The only driver materialization is the
-  *    affected-bucket ID LIST (≤ `spec.buckets` ints — metadata, not
-  *    data).
+  *  - **Two Spark jobs per batch.** The batch is pinned and evaluated
+  *    once. Job 1 is one `collect` of its census: the affected bucket
+  *    IDs (≤ `spec.buckets` ints) and the per-table TRUNCATE watermarks
+  *    — metadata, not data. Job 2 is the merge write:
+  *    `repartition(bucket)` then `groupBy(bucket, key).agg(max_by(row,
+  *    seq))` over (affected state ∪ batch) — the bucket partitioning
+  *    already clusters the key, so ids and the packed row ride a single
+  *    exchange; no window, no sort, no driver-side state.
+  *  - **One file per bucket.** Every row of a bucket lands in one write
+  *    task, so each touched bucket's new leaf is ONE parquet file — a
+  *    point read opens one file per bucket, however many batches ran.
+  *  - **Recorded schema, no footer inference.** Every commit that
+  *    writes leaves records the store-wide schema in the manifest: the
+  *    union of the previously recorded columns and the merged rows'
+  *    columns. Reads, the merge's read of the affected leaves, compact
+  *    and rebucket all read with it, so building a read runs no Spark
+  *    job, and a mid-stream ADD COLUMN widens the state with no rewrite
+  *    of old leaves (their rows read the new column as null). A
+  *    time-travel read uses the schema recorded in ITS version.
   *  - **Atomic multi-bucket commit, no data renames.** New bucket
   *    versions are written DIRECTLY at their final immutable paths
   *    (`leaf=b<bucket>-v<version>/`); the swap is one EXCLUSIVE publish
@@ -111,11 +126,18 @@ object Materializer {
     * map-side-combined `max_by` — the merge primitive shared by batch
     * reduction and state merge. Column order is preserved.
     */
-  def reduceLatest(df: DataFrame, spec: Spec): DataFrame = {
-    val others = df.columns.filterNot(spec.keyCols.contains).toSeq
-    df.groupBy(spec.keyCols.map(col): _*)
+  def reduceLatest(df: DataFrame, spec: Spec): DataFrame =
+    latestBy(df, spec.keyCols, spec)
+
+  /** [[reduceLatest]] grouped by `groupCols` — the key columns, or the
+    * key columns behind a bucket column derived from them.
+    */
+  private def latestBy(df: DataFrame, groupCols: Seq[String],
+      spec: Spec): DataFrame = {
+    val others = df.columns.filterNot(groupCols.contains).toSeq
+    df.groupBy(groupCols.map(col): _*)
       .agg(max_by(struct(others.map(col): _*), col(spec.seqCol)).as("_s"))
-      .select(spec.keyCols.map(col) ++ others.map(c => col(s"_s.$c").as(c)): _*)
+      .select(groupCols.map(col) ++ others.map(c => col(s"_s.$c").as(c)): _*)
   }
 
   // ---- manifest: the store's single source of truth ----
@@ -123,9 +145,9 @@ object Materializer {
   // ([[IndexManifest]], kind `state`): the leaf list names the live
   // `leaf-b<bucket>-v<version>` directories (the bucket is read back from
   // the name), `groups` records the bucket count, and the writer fence,
-  // TRUNCATE watermarks and `retain` dial ride the same record. A commit
-  // is an exclusive create of the next version, readers resolve the
-  // highest one.
+  // TRUNCATE watermarks, `retain` dial and `schema` param ride the same
+  // record. A commit is an exclusive create of the next version, readers
+  // resolve the highest one.
 
   /** Typed view of the shared manifest record.
     *
@@ -135,16 +157,19 @@ object Materializer {
     *                   read, physically dropped at the next [[compact]].
     *                   Riding the manifest makes truncation snapshot-
     *                   isolated and time-travelable like any commit.
+    * @param schema     the store-wide row schema every read of this
+    *                   version uses (None until the first leaves commit)
     */
   final case class Manifest(version: Long, leaves: Map[Int, String],
       writerEpoch: Long = 0L, writerId: String = "", nbuckets: Int = 0,
       truncates: Map[String, Long] = Map.empty,
-      retain: Int = 0)
+      retain: Int = 0, schema: Option[StructType] = None)
 
   private def toShared(m: Manifest): IndexManifest.Meta =
     IndexManifest.Meta(m.version, m.nbuckets,
       m.leaves.toSeq.sortBy(_._1).map(_._2), Nil,
-      if (m.retain >= 1) Map("retain" -> m.retain.toString) else Map.empty,
+      m.schema.map(s => "schema" -> s.json).toMap ++
+        (if (m.retain >= 1) Map("retain" -> m.retain.toString) else Map.empty),
       kind = "state", truncates = m.truncates,
       writerEpoch = m.writerEpoch, writerId = m.writerId)
 
@@ -153,7 +178,26 @@ object Materializer {
       s.leaves.map(l => l.stripPrefix("leaf-b").takeWhile(_.isDigit).toInt -> l)
         .toMap,
       s.writerEpoch, s.writerId, s.groups, s.truncates,
-      s.params.get("retain").flatMap(_.toIntOption).getOrElse(0))
+      s.params.get("retain").flatMap(_.toIntOption).getOrElse(0),
+      s.params.get("schema").map(DataType.fromJson(_).asInstanceOf[StructType]))
+
+  /** The recorded schema after a commit whose merged rows have `merged`'s
+    * columns: every previously recorded column keeps its place and type,
+    * and columns new to the store are appended. A commit that touched
+    * only some buckets must not narrow what the untouched ones hold, so
+    * the union is taken over the record, never over this batch's
+    * buckets alone. Names match case-insensitively, as `unionByName`
+    * resolves them; every field is recorded nullable, as parquet reads
+    * it back.
+    */
+  private def unionSchema(recorded: Option[StructType],
+      merged: StructType): StructType = {
+    def lower(f: StructField) = f.name.toLowerCase(java.util.Locale.ROOT)
+    val prev = recorded.fold(Seq.empty[StructField])(_.fields.toSeq)
+    val known = prev.map(lower).toSet
+    StructType((prev ++ merged.fields.filterNot(f => known(lower(f))))
+      .map(_.copy(nullable = true)))
+  }
 
   /** The head manifest; version 0 with no leaves on an empty store. */
   def readManifest(stateDir: String,
@@ -246,9 +290,6 @@ object Materializer {
             "unfenced writes are refused — Materializer.acquire() a token")
   }
 
-  private def leafName(bucket: Int, version: Long): String =
-    f"leaf-b$bucket%05d-v$version%08d"
-
   /** Fail fast when the caller's Spec disagrees with the bucket count the
     * store was created (or last [[rebucket]]ed) with: a mismatched
     * applier would hash every key into the WRONG bucket — reading buckets
@@ -288,94 +329,130 @@ object Materializer {
     } catch { case _: java.io.FileNotFoundException => () }
   }
 
-  /** Apply one micro-batch of change rows to the state directory.
-    *
-    * Steps: reduce the batch to its latest row per key → list affected
-    * buckets (driver-side bucket IDs only) → merge those buckets' current
-    * leaves with the batch in ONE `max_by` shuffle → write new leaf
-    * versions at their final paths → swap the manifest. Unaffected
-    * buckets are not read, not written, and keep their manifest entries.
+  /** The manifest an apply starts from, after the writer-fence and
+    * bucket-count checks (both run even for an empty batch: a fenced-out
+    * writer learns it lost the token on its next call, not on its next
+    * non-empty batch). Applying to a nonexistent dir creates it.
     */
-  def applyBatch(spark: SparkSession, stateDir: String, batch: DataFrame,
-      spec: Spec, conf: Configuration = WalSegments.localConf,
-      token: Option[WriterToken] = None): Unit = {
-    // no up-front isEmpty probe: that is one extra Spark job per
-    // micro-batch on every apply path (guide §1.2) — the affected-bucket
-    // collect below already materializes the batch once, and an empty
-    // batch collects zero buckets and returns before any write or
-    // manifest commit. INTENDED semantic change vs the probe era: the
-    // fence and bucket-spec checks now run even for an empty batch (a
-    // fenced-out writer fails fast instead of silently no-opping — it
-    // should learn it lost the token on its next call, not on its next
-    // non-empty batch), and applying to a nonexistent dir creates it.
+  private def openForApply(stateDir: String, spec: Spec,
+      token: Option[WriterToken], conf: Configuration): Manifest = {
     val (fs, root) = WalSegments.fsFor(stateDir, conf)
     fs.mkdirs(root)
     val manifest = readManifest(stateDir, conf)
     checkFence(manifest, token, stateDir)
     checkBuckets(manifest, spec, stateDir)
-    val nextVersion = manifest.version + 1
-
-    val batchLatest = reduceLatest(batch, spec)
-      .withColumn("_gbucket", bucketCol(spec))
-      .persist() // two consumers: the bucket list and the merge
-    try {
-      val affected = batchLatest.select("_gbucket").distinct()
-        .collect().map(_.getLong(0).toInt).sorted // ≤ spec.buckets ints: metadata
-      if (affected.isEmpty) return // empty batch: nothing to merge or commit
-      val existingPaths = affected.flatMap { b =>
-        manifest.leaves.get(b).map(d => s"$stateDir/$d")
-      }
-      // leaf files do not store the partition/bucket columns — re-derive.
-      // mergeSchema + allowMissingColumns make the store SCHEMA-EVOLVING:
-      // a batch carrying new columns widens the state (old rows read
-      // null); a batch missing columns the state has leaves them null on
-      // its rows — mid-stream ADD COLUMN flows through without a rebuild
-      val existing =
-        if (existingPaths.isEmpty) None
-        else Some(spark.read.option("mergeSchema", "true")
-          .parquet(existingPaths.toIndexedSeq: _*)
-          .withColumn("_gbucket", bucketCol(spec)))
-      val unioned = existing.fold(batchLatest)(
-        _.unionByName(batchLatest, allowMissingColumns = true))
-      val merged = reduceLatest(unioned, spec)
-        .withColumn("_leaf",
-          concat(lit("b"), lpad(col("_gbucket").cast("string"), 5, "0"),
-            lit(f"-v$nextVersion%08d")))
-        .drop("_gbucket")
-      // one job writes every affected bucket's new version; Spark names
-      // the partition dirs `_leaf=<value>` (values avoid '=' so no
-      // escaping), then each is published to its manifest name with one
-      // FS rename of a just-written dir — atomic on POSIX/HDFS; on object
-      // stores a copy of ONLY this batch's new files, never the table
-      merged.write.mode("append").partitionBy("_leaf").parquet(stateDir)
-      affected.foreach { b =>
-        val written = new Path(stateDir, s"_leaf=${leafName(b, nextVersion).stripPrefix("leaf-")}")
-        val dest = new Path(stateDir, leafName(b, nextVersion))
-        if (fs.exists(written) && !fs.rename(written, dest))
-          throw new java.io.IOException(s"could not publish $written to $dest")
-      }
-      val newLeaves = manifest.leaves ++
-        affected.map(b => b -> leafName(b, nextVersion)).toMap
-      // THE commit: exclusive create of version N+1 — a concurrent
-      // acquire or apply that got there first makes this throw, and the
-      // leaves written above become unreferenced residue for the
-      // winner's sweep (no committed bucket is ever lost)
-      commitManifest(stateDir, manifest.copy(version = nextVersion,
-        leaves = newLeaves, nbuckets = spec.buckets), conf)
-      // superseded leaves are NOT deleted here: a reader that planned its
-      // scan against the just-superseded manifest may still open them.
-      // The post-commit sweep (after this commit retired manifests past
-      // the store's retention window) collects only leaves NO retained
-      // manifest references — crash residue and long-superseded versions.
-      sweepUnreferenced(fs, stateDir, conf)
-    } finally batchLatest.unpersist()
+    manifest
   }
 
-  /** The store's current rows — tombstones filtered (pass
-    * `keepTombstones = true` for the raw merge state, e.g. to audit
-    * delete retention). A manifest read pins the snapshot: concurrent
-    * applies never tear this view.
+  /** Apply one micro-batch of change rows to the state directory.
+    *
+    * Two Spark jobs: the batch is pinned, one `collect` lists its
+    * affected buckets (driver-side bucket IDs only), and one write job
+    * merges those buckets' current leaves with the batch in ONE `max_by`
+    * shuffle and writes each touched bucket's new leaf version as one
+    * file at its final path; then the manifest swaps. Unaffected
+    * buckets are not read, not written, and keep their manifest entries.
+    * An empty batch collects zero buckets and commits nothing. A batch
+    * the caller already persisted is used as it is and stays pinned.
     */
+  def applyBatch(spark: SparkSession, stateDir: String, batch: DataFrame,
+      spec: Spec, conf: Configuration = WalSegments.localConf,
+      token: Option[WriterToken] = None): Unit = {
+    val manifest = openForApply(stateDir, spec, token, conf)
+    val pin = batch.storageLevel == StorageLevel.NONE
+    if (pin) batch.persist() // two consumers: the bucket list and the merge
+    try {
+      val affected = batch.select(bucketCol(spec)).distinct()
+        .collect().map(_.getLong(0).toInt) // ≤ spec.buckets ints: metadata
+      mergeBuckets(spark, stateDir, batch, affected.toSeq, manifest, spec, conf)
+    } finally if (pin) batch.unpersist()
+  }
+
+  /** Merge `rows` into the `affected` buckets and commit the next
+    * version — the write job of [[applyBatch]] and [[sink]]. The
+    * affected leaves are read with the recorded schema; `unionByName`
+    * with `allowMissingColumns` lets a batch carrying new columns widen
+    * the state and a batch missing columns null them on its rows.
+    * Hash-partitioning on the bucket satisfies the `(bucket, key)`
+    * grouping, so the merge is one exchange, and a bucket's rows all
+    * land in one task: one file per touched bucket.
+    */
+  private def mergeBuckets(spark: SparkSession, stateDir: String,
+      rows: DataFrame, affected: Seq[Int], manifest: Manifest, spec: Spec,
+      conf: Configuration): Unit = {
+    if (affected.isEmpty) return // empty batch: nothing to merge or commit
+    val nextVersion = manifest.version + 1
+    val incoming = rows.withColumn("_gbucket", bucketCol(spec))
+    val existing = affected.flatMap(manifest.leaves.get)
+    val unioned =
+      if (existing.isEmpty) incoming
+      else readLeaves(spark, stateDir, manifest, existing)
+        .withColumn("_gbucket", bucketCol(spec))
+        .unionByName(incoming, allowMissingColumns = true)
+    val merged = latestBy(unioned.repartition(col("_gbucket")),
+      "_gbucket" +: spec.keyCols, spec)
+    val schema = unionSchema(manifest.schema, merged.drop("_gbucket").schema)
+    val written = writeLeaves(stateDir, merged, nextVersion, conf)
+    // THE commit: exclusive create of version N+1 — a concurrent
+    // acquire or apply that got there first makes this throw, and the
+    // leaves written above become unreferenced residue for the
+    // winner's sweep (no committed bucket is ever lost)
+    commitManifest(stateDir, manifest.copy(version = nextVersion,
+      leaves = manifest.leaves ++ written, nbuckets = spec.buckets,
+      schema = Some(schema)), conf)
+    // superseded leaves are NOT deleted here: a reader that planned its
+    // scan against the just-superseded manifest may still open them.
+    // The post-commit sweep (after this commit retired manifests past
+    // the store's retention window) collects only leaves NO retained
+    // manifest references — crash residue and long-superseded versions.
+    sweepUnreferenced(WalSegments.fsFor(stateDir, conf)._1, stateDir, conf)
+  }
+
+  /** Write `df` (its rows carrying their `_gbucket`) as the leaves of
+    * `version` and publish them: one `partitionBy("_leaf")` write job —
+    * Spark names the partition dirs `_leaf=<value>` (values avoid '=' so
+    * no escaping) — then each is published to its leaf name with one FS
+    * rename of a just-written dir: atomic on POSIX/HDFS, on object stores
+    * a copy of ONLY this version's new files, never the table. Residue a
+    * torn earlier attempt left at `version` is dropped first, so a retry
+    * never mixes its files in. Returns bucket → leaf name for every
+    * bucket that got rows; a bucket with none writes no dir.
+    */
+  private def writeLeaves(stateDir: String, df: DataFrame, version: Long,
+      conf: Configuration): Map[Int, String] = {
+    val (fs, _) = WalSegments.fsFor(stateDir, conf)
+    val suffix = f"-v$version%08d"
+    def atVersion(): Seq[String] =
+      fs.listStatus(new Path(stateDir)).toSeq.map(_.getPath.getName)
+        .filter(_.endsWith(suffix))
+    atVersion().filter(n => n.startsWith("_leaf=b") || n.startsWith("leaf-b"))
+      .foreach(n => fs.delete(new Path(stateDir, n), true))
+    df.withColumn("_leaf", format_string(s"b%05d$suffix", col("_gbucket")))
+      .drop("_gbucket")
+      .write.mode("append").partitionBy("_leaf").parquet(stateDir)
+    atVersion().filter(_.startsWith("_leaf=b")).map { n =>
+      val leaf = "leaf-" + n.stripPrefix("_leaf=")
+      val dest = new Path(stateDir, leaf)
+      if (!fs.rename(new Path(stateDir, n), dest))
+        throw new java.io.IOException(s"could not publish $n to $dest")
+      leaf.stripPrefix("leaf-b").takeWhile(_.isDigit).toInt -> leaf
+    }.toMap
+  }
+
+  /** The `leaves` of `manifest`, read with the schema it recorded — no
+    * footer inference, so building the read runs no Spark job. Leaf files
+    * do not store the bucket column; callers re-derive it.
+    */
+  private def readLeaves(spark: SparkSession, stateDir: String,
+      manifest: Manifest, leaves: Iterable[String]): DataFrame = {
+    val schema = manifest.schema.getOrElse(throw new IllegalStateException(
+      s"$stateDir v${manifest.version} names leaves but records no state " +
+        "schema — it was written before schemas were recorded; " +
+        "re-materialize it"))
+    spark.read.schema(schema)
+      .parquet(leaves.map(d => s"$stateDir/$d").toIndexedSeq: _*)
+  }
+
   /** Test-visible census of full-state READ PLANS built
     * ([[currentState]] + [[deletedRecords]] calls) — the
     * one-scan contract of `Graft.syncAllIndexes` is asserted against
@@ -384,6 +461,12 @@ object Materializer {
     */
   private[graft] val stateReads = new java.util.concurrent.atomic.AtomicLong
 
+  /** The store's current rows — tombstones filtered (pass
+    * `keepTombstones = true` for the raw merge state, e.g. to audit
+    * delete retention). A manifest read pins the snapshot: concurrent
+    * applies never tear this view. Building the frame runs no Spark job;
+    * collecting it is one scan.
+    */
   def currentState(spark: SparkSession, stateDir: String, spec: Spec,
       keepTombstones: Boolean = false,
       conf: Configuration = WalSegments.localConf): DataFrame = {
@@ -439,10 +522,9 @@ object Materializer {
 
   private def stateOf(spark: SparkSession, stateDir: String, spec: Spec,
       manifest: Manifest, keepTombstones: Boolean): DataFrame = {
-    val paths = manifest.leaves.values.map(d => s"$stateDir/$d").toIndexedSeq
-    // mergeSchema: buckets last rewritten before a schema widening still
-    // read into the union schema (their missing columns as null)
-    val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    // buckets last rewritten before a schema widening still read into
+    // the recorded union schema (their missing columns as null)
+    val df = readLeaves(spark, stateDir, manifest, manifest.leaves.values)
     if (keepTombstones) df
     else df.filter(col(spec.opCol) =!= spec.deleteOp &&
       !truncatedPredicate(manifest, spec))
@@ -517,8 +599,7 @@ object Materializer {
     checkBuckets(manifest, spec, stateDir)
     if (manifest.leaves.isEmpty) return
     val nextVersion = manifest.version + 1
-    val all = spark.read.option("mergeSchema", "true")
-      .parquet(manifest.leaves.values.map(d => s"$stateDir/$d").toIndexedSeq: _*)
+    val all = readLeaves(spark, stateDir, manifest, manifest.leaves.values)
       .withColumn("_gbucket", bucketCol(spec))
     val expired = (col(spec.opCol) === spec.deleteOp &&
       col(spec.seqCol) <= floor) || truncatedPredicate(manifest, spec)
@@ -528,30 +609,16 @@ object Materializer {
     val expirable = all.filter(expired).select("_gbucket").distinct()
       .collect().map(_.getLong(0).toInt).sorted // bucket IDs: metadata
     if (expirable.isEmpty) return
-    val expirableSet = expirable.toSet
-    // ONE write job rewrites exactly those buckets without tombstones
-    all.filter(col("_gbucket").isin(expirable.map(Integer.valueOf): _*) && !expired)
-      .withColumn("_leaf",
-        concat(lit("b"), lpad(col("_gbucket").cast("string"), 5, "0"),
-          lit(f"-v$nextVersion%08d")))
-      .drop("_gbucket")
-      .write.mode("append").partitionBy("_leaf").parquet(stateDir)
-    // a bucket whose rows were ALL expirable tombstones writes no dir —
-    // it simply leaves the manifest (an absent entry IS the empty bucket)
-    val rewritten = expirable.filter { b =>
-      val written = new Path(stateDir,
-        s"_leaf=${leafName(b, nextVersion).stripPrefix("leaf-")}")
-      fs.exists(written) && {
-        val dest = new Path(stateDir, leafName(b, nextVersion))
-        if (!fs.rename(written, dest))
-          throw new java.io.IOException(s"could not publish $written to $dest")
-        true
-      }
-    }
-    val newLeaves = (manifest.leaves -- expirableSet) ++
-      rewritten.map(b => b -> leafName(b, nextVersion)).toMap
+    // ONE write job rewrites exactly those buckets without tombstones,
+    // one file per bucket; a bucket whose rows were ALL expirable writes
+    // no dir — it simply leaves the manifest (an absent entry IS the
+    // empty bucket). The schema record carries over unchanged.
+    val rewritten = writeLeaves(stateDir,
+      all.filter(col("_gbucket").isin(expirable.map(Integer.valueOf): _*) &&
+        !expired).repartition(col("_gbucket")), nextVersion, conf)
     commitManifest(stateDir, manifest.copy(version = nextVersion,
-        leaves = newLeaves, nbuckets = spec.buckets), conf)
+        leaves = (manifest.leaves -- expirable) ++ rewritten,
+        nbuckets = spec.buckets), conf)
     // compacted-away leaves keep the same reader grace window as apply:
     // the sweep only collects leaves no retained manifest references
     sweepUnreferenced(fs, stateDir, conf)
@@ -577,30 +644,13 @@ object Materializer {
     val manifest = readManifest(stateDir, conf)
     checkFence(manifest, token, stateDir)
     checkBuckets(manifest, spec, stateDir)
-    val newSpec = spec.copy(buckets = newBuckets)
     val nextVersion = manifest.version + 1
-    if (manifest.leaves.nonEmpty) {
-      spark.read.option("mergeSchema", "true")
-        .parquet(manifest.leaves.values.map(d => s"$stateDir/$d").toIndexedSeq: _*)
-        .withColumn("_gbucket", bucketCol(newSpec))
-        .withColumn("_leaf",
-          concat(lit("b"), lpad(col("_gbucket").cast("string"), 5, "0"),
-            lit(f"-v$nextVersion%08d")))
-        .drop("_gbucket")
-        .write.mode("append").partitionBy("_leaf").parquet(stateDir)
-    }
-    // publish every just-written dir (one listing, not a per-bucket probe)
-    val suffix = f"-v$nextVersion%08d"
-    val newLeaves = fs.listStatus(new Path(stateDir)).iterator
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("_leaf=b") && n.endsWith(suffix))
-      .map { n =>
-        val leafN = "leaf-" + n.stripPrefix("_leaf=")
-        val dest = new Path(stateDir, leafN)
-        if (!fs.rename(new Path(stateDir, n), dest))
-          throw new java.io.IOException(s"could not publish $n to $dest")
-        n.stripPrefix("_leaf=b").take(5).toInt -> leafN
-      }.toMap
+    val newLeaves =
+      if (manifest.leaves.isEmpty) Map.empty[Int, String]
+      else writeLeaves(stateDir,
+        readLeaves(spark, stateDir, manifest, manifest.leaves.values)
+          .withColumn("_gbucket", bucketCol(spec.copy(buckets = newBuckets)))
+          .repartition(col("_gbucket")), nextVersion, conf)
     commitManifest(stateDir, manifest.copy(version = nextVersion,
         leaves = newLeaves, nbuckets = newBuckets), conf)
     sweepUnreferenced(fs, stateDir, conf)
@@ -633,27 +683,42 @@ object Materializer {
     var applied = 0L
     (batch: DataFrame, _: Long) => {
       if (token.isEmpty) token = Some(acquire(stateDir))
-      // TRUNCATE rows arriving IN the stream (op == "truncate"): the row
-      // set applies first, then watermarks ratchet to each truncate's seq.
-      // Order within the batch is irrelevant by the watermark rule — a
-      // same-batch row at seq ≤ the truncate dies at read no matter when
-      // its leaf was written, and a row after it (seq > watermark) lives.
-      // One tiny aggregate per batch; zero cost when no truncate arrived.
-      val truncOp = "truncate"
-      val truncs = batch.filter(col(spec.opCol) === truncOp)
-        .groupBy(col(spec.keyCols.head))
-        .agg(max(col(spec.seqCol)).as("_wm"))
-        .collect() // ≤ one row per truncated table: metadata, not data
-      applyBatch(batch.sparkSession, stateDir,
-        batch.filter(col(spec.opCol) =!= truncOp), spec, token = token)
-      truncs.foreach { r =>
-        applyTruncate(stateDir, String.valueOf(r.get(0)),
-          r.getLong(1), spec, token = token)
-      }
-      applied += 1
-      if (compactEvery > 0 && applied % compactEvery == 0)
-        floorProvider().foreach(f =>
-          compact(batch.sparkSession, stateDir, spec, f, token = token))
+      val conf = WalSegments.localConf
+      val manifest = openForApply(stateDir, spec, token, conf)
+      // every action on the foreachBatch frame re-runs the source decode
+      // and the stateful assembly behind it: pin it, so the census and
+      // the merge write evaluate it once between them
+      batch.persist()
+      try {
+        // TRUNCATE rows arriving IN the stream (op == "truncate"): the
+        // row set applies first, then watermarks ratchet to each
+        // truncate's seq. Order within the batch is irrelevant by the
+        // watermark rule — a same-batch row at seq ≤ the truncate dies at
+        // read no matter when its leaf was written, and a row after it
+        // (seq > watermark) lives. ONE collect is the batch's census:
+        // grouped by the bucket for ordinary rows and by the first key
+        // column (as the string the watermark matches) for truncate rows
+        // — ≤ buckets + truncated tables rows: metadata, not data.
+        val truncOp = "truncate"
+        val isTrunc = col(spec.opCol) === truncOp
+        val (truncs, rows) = batch.filter(col(spec.opCol).isNotNull)
+          .groupBy(isTrunc.as("_t"),
+            when(isTrunc, col(spec.keyCols.head).cast("string"))
+              .otherwise(bucketCol(spec).cast("string")).as("_k"))
+          .agg(max(col(spec.seqCol)).as("_wm"))
+          .collect().partition(_.getBoolean(0))
+        mergeBuckets(batch.sparkSession, stateDir,
+          batch.filter(col(spec.opCol) =!= truncOp),
+          rows.map(_.getString(1).toInt).toSeq, manifest, spec, conf)
+        truncs.foreach { r =>
+          applyTruncate(stateDir, String.valueOf(r.get(1)),
+            r.getLong(2), spec, token = token)
+        }
+        applied += 1
+        if (compactEvery > 0 && applied % compactEvery == 0)
+          floorProvider().foreach(f =>
+            compact(batch.sparkSession, stateDir, spec, f, token = token))
+      } finally batch.unpersist()
     }
   }
 }

@@ -240,6 +240,33 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("expects (path, key_cols)"), e.getMessage)
   }
 
+  test("graft_state / graft_state_at analysis and EXPLAIN run no Spark job") {
+    import spark.implicits._
+    import graft.streaming.Materializer
+    val stateDir = java.nio.file.Files.createTempDirectory("ext_state_jobs").toString
+    val spec = Materializer.Spec(
+      keyCols = Seq("table_name", "record_id"), buckets = 4)
+    Materializer.applyBatch(spark, stateDir, (1L to 6L)
+      .map(i => ("r", i, i, "insert")).toDF("table_name", "record_id", "seq", "op"),
+      spec)
+    val mark = Materializer.readManifest(stateDir).version
+    val keys = "table_name,record_id"
+    // the store's schema is read from its manifest, not inferred from
+    // the leaf footers: planning a state read touches no data
+    Seq(s"graft_state('$stateDir', '$keys')",
+        s"graft_state_at('$stateDir', '$keys', $mark)").foreach { tvf =>
+      val (_, analyzed, _) = JobAudit.recorded(spark) {
+        spark.sql(s"SELECT * FROM $tvf").schema
+      }
+      assert(analyzed.isEmpty, s"analyzing $tvf ran ${JobAudit.describe(analyzed)}")
+      val (plan, explained, _) = JobAudit.recorded(spark) {
+        spark.sql(s"EXPLAIN SELECT * FROM $tvf").collect()
+      }
+      assert(plan.nonEmpty && explained.isEmpty,
+        s"EXPLAIN of $tvf ran ${JobAudit.describe(explained)}")
+    }
+  }
+
   test("graft_state names an empty store; graft_state_at plans the SNAPSHOT's bucket dial") {
     import spark.implicits._
     import graft.streaming.Materializer

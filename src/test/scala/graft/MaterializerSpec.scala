@@ -116,6 +116,21 @@ class MaterializerSpec extends AnyFunSuite {
     assert(state(dir) == Seq(("user", 1L, 20L, "update", 2L)))
   }
 
+  test("crash residue: a torn write at the next version is dropped, not merged into the retry") {
+    val dir = freshDir("torn")
+    Materializer.applyBatch(spark, dir, chg(("user", 1L, 10L, "insert", 1L)), spec)
+    val next = Materializer.readManifest(dir).version + 1
+    val bucket = bucketsFor(Seq(1L))(1L)
+    // a crashed attempt at the next version wrote its partition dir (a
+    // stale row for the same key) and never committed
+    chg(("user", 1L, 15L, "update", 99L)).drop("table_name", "record_id")
+      .withColumn("table_name", lit("user")).withColumn("record_id", lit(1L))
+      .write.parquet(f"$dir/_leaf=b$bucket%05d-v$next%08d")
+    Materializer.applyBatch(spark, dir, chg(("user", 1L, 20L, "update", 2L)), spec)
+    assert(state(dir, tombstones = true) == Seq(("user", 1L, 20L, "update", 2L)),
+      "the retry must not publish the torn attempt's rows")
+  }
+
   test("schema evolution: a batch with a new column widens state; old rows read null") {
     val dir = freshDir("evolve")
     Materializer.applyBatch(spark, dir, chg(("user", 1L, 10L, "insert", 100L)), spec)
@@ -133,6 +148,84 @@ class MaterializerSpec extends AnyFunSuite {
     val after = Materializer.currentState(spark, dir, spec)
       .select("record_id", "email").as[(Long, Option[String])].collect().toSet
     assert(after == Set((1L, None), (2L, Some("a@x")), (3L, None)))
+  }
+
+  private def widenedChg(rows: (String, Long, Long, String, Long, String)*): DataFrame =
+    rows.toSeq.toDF("table_name", "record_id", "seq", "op", "val_cents", "email")
+
+  private def recordedColumns(dir: String): Seq[String] =
+    Materializer.readManifest(dir).schema.map(_.fieldNames.toSeq).getOrElse(Nil)
+
+  test("recorded schema: a widening survives compact and rebucket") {
+    val dir = freshDir("evolve_maint")
+    Materializer.applyBatch(spark, dir, chg(
+      ("user", 1L, 10L, "insert", 100L),
+      ("user", 3L, 11L, "insert", 300L)), spec)
+    Materializer.applyBatch(spark, dir,
+      widenedChg(("user", 2L, 20L, "insert", 200L, "a@x")), spec)
+    // a narrow delete, then a compaction that rewrites only its bucket
+    Materializer.applyBatch(spark, dir, chg(("user", 3L, 30L, "delete", 300L)), spec)
+    Materializer.compact(spark, dir, spec, floor = 30L)
+    assert(recordedColumns(dir).contains("email"), "compact narrowed the record")
+    Materializer.rebucket(spark, dir, spec, newBuckets = 3)
+    assert(recordedColumns(dir).contains("email"), "rebucket narrowed the record")
+    val got = Materializer.currentState(spark, dir, spec.copy(buckets = 3))
+      .select("record_id", "email").as[(Long, Option[String])].collect().toSet
+    assert(got == Set((1L, None), (2L, Some("a@x"))), s"head after maintenance: $got")
+  }
+
+  test("recorded schema: an as-of read of a pre-widening version reads narrow") {
+    val dir = freshDir("evolve_asof")
+    Materializer.applyBatch(spark, dir, chg(("user", 1L, 10L, "insert", 100L)), spec)
+    val narrow = Materializer.readManifest(dir).version
+    Materializer.applyBatch(spark, dir,
+      widenedChg(("user", 2L, 20L, "insert", 200L, "a@x")), spec)
+    val before = Materializer.currentStateAt(spark, dir, spec, narrow)
+    assert(!before.columns.contains("email"),
+      s"v$narrow predates the widening: ${before.columns.mkString(",")}")
+    assert(before.select("record_id").as[Long].collect().toSeq == Seq(1L))
+    assert(Materializer.currentState(spark, dir, spec).columns.contains("email"))
+  }
+
+  test("recorded schema: a replayed sink batch and an older narrower one change nothing") {
+    val dir = freshDir("evolve_replay")
+    val s = Materializer.sink(dir, spec)
+    val older = chg(("user", 1L, 10L, "insert", 100L), ("user", 2L, 11L, "insert", 200L))
+    val wide = widenedChg(
+      ("user", 2L, 20L, "update", 250L, "b@x"),
+      ("user", 3L, 21L, "insert", 300L, "c@x"))
+    s(older, 0L)
+    s(wide, 1L)
+    def snapshot = (state(dir, tombstones = true),
+      Materializer.currentState(spark, dir, spec).select("record_id", "email")
+        .as[(Long, Option[String])].collect().toSet,
+      Materializer.readManifest(dir).schema)
+    val once = snapshot
+    assert(once._3.exists(_.fieldNames.contains("email")))
+    s(wide, 1L)  // the same frame again: foreachBatch replay
+    assert(snapshot == once, "replaying the widening batch changed the store")
+    s(older, 0L) // an older, narrower batch replayed after it
+    assert(snapshot == once, "replaying the older narrow batch changed the store")
+  }
+
+  test("one file per bucket: every leaf an apply writes is a single parquet file") {
+    val dir = freshDir("onefile")
+    // 4 shuffle partitions and 8 buckets: without bucket-clustered
+    // writes each bucket would take a file from every task
+    val rows = (1L to 200L).map(i => ("user", i, i, "insert", i))
+    Materializer.applyBatch(spark, dir, chg(rows: _*), spec)
+    Materializer.applyBatch(spark, dir,
+      chg(rows.take(50).map { case (t, i, q, _, v) => (t, i, q + 1000L, "update", v) }: _*),
+      spec)
+    val (fs, _) = graft.sources.cdc.WalSegments.fsFor(dir)
+    val leaves = Materializer.readManifest(dir).leaves
+    assert(leaves.size == spec.buckets, s"want every bucket populated: $leaves")
+    leaves.values.foreach { leaf =>
+      val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir, leaf))
+        .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"$leaf holds ${files.length} data files")
+    }
+    assert(state(dir).size == 200)
   }
 
   test("truncate: O(1) metadata commit kills the table's old rows, later inserts live") {

@@ -897,6 +897,16 @@ class PlanAuditSpec extends AnyFunSuite {
         "persisted RDDs behind")
   }
 
+  test("ann19 lane releases its pins: no persisted RDD outlives the query") {
+    import graft.operators.ann.Ann
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val rows = Ann.nnDescentSelfRecall(spark, sf).collect()
+    assert(rows.nonEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.size == before,
+      s"the lane left ${spark.sparkContext.getPersistentRDDs.size - before} " +
+        "persisted RDDs behind")
+  }
+
   test("ann08 IVF search: codes scan reads only the probed cells' partitions") {
     import org.apache.spark.sql.functions.col
     val corpus = Tables.spread(Tables.embeddings(spark, sf)
@@ -1161,6 +1171,59 @@ class PlanAuditSpec extends AnyFunSuite {
       }
   }
 
+  test("replica path job budget: sink and applyBatch run 2 jobs, a state read builds in 0 and collects in 1") {
+    import graft.streaming.Materializer
+    import JobAudit.{describe, outsideExecution}
+    // a foreachBatch frame belongs to the stream's session, where
+    // adaptive execution is off: every exchange is a stage of its job,
+    // not a map-stage job of its own — the jobs below are counted there
+    val stream = spark.newSession()
+    stream.conf.set("spark.sql.adaptive.enabled", "false")
+    import stream.implicits._
+    val spec = Materializer.Spec(keyCols = Seq("table_name", "record_id"),
+      buckets = 4)
+    def chg(seq: Long, op: String = "update") = (0L until 40L)
+      .map(i => ("user", i, seq, op, i * seq))
+      .toDF("table_name", "record_id", "seq", "op", "val_cents")
+    val dir = java.nio.file.Files.createTempDirectory("audit_replica").toString
+    Materializer.applyBatch(stream, dir, chg(1L, "insert"), spec)
+    // a job outside any SQL execution is one launched while a frame is
+    // BUILT — a parquet schema-inference or file-listing job
+    def budget(what: String, jobs: Seq[org.apache.spark.scheduler.SparkListenerJobStart],
+        want: Int): Unit = {
+      val (n, built) = (jobs.size, jobs.count(outsideExecution))
+      assert(n == want && built == 0,
+        s"$what: want $want jobs, none outside an execution; got $n: ${describe(jobs)}")
+    }
+    // every touched bucket already holds a leaf: the merge reads them
+    val (_, applyJobs, _) = recorded {
+      Materializer.applyBatch(stream, dir, chg(2L), spec)
+    }
+    budget("applyBatch (bucket collect + merge write)", applyJobs, 2)
+    // the reader's path: building the frame runs nothing, collecting it
+    // is one scan
+    val (state, buildJobs, _) = recorded {
+      Materializer.currentState(spark, dir, spec)
+        .filter($"record_id" === 7L)
+    }
+    budget("building currentState", buildJobs, 0)
+    val (rows, readJobs, _) = recorded(state.collect())
+    budget("collecting currentState", readJobs, 1)
+    assert(rows.length == 1)
+    // the sink: its first call acquires the store; the audited batch
+    // carries a truncate row too — one census collect serves both
+    val sink = Materializer.sink(dir, spec)
+    sink(chg(3L), 0L)
+    val withTruncate = chg(4L).unionByName(
+      Seq(("todo", 0L, 4L, "truncate", 0L))
+        .toDF("table_name", "record_id", "seq", "op", "val_cents"))
+    val (_, sinkJobs, _) = recorded(sink(withTruncate, 1L))
+    budget("sink (census collect + merge write)", sinkJobs, 2)
+    assert(Materializer.readManifest(dir).truncates == Map("todo" -> 4L))
+    assert(Materializer.currentState(spark, dir, spec)
+      .filter($"seq" === 4L).count() == 40L)
+  }
+
   /** The exchanges of a collected query's final physical plan (through
     * adaptive query stages, not into cached relations).
     */
@@ -1178,45 +1241,5 @@ class PlanAuditSpec extends AnyFunSuite {
   private def scansOf(p: org.apache.spark.sql.execution.SparkPlanInfo) =
     nodesOf(p).filter(_.nodeName.startsWith("Scan"))
 
-  /** Runs `body` under a fresh job group and returns its value with the
-    * Spark jobs and SQL executions the group started. A marker job run
-    * after `body` is awaited on the same listener queue, so every event
-    * of `body` has been delivered when this returns.
-    */
-  private def recorded[T](body: => T): (T,
-      Seq[org.apache.spark.scheduler.SparkListenerJobStart],
-      Seq[org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart]) = {
-    import org.apache.spark.scheduler._
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val sc = spark.sparkContext
-    val group = s"audit-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val execs =
-      new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == group => jobs.add(e)
-          case Some(g) if g == s"$group-drain" => drained.countDown()
-          case _ => ()
-        }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(group) =>
-          execs.add(x)
-        case _ => ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "audit")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-drain", "audit drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener events were not delivered within 60 s")
-      import scala.jdk.CollectionConverters._
-      (out, jobs.asScala.toSeq, execs.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def recorded[T](body: => T) = JobAudit.recorded(spark)(body)
 }

@@ -709,4 +709,30 @@ class PqIndexSpec extends AnyFunSuite {
       s"retrain left ${(persisted -- afterBuild).size} RDDs pinned")
     base.unpersist()
   }
+
+  test("retrain evicts superseded artifacts: only what retained manifests name stays cached") {
+    import graft.operators.store.IndexManifest
+    val base = Tables.spread(emb).cache()
+    base.count()
+    val dir = tmpDir()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    PqIndex.build(base, dir)
+    val retain = 1
+    IndexManifest.setRetention(dir, retain)
+    (1 to retain + 2).foreach(i => PqIndex.retrain(spark, dir, base, s"rt-$i"))
+    val named = IndexManifest.history(dir)
+      .flatMap(m => Seq("codebooks", "coarse").flatMap(m.params.get)).toSet
+    assert(named.size == 2 * (retain + 1), s"retained artifacts: $named")
+    val onDisk = new java.io.File(dir).list().toSeq
+      .filter(_.matches("(codebooks|coarse)-v\\d+"))
+    assert(onDisk.toSet.size > named.size, s"superseded artifacts on disk: $onDisk")
+    val cached = onDisk.filter(a =>
+      spark.read.parquet(s"$dir/$a").storageLevel.useMemory).toSet
+    assert(cached == named,
+      s"cached ${cached.toSeq.sorted}, retained manifests name ${named.toSeq.sorted}")
+    assert((persisted -- before).size == named.size,
+      s"${(persisted -- before).size} RDDs pinned for ${named.size} retained artifacts")
+    base.unpersist()
+  }
 }
